@@ -117,9 +117,10 @@ class TermList:
         """Raw BM25 contributions (idf * weight) of block i's postings —
         QUERY-INDEPENDENT for a snapshot (tf, doclen, avgdl, k1, b are all
         fixed), so computed once per block and cached beside the decoded
-        postings.  ``id(dl)`` keys the doclen lookup: a refresh builds new
-        TermList objects (LocalSearcher._load), so a cache entry can never
-        pair stale weights with a live searcher."""
+        postings.  ``id(dl)`` keys the doclen lookup: a local searcher
+        passes one doclens object per loaded generation, and a refresh
+        builds new TermList objects (_LocalReader._load), so a cache entry
+        can never pair stale weights with a live searcher."""
         key = ("w", i, id(dl), avgdl, k1, b)
         hit = self._cache.get(key)
         if hit is not None:

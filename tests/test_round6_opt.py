@@ -62,24 +62,35 @@ def test_flat_broadcast_vs_join_parity(spark, flat_idx_dir, monkeypatch):
         join_idx.search_many({"a": (["table", "join"], "or", 5)})
 
 
-def test_flat_broadcast_sees_tombstones(spark, flat_idx_dir, tmp_path, monkeypatch):
+def test_flat_broadcast_sees_tombstones(spark, flat_idx_dir, fielded_idx_dir, tmp_path, monkeypatch):
     # copy the index, delete some matching docs, and check both paths
-    # agree on the post-delete result (the broadcast folds tombstones in)
+    # agree on the post-delete result (the broadcast folds tombstones in);
+    # the fielded engine is one more input, and match_ids covers the
+    # join path's tombstone-only attach
     import shutil
 
-    d = str(tmp_path / "idx")
-    shutil.copytree(flat_idx_dir, d)
-    victims = [r["doc_id"] for r in InvertedIndex(spark, d).search(
-        ["table", "join"], k=3, mode="or").collect()]
-    delete_docs(spark, d, victims)
-    bc_idx = InvertedIndex(spark, d)
-    assert bc_idx._rng_broadcast() is not None
-    got = [r["doc_id"] for r in bc_idx.search(["table", "join"], k=10, mode="or").collect()]
-    assert not set(got) & set(victims)
-    _force_join_path(monkeypatch)
-    join_idx = InvertedIndex(spark, d)
-    got_join = [r["doc_id"] for r in join_idx.search(["table", "join"], k=10, mode="or").collect()]
-    assert got == got_join
+    cases = [
+        (InvertedIndex, flat_idx_dir, ["table", "join"]),
+        (FieldedIndex, fielded_idx_dir, [("text", "table"), ("text", "join")]),
+    ]
+    for i, (engine, src, q) in enumerate(cases):
+        monkeypatch.delenv("SPARK_GRAFT_DOCLENS_BC_MB", raising=False)
+        d = str(tmp_path / f"idx{i}")
+        shutil.copytree(src, d)
+        victims = [r["doc_id"] for r in engine(spark, d).search(q, k=3, mode="or").collect()]
+        delete_docs(spark, d, victims)
+        bc_idx = engine(spark, d)
+        assert bc_idx._rng_broadcast() is not None
+        got = [r["doc_id"] for r in bc_idx.search(q, k=10, mode="or").collect()]
+        assert not set(got) & set(victims)
+        ids = sorted(r["doc_id"] for r in bc_idx.match_ids(q, mode="or").collect())
+        assert ids and not set(ids) & set(victims)
+        _force_join_path(monkeypatch)
+        join_idx = engine(spark, d)
+        assert join_idx._rng_broadcast() is None
+        got_join = [r["doc_id"] for r in join_idx.search(q, k=10, mode="or").collect()]
+        assert got == got_join
+        assert sorted(r["doc_id"] for r in join_idx.match_ids(q, mode="or").collect()) == ids
 
 
 def test_fielded_broadcast_vs_join_parity(spark, fielded_idx_dir, monkeypatch):
@@ -191,3 +202,23 @@ def test_score_range_matches_decode_plus_bm25(spark, flat_idx_dir):
             s2 = wand._bm25(t2, dl(d2), L.idf, meta["avgdl"], meta["k1"], meta["b"])
             assert np.array_equal(d1, d2)
             assert np.array_equal(s1, s2)  # exact, not allclose
+
+
+def test_local_searcher_passes_one_doclens_per_generation(spark, flat_idx_dir, monkeypatch):
+    # the kernels' per-block weight caches key on the doclens object, so a
+    # loaded generation must hand every query the same one (not a fresh
+    # wrapper whose id only matches when CPython happens to reuse it)
+    from goobi_viewer_indexer_spark.operators import wand
+
+    seen = []
+    orig = wand.score_topk
+
+    def spy(lists, dl, *a, **kw):
+        seen.append(dl)  # the reference keeps every received object alive
+        return orig(lists, dl, *a, **kw)
+
+    monkeypatch.setattr(wand, "score_topk", spy)
+    local = InvertedIndex(spark, flat_idx_dir).open_local()
+    local.search(["table", "join"], k=5)
+    local.search(["table", "join"], k=5, mode="and")
+    assert len(seen) == 2 and seen[0] is seen[1]

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from goobi_viewer_indexer_spark.config import IndexConfig
 from goobi_viewer_indexer_spark.operators.naive_bm25 import bm25_topk
-from goobi_viewer_indexer_spark.operators.search import InvertedIndex
+from goobi_viewer_indexer_spark.operators.search import FieldedIndex, InvertedIndex
 from goobi_viewer_indexer_spark.plans import build as build_mod
 from goobi_viewer_indexer_spark.plans import maintenance as maint
 
@@ -73,3 +73,71 @@ def test_stored_updates_do_not_touch_postings(spark, idx):
     maint.set_stored_fields(spark, idx, u, tag="sf3")
     after = [tuple(r) for r in InvertedIndex(spark, idx).search(["shared"], k=10).collect()]
     assert before == after
+
+
+# -- deletes seen through both engines and their local searchers ----------
+# Each engine: (open, build, query).  The fielded index holds the corpus's
+# text as its one field, so both answer the same questions.
+ENGINES = {
+    "flat": (InvertedIndex, lambda docs, d: build_mod.build_index(docs, d, CFG),
+             lambda *terms: list(terms)),
+    "fielded": (FieldedIndex, lambda docs, d: build_mod.build_index_fielded(docs, d, {"text": "text"}, CFG),
+                lambda *terms: [("text", t) for t in terms]),
+}
+
+
+def _build(spark, tmp_path, kind):
+    d = str(tmp_path / kind)
+    ENGINES[kind][1](spark.createDataFrame(CORPUS, "doc_id long, text string"), d)
+    return d
+
+
+@pytest.mark.parametrize("kind", ["flat", "fielded"])
+def test_local_search_term_with_every_doc_deleted(spark, tmp_path, kind):
+    # tail7 occurs in doc 7 only: once doc 7 is deleted, term_stats drops
+    # the term while its posting rows stay — the local searcher must treat
+    # it as absent, exactly like the distributed search
+    open_idx, _, q = ENGINES[kind]
+    d = _build(spark, tmp_path, kind)
+    maint.delete_docs(spark, d, [7])
+    engine = open_idx(spark, d)
+    local = engine.open_local()
+    query = q("tail7", "shared")
+    for mode in ("or", "and"):
+        dist = [tuple(r) for r in engine.search(query, k=10, mode=mode).collect()]
+        assert local.search(query, k=10, mode=mode) == dist
+    assert local.search(query, k=10, mode="and") == []
+    assert len(local.search(query, k=10, mode="or")) == 10
+
+
+@pytest.mark.parametrize("path", ["broadcast", "join"])
+@pytest.mark.parametrize("kind", ["flat", "fielded"])
+def test_second_delete_in_one_session_is_seen(spark, tmp_path, monkeypatch, kind, path):
+    # the tombstone table grows in place; a handle opened after the second
+    # delete must see both deletes (distributed and local, including a
+    # local searcher that refreshes itself), while the handle opened in
+    # between keeps answering at its own revision
+    if path == "join":
+        monkeypatch.setenv("SPARK_GRAFT_DOCLENS_BC_MB", "0.0000001")
+    open_idx, _, q = ENGINES[kind]
+    d = _build(spark, tmp_path, kind)
+    query = q("shared")
+
+    def dist_ids(engine):
+        return {r["doc_id"] for r in engine.search(query, k=60).collect()}
+
+    maint.delete_docs(spark, d, [3])
+    first = open_idx(spark, d)
+    assert (first._rng_broadcast() is None) == (path == "join")
+    local = first.open_local()
+    seen_first = dist_ids(first)
+    assert 3 not in seen_first and 4 in seen_first
+    assert {doc for doc, _ in local.search(query, k=60)} == seen_first
+
+    maint.delete_docs(spark, d, [4])
+    second = open_idx(spark, d)
+    live = set(range(60)) - {3, 4}
+    assert dist_ids(second) == live
+    assert {doc for doc, _ in second.open_local().search(query, k=60)} == live
+    assert {doc for doc, _ in local.search(query, k=60)} == live  # refreshed
+    assert dist_ids(first) == seen_first  # the older snapshot is unchanged
