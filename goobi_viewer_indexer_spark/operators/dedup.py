@@ -622,9 +622,10 @@ def duplicate_components(
 
     ``driver_threshold``: near-dup graphs are TINY relative to their
     corpora (pairs, not docs), and the iterative contraction pays many
-    small Spark jobs of fixed overhead — so when the distinct edge set
-    fits under the threshold (default 1M edges ≈ 16 MB) it is collected
-    and resolved with an in-memory union-find, byte-identical output
+    small Spark jobs of fixed overhead — so when the RAW pair rows that
+    are not self-loops (as given: neither symmetrized nor deduplicated)
+    number at most the threshold (default 1M rows ≈ 16 MB) they are
+    collected and resolved with an in-memory union-find, byte-identical output
     (min-root union ⇒ component = min id).  The distributed contraction
     is the big-graph path; pass ``driver_threshold=0`` to force it (the
     log-rounds pytest does)."""

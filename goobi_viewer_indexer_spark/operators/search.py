@@ -800,50 +800,32 @@ def _boosted_plan(st: DataFrame, scored: DataFrame, k: int,
     )
 
 
-def _spell_frame(term_stats: DataFrame, nb: int) -> DataFrame:
-    """The SymSpell delete-key frame for a FLAT dictionary: (delkey, term,
-    df, bucket) — every ≤2-char deletion of every dictionary term,
-    bucketed by hash(delkey) for probe pruning.  Shared by the lazy
-    per-rev cache (_SnapshotReader._ensure_spell) and the txn-managed index
-    table (maintenance.set_spell_table)."""
-
-    def gen(batches):
-        for pdf in batches:
-            out_k, out_t, out_d = [], [], []
-            for t, df in zip(pdf["term"], pdf["df"]):
-                for k in _deletes(t, 2):
-                    out_k.append(k)
-                    out_t.append(t)
-                    out_d.append(int(df))
-            yield pd.DataFrame({"delkey": out_k, "term": out_t, "df": out_d})
-
-    return (
-        term_stats.select("term", "df")
-        .mapInPandas(gen, "delkey string, term string, df long")
-        .withColumn("bucket", F.pmod(F.hash("delkey"), F.lit(nb)))
-    )
-
-
-def _spell_frame_fielded(term_stats: DataFrame, nb: int) -> DataFrame:
-    """Fielded twin of :func:`_spell_frame` over the TAGGED dictionary:
-    (field, delkey, term(body), df, bucket)."""
+def _spell_frame(term_stats: DataFrame, nb: int, fielded: bool) -> DataFrame:
+    """The SymSpell delete-key frame of a dictionary: (delkey, term, df,
+    bucket) — every ≤2-char deletion of every dictionary term, bucketed by
+    hash(delkey) for probe pruning.  A FIELDED dictionary's terms are
+    tagged ``field\\x00body``: its frame leads with ``field`` and carries
+    the body as ``term``; a flat term has no tag and its frame no
+    ``field``.  Shared by the lazy per-rev cache
+    (_SnapshotReader._ensure_spell) and the txn-managed index table
+    (maintenance.set_spell_table)."""
     from goobi_viewer_indexer_spark.operators.spimi import FIELD_SEP
 
+    cols = (["field"] if fielded else []) + ["delkey", "term", "df"]
+
     def gen(batches):
         for pdf in batches:
-            out_f, out_k, out_t, out_d = [], [], [], []
+            out = []
             for tagged, df in zip(pdf["term"], pdf["df"]):
-                fname, body = tagged.split(FIELD_SEP, 1)
+                fname, _sep, body = tagged.rpartition(FIELD_SEP)
                 for k in _deletes(body, 2):
-                    out_f.append(fname)
-                    out_k.append(k)
-                    out_t.append(body)
-                    out_d.append(int(df))
-            yield pd.DataFrame({"field": out_f, "delkey": out_k, "term": out_t, "df": out_d})
+                    out.append((fname, k, body, int(df)))
+            yield pd.DataFrame(out, columns=["field", "delkey", "term", "df"])[cols]
 
+    schema = ("field string, " if fielded else "") + "delkey string, term string, df long"
     return (
         term_stats.select("term", "df")
-        .mapInPandas(gen, "field string, delkey string, term string, df long")
+        .mapInPandas(gen, schema)
         .withColumn("bucket", F.pmod(F.hash("delkey"), F.lit(nb)))
     )
 
@@ -1085,10 +1067,10 @@ class _SnapshotReader:
     The snapshot-reader core shared by :class:`InvertedIndex` and
     :class:`FieldedIndex`.  What differs between the engines is carried as
     class attributes: ``_fielded`` (one packed ``doclens_<f>`` column per
-    field instead of the single ``doclens``), ``_spell_frame`` /
-    ``_spell_key`` (the spell delete-key frame and its cache-key prefix)
-    and ``_n_live_attr`` (the public attribute holding the live doc
-    count)."""
+    field instead of the single ``doclens``, and field-tagged dictionary
+    terms — :meth:`_term_space`), ``_spell_key`` (the spell cache-key
+    prefix) and ``_n_live_attr`` (the public attribute holding the live
+    doc count)."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         from goobi_viewer_indexer_spark.plans import txn as _txn
@@ -1104,6 +1086,11 @@ class _SnapshotReader:
         self._postings = spark.read.parquet(_txn.table_path(index_dir, "postings"))
         self._term_stats = spark.read.parquet(_txn.table_path(index_dir, "term_stats"))
         self._doclens = spark.read.parquet(_txn.table_path(index_dir, "doclens_packed"))
+        # the dictionary is fixed for the life of a snapshot: term → (df, cf)
+        # or None (term_stats_for), and (kind, term-space key, args) → sorted
+        # expansion (expand_prefix / expand_fuzzy / expand_range)
+        self._stats_memo: dict[str, tuple[int, int] | None] = {}
+        self._expand_memo: dict[tuple, list[str]] = {}
         self._tomb_packed = None
         tomb_path = _txn.table_path(index_dir, "tombstones")
         # the tombstone table grows IN PLACE (txn.apply_append), so read
@@ -1221,9 +1208,7 @@ class _SnapshotReader:
         (:meth:`expand_fuzzy` / :meth:`expand_prefix` / :meth:`expand_range`)
         pre-populate it, so e.g. a fuzzy search pays ONE dictionary probe
         job instead of two."""
-        memo = getattr(self, "_stats_memo", None)
-        if memo is None:
-            memo = self._stats_memo = {}
+        memo = self._stats_memo
         missing = [t for t in terms if t not in memo]
         if missing:
             bks = self._buckets_of(missing)
@@ -1260,8 +1245,7 @@ class _SnapshotReader:
         handle's revision; else a per-revision derived parquet cache
         (content key = index dir + rev, so maintenance commits invalidate
         it) — ~(1+L+L²/2)·|vocab| rows, generated distributed via
-        mapInPandas (``_spell_frame``: :func:`_spell_frame` or
-        :func:`_spell_frame_fielded`)."""
+        mapInPandas (:func:`_spell_frame`)."""
         import hashlib
         import os
         import tempfile
@@ -1272,7 +1256,7 @@ class _SnapshotReader:
             path = os.path.join(tempfile.gettempdir(), f"gvi_spell_{key}")
             if not os.path.exists(os.path.join(path, "_SUCCESS")):
                 (
-                    self._spell_frame(self._term_stats, self.meta["postings_buckets"])
+                    _spell_frame(self._term_stats, self.meta["postings_buckets"], self._fielded)
                     .repartition("bucket")
                     .write.mode("overwrite").partitionBy("bucket").parquet(path)
                 )
@@ -1281,6 +1265,277 @@ class _SnapshotReader:
         self._spell_df = self.spark.read.parquet(path)
         self._spell_path = path
         return self._spell_df
+
+    # -- term dictionary: one per field; a flat index is one unnamed field --
+    def _term_space(self, field: str | None) -> str:
+        """The key prefix every dictionary term of ``field`` carries: the
+        fielded engine tags terms ``field\\x00term`` (Lucene keeps one
+        dictionary per field), a flat index is the single unnamed field
+        ``""`` (``field`` must be None there).  Every dictionary method
+        below works over this space and strips it from what it returns."""
+        from goobi_viewer_indexer_spark.operators.spimi import tag_term
+
+        if not self._fielded:
+            if field is not None:
+                raise ValueError("a flat index has no fields")
+            return ""
+        if field not in self.fields:
+            raise ValueError(f"unknown field {field!r} (have {self.fields})")
+        return tag_term(field, "")
+
+    def _expanded(self, key: tuple, sp: str, found: dict[str, tuple[int, int]]) -> list[str]:
+        """Memoize one expansion: the (df, cf) of the tagged terms it found
+        into the stats memo (the dictionary read proves presence, so the
+        search that follows pays no stats job) and their bodies into the
+        expansion memo.  Callers get their own copy."""
+        for t, st in found.items():
+            self._stats_memo.setdefault(t, st)
+        if len(self._expand_memo) > 100_000:  # long-lived-service guard, as for the stats memo
+            self._expand_memo.clear()
+        self._expand_memo[key] = sorted(t[len(sp):] for t in found)
+        return list(self._expand_memo[key])
+
+    def expand_prefix(self, field: str | None, prefix: str, max_expansions: int = 1024) -> list[str]:
+        """Terms of ``field``'s dictionary matching ``prefix*`` — a parquet
+        RANGE scan on term_stats (``term >= p AND term < p + U+10FFFF``
+        over the term space reaches the scan as pushed row-group
+        predicates, so only this field's rows are read; the postings reads
+        that follow are bucket-pruned as usual since the terms are then
+        known).  Solr's wildcard surface (viewer-side q=pre*);
+        deterministic cap: raising beats silently truncating the
+        expansion.  Memoized per snapshot, like every expansion."""
+        sp = self._term_space(field)
+        if not prefix:
+            raise ValueError("empty prefix")
+        lo = sp + prefix
+        key = ("*", lo, max_expansions)
+        if key in self._expand_memo:
+            return list(self._expand_memo[key])
+        # cap BEFORE collect (VERDICT r3): limit(max+1) on the pushed range
+        # scan decides over-budget without materializing a hot prefix's
+        # whole dictionary slice on the driver ('a*' stays O(max_expansions))
+        rows = (
+            self._term_stats
+            .filter((F.col("term") >= lo) & (F.col("term") < lo + "\U0010ffff"))
+            .select("term", "df", "cf")
+            .limit(max_expansions + 1)
+            .collect()
+        )
+        if len(rows) > max_expansions:
+            raise ValueError(f"prefix {field + ':' if sp else ''}{prefix!r}* expands to > {max_expansions} terms")
+        return self._expanded(key, sp, {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows})
+
+    def expand_range(self, field: str | None, lo: str, hi: str, max_expansions: int = 1024) -> list[str]:
+        """Terms of ``field``'s dictionary in ``[lo, hi]`` (inclusive;
+        ``*`` = open end) — the expansion behind ``[lo TO hi]`` clauses.
+
+        NUMERIC compare when both closed endpoints parse as integers (the
+        reference manufactures YEAR/YEARMONTH/YEARMONTHDAY/CENTURY/
+        MDNUM_*/SORTNUM_* numerics precisely for the viewer's range
+        drill-downs — coercion table helper/SolrSearchIndex.java:256-284,
+        derivation helper/MetadataHelper.java:1053-1123): ``try_cast(term
+        AS long)`` over the term bodies.  Else LEXICOGRAPHIC: a PUSHED
+        parquet range scan (``term BETWEEN lo AND hi`` in the term space
+        reaches the scan as row-group predicates).  A fielded scan first
+        slices its field's dictionary rows.  Both cap at limit(max+1)
+        before collect.
+
+        At 10^12-doc scale a range over a high-cardinality field belongs
+        in a doc-values side table (a ``dims`` filter / facet_range), not
+        a dictionary expansion — this path serves the reference's bounded
+        vocabularies (years, centuries, month numbers)."""
+        sp = self._term_space(field)
+
+        def _norm(s: str) -> str | None:
+            if s == "*":
+                return None
+            # integer endpoints bypass the tokenizer: it strips '-', which
+            # would silently mangle a negative bound ('[-5 TO 10]' → [5 TO
+            # 10]) — the reference's manufactured YEAR values include
+            # negatives (BCE dates, MetadataHelper centuries) (ADVICE r4).
+            # The dictionary itself never holds '-'-prefixed terms (same
+            # tokenizer at index time), so a negative bound simply admits
+            # every non-negative term above/below it.
+            try:
+                int(s)
+                return s
+            except ValueError:
+                pass
+            toks = tokenize_py(s)
+            if len(toks) != 1:
+                raise ValueError(f"range endpoint {s!r} must normalize to one token")
+            return toks[0]
+
+        key = ("[", sp, lo, hi, max_expansions)
+        if key in self._expand_memo:
+            return list(self._expand_memo[key])
+        nlo, nhi = _norm(lo), _norm(hi)
+        numeric = False
+        try:
+            ilo = int(nlo) if nlo is not None else None
+            ihi = int(nhi) if nhi is not None else None
+            numeric = nlo is not None or nhi is not None
+        except ValueError:
+            numeric = False
+        base = self._term_stats
+        body = F.col("term")
+        if sp:  # this field's slice of the tagged dictionary
+            base = base.filter((F.col("term") >= sp) & (F.col("term") < sp + "\U0010ffff"))
+            body = F.expr(f"substring(term, {len(sp) + 1})")
+        if numeric:
+            body = body.try_cast("long")
+            cond = body.isNotNull()
+            if ilo is not None:
+                cond = cond & (body >= ilo)
+            if ihi is not None:
+                cond = cond & (body <= ihi)
+            base = base.filter(cond)
+        else:
+            if nlo is not None:
+                base = base.filter(F.col("term") >= sp + nlo)
+            if nhi is not None:
+                base = base.filter(F.col("term") <= sp + nhi)
+        rows = base.select("term", "df", "cf").limit(max_expansions + 1).collect()
+        if len(rows) > max_expansions:
+            raise ValueError(f"range {field + ':' if sp else ''}[{lo} TO {hi}] expands to > {max_expansions} terms")
+        return self._expanded(key, sp, {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows})
+
+    def expand_fuzzy(self, field: str | None, term: str, max_edits: int = 1,
+                     max_expansions: int = 64) -> list[str]:
+        """Terms of ``field``'s dictionary within Levenshtein distance
+        ``max_edits`` of ``term`` (Solr ``term~1``).  Instead of scanning
+        the dictionary with an automaton (Lucene's FST approach), every
+        ed≤1 string is GENERATED (deletes + substitutions + inserts over
+        [a-z0-9], ~74·L strings) and looked up through
+        :meth:`term_stats_for` — one exact, bucket-pruned ``term IN``
+        probe that memoizes hits AND misses, so the search that follows
+        pays no second stats job; no dictionary scan, no post-verify, and
+        the probe count is independent of vocabulary size.  ed≥2 would
+        square the probe set; raise rather than silently degrade (Solr
+        caps at 2 for the same reason)."""
+        sp = self._term_space(field)
+        if max_edits != 1:
+            raise ValueError("only max_edits=1 is supported (probe set is O(74*len); ed2 squares it)")
+        if not term:
+            raise ValueError("empty term")
+        key = ("~", sp + term, max_expansions)
+        if key in self._expand_memo:
+            return list(self._expand_memo[key])
+        found = self.term_stats_for(sorted(sp + t for t in _edits1(term)))
+        if len(found) > max_expansions:
+            raise ValueError(f"fuzzy {field + ':' if sp else ''}{term!r}~1 expands to {len(found)} terms "
+                             f"(> {max_expansions})")
+        return self._expanded(key, sp, found)
+
+    def suggest(self, field: str | None, term: str, max_suggestions: int = 5,
+                max_edits: int = 1) -> list[tuple[str, int]]:
+        """Solr SpellCheckComponent analog ("did you mean", per-field
+        dictionary): terms of ``field`` within Levenshtein distance
+        ``max_edits`` of a MISSPELLED query term, ranked by that field's
+        document frequency (df desc, term asc) — Solr's default
+        popularity ranking.  Returns [] when the term itself is indexed
+        (correctly-spelled terms get no suggestions, Solr's
+        ``onlyMorePopular=false`` default).
+
+        ed≤1 reuses the fuzzy probe construction through
+        :meth:`term_stats_for`.  ed≤2 (round 5 — Solr's
+        DirectSolrSpellChecker default ``maxEdits=2``) goes SymSpell-style:
+        delete-only keys of the query (1+L+L(L-1)/2 strings, never the
+        74²·L² generate-all set) probe a delete-key side table of the
+        dictionary (:meth:`_ensure_spell`; a fielded table holds every
+        field, filtered on its ``field`` column), candidates verified with
+        an exact banded Levenshtein — no dictionary walk on either path."""
+        sp = self._term_space(field)
+        if max_edits not in (1, 2):
+            raise ValueError("suggest supports max_edits 1 or 2 (Solr caps at 2)")
+        if max_edits == 1:
+            stats = self.term_stats_for(sorted(sp + t for t in _edits1(term)))  # the term itself included
+            by_term = {t[len(sp):]: st[0] for t, st in stats.items()}
+        else:
+            keys = sorted(_deletes(term, 2))
+            cond = F.col("bucket").isin(self._buckets_of(keys))
+            if sp:
+                cond = (F.col("field") == field) & cond
+            rows = (
+                self._ensure_spell().filter(cond & F.col("delkey").isin(keys))
+                .select("term", "df")
+                .distinct()
+                .collect()
+            )
+            by_term = {r["term"]: int(r["df"]) for r in rows}
+        if term in by_term:
+            return []
+        ranked = sorted(
+            ((t, df) for t, df in by_term.items() if _lev_le(t, term, max_edits)),
+            key=lambda e: (-e[1], e[0]),
+        )
+        return ranked[:max_suggestions]
+
+    def spellcheck_collate(
+        self, field: str | None, query: str, max_edits: int = 1, max_suggestions: int = 5
+    ) -> tuple[str, dict[str, list[tuple[str, int]]]]:
+        """Solr ``spellcheck.collate`` analog: tokenize the query, leave
+        terms indexed in ``field`` alone, substitute each MISSPELLED
+        term's top suggestion, and return (collated query string,
+        per-term suggestion lists).  A misspelled term with no suggestion
+        stays verbatim (the collation is best-effort, like Solr's)."""
+        sp = self._term_space(field)
+        toks = tokenize_py(query)
+        stats = self.term_stats_for(sorted({sp + t for t in toks}))
+        out_toks: list[str] = []
+        sugg: dict[str, list[tuple[str, int]]] = {}
+        for t in toks:
+            if sp + t in stats:
+                out_toks.append(t)
+                continue
+            if t not in sugg:
+                sugg[t] = _SnapshotReader.suggest(self, field, t, max_suggestions, max_edits=max_edits)
+            out_toks.append(sugg[t][0][0] if sugg[t] else t)
+        return " ".join(out_toks), sugg
+
+    # -- TermsComponent (Solr /terms handler, terms.fl on a fielded index) --
+    def terms(
+        self,
+        field: str | None,
+        prefix: str = "",
+        limit: int = 10,
+        sort: str = "count",
+        regex: str | None = None,
+        mincount: int | None = None,
+        maxcount: int | None = None,
+    ) -> DataFrame:
+        """Solr TermsComponent (``terms.prefix``/``terms.limit``/
+        ``terms.sort``/``terms.regex``/``terms.mincount``/
+        ``terms.maxcount``): terms of ``field``'s dictionary under a
+        prefix with docFreq (df) and totalTermFreq (cf).
+        ``sort="count"`` (Solr default) ranks df desc, term asc;
+        ``sort="index"`` ranks term asc.  ``regex`` fully anchors like
+        Solr's (the whole term body must match); ``mincount``/``maxcount``
+        bound df inclusively.
+
+        df/cf are INDEX-level stats — like Solr's TermsComponent (and
+        Lucene ``docFreq``), they include deleted-but-unmerged docs.
+        Execution: a pushed ``StartsWith`` filter on the term_stats
+        dictionary scan (term space stripped from the output; regex/df
+        bounds filter the slice Spark-side), then ONE orderBy+limit =
+        TakeOrderedAndProject — cost bounded by the dictionary slice,
+        never the corpus."""
+        sp = self._term_space(field)
+        if sort not in ("count", "index"):
+            raise ValueError("terms.sort must be 'count' or 'index'")
+        t = self._term_stats
+        if sp + prefix:
+            t = t.filter(F.col("term").startswith(sp + prefix))
+        body = F.expr(f"substring(term, {len(sp) + 1})").alias("term") if sp else "term"
+        t = t.select(body, F.col("df").cast("long").alias("df"), F.col("cf").cast("long").alias("cf"))
+        if regex is not None:
+            t = t.filter(F.col("term").rlike(f"^(?:{regex})$"))
+        if mincount is not None:
+            t = t.filter(F.col("df") >= int(mincount))
+        if maxcount is not None:
+            t = t.filter(F.col("df") <= int(maxcount))
+        keys = [F.desc("df"), F.asc("term")] if sort == "count" else [F.asc("term")]
+        return t.orderBy(*keys).limit(limit)
 
     def facet_counts(
         self,
@@ -1406,7 +1661,6 @@ class InvertedIndex(_SnapshotReader):
     (plans/build.build_index) — a :class:`_SnapshotReader` snapshot."""
 
     _fielded = False
-    _spell_frame = staticmethod(_spell_frame)
     _spell_key = ""
     _n_live_attr = "n_live"
 
@@ -1802,35 +2056,28 @@ class InvertedIndex(_SnapshotReader):
 
         return joined.groupBy("rng").applyInPandas(match_range, "doc_id long")
 
-    # -- prefix (wildcard) queries -------------------------------------------
+    # -- term dictionary: field-less forms of _SnapshotReader's family (a flat
+    # index is the one unnamed field of the term space) ----------------------
     def expand_prefix(self, prefix: str, max_expansions: int = 1024) -> list[str]:
-        """Terms matching ``prefix*`` from the term dictionary — a parquet
-        RANGE scan on term_stats (``term >= p AND term < p + U+10FFFF``
-        reaches the scan as pushed row-group predicates; the postings reads
-        that follow are bucket-pruned as usual since the terms are then
-        known).  Solr's wildcard surface (viewer-side q=pre*); deterministic
-        cap: raising beats silently truncating the expansion."""
-        if not prefix:
-            raise ValueError("empty prefix")
-        hi = prefix + "\U0010ffff"
-        # cap BEFORE collect (VERDICT r3): limit(max+1) on the pushed range
-        # scan decides over-budget without materializing a hot prefix's
-        # whole dictionary slice on the driver ('a*' stays O(max_expansions))
-        rows = (
-            self._term_stats
-            .filter((F.col("term") >= prefix) & (F.col("term") < hi))
-            .select("term", "df", "cf")
-            .limit(max_expansions + 1)
-            .collect()
-        )
-        if len(rows) > max_expansions:
-            raise ValueError(f"prefix {prefix!r} expands to > {max_expansions} terms")
-        memo = getattr(self, "_stats_memo", None)
-        if memo is None:
-            memo = self._stats_memo = {}
-        for r in rows:  # positive entries only: the scan proves presence
-            memo.setdefault(r["term"], (int(r["df"]), int(r["cf"])))
-        return sorted(r["term"] for r in rows)
+        return super().expand_prefix(None, prefix, max_expansions)
+
+    def expand_range(self, lo: str, hi: str, max_expansions: int = 1024) -> list[str]:
+        return super().expand_range(None, lo, hi, max_expansions)
+
+    def expand_fuzzy(self, term: str, max_edits: int = 1, max_expansions: int = 64) -> list[str]:
+        return super().expand_fuzzy(None, term, max_edits, max_expansions)
+
+    def suggest(self, term: str, max_suggestions: int = 5, max_edits: int = 1) -> list[tuple[str, int]]:
+        return super().suggest(None, term, max_suggestions, max_edits)
+
+    def spellcheck_collate(
+        self, query: str, max_edits: int = 1, max_suggestions: int = 5
+    ) -> tuple[str, dict[str, list[tuple[str, int]]]]:
+        return super().spellcheck_collate(None, query, max_edits, max_suggestions)
+
+    def terms(self, prefix: str = "", limit: int = 10, sort: str = "count", regex: str | None = None,
+              mincount: int | None = None, maxcount: int | None = None) -> DataFrame:
+        return super().terms(None, prefix, limit, sort, regex, mincount, maxcount)
 
     def search_prefix(self, prefix: str, k: int = 10, max_expansions: int = 1024) -> DataFrame:
         """Top-k BM25 over ``prefix*`` = OR over every matching term (each
@@ -1840,95 +2087,6 @@ class InvertedIndex(_SnapshotReader):
             return _empty_df(self.spark, "doc_id long, score double")
         return self.search(terms, k=k, mode="or")
 
-    def expand_range(self, lo: str, hi: str, max_expansions: int = 1024) -> list[str]:
-        """Dictionary terms in ``[lo, hi]`` (inclusive; ``*`` = open end) —
-        the expansion behind ``[lo TO hi]`` clauses in the flat boolean
-        syntax (round 5, the flat twin of :meth:`FieldedIndex.
-        expand_range`).  NUMERIC compare when both closed endpoints parse
-        as integers (``try_cast(term AS long)`` over the dictionary), else
-        a PUSHED parquet range scan (``term BETWEEN lo AND hi`` reaches
-        the scan as row-group predicates).  Caps at limit(max+1) before
-        collect.  Integer endpoints bypass the tokenizer so negative
-        bounds survive (the tokenizer strips '-', ADVICE r4)."""
-        def _norm(s: str) -> str | None:
-            if s == "*":
-                return None
-            try:
-                int(s)
-                return s
-            except ValueError:
-                pass
-            toks = tokenize_py(s)
-            if len(toks) != 1:
-                raise ValueError(f"range endpoint {s!r} must normalize to one token")
-            return toks[0]
-
-        nlo, nhi = _norm(lo), _norm(hi)
-        numeric = False
-        try:
-            ilo = int(nlo) if nlo is not None else None
-            ihi = int(nhi) if nhi is not None else None
-            numeric = nlo is not None or nhi is not None
-        except (TypeError, ValueError):
-            numeric = False
-        base = self._term_stats
-        if numeric:
-            body = F.col("term").try_cast("long")
-            cond = body.isNotNull()
-            if ilo is not None:
-                cond = cond & (body >= ilo)
-            if ihi is not None:
-                cond = cond & (body <= ihi)
-            rows = base.filter(cond).select("term", "df", "cf").limit(max_expansions + 1).collect()
-        else:
-            if nlo is not None:
-                base = base.filter(F.col("term") >= nlo)
-            if nhi is not None:
-                base = base.filter(F.col("term") <= nhi)
-            rows = base.select("term", "df", "cf").limit(max_expansions + 1).collect()
-        if len(rows) > max_expansions:
-            raise ValueError(f"range [{lo} TO {hi}] expands to > {max_expansions} terms")
-        memo = getattr(self, "_stats_memo", None)
-        if memo is None:
-            memo = self._stats_memo = {}
-        for r in rows:  # positive entries only: the scan proves presence
-            memo.setdefault(r["term"], (int(r["df"]), int(r["cf"])))
-        return sorted(r["term"] for r in rows)
-
-    # -- fuzzy terms (Solr term~1) -------------------------------------------
-    def expand_fuzzy(self, term: str, max_edits: int = 1, max_expansions: int = 64) -> list[str]:
-        """Dictionary terms within Levenshtein distance ``max_edits`` of
-        ``term`` (Solr ``term~1``).  Instead of scanning the dictionary
-        with an automaton (Lucene's FST approach), every ed≤1 string is
-        GENERATED (deletes + substitutions + inserts over [a-z0-9], ~74·L
-        strings) and looked up as an exact, bucket-pruned ``term IN``
-        probe — no dictionary scan, no post-verify, and the probe count is
-        independent of vocabulary size.  ed≥2 would square the probe set;
-        raise rather than silently degrade (Solr caps at 2 for the same
-        reason)."""
-        if max_edits != 1:
-            raise ValueError("only max_edits=1 is supported (probe set is O(74*len); ed2 squares it)")
-        if not term:
-            raise ValueError("empty term")
-        probes = sorted(_edits1(term))
-        rows = (
-            self._term_stats
-            .filter(F.col("bucket").isin(self._buckets_of(probes)) & F.col("term").isin(probes))
-            .select("term", "df", "cf")
-            .collect()
-        )
-        # exact IN probe = full knowledge: memoize hits AND misses so the
-        # following search() pays no second stats job (round 6)
-        memo = getattr(self, "_stats_memo", None)
-        if memo is None:
-            memo = self._stats_memo = {}
-        found = {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows}
-        for p in probes:
-            memo.setdefault(p, found.get(p))
-        terms = sorted(found)
-        if len(terms) > max_expansions:
-            raise ValueError(f"fuzzy {term!r}~1 expands to {len(terms)} terms (> {max_expansions})")
-        return terms
 
     def search_fuzzy(self, term: str, k: int = 10, max_edits: int = 1,
                      max_expansions: int = 64) -> DataFrame:
@@ -1940,120 +2098,6 @@ class InvertedIndex(_SnapshotReader):
             return _empty_df(self.spark, "doc_id long, score double")
         return self.search(terms, k=k, mode="or")
 
-    def suggest(self, term: str, max_suggestions: int = 5,
-                max_edits: int = 1) -> list[tuple[str, int]]:
-        """Solr SpellCheckComponent analog ("did you mean"): dictionary
-        terms within Levenshtein distance ``max_edits`` of a MISSPELLED
-        query term, ranked by document frequency (df desc, term asc) —
-        Solr's default popularity ranking.  Returns [] when the term
-        itself is indexed (correctly-spelled terms get no suggestions,
-        Solr's ``onlyMorePopular=false`` default).
-
-        ed≤1 reuses the fuzzy probe construction: ~74·len generated
-        strings become one bucket-pruned exact ``term IN`` scan.  ed≤2
-        (round 5 — Solr's DirectSolrSpellChecker default ``maxEdits=2``)
-        goes SymSpell-style: delete-only keys of the query (1+L+L(L-1)/2
-        strings, never the 74²·L² generate-all set) probe a delete-key
-        side table of the dictionary (:meth:`_ensure_spell`), candidates
-        verified with an exact banded Levenshtein — no dictionary walk on
-        either path."""
-        if max_edits not in (1, 2):
-            raise ValueError("suggest supports max_edits 1 or 2 (Solr caps at 2)")
-        if max_edits == 1:
-            probes = sorted(_edits1(term))
-            rows = (
-                self._term_stats
-                .filter(F.col("bucket").isin(self._buckets_of(probes + [term]))
-                        & F.col("term").isin(probes + [term]))
-                .select("term", "df")
-                .collect()
-            )
-            by_term = {r["term"]: int(r["df"]) for r in rows}
-            if term in by_term:
-                return []
-            ranked = sorted(((t, df) for t, df in by_term.items()), key=lambda e: (-e[1], e[0]))
-            return ranked[:max_suggestions]
-        sp = self._ensure_spell()
-        keys = sorted(_deletes(term, 2))
-        from goobi_viewer_indexer_spark.functions.spark_hash import bucket_of
-
-        nb = self.meta["postings_buckets"]
-        bks = sorted({bucket_of(k, nb) for k in keys})
-        rows = (
-            sp.filter(F.col("bucket").isin(bks) & F.col("delkey").isin(keys))
-            .select("term", "df")
-            .distinct()
-            .collect()
-        )
-        by_term = {r["term"]: int(r["df"]) for r in rows}
-        if term in by_term:
-            return []
-        ranked = sorted(
-            ((t, df) for t, df in by_term.items() if _lev_le(t, term, 2)),
-            key=lambda e: (-e[1], e[0]),
-        )
-        return ranked[:max_suggestions]
-
-    def spellcheck_collate(
-        self, query: str, max_edits: int = 1, max_suggestions: int = 5
-    ) -> tuple[str, dict[str, list[tuple[str, int]]]]:
-        """Solr ``spellcheck.collate`` analog: tokenize the query, leave
-        indexed terms alone, substitute each MISSPELLED term's top
-        suggestion, and return (collated query string, per-term
-        suggestion lists).  A misspelled term with no suggestion stays
-        verbatim (the collation is best-effort, like Solr's)."""
-        toks = tokenize_py(query)
-        stats = self.term_stats_for(sorted(set(toks)))
-        out_toks: list[str] = []
-        sugg: dict[str, list[tuple[str, int]]] = {}
-        for t in toks:
-            if t in stats:
-                out_toks.append(t)
-                continue
-            if t not in sugg:
-                sugg[t] = self.suggest(t, max_suggestions, max_edits=max_edits)
-            out_toks.append(sugg[t][0][0] if sugg[t] else t)
-        return " ".join(out_toks), sugg
-
-    # -- TermsComponent (Solr /terms handler) --------------------------------
-    def terms(
-        self,
-        prefix: str = "",
-        limit: int = 10,
-        sort: str = "count",
-        regex: str | None = None,
-        mincount: int | None = None,
-        maxcount: int | None = None,
-    ) -> DataFrame:
-        """Solr TermsComponent (``terms.prefix``/``terms.limit``/
-        ``terms.sort``/``terms.regex``/``terms.mincount``/
-        ``terms.maxcount``): dictionary terms under a prefix with docFreq
-        (df) and totalTermFreq (cf).  ``sort="count"`` (Solr default)
-        ranks df desc, term asc; ``sort="index"`` ranks term asc.
-        ``regex`` fully anchors like Solr's (the whole term must match);
-        ``mincount``/``maxcount`` bound df inclusively.
-
-        df/cf are INDEX-level stats — like Solr's TermsComponent (and
-        Lucene ``docFreq``), they include deleted-but-unmerged docs.
-        Execution: a pushed ``StartsWith`` filter on the term_stats
-        dictionary scan (regex/df bounds filter the slice Spark-side),
-        then ONE orderBy+limit = TakeOrderedAndProject — cost bounded by
-        the dictionary slice, never the corpus."""
-        if sort not in ("count", "index"):
-            raise ValueError("terms.sort must be 'count' or 'index'")
-        t = self._term_stats.select(
-            "term", F.col("df").cast("long").alias("df"), F.col("cf").cast("long").alias("cf")
-        )
-        if prefix:
-            t = t.filter(F.col("term").startswith(prefix))
-        if regex is not None:
-            t = t.filter(F.col("term").rlike(f"^(?:{regex})$"))
-        if mincount is not None:
-            t = t.filter(F.col("df") >= int(mincount))
-        if maxcount is not None:
-            t = t.filter(F.col("df") <= int(maxcount))
-        keys = [F.desc("df"), F.asc("term")] if sort == "count" else [F.asc("term")]
-        return t.orderBy(*keys).limit(limit)
 
     # -- MoreLikeThis (Solr MLT component) -----------------------------------
     def term_vector(self, doc_id: int) -> list[tuple[str, int]]:
@@ -3253,7 +3297,6 @@ class FieldedIndex(_SnapshotReader):
     model/SolrConstants.java:96-140)."""
 
     _fielded = True
-    _spell_frame = staticmethod(_spell_frame_fielded)
     _spell_key = "f:"
     _n_live_attr = "n_docs"
 
@@ -3653,31 +3696,6 @@ class FieldedIndex(_SnapshotReader):
 
         return joined.groupBy("rng").applyInPandas(match_range, "doc_id long")
 
-    def expand_prefix(self, field: str, prefix: str, max_expansions: int = 1024) -> list[str]:
-        """Dictionary terms of ``field`` matching ``prefix*`` — the same
-        pushed range scan as the flat engine's :meth:`InvertedIndex.
-        expand_prefix`, over the TAGGED term space (``field\\x00prefix`` …)
-        so only this field's dictionary rows are read."""
-        from goobi_viewer_indexer_spark.operators.spimi import FIELD_SEP, tag_term
-
-        if not prefix:
-            raise ValueError("empty prefix")
-        if field not in self.fields:
-            raise ValueError(f"unknown field {field!r} (have {self.fields})")
-        tag = tag_term(field, prefix)
-        # cap BEFORE collect (VERDICT r3): the pushed range scan decides
-        # over-budget at limit(max+1) rows, never the whole dictionary slice
-        rows = (
-            self._term_stats
-            .filter((F.col("term") >= tag) & (F.col("term") < tag + "\U0010ffff"))
-            .select("term")
-            .limit(max_expansions + 1)
-            .collect()
-        )
-        if len(rows) > max_expansions:
-            raise ValueError(f"prefix {field}:{prefix!r}* expands to > {max_expansions} terms")
-        return sorted(r["term"].split(FIELD_SEP, 1)[1] for r in rows)
-
     def facet_query(
         self,
         base: str | list[tuple[str, str]],
@@ -3693,146 +3711,6 @@ class FieldedIndex(_SnapshotReader):
             s = self.match_ids(named[name]).select(F.lit(name).alias("facet_query"), "doc_id")
             subs = s if subs is None else subs.unionByName(s)
         return _facet_query_assemble(self.spark, subs, self._mids_fq(base, mode, fq), sorted(named))
-
-    def expand_fuzzy(self, field: str, term: str, max_edits: int = 1,
-                     max_expansions: int = 64) -> list[str]:
-        """Dictionary terms of ``field`` within Levenshtein distance 1 —
-        the flat engine's probe construction over the TAGGED term space
-        (see :meth:`InvertedIndex.expand_fuzzy`)."""
-        from goobi_viewer_indexer_spark.operators.spimi import FIELD_SEP, tag_term
-
-        if max_edits != 1:
-            raise ValueError("only max_edits=1 is supported")
-        if not term:
-            raise ValueError("empty term")
-        if field not in self.fields:
-            raise ValueError(f"unknown field {field!r} (have {self.fields})")
-        probes = sorted(tag_term(field, t) for t in _edits1(term))
-        rows = (
-            self._term_stats
-            .filter(F.col("bucket").isin(self._buckets_of(probes)) & F.col("term").isin(probes))
-            .select("term")
-            .collect()
-        )
-        terms = sorted(r["term"].split(FIELD_SEP, 1)[1] for r in rows)
-        if len(terms) > max_expansions:
-            raise ValueError(f"fuzzy {field}:{term!r}~1 expands to {len(terms)} terms (> {max_expansions})")
-        return terms
-
-    def suggest(self, field: str, term: str, max_suggestions: int = 5,
-                max_edits: int = 1) -> list[tuple[str, int]]:
-        """Field-scoped spellcheck (Solr SpellCheckComponent with a
-        per-field dictionary): ed≤``max_edits`` terms of ``field`` ranked
-        by that field's df — same contract as :meth:`InvertedIndex.
-        suggest`, over the TAGGED term space.  ed2 probes the SymSpell
-        delete-key side table (one table for all fields, field column
-        filtered — :meth:`_ensure_spell`)."""
-        from goobi_viewer_indexer_spark.operators.spimi import FIELD_SEP, tag_term
-
-        if field not in self.fields:
-            raise ValueError(f"unknown field {field!r} (have {self.fields})")
-        if max_edits not in (1, 2):
-            raise ValueError("suggest supports max_edits 1 or 2 (Solr caps at 2)")
-        if max_edits == 1:
-            probes = sorted(tag_term(field, t) for t in _edits1(term) | {term})
-            rows = (
-                self._term_stats
-                .filter(F.col("bucket").isin(self._buckets_of(probes)) & F.col("term").isin(probes))
-                .select("term", "df")
-                .collect()
-            )
-            by_term = {r["term"].split(FIELD_SEP, 1)[1]: int(r["df"]) for r in rows}
-            if term in by_term:
-                return []
-            ranked = sorted(by_term.items(), key=lambda e: (-e[1], e[0]))
-            return ranked[:max_suggestions]
-        sp = self._ensure_spell()
-        keys = sorted(_deletes(term, 2))
-        from goobi_viewer_indexer_spark.functions.spark_hash import bucket_of
-
-        nb = self.meta["postings_buckets"]
-        bks = sorted({bucket_of(k, nb) for k in keys})
-        rows = (
-            sp.filter((F.col("field") == field) & F.col("bucket").isin(bks)
-                      & F.col("delkey").isin(keys))
-            .select("term", "df")
-            .distinct()
-            .collect()
-        )
-        by_term = {r["term"]: int(r["df"]) for r in rows}
-        if term in by_term:
-            return []
-        ranked = sorted(
-            ((t, df) for t, df in by_term.items() if _lev_le(t, term, 2)),
-            key=lambda e: (-e[1], e[0]),
-        )
-        return ranked[:max_suggestions]
-
-    def spellcheck_collate(
-        self, field: str, query: str, max_edits: int = 1, max_suggestions: int = 5
-    ) -> tuple[str, dict[str, list[tuple[str, int]]]]:
-        """Field-scoped ``spellcheck.collate``: tokenize, keep terms
-        indexed in ``field``, substitute each misspelled term's top
-        suggestion — the fielded twin of :meth:`InvertedIndex.
-        spellcheck_collate`."""
-        from goobi_viewer_indexer_spark.operators.spimi import tag_term
-
-        if field not in self.fields:
-            raise ValueError(f"unknown field {field!r} (have {self.fields})")
-        toks = tokenize_py(query)
-        stats = self.term_stats_for(sorted({tag_term(field, t) for t in toks}))
-        out_toks: list[str] = []
-        sugg: dict[str, list[tuple[str, int]]] = {}
-        for t in toks:
-            if tag_term(field, t) in stats:
-                out_toks.append(t)
-                continue
-            if t not in sugg:
-                sugg[t] = self.suggest(field, t, max_suggestions, max_edits=max_edits)
-            out_toks.append(sugg[t][0][0] if sugg[t] else t)
-        return " ".join(out_toks), sugg
-
-    # -- TermsComponent (fielded — Solr /terms with terms.fl) ----------------
-    def terms(
-        self,
-        field: str,
-        prefix: str = "",
-        limit: int = 10,
-        sort: str = "count",
-        regex: str | None = None,
-        mincount: int | None = None,
-        maxcount: int | None = None,
-    ) -> DataFrame:
-        """Field-scoped Solr TermsComponent: dictionary terms of ``field``
-        under a prefix with df/cf — a pushed ``StartsWith`` scan on the
-        TAGGED dictionary (``field␀prefix``), tag stripped from the
-        output, then ONE TakeOrderedAndProject.  Same index-level df/cf
-        semantics and ``regex``/``mincount``/``maxcount`` filters as the
-        flat engine (the regex applies to the STRIPPED term body)."""
-        from goobi_viewer_indexer_spark.operators.spimi import tag_term
-
-        if field not in self.fields:
-            raise ValueError(f"unknown field {field!r} (have {self.fields})")
-        if sort not in ("count", "index"):
-            raise ValueError("terms.sort must be 'count' or 'index'")
-        tagged_prefix = tag_term(field, prefix)
-        body_start = len(tagged_prefix) - len(prefix) + 1  # 1-based substring
-        t = (
-            self._term_stats.filter(F.col("term").startswith(tagged_prefix))
-            .select(
-                F.expr(f"substring(term, {body_start})").alias("term"),
-                F.col("df").cast("long").alias("df"),
-                F.col("cf").cast("long").alias("cf"),
-            )
-        )
-        if regex is not None:
-            t = t.filter(F.col("term").rlike(f"^(?:{regex})$"))
-        if mincount is not None:
-            t = t.filter(F.col("df") >= int(mincount))
-        if maxcount is not None:
-            t = t.filter(F.col("df") <= int(maxcount))
-        keys = [F.desc("df"), F.asc("term")] if sort == "count" else [F.asc("term")]
-        return t.orderBy(*keys).limit(limit)
 
     # -- MoreLikeThis (fielded — Solr MLT with mlt.fl fields) ----------------
     def term_vector(self, doc_id: int, fields: list[str] | None = None) -> list[tuple[str, str, int]]:
@@ -3902,79 +3780,6 @@ class FieldedIndex(_SnapshotReader):
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
         )
-
-    def expand_range(self, field: str, lo: str, hi: str, max_expansions: int = 1024) -> list[str]:
-        """Dictionary terms of ``field`` in ``[lo, hi]`` (inclusive; ``*``
-        = open end) — the expansion behind ``f:[lo TO hi]`` clauses.
-
-        NUMERIC compare when both closed endpoints parse as integers (the
-        reference manufactures YEAR/YEARMONTH/YEARMONTHDAY/CENTURY/
-        MDNUM_*/SORTNUM_* numerics precisely for the viewer's range
-        drill-downs — coercion table helper/SolrSearchIndex.java:256-284,
-        derivation helper/MetadataHelper.java:1053-1123), else
-        LEXICOGRAPHIC.  Lexicographic is a PUSHED parquet range scan on
-        the tagged dictionary (``term BETWEEN field␀lo AND field␀hi``
-        reaches the scan as row-group predicates); numeric scans only this
-        field's dictionary slice and filters ``try_cast(term AS long)``.
-        Both cap at limit(max+1) before collect.
-
-        At 10^12-doc scale a range over a high-cardinality field belongs
-        in a doc-values side table (a ``dims`` filter / facet_range), not
-        a dictionary expansion — this path serves the reference's bounded
-        vocabularies (years, centuries, month numbers)."""
-        from goobi_viewer_indexer_spark.operators.spimi import FIELD_SEP, tag_term
-
-        if field not in self.fields:
-            raise ValueError(f"unknown field {field!r} (have {self.fields})")
-
-        def _norm(s: str) -> str | None:
-            if s == "*":
-                return None
-            # integer endpoints bypass the tokenizer: it strips '-', which
-            # would silently mangle a negative bound ('[-5 TO 10]' → [5 TO
-            # 10]) — the reference's manufactured YEAR values include
-            # negatives (BCE dates, MetadataHelper centuries) (ADVICE r4).
-            # The dictionary itself never holds '-'-prefixed terms (same
-            # tokenizer at index time), so a negative bound simply admits
-            # every non-negative term above/below it.
-            try:
-                int(s)
-                return s
-            except ValueError:
-                pass
-            toks = tokenize_py(s)
-            if len(toks) != 1:
-                raise ValueError(f"range endpoint {s!r} must normalize to one token")
-            return toks[0]
-
-        nlo, nhi = _norm(lo), _norm(hi)
-        numeric = False
-        try:
-            ilo = int(nlo) if nlo is not None else None
-            ihi = int(nhi) if nhi is not None else None
-            numeric = nlo is not None or nhi is not None
-        except ValueError:
-            numeric = False
-        base = self._term_stats.filter(
-            (F.col("term") >= tag_term(field, "")) & (F.col("term") < field + FIELD_SEP + "\U0010ffff")
-        )
-        if numeric:
-            body = F.expr(f"substring(term, {len(field) + 2})").try_cast("long")
-            cond = body.isNotNull()
-            if ilo is not None:
-                cond = cond & (body >= ilo)
-            if ihi is not None:
-                cond = cond & (body <= ihi)
-            rows = base.filter(cond).select("term").limit(max_expansions + 1).collect()
-        else:
-            if nlo is not None:
-                base = base.filter(F.col("term") >= tag_term(field, nlo))
-            if nhi is not None:
-                base = base.filter(F.col("term") <= tag_term(field, nhi))
-            rows = base.select("term").limit(max_expansions + 1).collect()
-        if len(rows) > max_expansions:
-            raise ValueError(f"range {field}:[{lo} TO {hi}] expands to > {max_expansions} terms")
-        return sorted(r["term"].split(FIELD_SEP, 1)[1] for r in rows)
 
     def _score_plan(self, tagged_weights: dict[str, float], k: int, mode: str,
                     n_required: int, with_positions: bool = False,
@@ -5074,31 +4879,10 @@ class LocalFieldedSearcher(_LocalReader):
     def _load(self, index: "FieldedIndex") -> None:
         super()._load(index)
         self.doclens: dict[str, np.ndarray] = {f: self._dls[f"doclens_{f}"].lens for f in index.fields}
-        # prefix → expansion memo; dropped on refresh (new terms may have
-        # been indexed under the prefix since)
-        self._prefix_memo: dict[tuple[str, str], list[str]] = {}
         # field → dense doc-values arrays (stored-table columns collected
         # once on first touch — the latency-path twin of the distributed
         # engine's pushed stored-filter range routing)
         self._dv_cache: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-
-    def _expand_memo(self, field: str, prefix: str) -> list[str]:
-        key = (field, prefix)
-        if key not in self._prefix_memo:
-            self._prefix_memo[key] = self.index.expand_prefix(field, prefix)
-        return self._prefix_memo[key]
-
-    def _expand_fuzzy_memo(self, field: str, term: str) -> list[str]:
-        key = (field, "~" + term)
-        if key not in self._prefix_memo:
-            self._prefix_memo[key] = self.index.expand_fuzzy(field, term)
-        return self._prefix_memo[key]
-
-    def _expand_range_memo(self, field: str, lo: str, hi: str) -> list[str]:
-        key = (field, f"[{lo} TO {hi}]")
-        if key not in self._prefix_memo:
-            self._prefix_memo[key] = self.index.expand_range(field, lo, hi)
-        return self._prefix_memo[key]
 
     def _dv_arrays(self, field: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """Dense driver-side doc-values for one stored column — Lucene's
@@ -5215,8 +4999,8 @@ class LocalFieldedSearcher(_LocalReader):
                     ids = ids[~np.isin(ids, self.deleted, assume_unique=True)]
             else:
                 tagged_weights, pmode, groups, negs = _fielded_query_parts(
-                    self.index.fields, query, fmode, None, expand=self._expand_memo,
-                    expand_fuzzy=self._expand_fuzzy_memo, expand_range=self._expand_range_memo,
+                    self.index.fields, query, fmode, None, expand=self.index.expand_prefix,
+                    expand_fuzzy=self.index.expand_fuzzy, expand_range=self.index.expand_range,
                 )
                 if not tagged_weights:
                     ids = np.zeros(0, np.int64)
@@ -5329,8 +5113,8 @@ class LocalFieldedSearcher(_LocalReader):
                 keep &= fq_mask[:n]  # compose fq with the dv exclusions
             extra_del = np.flatnonzero(~keep).astype(np.int64)
         tagged_weights, mode, groups, negs = _fielded_query_parts(
-            self.index.fields, query, mode, boosts, expand=self._expand_memo,
-            expand_fuzzy=self._expand_fuzzy_memo, expand_range=self._expand_range_memo,
+            self.index.fields, query, mode, boosts, expand=self.index.expand_prefix,
+            expand_fuzzy=self.index.expand_fuzzy, expand_range=self.index.expand_range,
         )
         if not tagged_weights:
             return []
@@ -5508,8 +5292,8 @@ class LocalFieldedSearcher(_LocalReader):
         if mode not in ("and", "or"):
             raise ValueError("explain supports mode='and'|'or'")
         tagged_weights, pmode, groups, negs = _fielded_query_parts(
-            self.index.fields, query, mode, boosts, expand=self._expand_memo,
-            expand_fuzzy=self._expand_fuzzy_memo, expand_range=self._expand_range_memo,
+            self.index.fields, query, mode, boosts, expand=self.index.expand_prefix,
+            expand_fuzzy=self.index.expand_fuzzy, expand_range=self.index.expand_range,
         )
         if negs:
             raise ValueError("explain supports positive clauses only (prohibited clauses filter, they don't score)")

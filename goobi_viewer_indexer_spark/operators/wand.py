@@ -71,7 +71,8 @@ class TermList:
         return int(self.block_last_doc[i - 1]) + 1 if i > 0 else 0
 
     def decode_block(self, i: int) -> tuple[np.ndarray, np.ndarray]:
-        """(doc_ids, tfs) of block i; decodes lazily, caches."""
+        """(doc_ids, tfs) of block i; decodes lazily, caches (read-only:
+        every later caller shares the cached arrays)."""
         hit = self._cache.get(i)
         if hit is not None:
             return hit
@@ -83,6 +84,7 @@ class TermList:
         gaps = codec.varint_decode(self.doc_bytes[d_lo:d_hi]).astype(np.int64)
         docs = np.cumsum(gaps + 1) - 1 + (base + 1)
         tfs = codec.varint_decode(self.tf_bytes[t_lo:t_hi]).astype(np.int64) + 1
+        docs.flags.writeable = tfs.flags.writeable = False
         self._cache[i] = (docs, tfs)
         return docs, tfs
 
@@ -96,6 +98,7 @@ class TermList:
         p_lo = int(self.block_pos_off[i])
         p_hi = int(self.block_pos_off[i + 1]) if i + 1 < len(self.block_pos_off) else len(self.pos_bytes)
         pos = codec.decode_positions_flat(self.pos_bytes[p_lo:p_hi], tfs)
+        pos.flags.writeable = False
         self._cache[("p", i)] = pos
         return pos
 
@@ -127,6 +130,7 @@ class TermList:
             return hit
         d, t = self.decode_block(i)
         w = self.idf * codec.bm25_weight(t, dl(d), avgdl, k1, b)
+        w.flags.writeable = False
         self._cache[key] = w
         return w
 
@@ -137,8 +141,9 @@ class TermList:
         contiguous slice (two searchsorted, no boolean mask), and the
         score column is a slice of the cached per-block weight array —
         bit-identical to recomputing on the slice (elementwise ops).
-        Returned arrays may be VIEWS of cached arrays; callers must not
-        mutate them in place (the kernel only concatenates/reduces)."""
+        Returned arrays may be READ-ONLY VIEWS of cached arrays: an
+        in-place write raises ``ValueError`` (the kernel only
+        concatenates/reduces)."""
         bl = self.block_last_doc
         b0 = int(np.searchsorted(bl, lo, side="left"))
         if b0 >= len(bl):

@@ -638,10 +638,7 @@ def set_spell_table(spark: SparkSession, index_dir: str, tag: str | None = None)
     are never served.  The default tag embeds the pre-build revision, so
     replays of an interrupted build no-op while a call after new commits
     rebuilds."""
-    from goobi_viewer_indexer_spark.operators.search import (
-        _spell_frame,
-        _spell_frame_fielded,
-    )
+    from goobi_viewer_indexer_spark.operators.search import _spell_frame
     from goobi_viewer_indexer_spark.plans.build import load_meta
 
     sp_path = txn.table_path(index_dir, "spell")
@@ -659,9 +656,9 @@ def set_spell_table(spark: SparkSession, index_dir: str, tag: str | None = None)
         meta = load_meta(index_dir)
         nb = meta["postings_buckets"]
         stats = spark.read.parquet(txn.table_path(index_dir, "term_stats"))
-        frame = _spell_frame_fielded(stats, nb) if "fields" in meta else _spell_frame(stats, nb)
         (
-            frame.repartition("bucket")
+            _spell_frame(stats, nb, "fields" in meta)
+            .repartition("bucket")
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(txn.staged_path(index_dir, tag, "spell"))

@@ -204,6 +204,24 @@ def test_score_range_matches_decode_plus_bm25(spark, flat_idx_dir):
             assert np.array_equal(s1, s2)  # exact, not allclose
 
 
+def test_cached_block_arrays_are_read_only(spark, flat_idx_dir):
+    # score_range hands out views of the per-block weight cache: an
+    # in-place write must raise instead of corrupting later queries
+    local = InvertedIndex(spark, flat_idx_dir).open_local()
+    local._rows_for(["table"])
+    L = local._merged_list("table")
+    meta = local.meta
+    _d, s = L.score_range(0, int(L.block_last_doc[0]), local._dl, meta["avgdl"], meta["k1"], meta["b"])
+    assert s.size > 0
+    with pytest.raises(ValueError):
+        s *= 2.0
+    docs, tfs = L.decode_block(0)
+    with pytest.raises(ValueError):
+        docs += 1
+    with pytest.raises(ValueError):
+        tfs[0] = 0
+
+
 def test_local_searcher_passes_one_doclens_per_generation(spark, flat_idx_dir, monkeypatch):
     # the kernels' per-block weight caches key on the doclens object, so a
     # loaded generation must hand every query the same one (not a fresh
