@@ -1150,11 +1150,27 @@ class _SnapshotReader:
         if self._tomb_packed is not None:
             tomb = {int(r["rng"]): bytes(r["deleted"]) for r in self._tomb_packed.collect()}
         cols = self._dl_cols
-        self._dl_bc = self.spark.sparkContext.broadcast({
+        side = {
             int(r["rng"]): (int(r["base"]), tuple(bytes(r[c]) for c in cols), tomb.get(int(r["rng"])))
             for r in self._doclens.collect()
-        })
+        }
+        # kept driver-side too: a LocalSearcher over this handle builds its
+        # arrays from this one collect instead of collecting both again
+        self._side_rows = (side, tomb)
+        self._dl_bc = self.spark.sparkContext.broadcast(side)
         return self._dl_bc
+
+    def _side_tables(self) -> tuple[list[tuple[int, tuple]], list[bytes]]:
+        """([(base, packed doclens per column)], [packed tombstone ids]) of
+        this snapshot: the open's broadcast collect when there is one,
+        else (over the broadcast budget) one collect of each table."""
+        if self._rng_broadcast() is not None:
+            side, tomb = self._side_rows
+            return [(base, lens) for base, lens, _ in side.values()], list(tomb.values())
+        cols = self._dl_cols
+        dl = [(int(r["base"]), tuple(bytes(r[c]) for c in cols)) for r in self._doclens.collect()]
+        tomb = [] if self._tomb_packed is None else [bytes(r["deleted"]) for r in self._tomb_packed.collect()]
+        return dl, tomb
 
     def _attach_rng_side(self, rows: DataFrame, doclens: bool = True):
         """(kernel_input, bc): join the packed side tables when the
@@ -2742,22 +2758,20 @@ class _LocalReader:
     def _load(self, index: _SnapshotReader) -> None:
         self.index = index
         self.meta = index.meta
-        dl_rows = index._doclens.orderBy("rng").collect()
+        dl_rows, tomb_parts = index._side_tables()
         # one doclens object per packed column and loaded generation: the
         # kernels' per-block weight caches key on it (wand._block_scores),
         # so every query of this generation must hand them the same one
         self._dls: dict[str, wand.DenseDoclens] = {}
-        for c in index._dl_cols:
-            arr = np.zeros(max(r["base"] + len(r[c]) // 4 for r in dl_rows), dtype=np.int32)
-            for r in dl_rows:
-                a = np.frombuffer(r[c], dtype=np.int32)
-                arr[r["base"]: r["base"] + a.size] = a
+        for i, c in enumerate(index._dl_cols):
+            arr = np.zeros(max(base + len(lens[i]) // 4 for base, lens in dl_rows), dtype=np.int32)
+            for base, lens in dl_rows:
+                a = np.frombuffer(lens[i], dtype=np.int32)
+                arr[base: base + a.size] = a
             self._dls[c] = wand.DenseDoclens(0, arr)
         self.deleted = np.zeros(0, np.int64)
-        if index._tomb_packed is not None:
-            parts = [np.frombuffer(r["deleted"], dtype=np.int64) for r in index._tomb_packed.collect()]
-            if parts:
-                self.deleted = np.sort(np.concatenate(parts))
+        if tomb_parts:
+            self.deleted = np.sort(np.concatenate([np.frombuffer(b, dtype=np.int64) for b in tomb_parts]))
         self._cache: dict[str, list] = {}
         # term → stitched TermList memo: score_boolean dedups scoring lists
         # by id(), so a term in two groups must resolve to the SAME object

@@ -16,10 +16,15 @@ own segment building/merging).  Two stages, both Arrow-vectorized:
   nearest analog is its biggest-folder-first queue, helper/
   Hotfolder.java:489-491).  The merge itself is byte-level concatenation
   with a first-gap splice — no decode/re-encode of payloads.
-* **optional compaction (narrow-ish)** — terms whose total payload is
-  small are stitched to a single row per term (light terms dominate the
-  vocabulary; this keeps query-side fan-in at 1 row for most terms while
-  heavy terms intentionally stay split across salt groups).
+* **light-term compaction, in the write exchange** — terms whose total
+  payload is small are stitched to a single row per term (light terms
+  dominate the vocabulary; this keeps query-side fan-in at 1 row for most
+  terms while heavy terms intentionally stay split across salt groups).
+
+Every merge that writes postings runs inside a ``bucket``-keyed exchange
+(:func:`_bucketed_stream_merge`), so each writer task owns whole bucket
+directories: the build's and ``compact``'s light-term stitch, and a
+maintenance delta's salted merge (:func:`_merge_delta_bucketed`).
 """
 
 from __future__ import annotations
@@ -47,7 +52,6 @@ __all__ = [
     "build_partials",
     "build_partials_fielded",
     "merge_partials",
-    "compact_light_terms",
     "compact_light_terms_bucketed",
     "merge_group_pdf",
 ]
@@ -459,35 +463,17 @@ def _merge_gen(key_cols: list[str], out_seg_from_salt: bool, size_threshold: int
     return gen
 
 
-def _stream_merge(df: DataFrame, key_cols: list[str], out_seg_from_salt: bool,
-                  n_partitions: int, size_threshold: int | None = None) -> DataFrame:
-    """repartition(key) → sortWithinPartitions(key, min_doc) → mapInPandas
-    stream merge (see :func:`_merge_gen`)."""
-    shuffled = (
-        df.repartition(n_partitions, *[F.col(c) for c in key_cols])
-        .sortWithinPartitions(*key_cols, "min_doc")
-    )
-    return shuffled.mapInPandas(_merge_gen(key_cols, out_seg_from_salt, size_threshold), POSTINGS_SCHEMA)
-
-
 def merge_partials(partials: DataFrame, cfg: IndexConfig) -> DataFrame:
     """Stage 2: salted merge.  Output rows keyed (term, salt) with
-    seg := salt (the merge-group id)."""
+    seg := salt (the merge-group id): repartition(term, salt) →
+    sortWithinPartitions(term, salt, min_doc) → mapInPandas stream merge
+    (see :func:`_merge_gen`)."""
     salted = partials.withColumn("salt", (F.col("seg") / cfg.merge_fanin).cast("int"))
-    return _stream_merge(salted, ["term", "salt"], True, cfg.shuffle_partitions)
-
-
-def compact_light_terms(merged: DataFrame, cfg: IndexConfig) -> DataFrame:
-    """Second pass: stitch small multi-row terms to one row, in-stream
-    (the per-term size decision happens inside the sorted partition — no
-    separate sizes aggregation or semi/anti joins).
-
-    Heavy terms (total payload ≥ compact_below_bytes) keep their salt-group
-    rows — concentrating a stopword's full posting list on one reducer is
-    exactly the skew stage 2 exists to avoid.
-    """
-    return _stream_merge(merged, ["term"], False, cfg.shuffle_partitions,
-                         size_threshold=cfg.compact_below_bytes)
+    shuffled = (
+        salted.repartition(cfg.shuffle_partitions, F.col("term"), F.col("salt"))
+        .sortWithinPartitions("term", "salt", "min_doc")
+    )
+    return shuffled.mapInPandas(_merge_gen(["term", "salt"], True, None), POSTINGS_SCHEMA)
 
 
 def compact_light_terms_bucketed(merged: DataFrame, cfg: IndexConfig) -> DataFrame:
@@ -506,13 +492,37 @@ def compact_light_terms_bucketed(merged: DataFrame, cfg: IndexConfig) -> DataFra
     the SALTED merge (spread across reducers); this pass only re-buckets
     its already-merged salt rows and passes them through unmerged
     (``size_threshold``), so fusing does not re-concentrate splice work."""
-    withb = merged.withColumn("bucket", F.pmod(F.hash("term"), F.lit(cfg.postings_buckets)))
+    return _bucketed_stream_merge(merged, ["term"], False, cfg, cfg.postings_buckets,
+                                  size_threshold=cfg.compact_below_bytes)
+
+
+def _merge_delta_bucketed(partials: DataFrame, cfg: IndexConfig, n_partitions: int) -> DataFrame:
+    """Stage 2 for a maintenance delta: the salted merge of
+    :func:`merge_partials` (same ``(term, salt)`` groups, same output
+    rows) run INSIDE the bucketed-write exchange.  The exchange is keyed
+    ``(bucket, salt)``, so a writer task holds whole (bucket, salt-group)
+    runs and the delta lands in at most ``postings_buckets × salt groups``
+    files (one salt group for a record-sized commit) instead of one file
+    per task and bucket; a bulk add keeps its stopword splice work spread
+    over salt groups, the reason stage 2 is salted."""
+    salted = partials.withColumn("salt", (F.col("seg") / cfg.merge_fanin).cast("int"))
+    return _bucketed_stream_merge(salted, ["term", "salt"], True, cfg, n_partitions)
+
+
+def _bucketed_stream_merge(df: DataFrame, key_cols: list[str], out_seg_from_salt: bool, cfg: IndexConfig,
+                           n_partitions: int, size_threshold: int | None = None) -> DataFrame:
+    """Stream merge (:func:`_merge_gen`) fused into the postings-write
+    exchange: ``repartition(bucket, *key_cols[1:])`` → in-partition
+    ``(*key_cols, min_doc)`` sort → merge.  ``key_cols[0]`` is ``term``,
+    and the bucket is a function of the term, so every merge group stays
+    in one partition.  The output carries ``bucket`` and is ready for
+    ``write.partitionBy("bucket")`` with no further exchange."""
+    withb = df.withColumn("bucket", F.pmod(F.hash("term"), F.lit(cfg.postings_buckets)))
     shuffled = (
-        withb.repartition(cfg.postings_buckets, "bucket")
-        .sortWithinPartitions("term", "min_doc")
+        withb.repartition(n_partitions, "bucket", *key_cols[1:])
+        .sortWithinPartitions(*key_cols, "min_doc")
     )
-    gen = _merge_gen(["term"], False, cfg.compact_below_bytes)
-    out = shuffled.mapInPandas(gen, POSTINGS_SCHEMA)
+    out = shuffled.mapInPandas(_merge_gen(key_cols, out_seg_from_salt, size_threshold), POSTINGS_SCHEMA)
     # bucket is a pure function of term — re-deriving it is a projection,
     # not an exchange, and partitionBy routes rows by VALUE at write time
     return out.withColumn("bucket", F.pmod(F.hash("term"), F.lit(cfg.postings_buckets)))

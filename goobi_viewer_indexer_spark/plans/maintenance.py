@@ -21,6 +21,15 @@ scorer's ≤1-list-per-term-per-range invariant survives without rewriting
 old rows).  :func:`purge_compact` rewrites only tombstone-affected rows
 (the routine job at 100 TB); the full :func:`compact` (which also
 re-bases block maxima on the live avgdl) is the rare full rewrite.
+
+Per-commit file bound: an append's delta merge runs inside the bucketed
+postings-write exchange, keyed ``(bucket, salt)``, so one add writes at
+most ``postings_buckets × salt groups in the delta`` postings files (a
+record-sized add is one salt group), and every rewritten term_stats
+generation (add, delete, compact) is repartitioned by bucket before its
+partitioned write, so it holds at most ``postings_buckets`` files.  No
+stage-1 partials are staged: the add's term_stats delta is summed from
+its staged postings rows.
 """
 
 from __future__ import annotations
@@ -68,15 +77,42 @@ def _cfg_from_meta(meta: dict) -> IndexConfig:
     )
 
 
+# The commit path reads its tables with DECLARED schemas, naming only the
+# columns it uses: an inferred read runs one Spark job per table to read a
+# footer, which is a fixed cost of every record-sized commit.  Integral
+# columns are declared long — parquet int32 columns widen on read, so
+# generations written with int (maintenance) or long (build) df read alike.
+_TS_SCHEMA = "term string, df long, cf long, bucket int"
+
+
 def _tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
+    """The tombstoned ids (callers only need ``doc_id``), or None."""
     p = txn.table_path(index_dir, "tombstones")
     if not os.path.exists(p):
         return None
-    return spark.read.parquet(p)
+    return spark.read.schema("doc_id long").parquet(p)
+
+
+def _bucketed_term_stats(rows: DataFrame, nb: int) -> DataFrame:
+    """Sum signed ``(term, df, cf, bucket)`` rows per term into a term_stats
+    frame that is bucket-aligned for the partitioned write: ONE exchange,
+    ``repartition(bucket)``, with the per-term sum grouped inside it (the
+    bucket is a function of the term, so bucket partitioning already
+    clusters every term) — each writer task owns whole bucket directories,
+    so a generation holds at most ``nb`` files.  Terms whose df reaches 0
+    are dropped."""
+    return (
+        rows.select("term", "df", "cf", "bucket")
+        .repartition(nb, "bucket")
+        .groupBy("bucket", "term")
+        .agg(F.sum("df").cast("int").alias("df"), F.sum("cf").cast("long").alias("cf"))
+        .filter(F.col("df") > 0)
+        .select("term", "df", "cf", "bucket")
+    )
 
 
 def live_corpus_stats(spark: SparkSession, index_dir: str) -> tuple[int, float]:
-    ds = spark.read.parquet(txn.table_path(index_dir, "doc_stats"))
+    ds = spark.read.schema("doc_id long, doclen long").parquet(txn.table_path(index_dir, "doc_stats"))
     tomb = _tombstones(spark, index_dir)
     if tomb is not None:
         ds = ds.join(tomb.select("doc_id"), "doc_id", "left_anti")
@@ -85,7 +121,8 @@ def live_corpus_stats(spark: SparkSession, index_dir: str) -> tuple[int, float]:
 
 
 def live_corpus_stats_fielded(spark: SparkSession, index_dir: str, fields: list[str]) -> tuple[int, dict[str, float]]:
-    ds = spark.read.parquet(txn.table_path(index_dir, "doc_stats"))
+    schema = "doc_id long, " + ", ".join(f"doclen_{f} long" for f in fields)
+    ds = spark.read.schema(schema).parquet(txn.table_path(index_dir, "doc_stats"))
     tomb = _tombstones(spark, index_dir)
     if tomb is not None:
         ds = ds.join(tomb.select("doc_id"), "doc_id", "left_anti")
@@ -157,7 +194,7 @@ def _delete_df(spark: SparkSession, index_dir: str, ids_df: DataFrame, trace: bo
             eff = eff.join(tomb.select("doc_id").distinct(), "doc_id", "left_anti")
         eff.write.mode("overwrite").parquet(txn.staged_path(index_dir, tag, "ids"))
     txn.txn_intent(index_dir, tag, {"op": "delete", "trace": bool(trace)})
-    ids = spark.read.parquet(txn.staged_path(index_dir, tag, "ids"))
+    ids = spark.read.schema("doc_id long").parquet(txn.staged_path(index_dir, tag, "ids"))
     if ids.limit(1).count() == 0:
         txn.txn_commit(index_dir, tag)
         return meta
@@ -222,22 +259,16 @@ def _delete_df(spark: SparkSession, index_dir: str, ids_df: DataFrame, trace: bo
                     out_cf.append(int(t[hit].sum()))
             return pd.DataFrame({"term": out_t, "df_delta": out_df, "cf_delta": out_cf})
 
-        delta_df = (
-            rows.mapInPandas(lambda it: (deltas(pdf) for pdf in it), "term string, df_delta int, cf_delta long")
-            .groupBy("term")
-            .agg(F.sum("df_delta").alias("df_delta"), F.sum("cf_delta").alias("cf_delta"))
+        delta = rows.mapInPandas(
+            lambda it: (deltas(pdf) for pdf in it), "term string, df_delta int, cf_delta long"
+        ).select(
+            "term",
+            (-F.col("df_delta")).alias("df"),
+            (-F.col("cf_delta")).alias("cf"),
+            F.pmod(F.hash("term"), F.lit(meta["postings_buckets"])).alias("bucket"),
         )
-        ts = spark.read.parquet(ts_path)
-        new_ts = (
-            ts.join(delta_df, "term", "left")
-            .select(
-                "term",
-                (F.col("df") - F.coalesce("df_delta", F.lit(0))).cast("int").alias("df"),
-                (F.col("cf") - F.coalesce("cf_delta", F.lit(0))).cast("long").alias("cf"),
-                "bucket",
-            )
-            .filter(F.col("df") > 0)
-        )
+        ts = spark.read.schema(_TS_SCHEMA).parquet(ts_path)
+        new_ts = _bucketed_term_stats(ts.unionByName(delta), meta["postings_buckets"])
         new_ts.write.mode("overwrite").partitionBy("bucket").parquet(txn.staged_path(index_dir, tag, "term_stats"))
 
     # ---- apply (each step idempotent, any order-crash recoverable) ----
@@ -292,7 +323,19 @@ def add_docs(
     heals instead of leaving the four directories mutually inconsistent.
 
     Id assignment is partition-parallel (:func:`assign_sequential_ids`) —
-    no global single-partition window in the append path."""
+    no global single-partition window in the append path.
+
+    Stages, each staged under the txn and skipped on replay once staged:
+
+    0. ``docs``: id-stamped delta corpus (the base is pinned in the intent);
+    1. ``doc_stats`` (doclens + sha256), then ``doclens_packed`` packed
+       from the staged doc_stats rows;
+    2. ``postings``: stage-1 partials of the delta, merged per
+       ``(term, salt)`` inside the ``(bucket, salt)`` write exchange;
+    3. ``term_stats``: live stats plus the (df, cf) sums of the staged
+       postings, bucket-aligned.
+
+    Then the three appends and the term_stats swap are applied."""
     meta = load_meta(index_dir)
     cfg = _cfg_from_meta(meta)
     span = cfg.docs_per_segment * cfg.merge_fanin
@@ -311,7 +354,7 @@ def add_docs(
 
     # ---- stage 0: pin base, stamp ids, stage the delta corpus ----
     if not txn.staging_complete(index_dir, tag, "docs"):
-        cur_max = spark.read.parquet(ds_path).agg(F.max("doc_id")).collect()[0][0]
+        cur_max = spark.read.schema("doc_id long").parquet(ds_path).agg(F.max("doc_id")).collect()[0][0]
         intent = txn.txn_intent(index_dir, tag, {"op": "add", "base": (int(cur_max) // span + 1) * span})
         src = (
             new_docs.select(*[F.col(c) for c in fields.values()])
@@ -377,8 +420,12 @@ def add_docs(
                 row[oc] = [arr.tobytes()]
             return pd.DataFrame(row)
 
+        # packed from the STAGED doc_stats rows: no second doclen_nfc pass
+        # over the delta text
         (
-            dstats.withColumn("rng", (F.col("doc_id") / span).cast("int"))
+            spark.read.schema("doc_id long, " + ", ".join(f"{c} long" for c in len_cols))
+            .parquet(txn.staged_path(index_dir, tag, "doc_stats"))
+            .withColumn("rng", (F.col("doc_id") / span).cast("int"))
             .select("rng", "doc_id", *len_cols)
             .groupBy("rng")
             .applyInPandas(pack, dl_schema)
@@ -386,20 +433,23 @@ def add_docs(
             .parquet(txn.staged_path(index_dir, tag, "doclens_packed"))
         )
 
-    # ---- stage 2: delta partials → merged postings rows ----
+    # ---- stage 2: delta partials → merged postings rows, in the write
+    # exchange (partials are not staged: only the postings step reads them) ----
     # block_max uses the BUILD avgdl so existing UB semantics stay uniform
-    if not txn.staging_complete(index_dir, tag, "partials"):
-        partials_df = (
+    if not (txn.step_applied(index_dir, tag, "postings") or txn.staging_complete(index_dir, tag, "postings")):
+        partials = (
             spimi.build_partials_fielded(docs, meta["avgdl_by_field"], cfg, fields)
             if fields
             else spimi.build_partials(docs, meta["avgdl"], cfg)
         )
-        partials_df.write.mode("overwrite").parquet(txn.staged_path(index_dir, tag, "partials"))
-    partials = spark.read.parquet(txn.staged_path(index_dir, tag, "partials"))
-    if not (txn.step_applied(index_dir, tag, "postings") or txn.staging_complete(index_dir, tag, "postings")):
+        # ids run densely from a span boundary, so the delta covers
+        # ceil(n_new / span) salt groups; one exchange partition per
+        # (bucket, salt group) up to the session's shuffle parallelism
+        n_salts = -(-n_new // span)
+        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        n_parts = max(1, min(cfg.postings_buckets * n_salts, cap))
         (
-            spimi.merge_partials(partials, cfg)
-            .withColumn("bucket", F.pmod(F.hash("term"), F.lit(cfg.postings_buckets)))
+            spimi._merge_delta_bucketed(partials, cfg, n_parts)
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(txn.staged_path(index_dir, tag, "postings"))
@@ -411,16 +461,14 @@ def add_docs(
         or txn.swap_already_live(ts_path, tag)
         or txn.staging_complete(index_dir, tag, "term_stats")
     ):
-        ts = spark.read.parquet(ts_path)
-        add_ts = partials.groupBy("term").agg(F.sum("df").alias("df2"), F.sum("cf").alias("cf2"))
+        # the (df, cf) delta is summed from the STAGED postings rows.  They
+        # are always there at this point: every staging step runs before
+        # any apply step, and only apply_append moves staged files away,
+        # so an unstaged term_stats means an untouched postings staging dir
+        ts = spark.read.schema(_TS_SCHEMA).parquet(ts_path)
+        staged = spark.read.schema(_TS_SCHEMA).parquet(txn.staged_path(index_dir, tag, "postings"))
         (
-            ts.join(add_ts, "term", "full")
-            .select(
-                "term",
-                (F.coalesce("df", F.lit(0)) + F.coalesce("df2", F.lit(0))).cast("int").alias("df"),
-                (F.coalesce("cf", F.lit(0)) + F.coalesce("cf2", F.lit(0))).cast("long").alias("cf"),
-            )
-            .withColumn("bucket", F.pmod(F.hash("term"), F.lit(cfg.postings_buckets)))
+            _bucketed_term_stats(ts.unionByName(staged), cfg.postings_buckets)
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(txn.staged_path(index_dir, tag, "term_stats"))
@@ -1017,8 +1065,8 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
         return pd.DataFrame(out)
 
     merged = rows.mapInPandas(lambda it: (reencode(pdf) for pdf in it), spimi.POSTINGS_SCHEMA)
-    final = spimi.compact_light_terms(merged, cfg)
-    final = final.withColumn("bucket", F.pmod(F.hash("term"), F.lit(cfg.postings_buckets)))
+    # the build's bucketed pass: light-term stitch in the write exchange
+    final = spimi.compact_light_terms_bucketed(merged, cfg)
     tmp = post_path + ".tmp"
     final.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
     _publish(index_dir, "postings", tmp)
@@ -1028,9 +1076,7 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
     postings2 = spark.read.parquet(txn.table_path(index_dir, "postings"))
     tmp2 = ts_path + ".tmp"
     (
-        postings2.groupBy("term")
-        .agg(F.sum("df").cast("int").alias("df"), F.sum("cf").alias("cf"))
-        .withColumn("bucket", F.pmod(F.hash("term"), F.lit(cfg.postings_buckets)))
+        _bucketed_term_stats(postings2, cfg.postings_buckets)
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(tmp2)

@@ -15,7 +15,7 @@ from tests.conftest import read_index_table
 from goobi_viewer_indexer_spark.config import IndexConfig
 from goobi_viewer_indexer_spark.operators.search import FieldedIndex
 from goobi_viewer_indexer_spark.plans import maintenance as maint
-from goobi_viewer_indexer_spark.plans.build import build_index_fielded
+from goobi_viewer_indexer_spark.plans.build import build_index_fielded, load_meta
 
 CFG = IndexConfig(docs_per_segment=8, merge_fanin=2, block_size=8, postings_buckets=4)
 FIELDS = {"title": "title", "body": "body"}
@@ -84,32 +84,50 @@ def test_fielded_delete_then_search(spark, fidx_dir):
     assert ph == {r[0] for r in live}
 
 
+RECORD_ADD = [
+    ("title3 shared extra", "body text shared common0 fresh"),
+    ("unrelated heading", "completely different body"),
+]
+# spans 3 salt groups (CFG span = 8 docs × fanin 2 = 16); "shared" is in
+# every added doc's title and body
+BULK_ADD = [(f"title{i % 7} shared bulk{i}", f"body shared common{i % 5} extra{i}") for i in range(40)]
+
+
 def test_fielded_add_then_search(spark, fidx_dir):
-    maint.delete_docs(spark, fidx_dir, [3, 10], tag="fd2")
-    new = spark.createDataFrame(
-        [("title3 shared extra", "body text shared common0 fresh"),
-         ("unrelated heading", "completely different body")],
-        "title string, body string",
-    )
-    maint.add_docs(spark, fidx_dir, new, tag="fa1")
+    import hashlib
+    import os
+
     import pyspark.sql.functions as F
 
-    ds = read_index_table(spark, fidx_dir, "doc_stats")
-    new_ids = sorted(r["doc_id"] for r in ds.filter(F.col("doc_id") >= 40).collect())
-    assert len(new_ids) == 2
-    live = [r for r in CORPUS if r[0] not in (3, 10)] + [
-        (new_ids[0], "title3 shared extra", "body text shared common0 fresh"),
-        (new_ids[1], "unrelated heading", "completely different body"),
-    ]
-    assert _got(spark, fidx_dir, k=40) == py_bm25f(live, PAIRS, k=40)
+    maint.delete_docs(spark, fidx_dir, [3, 10], tag="fd2")
+    meta_fields = list(load_meta(fidx_dir)["field_cols"])
+    live = [r for r in CORPUS if r[0] not in (3, 10)]
+    n_rows = len(CORPUS)
+    # a record-sized add, then a bulk add over several salt groups
+    for tag, rows in (("fa1", RECORD_ADD), ("fa2", BULK_ADD)):
+        new = spark.createDataFrame(rows, "title string, body string")
+        maint.add_docs(spark, fidx_dir, new, tag=tag)
 
-    # replay of the add with the same tag: no-op
-    maint.add_docs(spark, fidx_dir, new, tag="fa1")
-    assert read_index_table(spark, fidx_dir, "doc_stats").count() == 42
+        # each new doc's text recovered from its sha256 (the field texts
+        # joined by \x1e, in the index meta's field order)
+        by_sha = {
+            hashlib.sha256("\x1e".join({"title": t, "body": b}[f] for f in meta_fields).encode()).hexdigest(): (t, b)
+            for t, b in rows
+        }
+        ds = read_index_table(spark, fidx_dir, "doc_stats")
+        added = ds.filter(F.col("doc_id") >= 40).filter(F.col("sha256").isin(list(by_sha))).collect()
+        assert len(added) == len(rows)
+        live += [(r["doc_id"], *by_sha[r["sha256"]]) for r in added]
+        assert _got(spark, fidx_dir, k=40) == py_bm25f(live, PAIRS, k=40)
+        assert _got(spark, fidx_dir, mode="or", k=40) == py_bm25f(live, PAIRS, k=40, mode="or")
+
+        # replay of the add with the same tag: no-op
+        maint.add_docs(spark, fidx_dir, new, tag=tag)
+        n_rows += len(rows)
+        assert read_index_table(spark, fidx_dir, "doc_stats").count() == n_rows
 
     # compact purges tombstones; results unchanged (modulo exact stats)
     maint.compact(spark, fidx_dir)
-    import os
 
     assert not os.path.exists(f"{fidx_dir}/tombstones")
     assert _got(spark, fidx_dir, k=40) == py_bm25f(live, PAIRS, k=40)

@@ -53,29 +53,45 @@ def test_double_delete_is_idempotent(spark, idx_dir):
     assert before == after
 
 
-def test_add_docs_then_search(spark, idx_dir):
-    new = spark.createDataFrame(
-        [("table join table join spark window value the fast query",),
-         ("completely fresh vocabulary xylophone quartz",),
-         ("table table table join join value",)],
-        "text string",
-    )
-    meta = maint.add_docs(spark, idx_dir, new)
-    idx = InvertedIndex(spark, idx_dir)
+RECORD_ADD = [
+    "table join table join spark window value the fast query",
+    "completely fresh vocabulary xylophone quartz",
+    "table table table join join value",
+]
+# spans 3 salt groups (CFG span = 64 docs × fanin 2 = 128); "bulkterm" is
+# in every added doc, so its delta rows are merged in every salt group
+BULK_ADD = [f"bulkterm table row{i} " + "value " * (i % 3) + "join " * (i % 5 == 0) for i in range(300)]
 
-    # reconstruct the live corpus: original minus deleted, plus the new
-    # rows at their assigned dense ids (appended past the span boundary)
-    ds = read_index_table(spark, idx_dir, "doc_stats")
+
+def _live_corpus(spark, idx_dir):
+    """Original docs minus the deleted ones plus every appended doc at its
+    assigned dense id (the text of an id is recovered from its sha256)."""
+    import hashlib
+
+    by_sha = {hashlib.sha256(t.encode()).hexdigest(): t for t in RECORD_ADD + BULK_ADD}
     orig = spark.read.parquet(f"{SF01}/documents.parquet").filter(~F.col("doc_id").isin(DELETED))
-    new_ids = sorted(r["doc_id"] for r in ds.select("doc_id").collect() if r["doc_id"] >= 500)
-    texts = [r["text"] for r in new.collect()]
-    live = orig.select("doc_id", "text").unionByName(
-        spark.createDataFrame(list(zip(new_ids, texts)), "doc_id long, text string")
+    ds = read_index_table(spark, idx_dir, "doc_stats").filter(F.col("doc_id") >= 500)
+    added = [(r["doc_id"], by_sha[r["sha256"]]) for r in ds.select("doc_id", "sha256").collect()]
+    return orig.select("doc_id", "text").unionByName(
+        spark.createDataFrame(added, "doc_id long, text string")
     )
-    for terms, mode in QUERIES:
-        exp = _expected(live, terms, mode)
-        got = [(r["doc_id"], r["score"]) for r in idx.search(terms, k=10, mode=mode).collect()]
-        assert got == exp, (terms, mode)
+
+
+def test_add_docs_then_search(spark, idx_dir):
+    # a record-sized add, then a bulk add over several salt groups
+    for texts in (RECORD_ADD, BULK_ADD):
+        new = spark.createDataFrame([(t,) for t in texts], "text string")
+        maint.add_docs(spark, idx_dir, new)
+        idx = InvertedIndex(spark, idx_dir)
+
+        # the live corpus: original minus deleted, plus the new rows at
+        # their assigned dense ids (appended past the span boundary)
+        live = _live_corpus(spark, idx_dir)
+        for terms, mode in QUERIES + [(["bulkterm"], "or"), (["bulkterm", "join"], "and")]:
+            exp = _expected(live, terms, mode)
+            got = [(r["doc_id"], r["score"]) for r in idx.search(terms, k=10, mode=mode).collect()]
+            assert got == exp, (len(texts), terms, mode)
+            assert idx.open_local().search(terms, k=10, mode=mode) == exp, (len(texts), terms, mode, "local")
 
 
 def test_compact_purges_and_matches(spark, idx_dir):
@@ -87,19 +103,7 @@ def test_compact_purges_and_matches(spark, idx_dir):
     ds = read_index_table(spark, idx_dir, "doc_stats")
     assert ds.filter(F.col("doc_id").isin(DELETED)).count() == 0
 
-    orig = spark.read.parquet(f"{SF01}/documents.parquet").filter(~F.col("doc_id").isin(DELETED))
-    new_ids = sorted(
-        r["doc_id"] for r in ds.join(orig.select("doc_id"), "doc_id", "left_anti").collect()
-    )
-    # texts of the three appended docs, in id order
-    texts = [
-        "table join table join spark window value the fast query",
-        "completely fresh vocabulary xylophone quartz",
-        "table table table join join value",
-    ]
-    live = orig.select("doc_id", "text").unionByName(
-        spark.createDataFrame(list(zip(new_ids, texts)), "doc_id long, text string")
-    )
+    live = _live_corpus(spark, idx_dir)
     for terms, mode in QUERIES:
         exp = _expected(live, terms, mode)
         got = [(r["doc_id"], r["score"]) for r in idx.search(terms, k=10, mode=mode).collect()]
