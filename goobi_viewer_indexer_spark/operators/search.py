@@ -3,11 +3,21 @@ Solr query the reference issues (SURVEY.md §2-B Q1-Q9).
 
 Two engines over the same kernels (operators/wand.py):
 
-* :meth:`InvertedIndex.search` — distributed: postings rows for the query
-  terms (bucket-pruned parquet read) are exploded to the doc ranges they
-  overlap, joined with that range's packed doclens, and scored range-
-  parallel in ``applyInPandas``; per-range top-k heaps are reduced by a
-  global ``orderBy … limit k`` (the reference's rows=k).
+* :meth:`InvertedIndex.search` — distributed: every distributed query of
+  both engines reaches its per-range kernel through ONE runner,
+  :meth:`_SnapshotReader._run_ranges`.  Postings rows for the query terms
+  (bucket-pruned parquet read) are exploded to the doc ranges they overlap
+  (``spimi._rng_col``) and grouped by range in ONE ``applyInPandas``.  Each
+  range's packed doclens and tombstones come from the per-index broadcast
+  built at open, or — over the broadcast budget — from a join of the packed
+  side tables onto the rows.  The runner hands the query's body
+  ``(pdf, lo, hi, doclens, deleted)``: the range's postings rows, its doc
+  id bounds, one ``wand.DenseDoclens`` per packed doclens column (``None``
+  for match-only kernels) and its sorted tombstoned ids (or ``None``).  A
+  body returns its output frame, or ``None`` for nothing; a range with no
+  doclens row is dropped before a scoring body runs (the inner-join rule).
+  Per-range top-k heaps are reduced by a global ``orderBy … limit k`` (the
+  reference's rows=k).
 * :class:`LocalSearcher` — driver-side, postings cached in memory after
   first touch; used for p95 latency measurement (q/s-style point queries
   where a Spark job launch would dominate).
@@ -27,6 +37,7 @@ from pyspark.sql import functions as F
 
 from goobi_viewer_indexer_spark.functions.tokenize import tokenize_py
 from goobi_viewer_indexer_spark.operators import wand
+from goobi_viewer_indexer_spark.operators.spimi import FIELD_SEP, _rng_col, merge_group_pdf, tag_term
 from goobi_viewer_indexer_spark.plans.build import load_meta
 
 __all__ = [
@@ -809,8 +820,6 @@ def _spell_frame(term_stats: DataFrame, nb: int, fielded: bool) -> DataFrame:
     ``field``.  Shared by the lazy per-rev cache
     (_SnapshotReader._ensure_spell) and the txn-managed index table
     (maintenance.set_spell_table)."""
-    from goobi_viewer_indexer_spark.operators.spimi import FIELD_SEP
-
     cols = (["field"] if fielded else []) + ["delkey", "term", "df"]
 
     def gen(batches):
@@ -1008,53 +1017,65 @@ _BM25_COLS = [
 # budget (``SPARK_GRAFT_DOCLENS_BC_MB``, default 256 — doclens are 4
 # bytes/doc/field) the join path below stays, byte-identical.
 
-def _rng_ctx(bc, pdf, rng):
-    """(base, doclens, deleted) for one range group — from the per-index
-    broadcast when present, else from the joined side-table columns.
-    Returns None when the range has no doclens row (the inner join would
-    have dropped it)."""
+def _rng_side(bc, pdf, rng, cols):
+    """(doclens, deleted) of one range group: one ``DenseDoclens`` per
+    packed column of ``cols`` (``None`` for match-only kernels, which get
+    no doclens) and the sorted tombstoned ids or ``None`` — from the
+    per-index broadcast when present, else from the joined side-table
+    columns.  None when a doclens-reading range has no doclens row (the
+    inner join would have dropped it)."""
     if bc is not None:
         ent = bc.value.get(rng)
         if ent is None:
-            return None
-        base, (lens_b,), del_b = ent
-        deleted = np.frombuffer(del_b, dtype=np.int64) if del_b is not None else None
-        return base, np.frombuffer(lens_b, dtype=np.int32), deleted
-    deleted = None
-    if "deleted" in pdf.columns and pdf["deleted"].iloc[0] is not None:
-        deleted = np.frombuffer(pdf["deleted"].iloc[0], dtype=np.int64)
-    return int(pdf["base"].iloc[0]), np.frombuffer(pdf["doclens"].iloc[0], dtype=np.int32), deleted
+            return None if cols else (None, None)
+        base, lens, del_b = ent
+    else:
+        base = int(pdf["base"].iloc[0]) if cols else 0
+        lens = tuple(pdf[c].iloc[0] for c in cols or ())
+        del_b = pdf["deleted"].iloc[0] if "deleted" in pdf.columns else None
+    deleted = np.frombuffer(del_b, dtype=np.int64) if del_b is not None else None
+    if not cols:
+        return None, deleted
+    return tuple(wand.DenseDoclens(base, np.frombuffer(b, dtype=np.int32)) for b in lens), deleted
 
 
-def _rng_deleted(bc, pdf, rng):
-    """Tombstone array for one range group (match-only kernels — no
-    doclens): broadcast when present, else the left-joined column."""
-    if bc is not None:
-        ent = bc.value.get(rng)
-        if ent is not None and ent[2] is not None:
-            return np.frombuffer(ent[2], dtype=np.int64)
-        return None
-    if "deleted" in pdf.columns and pdf["deleted"].iloc[0] is not None:
-        return np.frombuffer(pdf["deleted"].iloc[0], dtype=np.int64)
-    return None
+_PD_DTYPES = {"long": np.int64, "double": np.float64, "string": str}
 
 
-def _rng_ctx_fielded(bc, pdf, rng, fields):
-    """(base, {field: doclens}, deleted) for one range group (fielded
-    engine) — broadcast when present, else the joined side-table columns;
-    None when the range has no doclens row (inner-join drop)."""
-    if bc is not None:
-        ent = bc.value.get(rng)
-        if ent is None:
-            return None
-        base, lens_t, del_b = ent
-        deleted = np.frombuffer(del_b, dtype=np.int64) if del_b is not None else None
-        return base, {f: np.frombuffer(lens_t[i], dtype=np.int32) for i, f in enumerate(fields)}, deleted
-    deleted = None
-    if "deleted" in pdf.columns and pdf["deleted"].iloc[0] is not None:
-        deleted = np.frombuffer(pdf["deleted"].iloc[0], dtype=np.int64)
-    base = int(pdf["base"].iloc[0])
-    return base, {f: np.frombuffer(pdf[f"doclens_{f}"].iloc[0], dtype=np.int32) for f in fields}, deleted
+def _empty_pdf(schema: str) -> pd.DataFrame:
+    """The typed empty frame of an ``applyInPandas`` output schema."""
+    cols = [c.split() for c in schema.split(",")]
+    return pd.DataFrame({n: [] for n, _ in cols}).astype({n: _PD_DTYPES[t] for n, t in cols})
+
+
+def _bm25f_attach(L: wand.TermList, dl_by_field, avgdls, ub_scales) -> wand.TermList:
+    """Attach the per-field context the BM25F kernels read off a fielded
+    list (its term is field-tagged): the field's doclens, live avgdl and
+    upper-bound scale.  Shared by the distributed and local fielded paths."""
+    f = L.term.split(FIELD_SEP, 1)[0]
+    L.dl_fn, L.avgdl_f, L.ub_scale_f = dl_by_field[f], avgdls[f], ub_scales[f]
+    return L
+
+
+def _qid_topk(local_topk: DataFrame, ks: dict[str, int], results: dict) -> dict:
+    """The batch reduce of both engines' ``search_many``: per-qid top-``k``
+    (score desc, doc_id asc) through one bounded window, collected into
+    ``results`` (every qid of ``ks`` present, possibly empty)."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
+    kmap = F.create_map(*[F.lit(x) for qid, k in ks.items() for x in (qid, k)])
+    final = (
+        local_topk.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= kmap[F.col("qid")])
+        .select("qid", "doc_id", F.round("score", 6).alias("score"), "_rk")
+        .collect()
+    )
+    for qid in ks:
+        results[qid] = []
+    for r in sorted(final, key=lambda r: (r["qid"], r["_rk"])):
+        results[r["qid"]].append((r["doc_id"], r["score"]))
+    return results
 
 
 class _SnapshotReader:
@@ -1116,7 +1137,6 @@ class _SnapshotReader:
                 .select("rng", "doc_id")
                 .groupBy("rng")
                 .applyInPandas(pack_tomb, "rng int, deleted binary")
-                .cache()
             )
         # opening a snapshot reader loads its range side tables once
         # (round 6): the doclens/tombstone broadcast is built here, at
@@ -1134,9 +1154,11 @@ class _SnapshotReader:
 
     def _rng_broadcast(self):
         """Once-per-index broadcast of the packed doclens + tombstones
-        keyed by rng (see the module note above :func:`_rng_ctx`), built
+        keyed by rng (see the module note above :func:`_rng_side`), built
         at open; ``None`` when the corpus exceeds the broadcast budget
-        (the per-query join path — the 100 TB shape)."""
+        (the per-query join path — the 100 TB shape).  Only the join path
+        caches the packed tombstones: every query re-reads them there,
+        while the broadcast reads them once, here."""
         import os
 
         bc = getattr(self, "_dl_bc", None)
@@ -1145,6 +1167,8 @@ class _SnapshotReader:
         cap = float(os.environ.get("SPARK_GRAFT_DOCLENS_BC_MB", "256")) * 1e6
         if self.meta["n_docs"] * 4 * max(1, len(self._dl_cols)) > cap:
             self._dl_bc = False
+            if self._tomb_packed is not None:
+                self._tomb_packed.cache()
             return None
         tomb = {}
         if self._tomb_packed is not None:
@@ -1172,29 +1196,50 @@ class _SnapshotReader:
         tomb = [] if self._tomb_packed is None else [bytes(r["deleted"]) for r in self._tomb_packed.collect()]
         return dl, tomb
 
-    def _attach_rng_side(self, rows: DataFrame, doclens: bool = True):
-        """(kernel_input, bc): join the packed side tables when the
-        broadcast budget is exceeded, else pass rows through untouched
-        and hand the kernel the per-index broadcast.
+    def _run_ranges(self, terms: list[str], schema: str, body, with_positions: bool = False,
+                    doclens: bool = True) -> DataFrame:
+        """THE runner behind every distributed query of both engines: the
+        postings rows of ``terms``, exploded to the doc ranges they
+        overlap, then ONE ``groupBy("rng").applyInPandas`` calling
+        ``body(pdf, lo, hi, doclens, deleted)`` per range — ``doclens``
+        one ``DenseDoclens`` per :attr:`_dl_cols` entry, or ``None`` when
+        ``doclens=False`` (match-only kernels).  ``body`` returns a frame
+        of ``schema`` or ``None`` (nothing).  A range with no doclens row
+        is dropped before a doclens-reading body runs.
 
-        On the broadcast path the kernel exchange is explicitly
-        repartitioned to min(n_ranges, shuffle partitions): AQE sizes
-        post-shuffle partitions by BYTES, and with the doclens payload
-        gone from the shuffle it coalesced the python-CPU-bound kernel
-        stage onto too few tasks (measured at 200k docs: batch search
-        1.1 s vs 0.8 s).  The range count is known driver-side, so the
-        exchange gets one partition per range up to the configured
-        parallelism — same key, reused by the groupBy, no extra
-        exchange."""
+        Side tables: within the broadcast budget the rows pass through and
+        the kernel reads the per-index broadcast; the kernel exchange is
+        then explicitly repartitioned to min(n_ranges, shuffle
+        partitions): AQE sizes post-shuffle partitions by BYTES, and with
+        the doclens payload gone from the shuffle it coalesced the
+        python-CPU-bound kernel stage onto too few tasks (measured at 200k
+        docs: batch search 1.1 s vs 0.8 s).  The range count is known
+        driver-side, so the exchange gets one partition per range up to
+        the configured parallelism — same key, reused by the groupBy, no
+        extra exchange.  Over the budget the packed doclens (inner join)
+        and tombstones (left join) are joined onto the rows."""
+        rows = self.postings_for(terms, with_positions=with_positions).withColumn("rng", _rng_col(self.span))
         bc = self._rng_broadcast()
         if bc is not None:
             cap = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            n = max(1, min(len(bc.value), cap))
-            return rows.repartition(n, "rng"), bc
-        joined = rows.join(self._doclens, "rng") if doclens else rows
-        if self._tomb_packed is not None:
-            joined = joined.join(self._tomb_packed, "rng", "left")
-        return joined, None
+            rows = rows.repartition(max(1, min(len(bc.value), cap)), "rng")
+        else:
+            if doclens:
+                rows = rows.join(self._doclens, "rng")
+            if self._tomb_packed is not None:
+                rows = rows.join(self._tomb_packed, "rng", "left")
+        span, cols = self.span, self._dl_cols if doclens else None
+
+        def run(pdf: pd.DataFrame) -> pd.DataFrame:
+            out = None
+            if len(pdf):
+                rng = int(pdf["rng"].iloc[0])
+                side = _rng_side(bc, pdf, rng, cols)
+                if side is not None:
+                    out = body(pdf, rng * span, (rng + 1) * span - 1, *side)
+            return _empty_pdf(schema) if out is None else out
+
+        return rows.groupBy("rng").applyInPandas(run, schema)
 
     def _buckets_of(self, terms: list[str]) -> list[int]:
         # driver-side Murmur3 identical to Spark's hash(): bucket routing
@@ -1289,8 +1334,6 @@ class _SnapshotReader:
         dictionary per field), a flat index is the single unnamed field
         ``""`` (``field`` must be None there).  Every dictionary method
         below works over this space and strips it from what it returns."""
-        from goobi_viewer_indexer_spark.operators.spimi import tag_term
-
         if not self._fielded:
             if field is not None:
                 raise ValueError("a flat index has no fields")
@@ -1915,7 +1958,7 @@ class InvertedIndex(_SnapshotReader):
             )
         terms = sorted(set(query if isinstance(query, list) else tokenize_py(query)))
         meta = self.meta
-        n_docs, avgdl, k1, b, span = self.n_live, self.avgdl_live, meta["k1"], meta["b"], self.span
+        n_docs, avgdl, k1, b = self.n_live, self.avgdl_live, meta["k1"], meta["b"]
         ub_scale = self.ub_scale
 
         stats = self.term_stats_for(terms)
@@ -1931,42 +1974,20 @@ class InvertedIndex(_SnapshotReader):
         idfs = {t: wand.idf(n_docs, stats[t][0]) for t in present}
         n_terms = len(present)
 
-        rows = self.postings_for(present).withColumn(
-            "rng",
-            F.explode(
-                F.sequence(
-                    (F.col("min_doc") / span).cast("int"),
-                    (F.col("max_doc") / span).cast("int"),
-                )
-            ),
-        )
-        joined, bc = self._attach_rng_side(rows)
-
-        def score_range(pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": np.int64, "score": np.float64}
-            )
-            if len(pdf) == 0:
-                return empty
-            rng = int(pdf["rng"].iloc[0])
-            lo, hi = rng * span, (rng + 1) * span - 1
-            ctx = _rng_ctx(bc, pdf, rng)
-            if ctx is None:
-                return empty
-            base, lens, deleted = ctx
+        def score_range(pdf, lo, hi, doclens, deleted):
             lists = [
                 _mk_termlist(row, idfs[row["term"]], stats[row["term"]][0])
                 for row in pdf.to_dict("records")
             ]
             if mode == "and" and len(lists) < n_terms:
-                return empty
+                return None
             docs, scores = wand.score_topk(
-                lists, wand.DenseDoclens(base, lens), avgdl, k1, b, k, mode, lo, hi,
+                lists, doclens[0], avgdl, k1, b, k, mode, lo, hi,
                 deleted=deleted, ub_scale=ub_scale, after=after, min_match=min_match,
             )
             return pd.DataFrame({"doc_id": docs, "score": scores})
 
-        local_topk = joined.groupBy("rng").applyInPandas(score_range, "doc_id long, score double")
+        local_topk = self._run_ranges(present, "doc_id long, score double", score_range)
         return (
             local_topk.orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
@@ -2040,37 +2061,20 @@ class InvertedIndex(_SnapshotReader):
         Distributed: each doc range emits its matches; result is a one-column
         DataFrame, never collected here."""
         terms = sorted(set(query if isinstance(query, list) else tokenize_py(query)))
-        span = self.span
         stats = self.term_stats_for(terms)
         present = [t for t in terms if t in stats]
-        empty = _empty_df(self.spark, "doc_id long")
         if not present or (mode == "and" and len(present) < len(terms)):
-            return empty
+            return _empty_df(self.spark, "doc_id long")
         n_terms = len(present)
         dfs = {t: stats[t][0] for t in present}
 
-        rows = self.postings_for(present).withColumn(
-            "rng",
-            F.explode(
-                F.sequence((F.col("min_doc") / span).cast("int"), (F.col("max_doc") / span).cast("int"))
-            ),
-        )
-
-        joined, bc = self._attach_rng_side(rows, doclens=False)
-
-        def match_range(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) == 0:
-                return pd.DataFrame({"doc_id": []}).astype({"doc_id": np.int64})
-            rng = int(pdf["rng"].iloc[0])
-            lo, hi = rng * span, (rng + 1) * span - 1
-            deleted = _rng_deleted(bc, pdf, rng)
+        def match_range(pdf, lo, hi, _doclens, deleted):
             lists = [_mk_termlist(row, 0.0, dfs[row["term"]]) for row in pdf.to_dict("records")]
             if mode == "and" and len(lists) < n_terms:
-                return pd.DataFrame({"doc_id": []}).astype({"doc_id": np.int64})
-            docs = wand.match_docs(lists, mode, lo, hi, deleted=deleted)
-            return pd.DataFrame({"doc_id": docs})
+                return None
+            return pd.DataFrame({"doc_id": wand.match_docs(lists, mode, lo, hi, deleted=deleted)})
 
-        return joined.groupBy("rng").applyInPandas(match_range, "doc_id long")
+        return self._run_ranges(present, "doc_id long", match_range, doclens=False)
 
     # -- term dictionary: field-less forms of _SnapshotReader's family (a flat
     # index is the one unnamed field of the term space) ----------------------
@@ -2186,50 +2190,32 @@ class InvertedIndex(_SnapshotReader):
         min_match = _mm_int(query, min_match)
         terms = sorted(set(query if isinstance(query, list) else tokenize_py(query)))
         meta = self.meta
-        n_docs, avgdl, k1, b, span = self.n_live, self.avgdl_live, meta["k1"], meta["b"], self.span
+        n_docs, avgdl, k1, b = self.n_live, self.avgdl_live, meta["k1"], meta["b"]
         ub_scale = self.ub_scale
         stats = self.term_stats_for(terms)
         present = [t for t in terms if t in stats]
-        empty = _empty_df(self.spark, "doc_id long, score double")
         # mm gates OR mode only — same rule as search() (ADVICE r4)
         if not present or (mode == "and" and len(present) < len(terms)) \
                 or (mode != "and" and len(present) < min_match):
-            return empty
+            return _empty_df(self.spark, "doc_id long, score double")
         idfs = {t: wand.idf(n_docs, stats[t][0]) for t in present}
         n_terms = len(present)
-        rows = self.postings_for(present).withColumn(
-            "rng",
-            F.explode(
-                F.sequence((F.col("min_doc") / span).cast("int"), (F.col("max_doc") / span).cast("int"))
-            ),
-        )
 
-        joined, bc = self._attach_rng_side(rows)
-
-        def score_range(pdf: pd.DataFrame) -> pd.DataFrame:
-            emptypdf = pd.DataFrame({"doc_id": [], "score": []}).astype({"doc_id": np.int64, "score": np.float64})
-            if len(pdf) == 0:
-                return emptypdf
-            rng = int(pdf["rng"].iloc[0])
-            lo, hi = rng * span, (rng + 1) * span - 1
-            ctx = _rng_ctx(bc, pdf, rng)
-            if ctx is None:
-                return emptypdf
-            base, lens, deleted = ctx
+        def score_range(pdf, lo, hi, doclens, deleted):
             lists = [
                 _mk_termlist(row, idfs[row["term"]], stats[row["term"]][0])
                 for row in pdf.to_dict("records")
             ]
             if mode == "and" and len(lists) < n_terms:
-                return emptypdf
+                return None
             docs, scores = wand.score_topk(
-                lists, wand.DenseDoclens(base, lens), avgdl, k1, b,
+                lists, doclens[0], avgdl, k1, b,
                 hi - lo + 1, mode, lo, hi, deleted=deleted, ub_scale=ub_scale,
                 min_match=min_match,
             )
             return pd.DataFrame({"doc_id": docs, "score": scores})
 
-        return joined.groupBy("rng").applyInPandas(score_range, "doc_id long, score double")
+        return self._run_ranges(present, "doc_id long, score double", score_range)
 
     def search_grouped(
         self,
@@ -2315,7 +2301,7 @@ class InvertedIndex(_SnapshotReader):
             return empty
         pos_groups, neg_groups, stats, const_terms = parts
         meta = self.meta
-        n_docs, avgdl, k1, b, span = self.n_live, self.avgdl_live, meta["k1"], meta["b"], self.span
+        n_docs, avgdl, k1, b = self.n_live, self.avgdl_live, meta["k1"], meta["b"]
         # const_terms (range expansions) filter membership but never score
         idfs = {
             t: (0.0 if t in const_terms else wand.idf(n_docs, stats[t][0]))
@@ -2323,25 +2309,7 @@ class InvertedIndex(_SnapshotReader):
         }
         needed = sorted({t for g in pos_groups for t in g} | {t for ng in neg_groups for t in ng})
 
-        rows = self.postings_for(needed).withColumn(
-            "rng",
-            F.explode(
-                F.sequence((F.col("min_doc") / span).cast("int"), (F.col("max_doc") / span).cast("int"))
-            ),
-        )
-
-        joined, bc = self._attach_rng_side(rows)
-
-        def score_range(pdf: pd.DataFrame) -> pd.DataFrame:
-            emptypdf = pd.DataFrame({"doc_id": [], "score": []}).astype({"doc_id": np.int64, "score": np.float64})
-            if len(pdf) == 0:
-                return emptypdf
-            rng = int(pdf["rng"].iloc[0])
-            lo, hi = rng * span, (rng + 1) * span - 1
-            ctx = _rng_ctx(bc, pdf, rng)
-            if ctx is None:
-                return emptypdf
-            base, lens, deleted = ctx
+        def score_range(pdf, lo, hi, doclens, deleted):
             by_term = {
                 row["term"]: _mk_termlist(row, idfs.get(row["term"], 0.0), stats[row["term"]][0])
                 for row in pdf.to_dict("records")
@@ -2350,19 +2318,19 @@ class InvertedIndex(_SnapshotReader):
             for g in pos_groups:
                 lists = [(by_term[t], []) for t in g if t in by_term]
                 if not lists:
-                    return emptypdf  # AND-required group absent in this range
+                    return None  # AND-required group absent in this range
                 groups_tl.append(lists)
             negs_tl = [
                 [(by_term[t], []) for t in ng if t in by_term] for ng in neg_groups
             ]
             negs_tl = [ng for ng in negs_tl if ng]
             docs, scores = wand.score_boolean(
-                groups_tl, negs_tl, wand.DenseDoclens(base, lens), avgdl, k1, b, k, lo, hi,
+                groups_tl, negs_tl, doclens[0], avgdl, k1, b, k, lo, hi,
                 deleted=deleted,
             )
             return pd.DataFrame({"doc_id": docs, "score": scores})
 
-        local_topk = joined.groupBy("rng").applyInPandas(score_range, "doc_id long, score double")
+        local_topk = self._run_ranges(needed, "doc_id long, score double", score_range)
         return (
             local_topk.orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
@@ -2377,39 +2345,21 @@ class InvertedIndex(_SnapshotReader):
         if parts is None:
             return empty
         pos_groups, neg_groups, stats, _const = parts
-        span = self.span
         dfs = {t: stats[t][0] for g in pos_groups + neg_groups for t in g}
-        needed = sorted(dfs)
 
-        rows = self.postings_for(needed).withColumn(
-            "rng",
-            F.explode(
-                F.sequence((F.col("min_doc") / span).cast("int"), (F.col("max_doc") / span).cast("int"))
-            ),
-        )
-
-        joined, bc = self._attach_rng_side(rows, doclens=False)
-
-        def match_range(pdf: pd.DataFrame) -> pd.DataFrame:
-            emptypdf = pd.DataFrame({"doc_id": []}).astype({"doc_id": np.int64})
-            if len(pdf) == 0:
-                return emptypdf
-            rng = int(pdf["rng"].iloc[0])
-            lo, hi = rng * span, (rng + 1) * span - 1
-            deleted = _rng_deleted(bc, pdf, rng)
+        def match_range(pdf, lo, hi, _doclens, deleted):
             by_term = {row["term"]: _mk_termlist(row, 0.0, dfs[row["term"]]) for row in pdf.to_dict("records")}
             groups_tl = []
             for g in pos_groups:
                 lists = [(by_term[t], []) for t in g if t in by_term]
                 if not lists:
-                    return emptypdf
+                    return None
                 groups_tl.append(lists)
             negs_tl = [[(by_term[t], []) for t in ng if t in by_term] for ng in neg_groups]
             negs_tl = [ng for ng in negs_tl if ng]
-            docs = wand.match_docs_boolean(groups_tl, negs_tl, lo, hi, deleted=deleted)
-            return pd.DataFrame({"doc_id": docs})
+            return pd.DataFrame({"doc_id": wand.match_docs_boolean(groups_tl, negs_tl, lo, hi, deleted=deleted)})
 
-        return joined.groupBy("rng").applyInPandas(match_range, "doc_id long")
+        return self._run_ranges(sorted(dfs), "doc_id long", match_range, doclens=False)
 
     def facet_query(
         self,
@@ -2474,7 +2424,7 @@ class InvertedIndex(_SnapshotReader):
         query term is unindexed (the phrase provably matches nothing)."""
         ordered = list(query) if isinstance(query, list) else tokenize_py(query)
         meta = self.meta
-        n_docs, avgdl, k1, b, span = self.n_live, self.avgdl_live, meta["k1"], meta["b"], self.span
+        n_docs, avgdl, k1, b = self.n_live, self.avgdl_live, meta["k1"], meta["b"]
         if not ordered:
             return None
         distinct = list(dict.fromkeys(ordered))
@@ -2486,40 +2436,22 @@ class InvertedIndex(_SnapshotReader):
         n_distinct = len(distinct)
         return_all = k is None
 
-        rows = self.postings_for(distinct, with_positions=True).withColumn(
-            "rng",
-            F.explode(
-                F.sequence((F.col("min_doc") / span).cast("int"), (F.col("max_doc") / span).cast("int"))
-            ),
-        )
-
-        joined, bc = self._attach_rng_side(rows)
-
-        def score_range(pdf: pd.DataFrame) -> pd.DataFrame:
-            emptypdf = pd.DataFrame({"doc_id": [], "score": []}).astype({"doc_id": np.int64, "score": np.float64})
-            if len(pdf) == 0:
-                return emptypdf
-            rng = int(pdf["rng"].iloc[0])
-            lo, hi = rng * span, (rng + 1) * span - 1
-            ctx = _rng_ctx(bc, pdf, rng)
-            if ctx is None:
-                return emptypdf
-            base, lens, deleted = ctx
+        def score_range(pdf, lo, hi, doclens, deleted):
             by_term = {
                 row["term"]: _mk_termlist(row, idfs[row["term"]], stats[row["term"]][0])
                 for row in pdf.to_dict("records")
             }
             if len(by_term) < n_distinct:
-                return emptypdf  # phrase needs every term in this range
+                return None  # phrase needs every term in this range
             term_offsets = [(by_term[t], offsets[t]) for t in distinct]
             kk = (hi - lo + 1) if return_all else k
             docs, scores = wand.score_phrase(
-                term_offsets, wand.DenseDoclens(base, lens), avgdl, k1, b, kk, lo, hi,
+                term_offsets, doclens[0], avgdl, k1, b, kk, lo, hi,
                 deleted=deleted, slop=slop,
             )
             return pd.DataFrame({"doc_id": docs, "score": scores})
 
-        return joined.groupBy("rng").applyInPandas(score_range, "doc_id long, score double")
+        return self._run_ranges(distinct, "doc_id long, score double", score_range, with_positions=True)
 
     def search_many(self, queries: dict[str, tuple[list[str] | str, str, int]]) -> dict[str, list[tuple[int, float]]]:
         """Batch execution: one distributed job answers every query.
@@ -2536,7 +2468,7 @@ class InvertedIndex(_SnapshotReader):
         identical to per-query :meth:`search` / :meth:`search_boolean` /
         :meth:`search_phrase` (tested)."""
         meta = self.meta
-        n_docs, avgdl, k1, b, span = self.n_live, self.avgdl_live, meta["k1"], meta["b"], self.span
+        n_docs, avgdl, k1, b = self.n_live, self.avgdl_live, meta["k1"], meta["b"]
         ub_scale = self.ub_scale
 
         parsed: dict[str, tuple[list[str], str, int]] = {}
@@ -2614,29 +2546,12 @@ class InvertedIndex(_SnapshotReader):
             | {t for g, n, _c, _ in live_bool.values() for grp in g + n for t in grp}
             | {t for d, _, _ in live_phrase.values() for t in d}
         )
-        rows = self.postings_for(needed, with_positions=bool(live_phrase)).withColumn(
-            "rng",
-            F.explode(
-                F.sequence((F.col("min_doc") / span).cast("int"), (F.col("max_doc") / span).cast("int"))
-            ),
-        )
 
-        def score_range(pdf: pd.DataFrame) -> pd.DataFrame:
-            emptypdf = pd.DataFrame({"qid": [], "doc_id": [], "score": []}).astype(
-                {"qid": str, "doc_id": np.int64, "score": np.float64}
-            )
-            if len(pdf) == 0:
-                return emptypdf
-            rng = int(pdf["rng"].iloc[0])
-            lo, hi = rng * span, (rng + 1) * span - 1
-            ctx = _rng_ctx(bc, pdf, rng)
-            if ctx is None:
-                return emptypdf
-            base, lens, deleted = ctx
+        def score_range(pdf, lo, hi, doclens, deleted):
             by_term = {}
             for row in pdf.to_dict("records"):
                 by_term[row["term"]] = _mk_termlist(row, idfs[row["term"]], stats[row["term"]][0])
-            dlk = wand.DenseDoclens(base, lens)
+            dlk = doclens[0]
             out_q, out_d, out_s = [], [], []
             for qid, (terms, mode, k) in live.items():
                 lists = [by_term[t] for t in terms if t in by_term]
@@ -2695,27 +2610,12 @@ class InvertedIndex(_SnapshotReader):
                 {"qid": str, "doc_id": np.int64, "score": np.float64}
             )
 
-        joined, bc = self._attach_rng_side(rows)
-        local_topk = joined.groupBy("rng").applyInPandas(score_range, "qid string, doc_id long, score double")
-
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
+        local_topk = self._run_ranges(needed, "qid string, doc_id long, score double", score_range,
+                                      with_positions=bool(live_phrase))
         ks = {qid: k for qid, (_, _, k) in live.items()}
         ks.update({qid: k for qid, (_, _, _, k) in live_bool.items()})
         ks.update({qid: k for qid, (_, _, k) in live_phrase.items()})
-        kmap = F.create_map(*[F.lit(x) for qid, k in ks.items() for x in (qid, k)])
-        final = (
-            local_topk.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= kmap[F.col("qid")])
-            .select("qid", "doc_id", F.round("score", 6).alias("score"), "_rk")
-            .collect()
-        )
-        for qid in ks:
-            results[qid] = []
-        for r in sorted(final, key=lambda r: (r["qid"], r["_rk"])):
-            results[r["qid"]].append((r["doc_id"], r["score"]))
-        return results
+        return _qid_topk(local_topk, ks, results)
 
     def open_local(self) -> "LocalSearcher":
         return LocalSearcher(self)
@@ -2810,8 +2710,6 @@ class _LocalReader:
         if len(rows) == 1:
             self._merged_memo[t] = rows[0][0]
             return rows[0][0]
-        from goobi_viewer_indexer_spark.operators.spimi import merge_group_pdf
-
         pdf = pd.DataFrame(
             [
                 {
@@ -3194,8 +3092,6 @@ def _fielded_query_parts(
     'boolean'/'boolean_or' → group/NOT execution (score_boolean): each
     positive group is OR-within (a phrase group carries offsets), negative
     groups exclude.  Only positive terms get weights (negs never score)."""
-    from goobi_viewer_indexer_spark.operators.spimi import tag_term
-
     boosts = boosts or {}
     is_clauses = (
         not isinstance(query, str)
@@ -3664,25 +3560,10 @@ class FieldedIndex(_SnapshotReader):
                 kept_negs.append(ent)
         groups, negs = kept_groups, kept_negs
         with_pos = any(offs for g in groups + negs for _, offs in g)
-        span = self.span
         needed = sorted({t for g in groups + negs for t, _ in g})
         dfs_by_term = {t: stats[t][0] for t in needed}
-        rows = self.postings_for(needed, with_positions=with_pos).withColumn(
-            "rng",
-            F.explode(
-                F.sequence((F.col("min_doc") / span).cast("int"), (F.col("max_doc") / span).cast("int"))
-            ),
-        )
 
-        joined, bc = self._attach_rng_side(rows, doclens=False)
-
-        def match_range(pdf: pd.DataFrame) -> pd.DataFrame:
-            emptypdf = pd.DataFrame({"doc_id": []}).astype({"doc_id": np.int64})
-            if len(pdf) == 0:
-                return emptypdf
-            rng = int(pdf["rng"].iloc[0])
-            lo, hi = rng * span, (rng + 1) * span - 1
-            deleted = _rng_deleted(bc, pdf, rng)
+        def match_range(pdf, lo, hi, _doclens, deleted):
             by_term = {
                 row["term"]: _mk_termlist(row, 0.0, dfs_by_term[row["term"]])
                 for row in pdf.to_dict("records")
@@ -3694,10 +3575,10 @@ class FieldedIndex(_SnapshotReader):
                 if (is_phrase and len(ent) < len(g)) or not ent:
                     if bool_or:
                         continue
-                    return emptypdf
+                    return None
                 groups_tl.append(ent)
             if not groups_tl:
-                return emptypdf
+                return None
             negs_tl = []
             for og in negs:
                 ent = wand.regroup(og, [(by_term[t], offs) for t, offs in og if t in by_term])
@@ -3708,7 +3589,7 @@ class FieldedIndex(_SnapshotReader):
             )
             return pd.DataFrame({"doc_id": docs})
 
-        return joined.groupBy("rng").applyInPandas(match_range, "doc_id long")
+        return self._run_ranges(needed, "doc_id long", match_range, with_positions=with_pos, doclens=False)
 
     def facet_query(
         self,
@@ -3756,8 +3637,6 @@ class FieldedIndex(_SnapshotReader):
         the fielded scorer uses), salience rounded to 6 decimals so the
         DuckDB oracle ties identically; ties break (field asc, term
         asc)."""
-        from goobi_viewer_indexer_spark.operators.spimi import tag_term
-
         tv = self.term_vector(doc_id, fields)
         if not tv:
             return []
@@ -3807,10 +3686,8 @@ class FieldedIndex(_SnapshotReader):
         wand.score_boolean (negs filter, never score).  ``return_all``:
         every matching doc with its score, no global top-k reduce — the
         total-recall scorer behind grouping / compound score+field sort."""
-        from goobi_viewer_indexer_spark.operators.spimi import FIELD_SEP
-
         meta = self.meta
-        k1, b, span = meta["k1"], meta["b"], self.span
+        k1, b = meta["k1"], meta["b"]
         avgdls, fields, ub_scales = self.avgdls, self.fields, self.ub_scales
         neg_groups = neg_groups or []
         neg_terms = sorted({t for g in neg_groups for t, _ in g})
@@ -3850,38 +3727,14 @@ class FieldedIndex(_SnapshotReader):
         n_terms = len(present)
         all_needed = sorted(set(present) | {t for g in (phrase_groups or []) for t, _ in g if t in stats}
                             | {t for g in neg_groups for t, _ in g})
-
-        rows = self.postings_for(all_needed, with_positions=with_positions).withColumn(
-            "rng",
-            F.explode(
-                F.sequence((F.col("min_doc") / span).cast("int"), (F.col("max_doc") / span).cast("int"))
-            ),
-        )
         pos_groups = phrase_groups
-        joined, bc = self._attach_rng_side(rows)
 
-        def score_range(pdf: pd.DataFrame) -> pd.DataFrame:
-            emptypdf = pd.DataFrame({"doc_id": [], "score": []}).astype({"doc_id": np.int64, "score": np.float64})
-            if len(pdf) == 0:
-                return emptypdf
-            rng = int(pdf["rng"].iloc[0])
-            lo, hi = rng * span, (rng + 1) * span - 1
-            ctx = _rng_ctx_fielded(bc, pdf, rng, fields)
-            if ctx is None:
-                return emptypdf
-            base, lens_by_field, deleted = ctx
-            dl_by_field = {
-                f: wand.DenseDoclens(base, lens_by_field[f]) for f in fields
-            }
+        def score_range(pdf, lo, hi, doclens, deleted):
+            ctx = dict(zip(fields, doclens)), avgdls, ub_scales
             by_term = {}
             for row in pdf.to_dict("records"):
                 t = row["term"]
-                fname = t.split(FIELD_SEP, 1)[0]
-                L = _mk_termlist(row, idfs.get(t, 0.0), stats[t][0])
-                L.dl_fn = dl_by_field[fname]
-                L.avgdl_f = avgdls[fname]
-                L.ub_scale_f = ub_scales[fname]
-                by_term[t] = L
+                by_term[t] = _bm25f_attach(_mk_termlist(row, idfs.get(t, 0.0), stats[t][0]), *ctx)
             if mode in ("boolean", "boolean_or"):
                 groups_tl = []
                 for g in pos_groups:
@@ -3890,10 +3743,10 @@ class FieldedIndex(_SnapshotReader):
                     if (is_phrase and len(ent) < len(g)) or not ent:
                         if bool_or:
                             continue
-                        return emptypdf  # required group absent in range
+                        return None  # required group absent in range
                     groups_tl.append(ent)
                 if not groups_tl:
-                    return emptypdf
+                    return None
                 negs_tl = []
                 for og in neg_groups:
                     ent = wand.regroup(og, [(by_term[t], offs) for t, offs in og if t in by_term])
@@ -3908,7 +3761,7 @@ class FieldedIndex(_SnapshotReader):
                 )
             elif mode == "phrase":
                 if len(by_term) < n_terms:
-                    return emptypdf
+                    return None
                 groups = [wand.regroup(g, [(by_term[t], offs) for t, offs in g]) for g in pos_groups]
                 kk = (hi - lo + 1) if return_all else k
                 docs, scores = wand.score_mixed(
@@ -3916,7 +3769,7 @@ class FieldedIndex(_SnapshotReader):
                 )
             else:
                 if mode == "and" and len(by_term) < n_terms:
-                    return emptypdf
+                    return None
                 kk = (hi - lo + 1) if return_all else k
                 docs, scores = wand.score_topk(
                     [by_term[t] for t in by_term if t in present], None, 0.0, k1, b, kk, mode, lo, hi,
@@ -3924,7 +3777,8 @@ class FieldedIndex(_SnapshotReader):
                 )
             return pd.DataFrame({"doc_id": docs, "score": scores})
 
-        local_topk = joined.groupBy("rng").applyInPandas(score_range, "doc_id long, score double")
+        local_topk = self._run_ranges(all_needed, "doc_id long, score double", score_range,
+                                      with_positions=with_positions)
         if return_all:
             # per-range recall is already total (kk = range width) and the
             # kernels emit round6-ed scores: no global reduce here — the
@@ -4295,8 +4149,6 @@ class FieldedIndex(_SnapshotReader):
         distinct matched-term count — ALL of it computed inside the ONE
         applyInPandas stage (range-locality; zero aggregation shuffles).
         None = provably empty (no terms / no indexed tagged term)."""
-        from goobi_viewer_indexer_spark.operators.spimi import FIELD_SEP, tag_term
-
         if not terms:
             return None
         tagged = [tag_term(f, t) for t in terms for f in qf]
@@ -4309,29 +4161,9 @@ class FieldedIndex(_SnapshotReader):
         n_docs, avgdls, fields = self.n_docs, self.avgdls, self.fields
         idfs = {tt: qf[tt.split(FIELD_SEP, 1)[0]] * wand.idf(n_docs, stats[tt][0])
                 for tt in present}
-        rows = self.postings_for(present).withColumn(
-            "rng",
-            F.explode(
-                F.sequence((F.col("min_doc") / span).cast("int"), (F.col("max_doc") / span).cast("int"))
-            ),
-        )
 
-        joined, bc = self._attach_rng_side(rows)
-
-        def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-            eo = pd.DataFrame({"doc_id": [], "raw": [], "nt": []}).astype(
-                {"doc_id": np.int64, "raw": np.float64, "nt": np.int64})
-            if len(pdf) == 0:
-                return eo
-            rng = int(pdf["rng"].iloc[0])
-            lo, hi = rng * span, (rng + 1) * span - 1
-            ctx = _rng_ctx_fielded(bc, pdf, rng, fields)
-            if ctx is None:
-                return eo
-            base, lens_by_field, deleted = ctx
-            dl_by_field = {
-                f: wand.DenseDoclens(base, lens_by_field[f]) for f in fields
-            }
+        def emit(pdf, lo, hi, doclens, deleted):
+            dl_by_field = dict(zip(fields, doclens))
             by_term: dict[str, list] = {}
             for row in pdf.to_dict("records"):
                 by_term.setdefault(row["term"].split(FIELD_SEP, 1)[1], []).append(row)
@@ -4363,10 +4195,10 @@ class FieldedIndex(_SnapshotReader):
                     cnt[li] += 1
             li = np.flatnonzero(cnt)
             if li.size == 0:
-                return eo
+                return None
             return pd.DataFrame({"doc_id": li + lo, "raw": raw[li], "nt": cnt[li]})
 
-        return joined.groupBy("rng").applyInPandas(emit, "doc_id long, raw double, nt long")
+        return self._run_ranges(present, "doc_id long, raw double, nt long", emit)
 
     def match_ids_dismax(
         self,
@@ -4412,8 +4244,6 @@ class FieldedIndex(_SnapshotReader):
         combine (field max/sum, tie blend, doc sum, mm count) stays
         inside the kernel as in :meth:`search_dismax`.  The reduce is the
         :meth:`search_many` per-qid bounded window."""
-        from goobi_viewer_indexer_spark.operators.spimi import FIELD_SEP, tag_term
-
         meta = self.meta
         k1, b, span = meta["k1"], meta["b"], self.span
         n_docs, avgdls, fields = self.n_docs, self.avgdls, self.fields
@@ -4447,29 +4277,9 @@ class FieldedIndex(_SnapshotReader):
                 if any(tag_term(f, t) in stats for t in spec[0] for f in spec[1])}
         if not live:
             return results
-        rows = self.postings_for(needed).withColumn(
-            "rng",
-            F.explode(
-                F.sequence((F.col("min_doc") / span).cast("int"), (F.col("max_doc") / span).cast("int"))
-            ),
-        )
 
-        joined, bc = self._attach_rng_side(rows)
-
-        def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-            eo = pd.DataFrame({"qid": [], "doc_id": [], "raw": [], "nt": []}).astype(
-                {"qid": str, "doc_id": np.int64, "raw": np.float64, "nt": np.int64})
-            if len(pdf) == 0:
-                return eo
-            rng = int(pdf["rng"].iloc[0])
-            lo, hi = rng * span, (rng + 1) * span - 1
-            ctx = _rng_ctx_fielded(bc, pdf, rng, fields)
-            if ctx is None:
-                return eo
-            base, lens_by_field, deleted = ctx
-            dl_by_field = {
-                f: wand.DenseDoclens(base, lens_by_field[f]) for f in fields
-            }
+        def emit(pdf, lo, hi, doclens, deleted):
+            dl_by_field = dict(zip(fields, doclens))
             # decode + saturate each list ONCE (idf=1.0 is an exact float
             # identity), shared across all queries referencing the term
             cache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
@@ -4514,10 +4324,9 @@ class FieldedIndex(_SnapshotReader):
                         "qid": qid, "doc_id": li + lo, "raw": raw[li], "nt": cnt[li]}))
             return pd.concat(out, ignore_index=True).astype(
                 {"qid": str, "doc_id": np.int64, "raw": np.float64, "nt": np.int64}
-            ) if out else eo
+            ) if out else None
 
-        per_doc = joined.groupBy("rng").applyInPandas(
-            emit, "qid string, doc_id long, raw double, nt long")
+        per_doc = self._run_ranges(needed, "qid string, doc_id long, raw double, nt long", emit)
 
         from pyspark.sql.window import Window
 
@@ -4588,10 +4397,8 @@ class FieldedIndex(_SnapshotReader):
         identical to per-query :meth:`search`."""
         from dataclasses import replace
 
-        from goobi_viewer_indexer_spark.operators.spimi import FIELD_SEP, tag_term
-
         meta = self.meta
-        k1, b, span = meta["k1"], meta["b"], self.span
+        k1, b = meta["k1"], meta["b"]
         avgdls, fields, ub_scales = self.avgdls, self.fields, self.ub_scales
         n_docs = self.n_docs
 
@@ -4697,39 +4504,13 @@ class FieldedIndex(_SnapshotReader):
         batch_with_pos = any(
             offs for g, n, _, _, _ in live_bool.values() for grp in g + n for _, offs in grp
         )
-        rows = self.postings_for(needed, with_positions=batch_with_pos).withColumn(
-            "rng",
-            F.explode(
-                F.sequence((F.col("min_doc") / span).cast("int"), (F.col("max_doc") / span).cast("int"))
-            ),
-        )
 
-        joined, bc = self._attach_rng_side(rows)
-
-        def score_range(pdf: pd.DataFrame) -> pd.DataFrame:
-            emptypdf = pd.DataFrame({"qid": [], "doc_id": [], "score": []}).astype(
-                {"qid": str, "doc_id": np.int64, "score": np.float64}
-            )
-            if len(pdf) == 0:
-                return emptypdf
-            rng = int(pdf["rng"].iloc[0])
-            lo, hi = rng * span, (rng + 1) * span - 1
-            ctx = _rng_ctx_fielded(bc, pdf, rng, fields)
-            if ctx is None:
-                return emptypdf
-            base, lens_by_field, deleted = ctx
-            dl_by_field = {
-                f: wand.DenseDoclens(base, lens_by_field[f]) for f in fields
-            }
+        def score_range(pdf, lo, hi, doclens, deleted):
+            ctx = dict(zip(fields, doclens)), avgdls, ub_scales
             by_term = {}
             for row in pdf.to_dict("records"):
                 t = row["term"]
-                fname = t.split(FIELD_SEP, 1)[0]
-                L = _mk_termlist(row, idf_raw[t], stats[t][0])
-                L.dl_fn = dl_by_field[fname]
-                L.avgdl_f = avgdls[fname]
-                L.ub_scale_f = ub_scales[fname]
-                by_term[t] = L
+                by_term[t] = _bm25f_attach(_mk_termlist(row, idf_raw[t], stats[t][0]), *ctx)
             out_q, out_d, out_s = [], [], []
             for qid, (terms, weights, mode, k) in live.items():
                 lists = [
@@ -4785,30 +4566,16 @@ class FieldedIndex(_SnapshotReader):
                 out_d.extend(docs.tolist())
                 out_s.extend(scores.tolist())
             if not out_q:
-                return emptypdf
+                return None
             return pd.DataFrame({"qid": out_q, "doc_id": out_d, "score": out_s}).astype(
                 {"qid": str, "doc_id": np.int64, "score": np.float64}
             )
 
-        local_topk = joined.groupBy("rng").applyInPandas(score_range, "qid string, doc_id long, score double")
-
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
+        local_topk = self._run_ranges(needed, "qid string, doc_id long, score double", score_range,
+                                      with_positions=batch_with_pos)
         ks = {qid: k for qid, (_, _, _, k) in live.items()}
         ks.update({qid: k for qid, (_, _, _, _, k) in live_bool.items()})
-        kmap = F.create_map(*[F.lit(x) for qid, k in ks.items() for x in (qid, k)])
-        final = (
-            local_topk.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= kmap[F.col("qid")])
-            .select("qid", "doc_id", F.round("score", 6).alias("score"), "_rk")
-            .collect()
-        )
-        for qid in ks:
-            results[qid] = []
-        for r in sorted(final, key=lambda r: (r["qid"], r["_rk"])):
-            results[r["qid"]].append((r["doc_id"], r["score"]))
-        return results
+        return _qid_topk(local_topk, ks, results)
 
     def search_grouped(
         self,
@@ -4866,8 +4633,6 @@ class FieldedIndex(_SnapshotReader):
 
     def search_phrase(self, field: str, phrase: str | list[str], k: int = 10) -> DataFrame:
         """Field-scoped exact phrase (positions are field-internal)."""
-        from goobi_viewer_indexer_spark.operators.spimi import tag_term
-
         k = min(k, self.n_docs)  # see InvertedIndex.search: unclamped limit(k) OOMs
 
         ordered = list(phrase) if isinstance(phrase, list) else tokenize_py(phrase)
@@ -4892,7 +4657,8 @@ class LocalFieldedSearcher(_LocalReader):
 
     def _load(self, index: "FieldedIndex") -> None:
         super()._load(index)
-        self.doclens: dict[str, np.ndarray] = {f: self._dls[f"doclens_{f}"].lens for f in index.fields}
+        self._dl_by_field = {f: self._dls[f"doclens_{f}"] for f in index.fields}
+        self.doclens: dict[str, np.ndarray] = {f: d.lens for f, d in self._dl_by_field.items()}
         # field → dense doc-values arrays (stored-table columns collected
         # once on first touch — the latency-path twin of the distributed
         # engine's pushed stored-filter range routing)
@@ -4967,12 +4733,7 @@ class LocalFieldedSearcher(_LocalReader):
         fresh = t not in self._merged_memo
         L = super()._merged_list(t)
         if fresh and L is not None:
-            from goobi_viewer_indexer_spark.operators.spimi import FIELD_SEP
-
-            fname = t.split(FIELD_SEP, 1)[0]
-            L.dl_fn = self._dls[f"doclens_{fname}"]
-            L.avgdl_f = self.index.avgdls[fname]
-            L.ub_scale_f = self.index.ub_scales[fname]
+            _bm25f_attach(L, self._dl_by_field, self.index.avgdls, self.index.ub_scales)
         return L
 
     def _fq_members(self, fq) -> np.ndarray:
@@ -5221,8 +4982,6 @@ class LocalFieldedSearcher(_LocalReader):
         ``np.add.at`` passes per term over the cached merged posting
         lists; ``fq`` membership and the tombstone set filter each list
         BEFORE the combine so mm term counts stay exact."""
-        from goobi_viewer_indexer_spark.operators.spimi import tag_term
-
         self._ensure_fresh()
         if not qf:
             raise ValueError("qf must name at least one field")
@@ -5314,8 +5073,6 @@ class LocalFieldedSearcher(_LocalReader):
         if pmode == "phrase" or (groups and any(offs for g in groups for _, offs in g)):
             raise ValueError("explain supports term queries, not phrases")
         from goobi_viewer_indexer_spark.functions import codec as _codec
-        from goobi_viewer_indexer_spark.operators.spimi import FIELD_SEP
-
         self._rows_for(sorted(tagged_weights))
         k1, b = self.meta["k1"], self.meta["b"]
         n = max(a.size for a in self.doclens.values())
@@ -5382,8 +5139,6 @@ class LocalFieldedSearcher(_LocalReader):
         ``round6(total)`` is bit-identical to the score
         :meth:`search_dismax` ranks by (pinned in pytest)."""
         from goobi_viewer_indexer_spark.functions import codec as _codec
-        from goobi_viewer_indexer_spark.operators.spimi import tag_term
-
         self._ensure_fresh()
         if not qf:
             raise ValueError("qf must name at least one field")

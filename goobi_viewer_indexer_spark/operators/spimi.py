@@ -67,6 +67,13 @@ def tag_term(field: str, term: str) -> str:
     return f"{field}{FIELD_SEP}{term}"
 
 
+def _rng_col(span: int):
+    """One row per doc range a postings row overlaps — the row → range
+    rule ``min_doc // span .. max_doc // span`` (exploded; alias it
+    ``rng``) shared by every per-range query and maintenance plan."""
+    return F.explode(F.sequence((F.col("min_doc") / span).cast("int"), (F.col("max_doc") / span).cast("int")))
+
+
 def _build_segment_pdf(pdf: pd.DataFrame, avgdl: float, cfg: IndexConfig) -> pd.DataFrame:
     """One SPIMI segment: pandas rows (doc_id, text, seg) → postings rows."""
     if len(pdf) == 0:  # Spark 4 grouped-map may deliver empty groups

@@ -40,26 +40,53 @@ def _force_join_path(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DOCLENS_BC_MB", "0.0000001")
 
 
-def test_flat_broadcast_vs_join_parity(spark, flat_idx_dir, monkeypatch):
-    bc_idx = InvertedIndex(spark, flat_idx_dir)
-    assert bc_idx._rng_broadcast() is not None  # fixture corpus fits the budget
-    _force_join_path(monkeypatch)
-    join_idx = InvertedIndex(spark, flat_idx_dir)
-    assert join_idx._rng_broadcast() is None
+def _rows(df):
+    return [tuple(r) for r in df.collect()]
 
-    def rows(df):
-        return [tuple(r) for r in df.collect()]
 
-    for q, mode in [(["table", "join"], "or"), (["table", "join"], "and")]:
-        assert rows(bc_idx.search(q, k=10, mode=mode)) == rows(join_idx.search(q, k=10, mode=mode))
-    assert rows(bc_idx.search_phrase(["table", "join"], k=10)) == \
-        rows(join_idx.search_phrase(["table", "join"], k=10))
-    assert rows(bc_idx.search_boolean("(table join) -spark", k=10)) == \
-        rows(join_idx.search_boolean("(table join) -spark", k=10))
-    assert sorted(rows(bc_idx.match_ids(["table", "join"], mode="and"))) == \
-        sorted(rows(join_idx.match_ids(["table", "join"], mode="and")))
-    assert bc_idx.search_many({"a": (["table", "join"], "or", 5)}) == \
-        join_idx.search_many({"a": (["table", "join"], "or", 5)})
+# every range kernel of each engine, as (label, call) — the range runner
+# owns the broadcast-vs-join branch, so each call site is checked on both
+_QF = {"text": 1.0, "lang": 2.0}
+PARITY_CALLS = {
+    InvertedIndex: [
+        ("search or", lambda i: _rows(i.search(["table", "join"], k=10, mode="or"))),
+        ("search and", lambda i: _rows(i.search(["table", "join"], k=10, mode="and"))),
+        ("search fq (score_matches)", lambda i: _rows(i.search(["table", "join"], k=10, fq="table -window"))),
+        ("search_phrase", lambda i: _rows(i.search_phrase(["table", "join"], k=10))),
+        ("search_boolean", lambda i: _rows(i.search_boolean("(table join) -spark", k=10))),
+        ("match_ids", lambda i: sorted(_rows(i.match_ids(["table", "join"], mode="and")))),
+        ("match_ids_boolean", lambda i: sorted(_rows(i.match_ids_boolean("(table join) -spark")))),
+        ("search_many", lambda i: i.search_many({
+            "a": (["table", "join"], "or", 5), "b": ("(table join) -spark", "boolean", 5),
+            "c": (["table", "join"], "phrase", 5)})),
+    ],
+    FieldedIndex: [
+        ("match_ids", lambda i: sorted(_rows(i.match_ids("text:(table join) -text:spark")))),
+        ("search or", lambda i: _rows(i.search([("text", "table"), ("lang", "en")], k=10, mode="or"))),
+        ("search boolean", lambda i: _rows(i.search("text:(table join) -text:spark", k=10))),
+        ("search phrase", lambda i: _rows(i.search('text:"table join"', k=10))),
+        ("search_dismax", lambda i: _rows(i.search_dismax("table join", _QF, k=10, tie=0.3))),
+        ("search_dismax_many", lambda i: i.search_dismax_many({"a": ("table join", _QF, 5, 0.3)})),
+        ("search_many", lambda i: i.search_many({
+            "a": ([("text", "table"), ("lang", "en")], "or", 5),
+            "b": ("text:(table join) -text:spark", "and", 5), "c": ('text:"table join"', "and", 5)})),
+    ],
+}
+
+
+def test_flat_broadcast_vs_join_parity(spark, flat_idx_dir, fielded_idx_dir, monkeypatch):
+    # the fielded engine is one more input
+    for engine, d in [(InvertedIndex, flat_idx_dir), (FieldedIndex, fielded_idx_dir)]:
+        monkeypatch.delenv("SPARK_GRAFT_DOCLENS_BC_MB", raising=False)
+        bc_idx = engine(spark, d)
+        assert bc_idx._rng_broadcast() is not None  # fixture corpus fits the budget
+        _force_join_path(monkeypatch)
+        join_idx = engine(spark, d)
+        assert join_idx._rng_broadcast() is None
+        for label, call in PARITY_CALLS[engine]:
+            got = call(bc_idx)
+            assert got, f"{engine.__name__} {label}: empty on the fixture"
+            assert got == call(join_idx), f"{engine.__name__} {label}"
 
 
 def test_flat_broadcast_sees_tombstones(spark, flat_idx_dir, fielded_idx_dir, tmp_path, monkeypatch):

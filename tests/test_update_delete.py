@@ -141,3 +141,33 @@ def test_second_delete_in_one_session_is_seen(spark, tmp_path, monkeypatch, kind
     assert {doc for doc, _ in second.open_local().search(query, k=60)} == live
     assert {doc for doc, _ in local.search(query, k=60)} == live  # refreshed
     assert dist_ids(first) == seen_first  # the older snapshot is unchanged
+
+
+def test_delete_and_open_cycles_pin_no_cached_plan(spark, idx):
+    # on the broadcast path the packed tombstones are read once, at open:
+    # reopening after each delete must leave no cached plan behind
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for victim in range(4):
+        maint.delete_docs(spark, idx, [victim])
+        assert InvertedIndex(spark, idx)._rng_broadcast() is not None
+    assert jsc.getPersistentRDDs().size() == before
+
+
+@pytest.mark.parametrize("path", ["broadcast", "join"])
+@pytest.mark.parametrize("kind", ["flat", "fielded"])
+def test_fully_deleted_range_returns_nothing(spark, tmp_path, monkeypatch, kind, path):
+    # span = 16 * 2 = 32: "purge" matches docs 0, 5, ..., 55 in ranges 0
+    # and 1.  Deleting every match of range 1 leaves its posting rows in
+    # place; the scoring and match kernels must return nothing there
+    if path == "join":
+        monkeypatch.setenv("SPARK_GRAFT_DOCLENS_BC_MB", "0.0000001")
+    open_idx, _, q = ENGINES[kind]
+    d = _build(spark, tmp_path, kind)
+    maint.delete_docs(spark, d, [35, 40, 45, 50, 55])
+    engine = open_idx(spark, d)
+    assert (engine._rng_broadcast() is None) == (path == "join")
+    query, live = q("purge"), list(range(0, 32, 5))
+    assert [r["doc_id"] for r in engine.search(query, k=60).collect()] == live
+    assert sorted(r["doc_id"] for r in engine.match_ids(query, mode="or").collect()) == live
+    assert [doc for doc, _ in engine.search_many({"a": (query, "or", 60)})["a"]] == live
