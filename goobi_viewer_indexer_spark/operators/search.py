@@ -1156,23 +1156,25 @@ class _SnapshotReader:
         """Once-per-index broadcast of the packed doclens + tombstones
         keyed by rng (see the module note above :func:`_rng_side`), built
         at open; ``None`` when the corpus exceeds the broadcast budget
-        (the per-query join path — the 100 TB shape).  Only the join path
-        caches the packed tombstones: every query re-reads them there,
-        while the broadcast reads them once, here."""
+        (the per-query join path — the 100 TB shape).  Both paths read the
+        packed tombstones once, here: the join path joins that collect
+        back on as a local relation, so no handle pins a cached plan."""
         import os
 
         bc = getattr(self, "_dl_bc", None)
         if bc is not None:
             return bc if bc is not False else None
         cap = float(os.environ.get("SPARK_GRAFT_DOCLENS_BC_MB", "256")) * 1e6
-        if self.meta["n_docs"] * 4 * max(1, len(self._dl_cols)) > cap:
-            self._dl_bc = False
-            if self._tomb_packed is not None:
-                self._tomb_packed.cache()
-            return None
         tomb = {}
         if self._tomb_packed is not None:
             tomb = {int(r["rng"]): bytes(r["deleted"]) for r in self._tomb_packed.collect()}
+        if self.meta["n_docs"] * 4 * max(1, len(self._dl_cols)) > cap:
+            self._dl_bc = False
+            self._side_rows = (None, tomb)
+            self._tomb_packed = (
+                self.spark.createDataFrame(list(tomb.items()), "rng int, deleted binary") if tomb else None
+            )
+            return None
         cols = self._dl_cols
         side = {
             int(r["rng"]): (int(r["base"]), tuple(bytes(r[c]) for c in cols), tomb.get(int(r["rng"])))
@@ -1186,15 +1188,16 @@ class _SnapshotReader:
 
     def _side_tables(self) -> tuple[list[tuple[int, tuple]], list[bytes]]:
         """([(base, packed doclens per column)], [packed tombstone ids]) of
-        this snapshot: the open's broadcast collect when there is one,
-        else (over the broadcast budget) one collect of each table."""
-        if self._rng_broadcast() is not None:
-            side, tomb = self._side_rows
-            return [(base, lens) for base, lens, _ in side.values()], list(tomb.values())
-        cols = self._dl_cols
-        dl = [(int(r["base"]), tuple(bytes(r[c]) for c in cols)) for r in self._doclens.collect()]
-        tomb = [] if self._tomb_packed is None else [bytes(r["deleted"]) for r in self._tomb_packed.collect()]
-        return dl, tomb
+        this snapshot: the open's collects (over the broadcast budget the
+        doclens are collected here, once per call)."""
+        self._rng_broadcast()
+        side, tomb = self._side_rows
+        if side is not None:
+            dl = [(base, lens) for base, lens, _ in side.values()]
+        else:
+            cols = self._dl_cols
+            dl = [(int(r["base"]), tuple(bytes(r[c]) for c in cols)) for r in self._doclens.collect()]
+        return dl, list(tomb.values())
 
     def _run_ranges(self, terms: list[str], schema: str, body, with_positions: bool = False,
                     doclens: bool = True) -> DataFrame:
@@ -2660,7 +2663,7 @@ class _LocalReader:
         self.meta = index.meta
         dl_rows, tomb_parts = index._side_tables()
         # one doclens object per packed column and loaded generation: the
-        # kernels' per-block weight caches key on it (wand._block_scores),
+        # kernels' per-block weight caches key on it (wand.TermList.gather),
         # so every query of this generation must hand them the same one
         self._dls: dict[str, wand.DenseDoclens] = {}
         for i, c in enumerate(index._dl_cols):

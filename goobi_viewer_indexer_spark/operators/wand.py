@@ -7,13 +7,22 @@ minExactCount).  Two modes:
 * disjunctive (OR): block-max pruning in the WAND family — the doc space
   is partitioned into elementary intervals by the union of all lists'
   block boundaries; each interval's score upper bound is the sum of the
-  covering blocks' ``idf * block_max_w``.  Intervals are processed in
-  descending UB order, maintaining the running top-k threshold θ; once
-  UB ≤ θ every remaining interval (and its undecoded blocks) is pruned.
-  Exact: a doc outside processed intervals cannot beat θ.
+  covering blocks' ``idf * block_max_w``.  Intervals are scored in
+  descending UB order, in BATCHES: a batch ends where UB falls below the
+  running top-k threshold θ or where it fills the candidate buffer, and
+  θ is checked per batch (it only moves when that buffer consolidates).
+  Once UB < θ every remaining interval (and its undecoded blocks) is
+  pruned.  Exact: a doc outside processed intervals cannot beat θ.
 * conjunctive (AND): galloping block-skip intersection — iterate the
   rarest list's postings, skip other lists block-wise via searchsorted on
   ``block_last_doc``, decode only touched blocks.
+
+Every kernel reaches postings through ONE touched-block gather
+(:meth:`TermList.gather`): a sorted array of block ids in, the blocks'
+concatenated docs / tfs / positions / cached weights out, then one
+``searchsorted`` per list — a handful of numpy calls per list and batch
+instead of one Python call per block or interval (the interpreter, not
+the arithmetic, set the kernels' latency).
 
 These kernels run either on the driver (LocalSearcher, for p95 latency)
 or inside ``applyInPandas`` per doc-range (distributed scorer) — same
@@ -66,10 +75,6 @@ class TermList:
     def n_blocks(self) -> int:
         return len(self.block_last_doc)
 
-    def block_first_doc(self, i: int) -> int:
-        # first doc of block i is > block_last_doc[i-1]
-        return int(self.block_last_doc[i - 1]) + 1 if i > 0 else 0
-
     def decode_block(self, i: int) -> tuple[np.ndarray, np.ndarray]:
         """(doc_ids, tfs) of block i; decodes lazily, caches (read-only:
         every later caller shares the cached arrays)."""
@@ -116,101 +121,108 @@ class TermList:
         start = int(tfs[:j].sum())
         return pos[start: start + int(tfs[j])]
 
-    def _block_scores(self, i: int, dl, avgdl: float, k1: float, b: float) -> np.ndarray:
-        """Raw BM25 contributions (idf * weight) of block i's postings —
-        QUERY-INDEPENDENT for a snapshot (tf, doclen, avgdl, k1, b are all
-        fixed), so computed once per block and cached beside the decoded
-        postings.  ``id(dl)`` keys the doclen lookup: a local searcher
-        passes one doclens object per loaded generation, and a refresh
-        builds new TermList objects (_LocalReader._load), so a cache entry
-        can never pair stale weights with a live searcher."""
-        key = ("w", i, id(dl), avgdl, k1, b)
-        hit = self._cache.get(key)
-        if hit is not None:
-            return hit
-        d, t = self.decode_block(i)
-        w = self.idf * codec.bm25_weight(t, dl(d), avgdl, k1, b)
-        w.flags.writeable = False
-        self._cache[key] = w
-        return w
+    def gather(self, blks, positions: bool = False, bm25=None, hi: int | None = None):
+        """Touched-block gather: the postings of the sorted block ids
+        ``blks``, concatenated — ``(docs, tfs, pos, w)``.  Blocks tile the
+        doc space in order, so ``docs`` is sorted and one ``searchsorted``
+        pair slices any doc range out of it.  Every block goes through
+        :meth:`decode_block` (decoded once, cached).  ``positions=True``
+        adds the flat position stream (posting j owns the next ``tfs[j]``
+        entries), else ``pos`` is None.  ``bm25=(dl, avgdl, k1, b)`` adds
+        the raw BM25 contributions ``idf * w``, else ``w`` is None.
+        ``hi``: a last block whose postings all lie past ``hi`` is left
+        out — a block found by searching ``block_last_doc`` can start past
+        the doc range asked for, and a range kernel's doclens end there
+        (blocks never straddle a range boundary: they split at segment
+        boundaries, and ranges are whole segments).
+
+        The weight w is idf-free and query-independent for a snapshot (tf,
+        doclen, avgdl, k1, b are fixed), so it is computed once per block,
+        in one pass over the blocks that miss, and cached beside the
+        decoded postings; the idf multiply happens here, per call.  Views
+        that share ``_cache`` under another idf (boosts, idf=0 filter
+        terms) therefore share the weights but never each other's scores.
+        ``id(dl)`` keys the doclen lookup: a local searcher passes one
+        doclens object per loaded generation, and a refresh builds new
+        TermList objects (_LocalReader._load), so a cache entry can never
+        pair stale weights with a live searcher.  Every returned array is
+        READ-ONLY (a single block's are the cached arrays themselves)."""
+        ids = blks.tolist() if isinstance(blks, np.ndarray) else list(blks)
+        parts = [self.decode_block(i) for i in ids]
+        if parts and hi is not None and parts[-1][0][0] > hi:
+            ids, parts = ids[:-1], parts[:-1]
+        if not ids:
+            e = np.zeros(0, np.int64)
+            return e, e, (e if positions else None), (np.zeros(0) if bm25 is not None else None)
+        docs = _cat([d for d, _ in parts])
+        tfs = _cat([t for _, t in parts])
+        pos = _cat([self.decode_block_positions(i) for i in ids]) if positions else None
+        w = None
+        if bm25 is not None:
+            dl, avgdl, k1, b = bm25
+            keys = [("w", i, id(dl), avgdl, k1, b) for i in ids]
+            ws = [self._cache.get(key) for key in keys]
+            miss = [j for j, x in enumerate(ws) if x is None]
+            if miss:
+                md = np.concatenate([parts[j][0] for j in miss])
+                mw = codec.bm25_weight(np.concatenate([parts[j][1] for j in miss]), dl(md), avgdl, k1, b)
+                mw.flags.writeable = False
+                cuts = np.cumsum([parts[j][0].size for j in miss[:-1]], dtype=np.int64)
+                for j, piece in zip(miss, np.split(mw, cuts)):
+                    self._cache[keys[j]] = ws[j] = piece
+            w = self.idf * _cat(ws)
+            w.flags.writeable = False
+        return docs, tfs, pos, w
+
+    def _blocks_over(self, lo: int, hi: int) -> np.ndarray:
+        """Ids of the blocks that can hold a doc in [lo, hi]."""
+        bl = self.block_last_doc
+        b0 = int(np.searchsorted(bl, lo, side="left"))
+        b1 = min(int(np.searchsorted(bl, hi, side="left")), len(bl) - 1)
+        return np.arange(b0, b1 + 1)
 
     def score_range(self, lo: int, hi: int, dl, avgdl: float, k1: float, b: float
                     ) -> tuple[np.ndarray, np.ndarray]:
-        """(doc_ids, raw scores) for lo <= doc_id <= hi.  The OR kernel's
-        hot call: doc ids within a block are ascending, so the range is a
-        contiguous slice (two searchsorted, no boolean mask), and the
-        score column is a slice of the cached per-block weight array —
-        bit-identical to recomputing on the slice (elementwise ops).
-        Returned arrays may be READ-ONLY VIEWS of cached arrays: an
-        in-place write raises ``ValueError`` (the kernel only
-        concatenates/reduces)."""
-        bl = self.block_last_doc
-        b0 = int(np.searchsorted(bl, lo, side="left"))
-        if b0 >= len(bl):
-            e = np.zeros(0, np.int64)
-            return e, np.zeros(0, np.float64)
-        out_d: list[np.ndarray] = []
-        out_s: list[np.ndarray] = []
-        for i in range(b0, len(bl)):
-            if self.block_first_doc(i) > hi:
-                break
-            d, _t = self.decode_block(i)
-            j0 = int(np.searchsorted(d, lo, side="left"))
-            j1 = int(np.searchsorted(d, hi, side="right"))
-            if j1 > j0:
-                w = self._block_scores(i, dl, avgdl, k1, b)
-                out_d.append(d[j0:j1])
-                out_s.append(w[j0:j1])
-        if not out_d:
-            e = np.zeros(0, np.int64)
-            return e, np.zeros(0, np.float64)
-        if len(out_d) == 1:
-            return out_d[0], out_s[0]
-        return np.concatenate(out_d), np.concatenate(out_s)
+        """(doc_ids, raw scores) for lo <= doc_id <= hi — a one-interval
+        call of :meth:`gather` (read-only arrays)."""
+        d, _t, _p, w = self.gather(self._blocks_over(lo, hi), bm25=(dl, avgdl, k1, b), hi=hi)
+        j0, j1 = _span(d, lo, hi)
+        return d[j0:j1], w[j0:j1]
 
     def decode_range(self, lo: int, hi: int) -> tuple[np.ndarray, np.ndarray]:
-        """Postings with lo <= doc_id <= hi, decoding only touched blocks."""
-        bl = self.block_last_doc
-        b0 = int(np.searchsorted(bl, lo, side="left"))
-        if b0 >= len(bl):
-            e = np.zeros(0, np.int64)
-            return e, e
-        out_d, out_t = [], []
-        for i in range(b0, len(bl)):
-            if self.block_first_doc(i) > hi:
-                break
-            d, t = self.decode_block(i)
-            m = (d >= lo) & (d <= hi)
-            if m.any():
-                out_d.append(d[m])
-                out_t.append(t[m])
-        if not out_d:
-            e = np.zeros(0, np.int64)
-            return e, e
-        return np.concatenate(out_d), np.concatenate(out_t)
+        """Postings with lo <= doc_id <= hi, decoding only touched blocks
+        (read-only arrays)."""
+        d, t, _p, _w = self.gather(self._blocks_over(lo, hi))
+        j0, j1 = _span(d, lo, hi)
+        return d[j0:j1], t[j0:j1]
 
     def decode_range_with_positions(self, lo: int, hi: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """Like :meth:`decode_range` but also returns the flat positions of
         the surviving postings (compaction re-encode path)."""
-        bl = self.block_last_doc
-        b0 = int(np.searchsorted(bl, lo, side="left"))
-        e = np.zeros(0, np.int64)
-        if b0 >= len(bl):
-            return e, e, e
-        out_d, out_t, out_p = [], [], []
-        for i in range(b0, len(bl)):
-            if self.block_first_doc(i) > hi:
-                break
-            d, t = self.decode_block(i)
-            pos = self.decode_block_positions(i)
-            m = (d >= lo) & (d <= hi)
-            if m.any():
-                out_d.append(d[m])
-                out_t.append(t[m])
-                out_p.append(pos[np.repeat(m, t)])
-        if not out_d:
-            return e, e, e
-        return np.concatenate(out_d), np.concatenate(out_t), np.concatenate(out_p)
+        d, t, pos, _w = self.gather(self._blocks_over(lo, hi), positions=True)
+        j0, j1 = _span(d, lo, hi)
+        p0 = int(t[:j0].sum())
+        return d[j0:j1], t[j0:j1], pos[p0: p0 + int(t[j0:j1].sum())]
+
+
+def _cat(parts: list[np.ndarray]) -> np.ndarray:
+    """One array from gathered block parts, read-only like the parts."""
+    if len(parts) == 1:
+        return parts[0]
+    out = np.concatenate(parts)
+    out.flags.writeable = False
+    return out
+
+
+def _span(docs: np.ndarray, lo: int, hi: int) -> tuple[int, int]:
+    """[j0, j1) of the sorted ``docs`` holding lo <= doc <= hi."""
+    return int(np.searchsorted(docs, lo, side="left")), int(np.searchsorted(docs, hi, side="right"))
+
+
+def _ragged(a: np.ndarray, z: np.ndarray) -> np.ndarray:
+    """Concatenated ``arange(a[i], z[i])`` over all i (z >= a), no loop."""
+    n = z - a
+    return np.repeat(a - (np.cumsum(n) - n), n) + np.arange(int(n.sum()))
 
 
 def _bm25(tfs: np.ndarray, dls: np.ndarray, w_idf: float, avgdl: float, k1: float, b: float) -> np.ndarray:
@@ -279,6 +291,12 @@ def _topk_select(docs: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarr
     if docs.size == 0:
         return docs, scores
     rs = round6(scores)
+    if 0 < k < rs.size:
+        # partition down to the k-th best rounded score first: every doc
+        # above it is in the top-k and all its ties stay, so the lexsort
+        # below sees the same doc_id tie-break on far fewer rows
+        m = rs >= np.partition(rs, rs.size - k)[rs.size - k]
+        docs, rs = docs[m], rs[m]
     order = np.lexsort((docs, -rs))[:k]
     return docs[order], rs[order]
 
@@ -312,25 +330,7 @@ def _score_and(lists, dl, avgdl: float, k1: float, b: float, k: int, lo: int, hi
     for L in lists[1:]:
         if docs.size == 0:
             break
-        # which block of L would contain each candidate
-        blk = np.searchsorted(L.block_last_doc, docs, side="left")
-        keep_mask = blk < L.n_blocks()
-        docs, scores, blk = docs[keep_mask], scores[keep_mask], blk[keep_mask]
-        if docs.size == 0:
-            break
-        found = np.zeros(docs.size, dtype=bool)
-        tfs = np.zeros(docs.size, dtype=np.int64)
-        for bi in np.unique(blk):
-            d, t = L.decode_block(int(bi))
-            sel = blk == bi
-            pos = np.searchsorted(d, docs[sel])
-            ok = (pos < d.size) & (d[np.minimum(pos, d.size - 1)] == docs[sel])
-            f = found[sel]
-            f[:] = ok
-            found[sel] = f
-            tt = tfs[sel]
-            tt[ok] = t[np.minimum(pos, d.size - 1)][ok]
-            tfs[sel] = tt
+        found, tfs = _probe(L, docs)
         docs, scores, tfs = docs[found], scores[found], tfs[found]
         if docs.size:
             scores = scores + _bm25(tfs, (L.dl_fn or dl)(docs), L.idf,
@@ -353,8 +353,7 @@ def match_docs(lists, mode: str, lo: int, hi: int, deleted: np.ndarray | None = 
         for L in lists[1:]:
             if docs.size == 0:
                 break
-            d2, _ = L.decode_range(lo, hi)
-            docs = docs[np.isin(docs, d2, assume_unique=True)]
+            docs = docs[_probe(L, docs)[0]]
     else:
         parts = [L.decode_range(lo, hi)[0] for L in lists]
         docs = np.unique(np.concatenate(parts)) if parts else np.zeros(0, np.int64)
@@ -438,22 +437,15 @@ def regroup(src, entries) -> "PhraseGroup":
 def _flat_positions(L: "TermList", docs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(doc_index_into_docs, position) flat pairs of term L over ``docs``
     (sorted), decoding only blocks that contain at least one of them."""
-    bl = L.block_last_doc
-    blks = np.unique(np.searchsorted(bl, docs, side="left"))
-    out_i, out_p = [], []
-    for bi in blks[blks < len(bl)]:
-        d, t = L.decode_block(int(bi))
-        ci = np.minimum(np.searchsorted(docs, d), docs.size - 1)
-        m = docs[ci] == d  # postings belonging to candidate docs
-        if not m.any():
-            continue
-        pos = L.decode_block_positions(int(bi))
-        out_i.append(np.repeat(ci[m], t[m]))
-        out_p.append(pos[np.repeat(m, t)])
-    if not out_i:
-        e = np.zeros(0, np.int64)
+    e = np.zeros(0, np.int64)
+    if docs.size == 0:
         return e, e
-    return np.concatenate(out_i).astype(np.int64), np.concatenate(out_p).astype(np.int64)
+    d, t, pos, _w = L.gather(_blocks_of(L, docs), positions=True)
+    ci = np.minimum(np.searchsorted(docs, d), docs.size - 1)
+    m = docs[ci] == d  # postings belonging to candidate docs
+    if not m.any():
+        return e, e
+    return np.repeat(ci[m], t[m]).astype(np.int64), pos[np.repeat(m, t)].astype(np.int64)
 
 
 def _phrase_keep(g: list[tuple["TermList", list[int]]], docs: np.ndarray) -> np.ndarray:
@@ -528,30 +520,25 @@ def _sloppy_keep(g: list[tuple["TermList", list[int]]], docs: np.ndarray, slop: 
     return out
 
 
-def _isect(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Sorted-unique intersection via searchsorted."""
-    if a.size == 0 or b.size == 0:
-        return np.zeros(0, np.int64)
-    pos = np.minimum(np.searchsorted(b, a), b.size - 1)
-    return a[b[pos] == a]
+def _blocks_of(L: "TermList", docs: np.ndarray) -> np.ndarray:
+    """Sorted ids of the blocks of L that ``docs`` could live in (mark and
+    scan, no sort: ``docs`` may come in any order)."""
+    touched = np.zeros(L.n_blocks() + 1, dtype=bool)  # last slot: past L's end
+    touched[np.searchsorted(L.block_last_doc, docs, side="left")] = True
+    return np.flatnonzero(touched[:-1])
 
 
-def _blk_contains(L: "TermList", docs: np.ndarray) -> np.ndarray:
-    """Membership mask of sorted ``docs`` in L's postings, decoding ONLY the
-    blocks a candidate could live in (the `_score_and` galloping probe) —
-    a common negated/AND-ed term never pays a full range decode when the
-    candidate set is already small."""
-    found = np.zeros(docs.size, dtype=bool)
-    if docs.size == 0:
-        return found
-    blk = np.searchsorted(L.block_last_doc, docs, side="left")
-    idx = np.nonzero(blk < L.n_blocks())[0]
-    for bi in np.unique(blk[idx]):
-        d, _ = L.decode_block(int(bi))
-        sel = idx[blk[idx] == bi]
-        pos = np.searchsorted(d, docs[sel])
-        found[sel] = (pos < d.size) & (d[np.minimum(pos, d.size - 1)] == docs[sel])
-    return found
+def _probe(L: "TermList", docs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(membership mask, tfs) of sorted ``docs`` in L — the galloping
+    block probe: ONE gather of the blocks a candidate could live in, then
+    one ``searchsorted``, so a common AND-ed / negated / scored term never
+    pays a full range decode when the candidate set is already small.
+    ``tfs`` is meaningful only where the mask is True."""
+    d, t, _p, _w = L.gather(_blocks_of(L, docs))
+    if d.size == 0:
+        return np.zeros(docs.size, dtype=bool), np.zeros(docs.size, np.int64)
+    j = np.minimum(np.searchsorted(d, docs), d.size - 1)
+    return d[j] == docs, t[j]
 
 
 def _boolean_members(
@@ -587,7 +574,7 @@ def _boolean_members(
             # rarest term drives; every later term is a galloping block
             # probe against the shrinking candidate set, never a full decode
             for L, _offs in sorted(g, key=lambda e: (e[0].df if e[0].df else 1 << 60)):
-                m = L.decode_range(lo, hi)[0] if m is None else m[_blk_contains(L, m)]
+                m = L.decode_range(lo, hi)[0] if m is None else m[_probe(L, m)[0]]
                 if m.size == 0:
                     return m
             return m[_phrase_keep(g, m)]
@@ -599,7 +586,7 @@ def _boolean_members(
                 todo = np.nonzero(~mask)[0]
                 if todo.size == 0:
                     break
-                mask[todo] = _blk_contains(L, within[todo])
+                mask[todo] = _probe(L, within[todo])[0]
             return within[mask]
         parts = [L.decode_range(lo, hi)[0] for L, _ in g]
         return np.unique(np.concatenate(parts)) if parts else np.zeros(0, np.int64)
@@ -675,15 +662,11 @@ def score_boolean(
             if id(L) in seen:
                 continue
             seen.add(id(L))
-            d, t = L.decode_range(lo, hi)
-            if d.size == 0:
-                continue
-            idx = np.minimum(np.searchsorted(cand, d), cand.size - 1)
-            m = cand[idx] == d
+            m, t = _probe(L, cand)
             if not m.any():
                 continue
-            scores[idx[m]] += _bm25(
-                t[m], (L.dl_fn or dl)(d[m]), L.idf,
+            scores[m] += _bm25(
+                t[m], (L.dl_fn or dl)(cand[m]), L.idf,
                 L.avgdl_f if L.avgdl_f is not None else avgdl, k1, b,
             )
     return _topk_select(cand, scores, k)
@@ -711,16 +694,32 @@ def score_phrase(
 def _score_or(lists, dl, avgdl: float, k1: float, b: float, k: int, lo: int, hi: int,
               deleted: np.ndarray | None = None, ub_scale: float = 1.0,
               after: tuple[float, int] | None = None, min_match: int = 1):
-    """Block-max interval pruning (WAND family), exact top-k.
+    """Block-max interval pruning (WAND family), exact top-k, scored in
+    BATCHES of elementary intervals.
+
+    Intervals are taken in descending UB order.  A batch ends at the first
+    interval whose UB can no longer reach θ, or once it holds about as
+    many postings as the candidate buffer's ``cap`` (estimated from the
+    covering blocks' sizes).  Per batch, each list makes ONE
+    :meth:`TermList.gather` of the blocks covering the batch's intervals,
+    and one ``searchsorted`` pair plus a ragged arange cut out its
+    postings inside them; the lists' postings are concatenated term-major
+    and accumulated once (``np.unique`` + ``np.bincount``).
+    Per doc the float sum still runs in list order, so scores are
+    bit-identical to summing interval by interval.  θ moves only when the
+    buffer consolidates (at ``cap`` buffered docs), and a batch holds
+    about ``cap`` postings, so checking θ per batch lags it by at most one
+    batch; a lagging θ only weakens pruning, never exactness.
 
     ``min_match``: Solr DisMax minimum-should-match — a doc qualifies only
     when it contains at least that many DISTINCT query terms.  Counting is
-    exact: elementary intervals partition the doc space, so a doc's
-    postings across all lists land in exactly one interval and one
-    ``np.add.at`` per interval sees its full term count.  The filter runs
-    before the candidate buffer, so θ tracks the kth-best of QUALIFYING
-    docs and interval pruning stays exact for the filtered set (same
-    argument as the cursor filter)."""
+    exact: elementary intervals partition the doc space and a batch holds
+    whole intervals, so all of a doc's postings land in one batch, where
+    each list contributes at most one posting per doc and the occurrence
+    count IS the distinct-term count.  The filter runs before the
+    candidate buffer, so θ tracks the kth-best of QUALIFYING docs and
+    interval pruning stays exact for the filtered set (same argument as
+    the cursor filter)."""
     # elementary intervals from the union of block boundaries, clipped to
     # this task's doc range [lo, hi]
     bounds = np.unique(np.concatenate([L.block_last_doc for L in lists]))
@@ -736,18 +735,24 @@ def _score_or(lists, dl, avgdl: float, k1: float, b: float, k: int, lo: int, hi:
     hi_edges = np.minimum(bounds, hi)
     n_int = bounds.size
 
-    # UB per interval = sum over lists of covering block's idf*block_max_w
+    # per list: the block covering each interval (searchsorted puts
+    # hi_edge past block blk-1's last doc, so block blk starts at or
+    # before the interval; blk == n_blocks: past the list's end).  UB per
+    # interval = sum over lists of the covering block's idf*block_max_w;
+    # est = the interval's share of the covering block's postings (tf
+    # bytes: ≥ 1 per posting), the batch-size estimate
     ub = np.zeros(n_int, dtype=np.float64)
+    est = np.zeros(n_int, dtype=np.float64)
+    width = (hi_edges - lo_edges + 1).astype(np.float64)
     for L in lists:
-        blk = np.searchsorted(L.block_last_doc, hi_edges, side="left")
-        # interval is inside block blk iff blk valid and block covers lo..hi
+        bl = L.block_last_doc
+        blk = np.searchsorted(bl, hi_edges, side="left")
         valid = blk < L.n_blocks()
-        bmax = np.zeros(n_int)
-        bmax[valid] = L.idf * L.block_max_w[blk[valid]] * L.ub_scale_f
-        # the covering block must start at or before the interval's end
-        firsts = np.where(blk > 0, L.block_last_doc[np.maximum(blk - 1, 0)] + 1, 0)
-        bmax[valid & (firsts > hi_edges)] = 0.0
-        ub += bmax
+        bv = blk[valid]
+        ub[valid] += L.idf * L.block_max_w[bv] * L.ub_scale_f
+        n_post = np.concatenate((L.block_tf_off[1:], [len(L.tf_bytes)]))[bv] - L.block_tf_off[bv]
+        first = np.maximum(np.where(bv > 0, bl[bv - 1] + 1, 0), lo)
+        est[valid] += n_post * width[valid] / (bl[bv] - first + 1)
     # ub_scale > 1 when live avgdl grew past build-time avgdl (deletes of
     # short docs): w is monotone in avgdl with sup ratio avgdl'/avgdl, so
     # inflating keeps stored block maxima a valid upper bound
@@ -755,12 +760,13 @@ def _score_or(lists, dl, avgdl: float, k1: float, b: float, k: int, lo: int, hi:
         ub *= ub_scale
 
     order = np.argsort(-ub, kind="stable")
+    neg_ub = -ub[order]  # ascending
+    cum_est = np.cumsum(est[order])
     # vectorized top-k maintenance: candidate (doc, score) arrays buffer up
     # and consolidate via one lexsort select when the buffer passes ~4k —
-    # no per-doc Python (the old heapq insertion loop was the last
-    # row-at-a-time path in the OR kernel).  θ (the kth best score so far)
-    # updates at each consolidation: lagging slightly behind a per-doc heap
-    # only weakens pruning, never correctness.
+    # no per-doc Python.  θ (the kth best score so far) updates at each
+    # consolidation: lagging slightly behind a per-doc heap only weakens
+    # pruning, never correctness.
     buf_d: list[np.ndarray] = []
     buf_s: list[np.ndarray] = []
     n_buf = 0
@@ -782,34 +788,39 @@ def _score_or(lists, dl, avgdl: float, k1: float, b: float, k: int, lo: int, hi:
             theta = float(top_s[-1])
             have_k = True
 
-    for ii in order:
-        # θ lives on the round6 grid (top_s is rounded); ub bounds RAW
-        # scores, and round6(x) >= θ ⟺ x >= θ - eps, so pruning needs the
-        # eps margin — and an interval whose rounded UB == θ can still
-        # improve the top-k via the doc_id tie-break (FIXTURES.md q10)
-        if have_k and ub[ii] < theta - _ROUND6_EPS:
-            break  # every remaining interval is pruned
-        lo, hi = int(lo_edges[ii]), int(hi_edges[ii])
+    p = 0
+    while p < n_int:
+        end = n_int
+        if have_k:
+            # θ lives on the round6 grid (top_s is rounded); ub bounds RAW
+            # scores, and round6(x) >= θ ⟺ x >= θ - eps, so pruning needs
+            # the eps margin — and an interval whose rounded UB == θ can
+            # still improve the top-k via the doc_id tie-break (FIXTURES.md
+            # q10).  UBs descend, so the live intervals are a prefix
+            end = int(np.searchsorted(neg_ub, -(theta - _ROUND6_EPS), side="right"))
+            if end <= p:
+                break  # every remaining interval is pruned
+        room = (cum_est[p - 1] if p else 0.0) + cap
+        q = min(max(int(np.searchsorted(cum_est, room, side="left")) + 1, p + 1), end)
+        batch = order[p:q]
+        p = q
+        b_lo, b_hi = lo_edges[batch], hi_edges[batch]
         parts_d, parts_s = [], []
         for L in lists:
-            d, s = L.score_range(lo, hi, L.dl_fn or dl,
-                                 L.avgdl_f if L.avgdl_f is not None else avgdl, k1, b)
-            if d.size:
-                parts_d.append(d)
-                parts_s.append(s)
+            d, _t, _p, w = L.gather(
+                _blocks_of(L, b_hi),
+                bm25=(L.dl_fn or dl, L.avgdl_f if L.avgdl_f is not None else avgdl, k1, b), hi=hi,
+            )
+            idx = _ragged(np.searchsorted(d, b_lo, side="left"), np.searchsorted(d, b_hi, side="right"))
+            if idx.size:
+                parts_d.append(d[idx])
+                parts_s.append(w[idx])
         if not parts_d:
             continue
-        alld = np.concatenate(parts_d)
-        alls = np.concatenate(parts_s)
-        udocs, inv = np.unique(alld, return_inverse=True)
-        uscores = np.zeros(udocs.size)
-        np.add.at(uscores, inv, alls)
+        udocs, inv = np.unique(np.concatenate(parts_d), return_inverse=True)
+        uscores = np.bincount(inv, weights=np.concatenate(parts_s), minlength=udocs.size)
         if min_match > 1:
-            # distinct-term count per doc: each list contributes ≤1 posting
-            # per doc, so occurrences in `inv` ARE distinct-term hits
-            cnt = np.zeros(udocs.size, np.int64)
-            np.add.at(cnt, inv, 1)
-            m = cnt >= min_match
+            m = np.bincount(inv, minlength=udocs.size) >= min_match
             udocs, uscores = udocs[m], uscores[m]
         keep = _drop_deleted(udocs, deleted)
         udocs, uscores = udocs[keep], uscores[keep]

@@ -7,7 +7,12 @@ from __future__ import annotations
 import pytest
 
 from goobi_viewer_indexer_spark.config import IndexConfig
-from goobi_viewer_indexer_spark.operators.search import FieldedIndex, InvertedIndex, parse_fielded_query
+from goobi_viewer_indexer_spark.operators.search import (
+    FieldedIndex,
+    InvertedIndex,
+    LocalFieldedSearcher,
+    parse_fielded_query,
+)
 from goobi_viewer_indexer_spark.plans.build import build_index, build_index_fielded
 from tests.conftest import SF001
 
@@ -57,6 +62,30 @@ def test_boost_scales_scores(spark, fidx):
     assert set(base) == set(boosted)
     for d in base:
         assert abs(boosted[d] - 2.0 * base[d]) < 1e-5
+
+
+def test_boosted_query_leaves_no_weights_behind(spark, fidx):
+    # a boosted view shares its term's block caches with the unboosted
+    # list; the next unboosted query must still score with its own idf
+    q, boosts = "text:spark OR text:window", {"text": 2.0}
+    local = LocalFieldedSearcher(fidx)
+    boosted = local.search(q, k=10, boosts=boosts)
+    plain = local.search(q, k=10)
+    assert plain == LocalFieldedSearcher(fidx).search(q, k=10)
+    assert plain == [tuple(r) for r in fidx.search(q, k=10).collect()]
+    assert boosted == [tuple(r) for r in fidx.search(q, k=10, boosts=boosts).collect()]
+    assert boosted != plain
+
+
+def test_search_many_boosted_and_plain_twins(spark, fidx):
+    # one batch, the same term boosted in one query and plain in another:
+    # each answer equals its own per-query search, local and distributed
+    qs = {"a": ("text:spark^2 OR text:window", "or", 5), "b": ("text:spark OR text:window", "or", 5)}
+    batch = fidx.search_many(qs)
+    for qid, (q, mode, k) in qs.items():
+        assert batch[qid] == [tuple(r) for r in fidx.search(q, k=k, mode=mode).collect()], qid
+        assert batch[qid] == LocalFieldedSearcher(fidx).search(q, k=k, mode=mode), qid
+    assert batch["a"] != batch["b"]
 
 
 def test_string_query_equals_pairs(spark, fidx):

@@ -154,6 +154,21 @@ def test_delete_and_open_cycles_pin_no_cached_plan(spark, idx):
     assert jsc.getPersistentRDDs().size() == before
 
 
+def test_join_path_delete_and_open_cycles_pin_no_cached_plan(spark, idx, monkeypatch):
+    # over the broadcast budget every query joins the packed tombstones
+    # onto its rows; they come from the open's one collect, so reopening
+    # and searching after each delete must leave no cached plan behind
+    monkeypatch.setenv("SPARK_GRAFT_DOCLENS_BC_MB", "0.0000001")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for n in range(1, 5):
+        maint.delete_docs(spark, idx, [5 * (n - 1)])
+        engine = InvertedIndex(spark, idx)
+        assert engine._rng_broadcast() is None
+        assert [r["doc_id"] for r in engine.search(["purge"], k=60).collect()] == list(range(5 * n, 60, 5))
+    assert jsc.getPersistentRDDs().size() == before
+
+
 @pytest.mark.parametrize("path", ["broadcast", "join"])
 @pytest.mark.parametrize("kind", ["flat", "fielded"])
 def test_fully_deleted_range_returns_nothing(spark, tmp_path, monkeypatch, kind, path):
