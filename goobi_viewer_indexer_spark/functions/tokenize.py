@@ -35,28 +35,7 @@ TOKEN_RE = re.compile(r"[a-z0-9]+")
 # SQL bodies kept in sync with TOKEN_RE:
 SPLIT_PATTERN = "[^a-z0-9]+"
 
-__all__ = ["tokenize_expr", "tokenize_series", "tokenize_py", "duckdb_tokenize_sql", "doclen_nfc"]
-
-_DOCLEN_UDF = None
-
-
-def doclen_nfc(col):
-    """Token count via :func:`tokenize_series` (WITH NFC) as a lazy Arrow
-    pandas UDF — the index build's stage-0 doclen MUST agree with the
-    stage-1 tf/block-max tokenization on decomposed-Unicode input, or the
-    stored weights and query-time doclens silently diverge and WAND rank
-    identity breaks.  ``tokenize_expr`` (no NFC) stays the oracle/naive
-    twin, identical on NFC/ASCII corpora."""
-    global _DOCLEN_UDF
-    if _DOCLEN_UDF is None:
-        from pyspark.sql.functions import pandas_udf
-
-        def _fn(texts: pd.Series) -> pd.Series:
-            return tokenize_series(texts).map(len).astype("int32")
-
-        _DOCLEN_UDF = pandas_udf(_fn, "int")
-    return _DOCLEN_UDF(col)
-
+__all__ = ["tokenize_expr", "tokenize_series", "tokenize_py", "duckdb_tokenize_sql"]
 
 def tokenize_py(text: str | None) -> list[str]:
     if not text:

@@ -37,7 +37,14 @@ from pyspark.sql import functions as F
 
 from goobi_viewer_indexer_spark.functions.tokenize import tokenize_py
 from goobi_viewer_indexer_spark.operators import wand
-from goobi_viewer_indexer_spark.operators.spimi import FIELD_SEP, _rng_col, merge_group_pdf, tag_term
+from goobi_viewer_indexer_spark.operators.spimi import (
+    FIELD_SEP,
+    _rng_col,
+    doclens_col,
+    merge_group_pdf,
+    pack_range_ids,
+    tag_term,
+)
 from goobi_viewer_indexer_spark.plans.build import load_meta
 
 __all__ = [
@@ -1102,7 +1109,7 @@ class _SnapshotReader:
         self.rev = _txn.current_rev(index_dir)
         if self._fielded and "fields" not in self.meta:
             raise ValueError(f"{index_dir} is not a fielded index")
-        self._dl_cols = [f"doclens_{f}" for f in self.meta["fields"]] if self._fielded else ["doclens"]
+        self._dl_cols = [doclens_col(f) for f in (self.meta["fields"] if self._fielded else [""])]
         self.span = self.meta["docs_per_segment"] * self.meta["merge_fanin"]
         self._postings = spark.read.parquet(_txn.table_path(index_dir, "postings"))
         self._term_stats = spark.read.parquet(_txn.table_path(index_dir, "term_stats"))
@@ -1122,22 +1129,7 @@ class _SnapshotReader:
         # answering at its own rev.
         tomb_files = sorted(ap for _rel, ap in _txn._data_files(tomb_path))  # none if absent
         if tomb_files:
-            span = self.span
-
-            def pack_tomb(pdf: pd.DataFrame) -> pd.DataFrame:
-                if len(pdf) == 0:
-                    return pd.DataFrame({"rng": [], "deleted": []}).astype({"rng": "int32"})
-                rng = int(pdf["rng"].iloc[0])
-                arr = np.sort(pdf["doc_id"].to_numpy(np.int64))
-                return pd.DataFrame({"rng": [rng], "deleted": [arr.tobytes()]})
-
-            self._tomb_packed = (
-                spark.read.parquet(*tomb_files)
-                .withColumn("rng", (F.col("doc_id") / span).cast("int"))
-                .select("rng", "doc_id")
-                .groupBy("rng")
-                .applyInPandas(pack_tomb, "rng int, deleted binary")
-            )
+            self._tomb_packed = pack_range_ids(spark.read.parquet(*tomb_files), self.span, "deleted")
         # opening a snapshot reader loads its range side tables once
         # (round 6): the doclens/tombstone broadcast is built here, at
         # open, so the first query pays no side-table job — the Lucene
@@ -2746,7 +2738,7 @@ class LocalSearcher(_LocalReader):
 
     def _load(self, index: InvertedIndex) -> None:
         super()._load(index)
-        self._dl = self._dls["doclens"]
+        self._dl = self._dls[doclens_col("")]
         self.doclens = self._dl.lens
 
     def _fq_members(self, fq) -> np.ndarray:
@@ -4660,7 +4652,7 @@ class LocalFieldedSearcher(_LocalReader):
 
     def _load(self, index: "FieldedIndex") -> None:
         super()._load(index)
-        self._dl_by_field = {f: self._dls[f"doclens_{f}"] for f in index.fields}
+        self._dl_by_field = {f: self._dls[doclens_col(f)] for f in index.fields}
         self.doclens: dict[str, np.ndarray] = {f: d.lens for f, d in self._dl_by_field.items()}
         # field → dense doc-values arrays (stored-table columns collected
         # once on first touch — the latency-path twin of the distributed

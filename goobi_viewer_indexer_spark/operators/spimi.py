@@ -45,12 +45,17 @@ POSTINGS_SCHEMA = (
     "block_max_w array<double>"
 )
 
+POSTINGS_COLS = [c.split(" ")[0] for c in POSTINGS_SCHEMA.split(", ")]
+
 __all__ = [
     "POSTINGS_SCHEMA",
     "FIELD_SEP",
     "tag_term",
+    "doclen_col",
+    "doclens_col",
+    "Layout",
+    "pack_range_ids",
     "build_partials",
-    "build_partials_fielded",
     "merge_partials",
     "compact_light_terms_bucketed",
     "merge_group_pdf",
@@ -67,6 +72,87 @@ def tag_term(field: str, term: str) -> str:
     return f"{field}{FIELD_SEP}{term}"
 
 
+# ---- the index layout: the one naming rule of both engines ----
+# A flat index is the one-field case of a fielded index: its single field
+# is unnamed (""), so its term keys carry no tag (``t`` vs ``f\x00t``), its
+# doc_stats / doclens_packed columns no suffix (``doclen`` / ``doclens`` vs
+# ``doclen_<f>`` / ``doclens_<f>``) and its avgdl meta keys no ``_by_field``.
+# Every writer, maintenance step and reader spells these names through the
+# helpers below.
+
+
+def doclen_col(field: str) -> str:
+    """doc_stats column holding ``field``'s token count."""
+    return f"doclen_{field}" if field else "doclen"
+
+
+def doclens_col(field: str) -> str:
+    """doclens_packed column holding ``field``'s packed int32 doclens."""
+    return f"doclens_{field}" if field else "doclens"
+
+
+def term_prefix(field: str) -> str:
+    """What ``field`` puts in front of its terms' index keys."""
+    return tag_term(field, "") if field else ""
+
+
+def field_of(key: str) -> str:
+    """Field of an index term key (``""`` for an untagged flat key)."""
+    field, sep, _ = key.partition(FIELD_SEP)
+    return field if sep else ""
+
+
+class Layout:
+    """The fields of one index: field name → source column, in order.  The
+    flat layout is ``{"": text_col}``."""
+
+    def __init__(self, fields: dict[str, str]):
+        self.fields = dict(fields)
+        self.names = list(self.fields)
+        self.flat = self.names == [""]
+
+    @classmethod
+    def flat_text(cls, text_col: str = "text") -> "Layout":
+        return cls({"": text_col})
+
+    @classmethod
+    def of_meta(cls, meta: dict) -> "Layout":
+        return cls(meta["field_cols"]) if "fields" in meta else cls.flat_text()
+
+    @property
+    def columns(self) -> list[str]:
+        """Distinct source columns, in field order."""
+        return list(dict.fromkeys(self.fields.values()))
+
+    @property
+    def doclen_cols(self) -> list[str]:
+        return [doclen_col(f) for f in self.names]
+
+    @property
+    def doclens_cols(self) -> list[str]:
+        return [doclens_col(f) for f in self.names]
+
+    def meta_fields(self) -> dict:
+        """Meta entries naming the fields (none for the flat layout)."""
+        return {} if self.flat else {"fields": self.names, "field_cols": self.fields}
+
+    def avgdl_key(self, live: bool = False) -> str:
+        key = "avgdl_live" if live else "avgdl"
+        return key if self.flat else key + "_by_field"
+
+    def avgdls(self, meta: dict) -> dict[str, float]:
+        """The build avgdl basis per field."""
+        v = meta[self.avgdl_key()]
+        return {"": v} if self.flat else v
+
+    def put_avgdls(self, meta: dict, avgdls: dict[str, float], live: bool = False) -> None:
+        meta[self.avgdl_key(live)] = avgdls[""] if self.flat else avgdls
+        if not (live or self.flat):
+            # single-avgdl readers: the first field as declared (meta's
+            # field_cols comes back from JSON in sorted key order)
+            meta["avgdl"] = avgdls[meta["fields"][0]]
+
+
 def _rng_col(span: int):
     """One row per doc range a postings row overlaps — the row → range
     rule ``min_doc // span .. max_doc // span`` (exploded; alias it
@@ -74,27 +160,69 @@ def _rng_col(span: int):
     return F.explode(F.sequence((F.col("min_doc") / span).cast("int"), (F.col("max_doc") / span).cast("int")))
 
 
-def _build_segment_pdf(pdf: pd.DataFrame, avgdl: float, cfg: IndexConfig) -> pd.DataFrame:
-    """One SPIMI segment: pandas rows (doc_id, text, seg) → postings rows."""
+def pack_range_ids(ids: DataFrame, span: int, out_col: str) -> DataFrame:
+    """``(doc_id)`` rows → one ``(rng, <out_col>)`` row per doc range, the
+    range's sorted ids packed as int64 bytes — how tombstones and delete
+    sets reach per-range tasks."""
+
+    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(pdf) == 0:
+            return pd.DataFrame({"rng": [], out_col: []}).astype({"rng": "int32"})
+        arr = np.sort(pdf["doc_id"].to_numpy(np.int64))
+        return pd.DataFrame({"rng": [int(pdf["rng"].iloc[0])], out_col: [arr.tobytes()]})
+
+    return (
+        ids.withColumn("rng", (F.col("doc_id") / span).cast("int"))
+        .select("rng", "doc_id")
+        .groupBy("rng")
+        .applyInPandas(pack, f"rng int, {out_col} binary")
+    )
+
+
+def _build_segment_pdf(pdf: pd.DataFrame, layout: Layout, avgdls: dict[str, float],
+                       cfg: IndexConfig) -> pd.DataFrame:
+    """One SPIMI segment: pandas rows (doc_id, seg, *source columns) →
+    postings rows.  One token stream per field, keyed by the layout's term
+    prefix; positions are field-internal (phrase queries scope to a field)
+    and each token's BM25 weight uses its field's avgdl."""
     if len(pdf) == 0:  # Spark 4 grouped-map may deliver empty groups
-        return pd.DataFrame([], columns=[c.split(" ")[0] for c in POSTINGS_SCHEMA.split(", ")])
+        return pd.DataFrame([], columns=POSTINGS_COLS)
     seg = int(pdf["seg"].iloc[0])
     order = np.argsort(pdf["doc_id"].to_numpy(), kind="stable")
     pdf = pdf.iloc[order]
-    tokens = tokenize_series(pdf["text"])
     doc_ids = pdf["doc_id"].to_numpy(np.int64)
-    lens = tokens.map(len).to_numpy(np.int64)
-    total = int(lens.sum())
-    if total == 0:
-        return pd.DataFrame([], columns=[c.split(" ")[0] for c in POSTINGS_SCHEMA.split(", ")])
 
-    flat_terms = np.concatenate([np.asarray(t, dtype=object) for t in tokens if t])
-    flat_docs = np.repeat(doc_ids, lens)
-    flat_dl = np.repeat(lens, lens)
-    # token index within its doc — the position stream for phrase queries
-    flat_pos = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(lens) - lens, lens)
-
-    return _encode_flat_tokens(flat_terms, flat_docs, flat_dl, flat_pos, avgdl, seg, cfg)
+    streams = []
+    for fname, col in layout.fields.items():
+        tokens = tokenize_series(pdf[col])
+        lens = tokens.map(len).to_numpy(np.int64)
+        total = int(lens.sum())
+        if total == 0:
+            continue
+        terms = np.concatenate([np.asarray(t, dtype=object) for t in tokens if t])
+        prefix = term_prefix(fname)
+        if prefix:
+            # elementwise str concat; the prefix goes in as an OBJECT
+            # scalar — a plain str would become a fixed-width numpy string
+            # and lose the trailing FIELD_SEP (numpy strips trailing NULs)
+            terms = np.array(prefix, dtype=object) + terms
+        streams.append((
+            terms,
+            np.repeat(doc_ids, lens),
+            np.repeat(lens, lens),
+            # token index within its doc — the position stream for phrase queries
+            np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(lens) - lens, lens),
+            fname,
+        ))
+    if not streams:
+        return pd.DataFrame([], columns=POSTINGS_COLS)
+    if len(streams) == 1:
+        *flat, fname = streams[0]
+        avgdl = avgdls[fname]
+    else:
+        flat = [np.concatenate([s[i] for s in streams]) for i in range(4)]
+        avgdl = np.concatenate([np.full(s[0].size, avgdls[s[4]], dtype=np.float64) for s in streams])
+    return _encode_flat_tokens(*flat, avgdl, seg, cfg)
 
 
 def _encode_flat_tokens(flat_terms, flat_docs, flat_dl, flat_pos, avgdl, seg, cfg) -> pd.DataFrame:
@@ -172,42 +300,6 @@ def _encode_flat_tokens(flat_terms, flat_docs, flat_dl, flat_pos, avgdl, seg, cf
     )
 
 
-def _build_segment_pdf_fielded(
-    pdf: pd.DataFrame, avgdls: dict[str, float], cfg: IndexConfig, fields: dict[str, str]
-) -> pd.DataFrame:
-    """Multi-field SPIMI segment: one token stream per field, term keys
-    tagged ``field\\x00term``, per-field doclens/avgdl baked into the BM25
-    block maxima.  Positions are field-internal (phrase queries scope to a
-    field)."""
-    cols = [c.split(" ")[0] for c in POSTINGS_SCHEMA.split(", ")]
-    if len(pdf) == 0:
-        return pd.DataFrame([], columns=cols)
-    seg = int(pdf["seg"].iloc[0])
-    order = np.argsort(pdf["doc_id"].to_numpy(), kind="stable")
-    pdf = pdf.iloc[order]
-    doc_ids = pdf["doc_id"].to_numpy(np.int64)
-
-    ft, fd, fl, fp, fa = [], [], [], [], []
-    for fname, col in fields.items():
-        tokens = tokenize_series(pdf[col])
-        lens = tokens.map(len).to_numpy(np.int64)
-        total = int(lens.sum())
-        if total == 0:
-            continue
-        tagged = np.array([f"{fname}{FIELD_SEP}{t}" for toks in tokens for t in toks], dtype=object)
-        ft.append(tagged)
-        fd.append(np.repeat(doc_ids, lens))
-        fl.append(np.repeat(lens, lens))
-        fp.append(np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(lens) - lens, lens))
-        fa.append(np.full(total, avgdls[fname], dtype=np.float64))
-    if not ft:
-        return pd.DataFrame([], columns=cols)
-    return _encode_flat_tokens(
-        np.concatenate(ft), np.concatenate(fd), np.concatenate(fl),
-        np.concatenate(fp), np.concatenate(fa), seg, cfg,
-    )
-
-
 # Stage-1 task granularity (round 6): a SEGMENT is the doc-range unit of
 # the on-disk layout, but one applyInPandas task per segment caps stage-1
 # parallelism at nseg — with large segments (the corpus shape) a 32-core
@@ -221,22 +313,6 @@ def _build_segment_pdf_fielded(
 STAGE1_SUB_SPAN = 1024
 
 
-def build_partials_fielded(
-    docs: DataFrame, avgdls: dict[str, float], cfg: IndexConfig, fields: dict[str, str]
-) -> DataFrame:
-    """Stage 1, multi-field.  ``docs`` must have (doc_id, seg, *field cols)."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _build_segment_pdf_fielded(pdf, avgdls, cfg, fields)
-
-    return (
-        docs.select("doc_id", "seg", *fields.values())
-        .withColumn("_sub", _stage1_sub(cfg))
-        .groupBy("seg", "_sub")
-        .applyInPandas(fn, POSTINGS_SCHEMA)
-    )
-
-
 def _stage1_sub(cfg: IndexConfig):
     """Sub-range key for stage-1 grouping — constant 0 (no split, the
     exact pre-round-6 layout) while segments are at most
@@ -246,13 +322,15 @@ def _stage1_sub(cfg: IndexConfig):
     return (F.col("doc_id") / STAGE1_SUB_SPAN).cast("int")
 
 
-def build_partials(docs: DataFrame, avgdl: float, cfg: IndexConfig) -> DataFrame:
-    """Stage 1.  ``docs`` must have (doc_id, text, seg)."""
+def build_partials(docs: DataFrame, layout: Layout, avgdls: dict[str, float], cfg: IndexConfig) -> DataFrame:
+    """Stage 1.  ``docs`` must have (doc_id, seg, *layout.columns);
+    ``avgdls`` maps each field to the avgdl its weights are based on."""
+
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _build_segment_pdf(pdf, avgdl, cfg)
+        return _build_segment_pdf(pdf, layout, avgdls, cfg)
 
     return (
-        docs.select("doc_id", "text", "seg")
+        docs.select("doc_id", "seg", *layout.columns)
         .withColumn("_sub", _stage1_sub(cfg))
         .groupBy("seg", "_sub")
         .applyInPandas(fn, POSTINGS_SCHEMA)
@@ -262,7 +340,7 @@ def build_partials(docs: DataFrame, avgdl: float, cfg: IndexConfig) -> DataFrame
 def merge_group_pdf(pdf: pd.DataFrame, out_seg: int | None = None) -> pd.DataFrame:
     """Merge all rows of ONE term (already doc-range-disjoint) into a single
     row by byte concatenation + first-gap splice.  Rows ordered by min_doc."""
-    cols = [c.split(" ")[0] for c in POSTINGS_SCHEMA.split(", ")]
+    cols = POSTINGS_COLS
     if len(pdf) == 0:
         return pd.DataFrame([], columns=cols)
     if len(pdf) == 1:
@@ -396,7 +474,7 @@ def _merge_sorted_runs(pdf: pd.DataFrame, key_cols: list[str], out_seg_from_salt
     unmerged (heavy-term skew protection).  Output row order matches the
     pre-round-6 implementation exactly: all single-row groups first (in
     input order), then the multi-row groups' outputs in group order."""
-    out_cols = [c.split(" ")[0] for c in POSTINGS_SCHEMA.split(", ")]
+    out_cols = POSTINGS_COLS
     if len(pdf) == 0:
         return pd.DataFrame([], columns=out_cols)
     change = _group_change_mask(pdf, key_cols)

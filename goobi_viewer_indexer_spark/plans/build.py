@@ -3,18 +3,37 @@
 declarative Spark job with per-batch lineage manifests and
 checkpoint-resume.
 
+One writer builds both index layouts.  A fielded index maps field names
+to source columns; a flat index is the one-field case whose single field
+is unnamed (``""``).  The naming rule (``operators/spimi.py``: ``Layout``,
+``doclen_col``, ``doclens_col``, next to ``tag_term``) gives, flat vs
+fielded with field ``f``:
+
+    term key             t                      f\\x00t
+    doc_stats column     doclen                 doclen_<f>
+    doclens_packed col   doclens                doclens_<f>
+    meta avgdl keys      avgdl, avgdl_live      avgdl_by_field, avgdl_live_by_field
+                                                (+ avgdl of the first field,
+                                                fields, field_cols)
+
 Layout under ``index_dir``::
 
-    meta.json                scalar stats + config (n_docs, avgdl, nseg, …)
-    doc_stats/               parquet (doc_id, seg, doclen, sha256)
-    partials/batch=<i>/      stage-1 SPIMI segments (kept for resume)
-    partials_manifest/batch=<i>/   per-segment lineage rows
+    meta.json                scalar stats + config (n_docs, avgdl keys, nseg,
+                             stage1_n_batches, stage_sec, …)
+    doc_stats/               parquet (doc_id, doclen per field, sha256, seg)
+    doclens_packed/          parquet (rng, base, doclens per field): int32
+                             doclens per doc range, indexed by doc_id - base
     postings/                parquet partitioned by bucket=pmod(hash(term),B)
     term_stats/              parquet (term, df, cf, bucket)
-    _STAGE1_DONE, _SUCCESS   commit markers (atomic-commit analog of the
+    _SUCCESS                 commit marker (atomic-commit analog of the
                              reference's Solr commit + file moves,
                              helper/SolrSearchIndex.java:538-594 /
                              MetsIndexer.java:176-247)
+
+While the build runs it also keeps stage-1 scratch for resume:
+``partials/batch=<i>/`` (SPIMI segments), ``partials_manifest/batch=<i>/``
+(per-segment lineage rows) and the ``_STAGE1_DONE`` marker.  Nothing
+reads them once ``_SUCCESS`` is written, so the build deletes them then.
 
 Resume contract (north rule): a killed build restarts without recomputing
 finished work and without double-counting df/cf — stage 1 skips segments
@@ -34,9 +53,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goobi_viewer_indexer_spark.config import IndexConfig
-from goobi_viewer_indexer_spark.functions.hashing import sha256_hex
-from goobi_viewer_indexer_spark.functions.tokenize import doclen_nfc
 from goobi_viewer_indexer_spark.operators import spimi
+from goobi_viewer_indexer_spark.operators.spimi import Layout
 
 __all__ = ["build_index", "build_index_fielded", "assign_doc_ids", "assign_sequential_ids"]
 
@@ -136,6 +154,73 @@ def load_meta(index_dir: str) -> dict:
         return json.load(f)
 
 
+def _doc_stats_rows(docs: DataFrame, layout: Layout, docs_per_segment: int) -> DataFrame:
+    """``(doc_id, *source columns)`` → doc_stats rows ``(doc_id, <doclen
+    per field>, sha256, seg)`` in ONE mapInPandas pass: separate pandas
+    UDFs would each ship the text columns through Arrow, multiplying the
+    Python-transfer volume of the build's widest scan.  The NFC tokenizer
+    is the same chain as the stage-1 SPIMI encode, so doclen and
+    tf/block-max can never disagree on decomposed-Unicode input (ADVICE
+    r1); sha256 hashes the fields' raw texts joined with ``"\\x1e"`` (null
+    → ``""``; input_hint's per-row content invariant)."""
+    fields = layout.fields
+    len_cols = layout.doclen_cols
+
+    def gen(batches):
+        import hashlib
+
+        import pandas as pd
+
+        from goobi_viewer_indexer_spark.functions.tokenize import tokenize_series
+
+        for pdf in batches:
+            out = {"doc_id": pdf["doc_id"]}
+            for lc, col in zip(len_cols, fields.values()):
+                out[lc] = tokenize_series(pdf[col]).map(len).astype("int32")
+            texts = [pdf[col].fillna("") for col in fields.values()]
+            content = texts[0] if len(texts) == 1 else texts[0].str.cat(texts[1:], sep="\x1e")
+            out["sha256"] = content.map(lambda s: hashlib.sha256(s.encode("utf-8")).hexdigest())
+            # a null id leaves seg null: the check after stage 0 reports it
+            seg = pdf["doc_id"] // docs_per_segment
+            out["seg"] = seg if seg.hasnans else seg.astype("int32")
+            yield pd.DataFrame(out)
+
+    schema = "doc_id long, " + "".join(f"{lc} int, " for lc in len_cols) + "sha256 string, seg int"
+    return docs.select("doc_id", *layout.columns).mapInPandas(gen, schema)
+
+
+def _pack_doclens(dstats: DataFrame, layout: Layout, span: int) -> DataFrame:
+    """doc_stats rows → ``doclens_packed``: per doc range (``span`` dense
+    ids) one row ``(rng, base, <doclens per field>)``, each a flat int32
+    array indexed by ``doc_id - base``."""
+    len_cols, out_cols = layout.doclen_cols, layout.doclens_cols
+
+    def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        import numpy as np
+        import pandas as pd
+
+        if len(pdf) == 0:  # Spark 4 grouped-map may deliver empty groups
+            empty = {"rng": pd.Series([], dtype="int32"), "base": pd.Series([], dtype="int64")}
+            return pd.DataFrame({**empty, **{oc: pd.Series([], dtype=object) for oc in out_cols}})
+        pdf = pdf.sort_values("doc_id")
+        rng = int(pdf["rng"].iloc[0])
+        base = rng * span
+        ids = pdf["doc_id"].to_numpy(np.int64)
+        row = {"rng": [rng], "base": [base]}
+        for lc, oc in zip(len_cols, out_cols):
+            arr = np.zeros(int(ids[-1]) - base + 1, dtype=np.int32)
+            arr[ids - base] = pdf[lc].to_numpy(np.int32)
+            row[oc] = [arr.tobytes()]
+        return pd.DataFrame(row)
+
+    return (
+        dstats.withColumn("rng", (F.col("doc_id") / span).cast("int"))
+        .select("rng", "doc_id", *len_cols)
+        .groupBy("rng")
+        .applyInPandas(pack, "rng int, base long, " + ", ".join(f"{oc} binary" for oc in out_cols))
+    )
+
+
 def build_index(
     docs: DataFrame,
     index_dir: str,
@@ -145,12 +230,44 @@ def build_index(
     n_batches: int = 1,
     fail_after_batches: int | None = None,
 ) -> dict:
-    """Full SPIMI build.  ``docs`` needs a dense ``id_col`` (use
+    """Full SPIMI build of a flat index — the one-field layout over
+    ``text_col``.  ``docs`` needs a dense ``id_col`` (use
     :func:`assign_doc_ids` first for natural-key tables).
 
     ``fail_after_batches`` injects a crash after that many stage-1 batches
     (test hook for the resume contract).  Returns the meta dict.
     """
+    return _build(docs, index_dir, Layout.flat_text(text_col), cfg, id_col, n_batches, fail_after_batches)
+
+
+def build_index_fielded(
+    docs: DataFrame,
+    index_dir: str,
+    fields: dict[str, str],
+    cfg: IndexConfig = IndexConfig(),
+    id_col: str = "doc_id",
+) -> dict:
+    """Multi-field SPIMI build (the reference's DEFAULT/FULLTEXT/SUPER*
+    independent Lucene fields, model/SolrConstants.java:96-140,217-220).
+
+    ``fields`` maps field name → source column.  The same build as
+    :func:`build_index` with field-tagged term keys, one doclens column per
+    field and per-field avgdl in meta — BM25 is computed with FIELD-local
+    length normalization (BM25F-lite: query-time boosts multiply idf)."""
+    return _build(docs, index_dir, Layout(fields), cfg, id_col)
+
+
+def _build(
+    docs: DataFrame,
+    index_dir: str,
+    layout: Layout,
+    cfg: IndexConfig,
+    id_col: str = "doc_id",
+    n_batches: int = 1,
+    fail_after_batches: int | None = None,
+) -> dict:
+    """The one full build: ``docs`` (``id_col``, *layout.columns) → the
+    index layout of this module's docstring."""
     stage_sec: dict = {}
     t_mark = time.time()
 
@@ -164,69 +281,39 @@ def build_index(
     if os.path.exists(os.path.join(index_dir, "_SUCCESS")):
         return load_meta(index_dir)
 
-    docs = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    docs = docs.select(F.col(id_col).alias("doc_id"), *layout.columns)
 
     # ---- stage 0: doc stats + scalars (Solr field-stats analog) ----
     dstats_path = os.path.join(index_dir, "doc_stats")
     if not os.path.exists(os.path.join(dstats_path, "_SUCCESS")):
-        # ONE mapInPandas pass computes doclen + sha256: two separate
-        # pandas UDFs each ship the text column through Arrow, doubling
-        # the Python-transfer volume of the build's widest scan.  The NFC
-        # tokenizer is the same chain as the stage-1 SPIMI encode, so
-        # doclen and tf/block-max can never disagree on decomposed-Unicode
-        # input (ADVICE r1); sha256 hashes the raw text (input_hint's
-        # per-row content invariant).
-        dps = cfg.docs_per_segment
-
-        def _doc_stats_gen(batches):
-            import hashlib
-
-            import pandas as pd
-
-            from goobi_viewer_indexer_spark.functions.tokenize import tokenize_series
-
-            for pdf in batches:
-                texts = pdf["text"]
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "doclen": tokenize_series(texts).map(len).astype("int32"),
-                        "sha256": texts.fillna("").map(
-                            lambda s: hashlib.sha256(s.encode("utf-8")).hexdigest()
-                        ),
-                        "seg": (pdf["doc_id"] // dps).astype("int32"),
-                    }
-                )
-
-        (
-            docs.select("doc_id", "text")
-            # written with the scan's natural partitioning: a range
-            # exchange here would pull the (pandas-UDF) projection into a
-            # narrow post-shuffle stage — measured as a flat ~50 s
-            # serial bottleneck; consumers shuffle by rng/seg themselves
-            .mapInPandas(_doc_stats_gen, "doc_id long, doclen int, sha256 string, seg int")
-            .write.mode("overwrite")
-            .parquet(dstats_path)
-        )
+        # written with the scan's natural partitioning: a range exchange
+        # here would pull the (pandas-UDF) projection into a narrow
+        # post-shuffle stage — measured as a flat ~50 s serial bottleneck;
+        # consumers shuffle by rng/seg themselves
+        _doc_stats_rows(docs, layout, cfg.docs_per_segment).write.mode("overwrite").parquet(dstats_path)
     mark("stage0_doc_stats")
     dstats = spark.read.parquet(dstats_path)
     g = dstats.agg(
         F.count("*").alias("n"),
-        F.avg("doclen").alias("avgdl"),
         F.max("seg").alias("maxseg"),
         F.sum(F.when(F.col("doc_id").isNull(), 1).otherwise(0)).alias("nulls"),
+        *[F.avg(c).alias(c) for c in layout.doclen_cols],
     ).collect()[0]
     if g["nulls"]:
+        # no stage output survives the error: a re-run with corrected
+        # input into the same directory must not reuse these rows
+        shutil.rmtree(dstats_path)
         raise ValueError(f"{g['nulls']} null doc_ids — id assignment is broken upstream")
-    n_docs, avgdl = int(g["n"]), float(g["avgdl"] or 0.0)
+    n_docs = int(g["n"])
     nseg = int(g["maxseg"]) + 1 if g["maxseg"] is not None else 1
+    avgdls = {f: float(g[c] or 0.0) for f, c in zip(layout.names, layout.doclen_cols)}
 
     meta_prev = (
         load_meta(index_dir) if os.path.exists(os.path.join(index_dir, "meta.json")) else {}
     )
     meta = {
+        **layout.meta_fields(),
         "n_docs": n_docs,
-        "avgdl": avgdl,
         "nseg": nseg,
         "docs_per_segment": cfg.docs_per_segment,
         "merge_fanin": cfg.merge_fanin,
@@ -235,6 +322,7 @@ def build_index(
         "k1": cfg.k1,
         "b": cfg.b,
     }
+    layout.put_avgdls(meta, avgdls)
     _write_meta(index_dir, meta)
 
     # ---- stage 0.5: packed doclens per doc range ----
@@ -256,29 +344,8 @@ def build_index(
     dlp_path = os.path.join(index_dir, "doclens_packed")
 
     def _write_doclens_packed():
-        import numpy as np
-        import pandas as pd
-
-        def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            if len(pdf) == 0:  # Spark 4 grouped-map may deliver empty groups
-                return pd.DataFrame({"rng": [], "base": [], "doclens": []}).astype({"rng": "int32", "base": "int64"})
-            pdf = pdf.sort_values("doc_id")
-            rng = int(pdf["rng"].iloc[0])
-            base = rng * span
-            ids = pdf["doc_id"].to_numpy(np.int64)
-            arr = np.zeros(int(ids[-1]) - base + 1, dtype=np.int32)
-            arr[ids - base] = pdf["doclen"].to_numpy(np.int32)
-            return pd.DataFrame({"rng": [rng], "base": [base], "doclens": [arr.tobytes()]})
-
         t0 = time.time()
-        (
-            dstats.withColumn("rng", (F.col("doc_id") / span).cast("int"))
-            .select("rng", "doc_id", "doclen")
-            .groupBy("rng")
-            .applyInPandas(pack, "rng int, base long, doclens binary")
-            .write.mode("overwrite")
-            .parquet(dlp_path)
-        )
+        _pack_doclens(dstats, layout, span).write.mode("overwrite").parquet(dlp_path)
         stage_sec["stage05_doclens_packed"] = round(time.time() - t0, 2)
 
     pool = ThreadPoolExecutor(max_workers=1)
@@ -319,7 +386,7 @@ def build_index(
                         raise RuntimeError(f"injected failure after {ran} stage-1 batches")
                     lo, hi = bi * segs_per_batch, min((bi + 1) * segs_per_batch, nseg)
                     batch_docs = docs_seg.filter((F.col("seg") >= lo) & (F.col("seg") < hi))
-                    partials = spimi.build_partials(batch_docs, avgdl, cfg)
+                    partials = spimi.build_partials(batch_docs, layout, avgdls, cfg)
                     partials.write.mode("overwrite").parquet(os.path.join(part_root, f"batch={bi}"))
                     # lineage manifest: per-segment row counts + content fingerprint.
                     # Round 6: derived from the stage-0 doc_stats table (sha256 IS
@@ -400,163 +467,14 @@ def build_index(
     _write_meta(index_dir, meta)
     with open(os.path.join(index_dir, "_SUCCESS"), "w") as f:
         f.write("ok")
+    # stage-1 scratch: nothing reads it once the build has committed
+    shutil.rmtree(part_root, ignore_errors=True)
+    shutil.rmtree(man_root, ignore_errors=True)
+    os.remove(stage1_marker)
     return meta
+
 
 
 def destroy_index(index_dir: str) -> None:
     if os.path.exists(index_dir):
         shutil.rmtree(index_dir)
-
-
-def build_index_fielded(
-    docs: DataFrame,
-    index_dir: str,
-    fields: dict[str, str],
-    cfg: IndexConfig = IndexConfig(),
-    id_col: str = "doc_id",
-) -> dict:
-    """Multi-field SPIMI build (the reference's DEFAULT/FULLTEXT/SUPER*
-    independent Lucene fields, model/SolrConstants.java:96-140,217-220).
-
-    ``fields`` maps field name → source column.  Postings/stats share the
-    single-field layout with term keys tagged ``field\\x00term`` (same
-    bucketing, same salted merge, same codec incl. positions); per-field
-    doclens are packed per doc range as one binary column per field and
-    per-field avgdl lives in meta — BM25 is computed with FIELD-local
-    length normalization (BM25F-lite: query-time boosts multiply idf)."""
-    import numpy as np
-    import pandas as pd
-
-    spark = docs.sparkSession
-    os.makedirs(index_dir, exist_ok=True)
-    if os.path.exists(os.path.join(index_dir, "_SUCCESS")):
-        return load_meta(index_dir)
-
-    fnames = list(fields)
-    docs = docs.select(F.col(id_col).alias("doc_id"), *[F.col(c).alias(c) for c in fields.values()])
-
-    # ---- stage 0: per-field doclens + sha256 of the concatenated content ----
-    dstats_path = os.path.join(index_dir, "doc_stats")
-    sha_src = F.concat_ws("\x1e", *[F.coalesce(F.col(c), F.lit("")) for c in fields.values()])
-    if not os.path.exists(os.path.join(dstats_path, "_SUCCESS")):
-        (
-            docs.select(
-                "doc_id",
-                *[doclen_nfc(F.col(col)).alias(f"doclen_{f}") for f, col in fields.items()],
-                sha256_hex(sha_src).alias("sha256"),
-            )
-            .withColumn("seg", (F.col("doc_id") / cfg.docs_per_segment).cast("int"))
-            .write.mode("overwrite")
-            .parquet(dstats_path)
-        )
-    dstats = spark.read.parquet(dstats_path)
-    g = dstats.agg(
-        F.count("*").alias("n"),
-        F.max("seg").alias("maxseg"),
-        *[F.avg(f"doclen_{f}").alias(f"avgdl_{f}") for f in fnames],
-    ).collect()[0]
-    n_docs = int(g["n"])
-    nseg = int(g["maxseg"]) + 1 if g["maxseg"] is not None else 1
-    avgdls = {f: float(g[f"avgdl_{f}"] or 0.0) for f in fnames}
-
-    meta = {
-        "n_docs": n_docs,
-        "nseg": nseg,
-        "fields": fnames,
-        "field_cols": fields,
-        "avgdl_by_field": avgdls,
-        "avgdl": avgdls[fnames[0]],  # layout compat
-        "docs_per_segment": cfg.docs_per_segment,
-        "merge_fanin": cfg.merge_fanin,
-        "block_size": cfg.block_size,
-        "postings_buckets": cfg.postings_buckets,
-        "k1": cfg.k1,
-        "b": cfg.b,
-    }
-    _write_meta(index_dir, meta)
-
-    # ---- stage 0.5: packed per-field doclens per doc range ----
-    span = cfg.docs_per_segment * cfg.merge_fanin
-    dlp_path = os.path.join(index_dir, "doclens_packed")
-    if not os.path.exists(os.path.join(dlp_path, "_SUCCESS")):
-
-        def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            out = {"rng": pd.Series([], dtype="int32"), "base": pd.Series([], dtype="int64")}
-            for f in fnames:
-                out[f"doclens_{f}"] = pd.Series([], dtype=object)
-            if len(pdf) == 0:
-                return pd.DataFrame(out)
-            pdf = pdf.sort_values("doc_id")
-            rng = int(pdf["rng"].iloc[0])
-            base = rng * span
-            ids = pdf["doc_id"].to_numpy(np.int64)
-            row = {"rng": [rng], "base": [base]}
-            for f in fnames:
-                arr = np.zeros(int(ids[-1]) - base + 1, dtype=np.int32)
-                arr[ids - base] = pdf[f"doclen_{f}"].to_numpy(np.int32)
-                row[f"doclens_{f}"] = [arr.tobytes()]
-            return pd.DataFrame(row)
-
-        schema = "rng int, base long, " + ", ".join(f"doclens_{f} binary" for f in fnames)
-
-        def _write_doclens_packed():
-            (
-                dstats.withColumn("rng", (F.col("doc_id") / span).cast("int"))
-                .select("rng", "doc_id", *[f"doclen_{f}" for f in fnames])
-                .groupBy("rng")
-                .applyInPandas(pack, schema)
-                .write.mode("overwrite")
-                .parquet(dlp_path)
-            )
-    else:
-        _write_doclens_packed = None
-
-    # ---- stage 1 + 2: tagged-term SPIMI, same merge/bucket machinery ----
-    # Round 6 overlap (guide §2.6, same shape as build_index): the doclens
-    # pack rides a driver thread beside stage 1, and the term-stats write
-    # beside stage 2 — every write keeps idempotent-overwrite semantics
-    # and in-flight futures are joined before any exception propagates.
-    from concurrent.futures import ThreadPoolExecutor
-    from concurrent.futures import wait as _fwait
-
-    pool = ThreadPoolExecutor(max_workers=1)
-    try:
-        fut = pool.submit(_write_doclens_packed) if _write_doclens_packed is not None else None
-        docs_seg = docs.withColumn("seg", (F.col("doc_id") / cfg.docs_per_segment).cast("int"))
-        part_root = os.path.join(index_dir, "partials")
-        try:
-            if not os.path.exists(os.path.join(part_root, "batch=0", "_SUCCESS")):
-                spimi.build_partials_fielded(docs_seg, avgdls, cfg, fields).write.mode("overwrite").parquet(
-                    os.path.join(part_root, "batch=0")
-                )
-        finally:
-            if fut is not None:
-                _fwait([fut])
-        if fut is not None:
-            fut.result()
-        partials = spark.read.parquet(os.path.join(part_root, "batch=0"))
-
-        def _write_term_stats():
-            (
-                partials.groupBy("term")
-                .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-                .withColumn("bucket", F.pmod(F.hash("term"), F.lit(cfg.postings_buckets)))
-                .repartition(cfg.postings_buckets, "bucket")  # see build_index: bucket-aligned writers
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(os.path.join(index_dir, "term_stats"))
-            )
-
-        fut3 = pool.submit(_write_term_stats)
-        try:
-            merged = spimi.merge_partials(partials, cfg)
-            final = spimi.compact_light_terms_bucketed(merged, cfg)
-            final.write.mode("overwrite").partitionBy("bucket").parquet(os.path.join(index_dir, "postings"))
-        finally:
-            _fwait([fut3])
-        fut3.result()
-    finally:
-        pool.shutdown(wait=True)
-    with open(os.path.join(index_dir, "_SUCCESS"), "w") as f:
-        f.write("ok")
-    return meta

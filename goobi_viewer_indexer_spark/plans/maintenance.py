@@ -46,11 +46,16 @@ from pyspark.sql import functions as F
 
 from goobi_viewer_indexer_spark.config import IndexConfig
 from goobi_viewer_indexer_spark.functions import codec
-from goobi_viewer_indexer_spark.functions.hashing import sha256_hex
-from goobi_viewer_indexer_spark.functions.tokenize import doclen_nfc
 from goobi_viewer_indexer_spark.operators import spimi
+from goobi_viewer_indexer_spark.operators.spimi import Layout
 from goobi_viewer_indexer_spark.plans import txn
-from goobi_viewer_indexer_spark.plans.build import load_meta, _write_meta, assign_sequential_ids
+from goobi_viewer_indexer_spark.plans.build import (
+    _doc_stats_rows,
+    _pack_doclens,
+    _write_meta,
+    assign_sequential_ids,
+    load_meta,
+)
 
 __all__ = [
     "delete_docs",
@@ -112,36 +117,31 @@ def _bucketed_term_stats(rows: DataFrame, nb: int) -> DataFrame:
 
 
 def live_corpus_stats(spark: SparkSession, index_dir: str) -> tuple[int, float]:
-    ds = spark.read.schema("doc_id long, doclen long").parquet(txn.table_path(index_dir, "doc_stats"))
-    tomb = _tombstones(spark, index_dir)
-    if tomb is not None:
-        ds = ds.join(tomb.select("doc_id"), "doc_id", "left_anti")
-    row = ds.agg(F.count("*").alias("n"), F.avg("doclen").alias("avgdl")).collect()[0]
-    return int(row["n"]), float(row["avgdl"] or 0.0)
+    n, avgdls = _live_stats(spark, index_dir, [""])
+    return n, avgdls[""]
 
 
 def live_corpus_stats_fielded(spark: SparkSession, index_dir: str, fields: list[str]) -> tuple[int, dict[str, float]]:
-    schema = "doc_id long, " + ", ".join(f"doclen_{f} long" for f in fields)
-    ds = spark.read.schema(schema).parquet(txn.table_path(index_dir, "doc_stats"))
+    return _live_stats(spark, index_dir, fields)
+
+
+def _live_stats(spark: SparkSession, index_dir: str, fields: list[str]) -> tuple[int, dict[str, float]]:
+    """Live (untombstoned) doc count and avgdl per field (``""``: flat)."""
+    cols = [spimi.doclen_col(f) for f in fields]
+    ds = spark.read.schema("doc_id long, " + ", ".join(f"{c} long" for c in cols)).parquet(
+        txn.table_path(index_dir, "doc_stats"))
     tomb = _tombstones(spark, index_dir)
     if tomb is not None:
         ds = ds.join(tomb.select("doc_id"), "doc_id", "left_anti")
-    row = ds.agg(
-        F.count("*").alias("n"), *[F.avg(f"doclen_{f}").alias(f"avgdl_{f}") for f in fields]
-    ).collect()[0]
-    return int(row["n"]), {f: float(row[f"avgdl_{f}"] or 0.0) for f in fields}
+    row = ds.agg(F.count("*").alias("n"), *[F.avg(c).alias(c) for c in cols]).collect()[0]
+    return int(row["n"]), {f: float(row[c] or 0.0) for f, c in zip(fields, cols)}
 
 
 def _refresh_live_meta(spark: SparkSession, index_dir: str) -> dict:
     meta = load_meta(index_dir)
-    if "fields" in meta:
-        n_live, avgdls_live = live_corpus_stats_fielded(spark, index_dir, meta["fields"])
-        meta["n_docs_live"] = n_live
-        meta["avgdl_live_by_field"] = avgdls_live
-    else:
-        n_live, avgdl_live = live_corpus_stats(spark, index_dir)
-        meta["n_docs_live"] = n_live
-        meta["avgdl_live"] = avgdl_live
+    layout = Layout.of_meta(meta)
+    meta["n_docs_live"], avgdls_live = live_corpus_stats_fielded(spark, index_dir, layout.names)
+    layout.put_avgdls(meta, avgdls_live, live=True)
     _write_meta(index_dir, meta)
     return meta
 
@@ -222,17 +222,7 @@ def _delete_df(spark: SparkSession, index_dir: str, ids_df: DataFrame, trace: bo
         or txn.swap_already_live(ts_path, tag)
         or txn.staging_complete(index_dir, tag, "term_stats")
     ):
-        def pack_ids(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) == 0:
-                return pd.DataFrame({"rng": [], "del_ids": []}).astype({"rng": "int32"})
-            arr = np.sort(pdf["doc_id"].to_numpy(np.int64))
-            return pd.DataFrame({"rng": [int(pdf["rng"].iloc[0])], "del_ids": [arr.tobytes()]})
-
-        del_packed = (
-            ids.withColumn("rng", (F.col("doc_id") / span).cast("int"))
-            .groupBy("rng")
-            .applyInPandas(pack_ids, "rng int, del_ids binary")
-        )
+        del_packed = spimi.pack_range_ids(ids, span, "del_ids")
         postings = spark.read.parquet(txn.table_path(index_dir, "postings"))
         # inner join == affected-range pruning
         rows = postings.withColumn("rng", spimi._rng_col(span)).join(del_packed, "rng")
@@ -347,18 +337,13 @@ def add_docs(
         recover_pending(spark, index_dir, skip_tag=tag)
     txn.recover_dir(ts_path)
 
-    fields: dict[str, str] | None = meta.get("field_cols")
-    fnames = meta.get("fields", [])
+    layout = Layout.of_meta(meta)
 
     # ---- stage 0: pin base, stamp ids, stage the delta corpus ----
     if not txn.staging_complete(index_dir, tag, "docs"):
         cur_max = spark.read.schema("doc_id long").parquet(ds_path).agg(F.max("doc_id")).collect()[0][0]
         intent = txn.txn_intent(index_dir, tag, {"op": "add", "base": (int(cur_max) // span + 1) * span})
-        src = (
-            new_docs.select(*[F.col(c) for c in fields.values()])
-            if fields
-            else new_docs.select(F.col(text_col).alias("text"))
-        )
+        src = new_docs.select(F.col(text_col).alias("text")) if layout.flat else new_docs.select(*layout.columns)
         # barrier_dir: arbitrary caller DataFrames (possibly nondeterministic
         # shuffles upstream) are materialized before the two-pass id scheme
         docs = assign_sequential_ids(
@@ -375,58 +360,20 @@ def add_docs(
     # every staging step derives from the staged (never-moved) docs copy:
     # applied appends MOVE staged files into the live dirs, so a replay
     # cannot re-read an already-applied staging dir
-    if fields:
-        sha_src = F.concat_ws("\x1e", *[F.coalesce(F.col(c), F.lit("")) for c in fields.values()])
-        dstats = docs.select(
-            "doc_id",
-            *[doclen_nfc(F.col(col)).alias(f"doclen_{f}") for f, col in fields.items()],
-            sha256_hex(sha_src).alias("sha256"),
-            "seg",
-        )
-        len_cols = [f"doclen_{f}" for f in fnames]
-        dl_schema = "rng int, base long, " + ", ".join(f"doclens_{f} binary" for f in fnames)
-        dl_out_cols = [f"doclens_{f}" for f in fnames]
-    else:
-        dstats = docs.select(
-            "doc_id",
-            doclen_nfc(F.col("text")).alias("doclen"),
-            sha256_hex(F.col("text")).alias("sha256"),
-            "seg",
-        )
-        len_cols = ["doclen"]
-        dl_schema = "rng int, base long, doclens binary"
-        dl_out_cols = ["doclens"]
     if not (txn.step_applied(index_dir, tag, "doc_stats") or txn.staging_complete(index_dir, tag, "doc_stats")):
-        dstats.write.mode("overwrite").parquet(txn.staged_path(index_dir, tag, "doc_stats"))
+        (
+            _doc_stats_rows(docs, layout, cfg.docs_per_segment)
+            .write.mode("overwrite")
+            .parquet(txn.staged_path(index_dir, tag, "doc_stats"))
+        )
 
     if not (txn.step_applied(index_dir, tag, "doclens_packed") or txn.staging_complete(index_dir, tag, "doclens_packed")):
-
-        def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) == 0:
-                out = {"rng": pd.Series([], dtype="int32"), "base": pd.Series([], dtype="int64")}
-                for oc in dl_out_cols:
-                    out[oc] = pd.Series([], dtype=object)
-                return pd.DataFrame(out)
-            pdf = pdf.sort_values("doc_id")
-            rng = int(pdf["rng"].iloc[0])
-            b0 = rng * span
-            idsv = pdf["doc_id"].to_numpy(np.int64)
-            row = {"rng": [rng], "base": [b0]}
-            for lc, oc in zip(len_cols, dl_out_cols):
-                arr = np.zeros(int(idsv[-1]) - b0 + 1, dtype=np.int32)
-                arr[idsv - b0] = pdf[lc].to_numpy(np.int32)
-                row[oc] = [arr.tobytes()]
-            return pd.DataFrame(row)
-
-        # packed from the STAGED doc_stats rows: no second doclen_nfc pass
+        # packed from the STAGED doc_stats rows: no second tokenize pass
         # over the delta text
+        staged_ds = spark.read.schema("doc_id long, " + ", ".join(f"{c} long" for c in layout.doclen_cols)).parquet(
+            txn.staged_path(index_dir, tag, "doc_stats"))
         (
-            spark.read.schema("doc_id long, " + ", ".join(f"{c} long" for c in len_cols))
-            .parquet(txn.staged_path(index_dir, tag, "doc_stats"))
-            .withColumn("rng", (F.col("doc_id") / span).cast("int"))
-            .select("rng", "doc_id", *len_cols)
-            .groupBy("rng")
-            .applyInPandas(pack, dl_schema)
+            _pack_doclens(staged_ds, layout, span)
             .write.mode("overwrite")
             .parquet(txn.staged_path(index_dir, tag, "doclens_packed"))
         )
@@ -435,11 +382,7 @@ def add_docs(
     # exchange (partials are not staged: only the postings step reads them) ----
     # block_max uses the BUILD avgdl so existing UB semantics stay uniform
     if not (txn.step_applied(index_dir, tag, "postings") or txn.staging_complete(index_dir, tag, "postings")):
-        partials = (
-            spimi.build_partials_fielded(docs, meta["avgdl_by_field"], cfg, fields)
-            if fields
-            else spimi.build_partials(docs, meta["avgdl"], cfg)
-        )
+        partials = spimi.build_partials(docs, layout, layout.avgdls(meta), cfg)
         # ids run densely from a span boundary, so the delta covers
         # ceil(n_new / span) salt groups; one exchange partition per
         # (bucket, salt group) up to the session's shuffle parallelism
@@ -772,6 +715,47 @@ def get_stored(spark: SparkSession, index_dir: str) -> DataFrame | None:
     return spark.read.parquet(p) if os.path.exists(p) else None
 
 
+def _reencode(rows: DataFrame, avgdls: dict[str, float], cfg: IndexConfig) -> DataFrame:
+    """Re-encode postings per doc range.  ``rows`` are postings rows
+    exploded to ``rng`` and joined with that range's ``doclens_packed``
+    row and its packed tombstoned ids ``del_ids`` (null: none); each
+    range's live postings are re-encoded with block maxima on the
+    ``avgdls`` basis of the term's field."""
+    span = cfg.docs_per_segment * cfg.merge_fanin
+    k1, b, bs = cfg.k1, cfg.b, cfg.block_size
+
+    def reencode(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = []
+        for row in pdf.itertuples(index=False):
+            rng = int(row.rng)
+            lo, hi = rng * span, (rng + 1) * span - 1
+            tl = _row_to_termlist(row)
+            d, t, p = tl.decode_range_with_positions(max(lo, int(row.min_doc)), min(hi, int(row.max_doc)))
+            if d.size and row.del_ids is not None:
+                dels = np.frombuffer(row.del_ids, dtype=np.int64)
+                pos = np.minimum(np.searchsorted(dels, d), dels.size - 1)
+                keep = dels[pos] != d
+                p = p[np.repeat(keep, t)]
+                d, t = d[keep], t[keep]
+            if d.size == 0:
+                continue
+            field = spimi.field_of(row.term)
+            lens = np.frombuffer(getattr(row, spimi.doclens_col(field)), dtype=np.int32)[d - int(row.base)]
+            enc = codec.encode_postings(d, t, lens, avgdls[field], k1, b, bs, positions=p)
+            out.append(
+                {
+                    "term": row.term,
+                    "seg": np.int32(rng),
+                    "df": np.int32(d.size),
+                    "cf": np.int64(t.sum()),
+                    **{c: enc[c] for c in spimi.POSTINGS_COLS[4:]},  # min_doc .. block_max_w
+                }
+            )
+        return pd.DataFrame(out) if out else pd.DataFrame([], columns=spimi.POSTINGS_COLS)
+
+    return rows.mapInPandas(lambda it: (reencode(pdf) for pdf in it), spimi.POSTINGS_SCHEMA)
+
+
 def purge_compact(spark: SparkSession, index_dir: str) -> dict:
     """Purge-only compaction: rewrite ONLY tombstone-affected posting rows.
 
@@ -799,20 +783,8 @@ def purge_compact(spark: SparkSession, index_dir: str) -> dict:
     tomb = _tombstones(spark, index_dir)
     if tomb is None:
         return meta
-    fnames: list[str] = meta.get("fields", [])
-
-    def pack_ids(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"rng": [], "del_ids": []}).astype({"rng": "int32"})
-        arr = np.sort(pdf["doc_id"].to_numpy(np.int64))
-        return pd.DataFrame({"rng": [int(pdf["rng"].iloc[0])], "del_ids": [arr.tobytes()]})
-
-    del_packed = (
-        tomb.select("doc_id").distinct()
-        .withColumn("rng", (F.col("doc_id") / span).cast("int"))
-        .groupBy("rng")
-        .applyInPandas(pack_ids, "rng int, del_ids binary")
-    )
+    layout = Layout.of_meta(meta)
+    del_packed = spimi.pack_range_ids(tomb.select("doc_id").distinct(), span, "del_ids")
 
     post_path = txn.table_path(index_dir, "postings")
     postings = spark.read.parquet(post_path)
@@ -830,61 +802,9 @@ def purge_compact(spark: SparkSession, index_dir: str) -> dict:
         .join(dl, "rng")
         .join(del_packed, "rng", "left")
     )
-    k1, b, bs = cfg.k1, cfg.b, cfg.block_size
-    build_avgdl = meta["avgdl"]
-    build_avgdls = meta.get("avgdl_by_field")
-
-    def reencode(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for row in pdf.itertuples(index=False):
-            rng = int(row.rng)
-            lo, hi = rng * span, (rng + 1) * span - 1
-            tl = _row_to_termlist(row)
-            d, t, p = tl.decode_range_with_positions(max(lo, int(row.min_doc)), min(hi, int(row.max_doc)))
-            if d.size == 0:
-                continue
-            if row.del_ids is not None:
-                dels = np.frombuffer(row.del_ids, dtype=np.int64)
-                pos = np.minimum(np.searchsorted(dels, d), dels.size - 1)
-                keep = dels[pos] != d
-                p = p[np.repeat(keep, t)]
-                d, t = d[keep], t[keep]
-            if d.size == 0:
-                continue
-            if fnames:
-                fname = row.term.split(spimi.FIELD_SEP, 1)[0]
-                lens = np.frombuffer(getattr(row, f"doclens_{fname}"), dtype=np.int32)[d - int(row.base)]
-                av = build_avgdls[fname]
-            else:
-                lens = np.frombuffer(row.doclens, dtype=np.int32)[d - int(row.base)]
-                av = build_avgdl
-            enc = codec.encode_postings(d, t, lens, av, k1, b, bs, positions=p)
-            out.append(
-                {
-                    "term": row.term,
-                    "seg": np.int32(rng),
-                    "df": np.int32(d.size),
-                    "cf": np.int64(t.sum()),
-                    "min_doc": enc["min_doc"],
-                    "max_doc": enc["max_doc"],
-                    "doc_bytes": enc["doc_bytes"],
-                    "tf_bytes": enc["tf_bytes"],
-                    "pos_bytes": enc["pos_bytes"],
-                    "block_last_doc": enc["block_last_doc"],
-                    "block_doc_off": enc["block_doc_off"],
-                    "block_tf_off": enc["block_tf_off"],
-                    "block_pos_off": enc["block_pos_off"],
-                    "block_max_w": enc["block_max_w"],
-                }
-            )
-        if not out:
-            return pd.DataFrame([], columns=[c.split(" ")[0] for c in spimi.POSTINGS_SCHEMA.split(", ")])
-        return pd.DataFrame(out)
-
-    cols = [c.split(" ")[0] for c in spimi.POSTINGS_SCHEMA.split(", ")]
-    rewritten = aff_rows.mapInPandas(lambda it: (reencode(pdf) for pdf in it), spimi.POSTINGS_SCHEMA)
+    rewritten = _reencode(aff_rows, layout.avgdls(meta), cfg)
     final = (
-        untouched.select(*cols)
+        untouched.select(*spimi.POSTINGS_COLS)
         .unionByName(rewritten)
         .withColumn("bucket", F.pmod(F.hash("term"), F.lit(cfg.postings_buckets)))
     )
@@ -892,22 +812,17 @@ def purge_compact(spark: SparkSession, index_dir: str) -> dict:
     final.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
     _publish(index_dir, "postings", tmp)
 
-    _rewrite_docstats(spark, index_dir, span, fnames, tomb)
+    _rewrite_docstats(spark, index_dir, span, layout, tomb)
     txn.remove_table(index_dir, "tombstones")  # skips snapshot-pinned gens
     # keep the BUILD avgdl basis; record live values for scoring/ub_scale
-    if fnames:
-        n_live, avgdls_live = live_corpus_stats_fielded(spark, index_dir, fnames)
-        meta["avgdl_live_by_field"] = avgdls_live
-    else:
-        n_live, avgdl_live = live_corpus_stats(spark, index_dir)
-        meta["avgdl_live"] = avgdl_live
-    meta["n_docs"] = n_live
+    meta["n_docs"], avgdls_live = live_corpus_stats_fielded(spark, index_dir, layout.names)
+    layout.put_avgdls(meta, avgdls_live, live=True)
     meta.pop("n_docs_live", None)
     _write_meta(index_dir, meta)
     return meta
 
 
-def _rewrite_docstats(spark: SparkSession, index_dir: str, span: int, fnames: list[str], tomb: DataFrame) -> None:
+def _rewrite_docstats(spark: SparkSession, index_dir: str, span: int, layout: Layout, tomb: DataFrame) -> None:
     """Drop tombstoned rows from doc_stats and re-pack the doclens arrays."""
     ds_path = txn.table_path(index_dir, "doc_stats")
     ds = spark.read.parquet(ds_path)
@@ -916,35 +831,10 @@ def _rewrite_docstats(spark: SparkSession, index_dir: str, span: int, fnames: li
     ds_live.write.mode("overwrite").parquet(tmp3)
     _publish(index_dir, "doc_stats", tmp3)
 
-    len_cols = [f"doclen_{f}" for f in fnames] if fnames else ["doclen"]
-    dl_out_cols = [f"doclens_{f}" for f in fnames] if fnames else ["doclens"]
-    dl_schema = "rng int, base long, " + ", ".join(f"{oc} binary" for oc in dl_out_cols)
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            out = {"rng": pd.Series([], dtype="int32"), "base": pd.Series([], dtype="int64")}
-            for oc in dl_out_cols:
-                out[oc] = pd.Series([], dtype=object)
-            return pd.DataFrame(out)
-        pdf = pdf.sort_values("doc_id")
-        rng = int(pdf["rng"].iloc[0])
-        b0 = rng * span
-        idsv = pdf["doc_id"].to_numpy(np.int64)
-        row = {"rng": [rng], "base": [b0]}
-        for lc, oc in zip(len_cols, dl_out_cols):
-            arr = np.zeros(int(idsv[-1]) - b0 + 1, dtype=np.int32)
-            arr[idsv - b0] = pdf[lc].to_numpy(np.int32)
-            row[oc] = [arr.tobytes()]
-        return pd.DataFrame(row)
-
     dlp = txn.table_path(index_dir, "doclens_packed")
     tmp4 = dlp + ".tmp"
     (
-        spark.read.parquet(txn.table_path(index_dir, "doc_stats"))
-        .withColumn("rng", (F.col("doc_id") / span).cast("int"))
-        .select("rng", "doc_id", *len_cols)
-        .groupBy("rng")
-        .applyInPandas(pack, dl_schema)
+        _pack_doclens(spark.read.parquet(txn.table_path(index_dir, "doc_stats")), layout, span)
         .write.mode("overwrite")
         .parquet(tmp4)
     )
@@ -967,13 +857,8 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
     cfg = _cfg_from_meta(meta)
     span = cfg.docs_per_segment * cfg.merge_fanin
     tomb = _tombstones(spark, index_dir)
-    fnames: list[str] = meta.get("fields", [])
-    if fnames:
-        n_live, avgdls_live = live_corpus_stats_fielded(spark, index_dir, fnames)
-        avgdl_live = None
-    else:
-        n_live, avgdl_live = live_corpus_stats(spark, index_dir)
-        avgdls_live = None
+    layout = Layout.of_meta(meta)
+    n_live, avgdls_live = live_corpus_stats_fielded(spark, index_dir, layout.names)
 
     post_path = txn.table_path(index_dir, "postings")
     postings = spark.read.parquet(post_path)
@@ -984,72 +869,11 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
     # a post-bulk-purge optimize with billions of tombstones must not
     # collect them to the driver
     if tomb is not None:
-        def pack_ids(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) == 0:
-                return pd.DataFrame({"rng": [], "del_ids": []}).astype({"rng": "int32"})
-            arr = np.sort(pdf["doc_id"].to_numpy(np.int64))
-            return pd.DataFrame({"rng": [int(pdf["rng"].iloc[0])], "del_ids": [arr.tobytes()]})
-
-        del_packed = (
-            tomb.select("doc_id").distinct()
-            .withColumn("rng", (F.col("doc_id") / span).cast("int"))
-            .groupBy("rng")
-            .applyInPandas(pack_ids, "rng int, del_ids binary")
-        )
-        rows = rows.join(del_packed, "rng", "left")
+        rows = rows.join(spimi.pack_range_ids(tomb.select("doc_id").distinct(), span, "del_ids"), "rng", "left")
     else:
         rows = rows.withColumn("del_ids", F.lit(None).cast("binary"))
 
-    k1, b, bs = cfg.k1, cfg.b, cfg.block_size
-
-    def reencode(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for row in pdf.itertuples(index=False):
-            rng = int(row.rng)
-            lo, hi = rng * span, (rng + 1) * span - 1
-            tl = _row_to_termlist(row)
-            d, t, p = tl.decode_range_with_positions(max(lo, int(row.min_doc)), min(hi, int(row.max_doc)))
-            if d.size == 0:
-                continue
-            if row.del_ids is not None:
-                dels = np.frombuffer(row.del_ids, dtype=np.int64)
-                pos = np.minimum(np.searchsorted(dels, d), dels.size - 1)
-                keep = dels[pos] != d
-                p = p[np.repeat(keep, t)]
-                d, t = d[keep], t[keep]
-            if d.size == 0:
-                continue
-            if fnames:  # field-tagged term: use ITS field's doclens/avgdl
-                fname = row.term.split(spimi.FIELD_SEP, 1)[0]
-                lens = np.frombuffer(getattr(row, f"doclens_{fname}"), dtype=np.int32)[d - int(row.base)]
-                av = avgdls_live[fname]
-            else:
-                lens = np.frombuffer(row.doclens, dtype=np.int32)[d - int(row.base)]
-                av = avgdl_live
-            enc = codec.encode_postings(d, t, lens, av, k1, b, bs, positions=p)
-            out.append(
-                {
-                    "term": row.term,
-                    "seg": np.int32(rng),
-                    "df": np.int32(d.size),
-                    "cf": np.int64(t.sum()),
-                    "min_doc": enc["min_doc"],
-                    "max_doc": enc["max_doc"],
-                    "doc_bytes": enc["doc_bytes"],
-                    "tf_bytes": enc["tf_bytes"],
-                    "pos_bytes": enc["pos_bytes"],
-                    "block_last_doc": enc["block_last_doc"],
-                    "block_doc_off": enc["block_doc_off"],
-                    "block_tf_off": enc["block_tf_off"],
-                    "block_pos_off": enc["block_pos_off"],
-                    "block_max_w": enc["block_max_w"],
-                }
-            )
-        if not out:
-            return pd.DataFrame([], columns=[c.split(" ")[0] for c in spimi.POSTINGS_SCHEMA.split(", ")])
-        return pd.DataFrame(out)
-
-    merged = rows.mapInPandas(lambda it: (reencode(pdf) for pdf in it), spimi.POSTINGS_SCHEMA)
+    merged = _reencode(rows, avgdls_live, cfg)
     # the build's bucketed pass: light-term stitch in the write exchange
     final = spimi.compact_light_terms_bucketed(merged, cfg)
     tmp = post_path + ".tmp"
@@ -1069,56 +893,12 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
     _publish(index_dir, "term_stats", tmp2)
 
     # doc_stats: physically drop tombstoned rows; doclens re-packed
-    ds_path = txn.table_path(index_dir, "doc_stats")
-    ds = spark.read.parquet(ds_path)
     if tomb is not None:
-        ds_live = ds.join(tomb.select("doc_id"), "doc_id", "left_anti")
-        tmp3 = ds_path + ".tmp"
-        ds_live.write.mode("overwrite").parquet(tmp3)
-        _publish(index_dir, "doc_stats", tmp3)
-
-        len_cols = [f"doclen_{f}" for f in fnames] if fnames else ["doclen"]
-        dl_out_cols = [f"doclens_{f}" for f in fnames] if fnames else ["doclens"]
-        dl_schema = "rng int, base long, " + ", ".join(f"{oc} binary" for oc in dl_out_cols)
-
-        def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) == 0:
-                out = {"rng": pd.Series([], dtype="int32"), "base": pd.Series([], dtype="int64")}
-                for oc in dl_out_cols:
-                    out[oc] = pd.Series([], dtype=object)
-                return pd.DataFrame(out)
-            pdf = pdf.sort_values("doc_id")
-            rng = int(pdf["rng"].iloc[0])
-            b0 = rng * span
-            idsv = pdf["doc_id"].to_numpy(np.int64)
-            row = {"rng": [rng], "base": [b0]}
-            for lc, oc in zip(len_cols, dl_out_cols):
-                arr = np.zeros(int(idsv[-1]) - b0 + 1, dtype=np.int32)
-                arr[idsv - b0] = pdf[lc].to_numpy(np.int32)
-                row[oc] = [arr.tobytes()]
-            return pd.DataFrame(row)
-
-        dlp = txn.table_path(index_dir, "doclens_packed")
-        tmp4 = dlp + ".tmp"
-        (
-            spark.read.parquet(txn.table_path(index_dir, "doc_stats"))
-            .withColumn("rng", (F.col("doc_id") / span).cast("int"))
-            .select("rng", "doc_id", *len_cols)
-            .groupBy("rng")
-            .applyInPandas(pack, dl_schema)
-            .write.mode("overwrite")
-            .parquet(tmp4)
-        )
-        _publish(index_dir, "doclens_packed", tmp4)
+        _rewrite_docstats(spark, index_dir, span, layout, tomb)
         txn.remove_table(index_dir, "tombstones")  # skips snapshot-pinned gens
 
-    if fnames:
-        meta["avgdl_by_field"] = avgdls_live
-        meta["avgdl"] = avgdls_live[fnames[0]]
-        meta.pop("avgdl_live_by_field", None)
-    else:
-        meta["avgdl"] = avgdl_live
-        meta.pop("avgdl_live", None)
+    layout.put_avgdls(meta, avgdls_live)
+    meta.pop(layout.avgdl_key(live=True), None)
     meta["n_docs"] = n_live
     meta.pop("n_docs_live", None)
     _write_meta(index_dir, meta)

@@ -40,3 +40,44 @@ def read_index_table(spark, index_dir: str, name: str):
     from goobi_viewer_indexer_spark.plans import txn
 
     return spark.read.parquet(txn.table_path(index_dir, name))
+
+
+INDEX_TABLES = ("postings", "term_stats", "doc_stats", "doclens_packed")
+
+
+def _plain(v):
+    if isinstance(v, (bytes, bytearray, memoryview)):
+        return bytes(v)
+    if isinstance(v, (list, tuple)):
+        return tuple(_plain(x) for x in v)
+    return v
+
+
+def canon_index(spark, index_dir: str, field: str | None = None) -> dict:
+    """Every row and column of the index tables, as ``{table: (columns,
+    sorted rows)}`` — the one comparison form of the index-identity tests.
+
+    ``field``: read a one-field index in the flat layout's names (its term
+    tag stripped, its ``doclen``/``doclens`` column suffix dropped; ``""``
+    reads a flat index as is) and leave out the term-hash ``bucket``
+    partition column, which hashes the tagged key."""
+    from goobi_viewer_indexer_spark.operators import spimi
+
+    rename, prefix = {}, ""
+    if field:
+        rename = {spimi.doclen_col(field): spimi.doclen_col(""), spimi.doclens_col(field): spimi.doclens_col("")}
+        prefix = spimi.tag_term(field, "")
+    out = {}
+    for name in INDEX_TABLES:
+        df = read_index_table(spark, index_dir, name)
+        cols = sorted((c for c in df.columns if field is None or c != "bucket"), key=lambda c: rename.get(c, c))
+        rows = []
+        for r in df.select(*cols).collect():
+            vals = [_plain(r[c]) for c in cols]
+            if prefix and "term" in cols:
+                i = cols.index("term")
+                assert vals[i].startswith(prefix), vals[i]
+                vals[i] = vals[i][len(prefix):]
+            rows.append(tuple(vals))
+        out[name] = ([rename.get(c, c) for c in cols], sorted(rows, key=repr))
+    return out

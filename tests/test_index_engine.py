@@ -11,7 +11,7 @@ from goobi_viewer_indexer_spark.config import IndexConfig
 from goobi_viewer_indexer_spark.operators.naive_bm25 import bm25_topk
 from goobi_viewer_indexer_spark.operators.search import InvertedIndex
 from goobi_viewer_indexer_spark.plans import build as build_mod
-from tests.conftest import SF01
+from tests.conftest import SF01, canon_index
 
 CFG = IndexConfig(docs_per_segment=64, merge_fanin=2, block_size=32, postings_buckets=16, compact_below_bytes=512)
 
@@ -87,27 +87,28 @@ def test_doc_stats_sha256_invariant(spark, index):
 
 
 def test_resume_is_byte_identical(spark, tmp_path):
-    """Kill stage 1 mid-build; resumed build's postings == uninterrupted."""
+    """Kill stage 1 mid-build; the resumed build's tables == uninterrupted,
+    every row and column, on both layouts (the fielded one through the
+    shared build body and its fail-injection hook); the stage-1 scratch
+    is kept across the failure and dropped once the build commits."""
+    import os
+
+    from goobi_viewer_indexer_spark.operators.spimi import Layout
+
     docs = spark.read.parquet(f"{SF01}/documents.parquet")
-    d_full = str(tmp_path / "full")
-    d_resume = str(tmp_path / "resumed")
-    build_mod.build_index(docs, d_full, CFG, n_batches=4)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        build_mod.build_index(docs, d_resume, CFG, n_batches=4, fail_after_batches=2)
-    # resume: same call, no failure injection
-    build_mod.build_index(docs, d_resume, CFG, n_batches=4)
-
-    def canon(path):
-        df = spark.read.parquet(f"{path}/postings")
-        rows = df.select("term", "seg", "df", "cf", "min_doc", "max_doc", "doc_bytes", "tf_bytes").collect()
-        return sorted((r["term"], r["seg"], r["df"], r["cf"], r["min_doc"], r["max_doc"],
-                       bytes(r["doc_bytes"]), bytes(r["tf_bytes"])) for r in rows)
-
-    assert canon(d_full) == canon(d_resume)
-    # df/cf not double-counted after resume
-    a = spark.read.parquet(f"{d_full}/term_stats").selectExpr("sum(df)", "sum(cf)").collect()[0]
-    b = spark.read.parquet(f"{d_resume}/term_stats").selectExpr("sum(df)", "sum(cf)").collect()[0]
-    assert tuple(a) == tuple(b)
+    layouts = {"flat": Layout.flat_text(), "fielded": Layout({"text": "text", "lang": "lang"})}
+    for name, layout in layouts.items():
+        d_full = str(tmp_path / f"{name}_full")
+        d_resume = str(tmp_path / f"{name}_resumed")
+        build_mod._build(docs, d_full, layout, CFG, n_batches=4)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            build_mod._build(docs, d_resume, layout, CFG, n_batches=4, fail_after_batches=2)
+        assert sorted(os.listdir(f"{d_resume}/partials_manifest")) == ["batch=0", "batch=1"]
+        # resume: same call, no failure injection
+        build_mod._build(docs, d_resume, layout, CFG, n_batches=4)
+        assert canon_index(spark, d_full) == canon_index(spark, d_resume), name
+        for scratch in ("partials", "partials_manifest", "_STAGE1_DONE"):
+            assert not os.path.exists(f"{d_resume}/{scratch}"), (name, scratch)
 
 
 def test_postings_decode_matches_corpus(index, docs_df):
@@ -159,7 +160,7 @@ def test_salted_merge_splits_stopword_rows(spark):
         spark.createDataFrame(rows, "doc_id long, text string")
         .withColumn("seg", (F.col("doc_id") / cfg.docs_per_segment).cast("int"))
     )
-    partials = spimi.build_partials(docs, avgdl=3.0, cfg=cfg)
+    partials = spimi.build_partials(docs, spimi.Layout.flat_text(), {"": 3.0}, cfg)
     nseg = 8
     assert partials.filter(F.col("term") == "the").count() == nseg
     merged = spimi.merge_partials(partials, cfg).cache()
