@@ -3,6 +3,14 @@ Solr query the reference issues (SURVEY.md §2-B Q1-Q9).
 
 Two engines over the same kernels (operators/wand.py):
 
+Every search of both engines, local and distributed, is ONE plan form,
+:class:`_Plan` — the reference's conjunction of OR-groups of terms and
+phrases with prohibited clauses.  The query front ends (flat and/or/mm,
+phrase, boolean; fielded clause strings) emit it; one presence rule
+(:func:`_resolve`) settles it against term_stats on the driver and against
+the TermLists of a doc range or a local searcher; one dispatcher
+(:func:`_execute`) makes the kernel call.
+
 * :meth:`InvertedIndex.search` — distributed: every distributed query of
   both engines reaches its per-range kernel through ONE runner,
   :meth:`_SnapshotReader._run_ranges`.  Postings rows for the query terms
@@ -28,6 +36,7 @@ oracle: same tokenizer, idf, tie-break (score desc, doc_id asc).
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import NamedTuple
 
 import numpy as np
@@ -39,8 +48,9 @@ from goobi_viewer_indexer_spark.functions.tokenize import tokenize_py
 from goobi_viewer_indexer_spark.operators import wand
 from goobi_viewer_indexer_spark.operators.spimi import (
     FIELD_SEP,
+    Layout,
     _rng_col,
-    doclens_col,
+    field_of,
     merge_group_pdf,
     pack_range_ids,
     tag_term,
@@ -1056,33 +1066,122 @@ def _empty_pdf(schema: str) -> pd.DataFrame:
 
 
 def _bm25f_attach(L: wand.TermList, dl_by_field, avgdls, ub_scales) -> wand.TermList:
-    """Attach the per-field context the BM25F kernels read off a fielded
-    list (its term is field-tagged): the field's doclens, live avgdl and
-    upper-bound scale.  Shared by the distributed and local fielded paths."""
-    f = L.term.split(FIELD_SEP, 1)[0]
+    """Attach the BM25 context the kernels read off every list: its field's
+    doclens, live avgdl and upper-bound scale (a flat key's field is the
+    unnamed ``""``).  Shared by the distributed and local paths."""
+    f = field_of(L.term)
     L.dl_fn, L.avgdl_f, L.ub_scale_f = dl_by_field[f], avgdls[f], ub_scales[f]
     return L
 
 
-def _qid_topk(local_topk: DataFrame, ks: dict[str, int], results: dict) -> dict:
-    """The batch reduce of both engines' ``search_many``: per-qid top-``k``
-    (score desc, doc_id asc) through one bounded window, collected into
-    ``results`` (every qid of ``ks`` present, possibly empty)."""
-    from pyspark.sql.window import Window
+class _Plan(NamedTuple):
+    """THE query plan every front end emits — the reference's one Solr
+    query shape, a conjunction of OR-groups of terms and phrases with
+    prohibited clauses (helper/SolrSearchIndex.java:918-921).  Keys are
+    index term keys (``t`` flat, ``f\\x00t`` fielded).
 
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    kmap = F.create_map(*[F.lit(x) for qid, k in ks.items() for x in (qid, k)])
-    final = (
-        local_topk.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= kmap[F.col("qid")])
-        .select("qid", "doc_id", F.round("score", 6).alias("score"), "_rk")
-        .collect()
-    )
-    for qid in ks:
-        results[qid] = []
-    for r in sorted(final, key=lambda r: (r["qid"], r["_rk"])):
-        results[r["qid"]].append((r["doc_id"], r["score"]))
-    return results
+    * ``weights``: positive key → idf multiplier (query and field boosts;
+      0 = a range term, which filters and never scores);
+    * ``mode``: how the positive groups combine, and so which kernel runs —
+      ``or`` / ``and`` (one single-key group per key, wand.score_topk),
+      ``phrase`` (required groups with positional verify,
+      wand.score_mixed), ``boolean`` / ``boolean_or`` (required / optional
+      OR-groups, wand.score_boolean);
+    * ``groups`` / ``negs``: the positive and the prohibited clause groups
+      of ``(key, offsets)``; a group with offsets is a phrase, and a
+      :class:`wand.PhraseGroup` carries its slop;
+    * ``mm``: the OR modes' minimum-should-match — distinct terms for
+      ``or``, distinct groups for ``boolean_or``."""
+
+    weights: dict
+    mode: str
+    groups: list
+    negs: list = []
+    mm: int = 1
+
+
+def _with_mm(plan: _Plan | None, min_match: int | str) -> _Plan | None:
+    """``plan`` with the OR modes' ``min_match`` resolved against its
+    optional-clause count (:func:`parse_mm`); the AND modes ignore it, like
+    Solr (every clause is required there anyway)."""
+    if plan is None or plan.mode not in ("or", "boolean_or") or min_match == 1:
+        return plan
+    n = len(plan.groups)
+    return plan._replace(mm=parse_mm(min_match, n) if isinstance(min_match, str) else min_match)
+
+
+def _keys_of(plan: _Plan) -> list[str]:
+    """Every key a plan reads, positive and prohibited, in clause order."""
+    return list(dict.fromkeys(t for g in plan.groups + plan.negs for t, _ in g))
+
+
+def _resolve(plan: _Plan, have) -> _Plan | None:
+    """THE presence rule, on the driver (``have`` = the term_stats lookup),
+    in every doc range and in both local searchers (``have`` = their
+    TermLists): ``plan`` with each key replaced by ``have(key)``, or None
+    when it provably matches nothing.  A group lives while it keeps a key,
+    a phrase only while it keeps every key.  A dead required group (AND
+    modes) voids the plan; a dead optional (OR modes) or prohibited group
+    is dropped (a prohibited phrase missing a term excludes nothing); fewer
+    live groups than ``mm`` void the plan."""
+
+    def live(g):
+        ent = wand.regroup(g, [(x, offs) for t, offs in g if (x := have(t)) is not None])
+        return ent if ent and (len(ent) == len(g) or not any(offs for _, offs in g)) else None
+
+    required = plan.mode not in ("or", "boolean_or")
+    groups = []
+    for g in plan.groups:
+        ent = live(g)
+        if ent is None:
+            if required:
+                return None
+            continue
+        groups.append(ent)
+    if len(groups) < max(plan.mm, 1):
+        return None
+    return plan._replace(groups=groups, negs=[e for g in plan.negs if (e := live(g)) is not None])
+
+
+def _views(plan: _Plan, lists_of):
+    """The ``have`` of :func:`_resolve` over one range's or local
+    searcher's lists: ``lists_of(key)`` → its TermList (raw idf) or None,
+    seen under the plan's weight.  One view per key, so a key in two groups
+    is one object and scores once (the kernels dedup lists by ``id``)."""
+    memo: dict[str, wand.TermList | None] = {}
+
+    def have(t):
+        if t not in memo:
+            L, w = lists_of(t), plan.weights.get(t, 1.0)
+            memo[t] = L if L is None or w == 1.0 else replace(L, idf=L.idf * w, _cache=L._cache)
+        return memo[t]
+
+    return have
+
+
+def _execute(plan: _Plan, k1: float, b: float, k: int | None, lo: int, hi: int,
+             deleted: np.ndarray | None, after=None, match: bool = False):
+    """THE kernel call of a resolved plan over docs [lo, hi]: the top-``k``
+    ``(docs, round6 scores)`` (cursor ``after``: or / and modes), or with
+    ``match`` the sorted member ids, unscored.  Kernels are looked up on
+    the module at each call, so a tracer patching ``wand.<name>`` sees
+    every call; a lone phrase runs through wand.score_phrase."""
+    bool_mode = "or" if plan.mode == "boolean_or" else "and"
+    if plan.mode in ("or", "and"):
+        lists = [g[0][0] for g in plan.groups]
+        if match:
+            return wand.match_docs(lists, plan.mode, lo, hi, deleted=deleted)
+        return wand.score_topk(lists, k1, b, k, plan.mode, lo, hi, deleted=deleted, after=after,
+                               min_match=plan.mm)
+    if match:
+        return wand.match_docs_boolean(plan.groups, plan.negs, lo, hi, deleted=deleted, mode=bool_mode)
+    if plan.mode == "phrase":
+        if len(plan.groups) == 1:
+            g = plan.groups[0]
+            return wand.score_phrase(g, k1, b, k, lo, hi, deleted=deleted, slop=g.slop)
+        return wand.score_mixed(plan.groups, k1, b, k, lo, hi, deleted=deleted)
+    return wand.score_boolean(plan.groups, plan.negs, k1, b, k, lo, hi, deleted=deleted,
+                              mode=bool_mode, min_match=plan.mm)
 
 
 class _SnapshotReader:
@@ -1093,12 +1192,12 @@ class _SnapshotReader:
     :meth:`is_stale` / re-opening pick up later commits.
 
     The snapshot-reader core shared by :class:`InvertedIndex` and
-    :class:`FieldedIndex`.  What differs between the engines is carried as
-    class attributes: ``_fielded`` (one packed ``doclens_<f>`` column per
-    field instead of the single ``doclens``, and field-tagged dictionary
-    terms — :meth:`_term_space`), ``_spell_key`` (the spell cache-key
-    prefix) and ``_n_live_attr`` (the public attribute holding the live
-    doc count)."""
+    :class:`FieldedIndex`: a flat index is the one unnamed field ``""`` of
+    its layout (:class:`spimi.Layout`).  What differs between the engines
+    is carried as class attributes: ``_fielded`` (one packed
+    ``doclens_<f>`` column per field instead of the single ``doclens``, and
+    field-tagged dictionary terms — :meth:`_term_space`) and ``_spell_key``
+    (the spell cache-key prefix)."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         from goobi_viewer_indexer_spark.plans import txn as _txn
@@ -1107,9 +1206,18 @@ class _SnapshotReader:
         self.dir = index_dir
         self.meta = load_meta(index_dir)
         self.rev = _txn.current_rev(index_dir)
-        if self._fielded and "fields" not in self.meta:
-            raise ValueError(f"{index_dir} is not a fielded index")
-        self._dl_cols = [doclens_col(f) for f in (self.meta["fields"] if self._fielded else [""])]
+        layout = Layout.of_meta(self.meta)
+        if layout.flat == self._fielded:
+            raise ValueError(f"{index_dir} is not a {'fielded' if self._fielded else 'flat'} index")
+        self._fields, self._dl_cols = layout.names, layout.doclens_cols
+        # live-corpus scoring stats (diverge from the build's only after
+        # incremental maintenance, plans/maintenance.py); stored block
+        # maxima were computed with the build avgdl, so a field whose live
+        # avgdl grew inflates them to stay upper bounds
+        self._n_live = self.meta.get("n_docs_live", self.meta["n_docs"])
+        build = layout.avgdls(self.meta)
+        self._avgdls = layout.avgdls(self.meta, live=True)
+        self._ub_scales = {f: max(1.0, a / build[f]) if build[f] else 1.0 for f, a in self._avgdls.items()}
         self.span = self.meta["docs_per_segment"] * self.meta["merge_fanin"]
         self._postings = spark.read.parquet(_txn.table_path(index_dir, "postings"))
         self._term_stats = spark.read.parquet(_txn.table_path(index_dir, "term_stats"))
@@ -1235,6 +1343,102 @@ class _SnapshotReader:
             return _empty_pdf(schema) if out is None else out
 
         return rows.groupBy("rng").applyInPandas(run, schema)
+
+    def _run_plans(self, plans: dict, after=None, match: bool = False):
+        """THE distributed executor of both engines.  ``plans``: qid →
+        ``(plan, k)``, ``k`` None for every match (per-range k = the range
+        width).  Each plan resolves against term_stats, and dead plans drop
+        out; the live plans' postings go through :meth:`_run_ranges`, where
+        per range every plan resolves against the range's lists and runs
+        through :func:`_execute` (``match``: member ids, unscored).
+        Returns ``(frame, live)``: the per-range rows ``(doc_id[, score])``
+        — with a leading ``qid`` column unless the only qid is None — and
+        the live ``{qid: (plan, k)}``; ``frame`` is None when none lives."""
+        stats = self.term_stats_for(sorted({t for plan, _ in plans.values() for t in _keys_of(plan)}))
+        live = {}
+        for qid, (plan, k) in plans.items():
+            r = _resolve(plan, lambda t: t if t in stats else None)
+            if r is not None:
+                live[qid] = (r, k)
+        if not live:
+            return None, live
+        batch = None not in live
+        needed = sorted({t for plan, _ in live.values() for t in _keys_of(plan)})
+        with_pos = any(offs for plan, _ in live.values() for g in plan.groups + plan.negs for _, offs in g)
+        schema = ("qid string, " if batch else "") + ("doc_id long" if match else "doc_id long, score double")
+        dfs = {t: stats[t][0] for t in needed}
+        idfs = {t: wand.idf(self._n_live, df) for t, df in dfs.items()}
+        fields, avgdls, ub_scales = self._fields, self._avgdls, self._ub_scales
+        k1, b = self.meta["k1"], self.meta["b"]
+
+        def body(pdf, lo, hi, doclens, deleted):
+            dl_by_field = None if doclens is None else dict(zip(fields, doclens))
+            by_key = {}
+            for row in pdf.to_dict("records"):
+                L = _mk_termlist(row, idfs[row["term"]], dfs[row["term"]])
+                by_key[L.term] = L if dl_by_field is None else _bm25f_attach(L, dl_by_field, avgdls, ub_scales)
+            frames = []
+            for qid, (plan, k) in live.items():
+                r = _resolve(plan, _views(plan, by_key.get))
+                if r is None:
+                    continue
+                out = _execute(r, k1, b, hi - lo + 1 if k is None else k, lo, hi, deleted, after, match)
+                f = pd.DataFrame({"doc_id": out} if match else {"doc_id": out[0], "score": out[1]})
+                if len(f):
+                    if batch:
+                        f.insert(0, "qid", qid)
+                    frames.append(f)
+            return pd.concat(frames, ignore_index=True) if frames else None
+
+        return self._run_ranges(needed, schema, body, with_positions=with_pos, doclens=not match), live
+
+    def _plan_frame(self, plan: _Plan | None, k: int | None = None, after=None,
+                    match: bool = False) -> DataFrame:
+        """One plan through :meth:`_run_plans`: with ``k`` the global top-k
+        ``(doc_id, round6 score)`` through ONE orderBy+limit
+        (TakeOrderedAndProject); without, the per-range rows — every match
+        with its score (the total-recall scorer behind grouping, sorts,
+        filters and boosts), or with ``match`` the member ids.  The typed
+        empty frame when the plan provably matches nothing."""
+        out = None if plan is None else self._run_plans({None: (plan, k)}, after, match)[0]
+        if out is None:
+            return _empty_df(self.spark, "doc_id long" if match else "doc_id long, score double")
+        if k is None or match:
+            return out
+        return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).select(
+            "doc_id", F.round("score", 6).alias("score"))
+
+    def _many(self, plans: dict, results: dict) -> dict:
+        """The shared tail of both engines' ``search_many``: qid → (plan or
+        None, k), ONE job for the batch, then per-qid top-``k`` (score desc,
+        doc_id asc) through one bounded window, collected into ``results``
+        (every qid present; a plan that matches nothing answers ``[]``)."""
+        from pyspark.sql.window import Window
+
+        frame, live = self._run_plans({q: pk for q, pk in plans.items() if pk[0] is not None})
+        results.update({q: [] for q in plans})
+        if frame is None:
+            return results
+        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
+        kmap = F.create_map(*[F.lit(x) for qid, (_, k) in live.items() for x in (qid, k)])
+        final = (
+            frame.withColumn("_rk", F.row_number().over(w))
+            .filter(F.col("_rk") <= kmap[F.col("qid")])
+            .select("qid", "doc_id", F.round("score", 6).alias("score"), "_rk")
+            .collect()
+        )
+        for r in sorted(final, key=lambda r: (r["qid"], r["_rk"])):
+            results[r["qid"]].append((r["doc_id"], r["score"]))
+        return results
+
+    def _explainer(self) -> "_LocalReader":
+        """The memoized local searcher behind ``explain``: a one-doc
+        breakdown is a driver-side point lookup by design (Solr's explain
+        also runs against the single shard holding the doc), and the
+        searcher refreshes itself when maintenance commits."""
+        if getattr(self, "_explain_local", None) is None:
+            self._explain_local = self.open_local()
+        return self._explain_local
 
     def _buckets_of(self, terms: list[str]) -> list[int]:
         # driver-side Murmur3 identical to Spark's hash(): bucket routing
@@ -1716,17 +1920,36 @@ class InvertedIndex(_SnapshotReader):
 
     _fielded = False
     _spell_key = ""
-    _n_live_attr = "n_live"
 
     def __init__(self, spark: SparkSession, index_dir: str):
         super().__init__(spark, index_dir)
-        # live-corpus scoring params (diverge from build values only after
-        # incremental deletes; see plans/maintenance.py)
-        self.n_live = self.meta.get("n_docs_live", self.meta["n_docs"])
-        self.avgdl_live = self.meta.get("avgdl_live", self.meta["avgdl"])
-        # stored block maxima were computed with the build avgdl; if live
-        # avgdl grew they must be inflated to stay upper bounds
-        self.ub_scale = max(1.0, self.avgdl_live / self.meta["avgdl"]) if self.meta["avgdl"] else 1.0
+        self.n_live = self._n_live  # live doc count (diverges from n_docs after deletes)
+
+    def _plan(self, query, mode: str, min_match: int | str = 1, slop: int = 0) -> _Plan | None:
+        """The flat front end: query text or terms → :class:`_Plan` over
+        bare-term keys.  ``mode`` or / and: the distinct terms
+        (``min_match`` = the OR mode's mm); phrase: the tokens in order,
+        duplicates allowed, ordered-window ``slop``; boolean:
+        :func:`parse_boolean_query` syntax or a parsed (groups, negs) pair,
+        wildcard and range tokens expanded from the dictionary
+        (:func:`expand_boolean_wildcards`; range terms at weight 0).  None
+        when a required group expands to nothing."""
+        if mode == "boolean":
+            groups, negs = parse_boolean_query(query) if isinstance(query, str) else query
+            expanded = expand_boolean_wildcards(groups, negs, self.expand_prefix, self.expand_range)
+            if expanded is None:
+                return None
+            groups, negs, const = expanded
+            return _Plan({t: 0.0 if t in const else 1.0 for g in groups for t in g}, "boolean",
+                         [[(t, []) for t in g] for g in groups], [[(t, []) for t in g] for g in negs])
+        if mode == "phrase":
+            ordered = list(query) if isinstance(query, list) else tokenize_py(query)
+            g = wand.regroup([], [(t, [i for i, x in enumerate(ordered) if x == t]) for t in dict.fromkeys(ordered)])
+            g.slop = slop
+            return _Plan(dict.fromkeys(ordered, 1.0), "phrase", [g])
+        terms = sorted(set(query if isinstance(query, list) else tokenize_py(query)))
+        plan = _Plan(dict.fromkeys(terms, 1.0), "and" if mode == "and" else "or", [[(t, [])] for t in terms])
+        return _with_mm(plan, min_match)
 
     # -- distributed search ------------------------------------------------
     def search(
@@ -1951,43 +2174,7 @@ class InvertedIndex(_SnapshotReader):
                 .limit(k)
                 .select("doc_id", F.round("score", 6).alias("score"))
             )
-        terms = sorted(set(query if isinstance(query, list) else tokenize_py(query)))
-        meta = self.meta
-        n_docs, avgdl, k1, b = self.n_live, self.avgdl_live, meta["k1"], meta["b"]
-        ub_scale = self.ub_scale
-
-        stats = self.term_stats_for(terms)
-        present = [t for t in terms if t in stats]
-        empty = _empty_df(self.spark, "doc_id long, score double")
-        # mm is an OR-mode concept (wand.score_topk ignores it for AND —
-        # every term is required there anyway); gating the guard on mode
-        # keeps the engine, the naive twin and the SQL oracle identical
-        # for mode='and' with a large min_match (ADVICE r4)
-        if not present or (mode == "and" and len(present) < len(terms)) \
-                or (mode != "and" and len(present) < min_match):
-            return empty
-        idfs = {t: wand.idf(n_docs, stats[t][0]) for t in present}
-        n_terms = len(present)
-
-        def score_range(pdf, lo, hi, doclens, deleted):
-            lists = [
-                _mk_termlist(row, idfs[row["term"]], stats[row["term"]][0])
-                for row in pdf.to_dict("records")
-            ]
-            if mode == "and" and len(lists) < n_terms:
-                return None
-            docs, scores = wand.score_topk(
-                lists, doclens[0], avgdl, k1, b, k, mode, lo, hi,
-                deleted=deleted, ub_scale=ub_scale, after=after, min_match=min_match,
-            )
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-
-        local_topk = self._run_ranges(present, "doc_id long, score double", score_range)
-        return (
-            local_topk.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .select("doc_id", F.round("score", 6).alias("score"))
-        )
+        return self._plan_frame(self._plan(query, mode, min_match), k, after=after)
 
     def _apply_pf(self, scored, query, pf: float, ps: int) -> DataFrame:
         """edismax ``pf``/``ps``: scale the score by (1+pf) on docs that
@@ -2030,11 +2217,10 @@ class InvertedIndex(_SnapshotReader):
         ids = self.match_ids(query, mode=mode)
         return ids if fq is None else ids.join(self.fq_ids(fq), "doc_id", "left_semi")
 
-    def fq_ids(self, fq: str | list) -> DataFrame:
-        """The combined match set of Solr filter queries (``fq``):
-        a boolean-syntax string or a list of them (each filter's ids
-        intersect — Solr ANDs its fq params), or a list of plain terms
-        (one AND filter).  Membership only — never scored."""
+    def _fq_list(self, fq: str | list) -> list:
+        """Solr ``fq`` params → the filters they AND: a boolean-syntax
+        string or a list of them, or a list of plain terms (one AND
+        filter)."""
         if isinstance(fq, str):
             filters: list = [fq]
         elif isinstance(fq, list) and fq and all(isinstance(f, str) for f in fq) \
@@ -2042,12 +2228,19 @@ class InvertedIndex(_SnapshotReader):
             filters = [fq]  # plain term list = one AND filter
         else:
             filters = list(fq)
+        if not filters:
+            raise ValueError("empty fq")
+        return filters
+
+    def fq_ids(self, fq: str | list) -> DataFrame:
+        """The combined match set of Solr filter queries (``fq``):
+        a boolean-syntax string or a list of them (each filter's ids
+        intersect — Solr ANDs its fq params), or a list of plain terms
+        (one AND filter).  Membership only — never scored."""
         out = None
-        for f in filters:
+        for f in self._fq_list(fq):
             ids = self.match_ids_boolean(f) if isinstance(f, str) else self.match_ids(f, mode="and")
             out = ids if out is None else out.join(ids, "doc_id", "left_semi")
-        if out is None:
-            raise ValueError("empty fq")
         return out.select("doc_id")
 
     def match_ids(self, query: str | list[str], mode: str = "and") -> DataFrame:
@@ -2055,21 +2248,7 @@ class InvertedIndex(_SnapshotReader):
         the scan behind delete-by-query (SolrSearchIndex.deleteByQuery).
         Distributed: each doc range emits its matches; result is a one-column
         DataFrame, never collected here."""
-        terms = sorted(set(query if isinstance(query, list) else tokenize_py(query)))
-        stats = self.term_stats_for(terms)
-        present = [t for t in terms if t in stats]
-        if not present or (mode == "and" and len(present) < len(terms)):
-            return _empty_df(self.spark, "doc_id long")
-        n_terms = len(present)
-        dfs = {t: stats[t][0] for t in present}
-
-        def match_range(pdf, lo, hi, _doclens, deleted):
-            lists = [_mk_termlist(row, 0.0, dfs[row["term"]]) for row in pdf.to_dict("records")]
-            if mode == "and" and len(lists) < n_terms:
-                return None
-            return pd.DataFrame({"doc_id": wand.match_docs(lists, mode, lo, hi, deleted=deleted)})
-
-        return self._run_ranges(present, "doc_id long", match_range, doclens=False)
+        return self._plan_frame(self._plan(query, mode), match=True)
 
     # -- term dictionary: field-less forms of _SnapshotReader's family (a flat
     # index is the one unnamed field of the term space) ----------------------
@@ -2182,35 +2361,7 @@ class InvertedIndex(_SnapshotReader):
         so block-max pruning never truncates.  ``min_match``: OR-mode
         minimum-should-match, same contract as :meth:`search` (string
         specs = full Solr mm grammar, :func:`parse_mm`)."""
-        min_match = _mm_int(query, min_match)
-        terms = sorted(set(query if isinstance(query, list) else tokenize_py(query)))
-        meta = self.meta
-        n_docs, avgdl, k1, b = self.n_live, self.avgdl_live, meta["k1"], meta["b"]
-        ub_scale = self.ub_scale
-        stats = self.term_stats_for(terms)
-        present = [t for t in terms if t in stats]
-        # mm gates OR mode only — same rule as search() (ADVICE r4)
-        if not present or (mode == "and" and len(present) < len(terms)) \
-                or (mode != "and" and len(present) < min_match):
-            return _empty_df(self.spark, "doc_id long, score double")
-        idfs = {t: wand.idf(n_docs, stats[t][0]) for t in present}
-        n_terms = len(present)
-
-        def score_range(pdf, lo, hi, doclens, deleted):
-            lists = [
-                _mk_termlist(row, idfs[row["term"]], stats[row["term"]][0])
-                for row in pdf.to_dict("records")
-            ]
-            if mode == "and" and len(lists) < n_terms:
-                return None
-            docs, scores = wand.score_topk(
-                lists, doclens[0], avgdl, k1, b,
-                hi - lo + 1, mode, lo, hi, deleted=deleted, ub_scale=ub_scale,
-                min_match=min_match,
-            )
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-
-        return self._run_ranges(present, "doc_id long, score double", score_range)
+        return self._plan_frame(self._plan(query, mode, min_match))
 
     def search_grouped(
         self,
@@ -2260,28 +2411,6 @@ class InvertedIndex(_SnapshotReader):
                              group_sort, group_offset, include_ngroups)
 
     # -- boolean (NOT + AND-of-OR-groups) -----------------------------------
-    def _boolean_parts(self, query) -> tuple[list[list[str]], list[list[str]], dict, set[str]] | None:
-        """Parse + presence-filter a boolean query.  None = provably empty
-        (an AND-required group has no indexed term).  The fourth element is
-        the CONSTANT-SCORE term set (range-expanded terms in no scoring
-        clause — they filter membership with idf 0, round 5)."""
-        groups, negs = parse_boolean_query(query) if isinstance(query, str) else query
-        expanded = expand_boolean_wildcards(groups, negs, self.expand_prefix, self.expand_range)
-        if expanded is None:
-            return None
-        groups, negs, const_terms = expanded
-        all_terms = sorted({t for g in groups for t in g} | {t for ng in negs for t in ng})
-        stats = self.term_stats_for(all_terms)
-        pos_groups: list[list[str]] = []
-        for g in groups:
-            present = [t for t in g if t in stats]
-            if not present:
-                return None
-            pos_groups.append(present)
-        neg_groups = [[t for t in ng if t in stats] for ng in negs]
-        neg_groups = [ng for ng in neg_groups if ng]
-        return pos_groups, neg_groups, stats, const_terms
-
     def search_boolean(self, query: str | tuple, k: int = 10) -> DataFrame:
         """Top-k BM25 over a boolean query with prohibited clauses and
         OR-groups: ``'(table join) spark -window'`` = (table OR join) AND
@@ -2290,71 +2419,12 @@ class InvertedIndex(_SnapshotReader):
         helper/SolrSearchIndex.java:918-921).  Scoring = bag BM25 over the
         positive terms present in each match; negative clauses only filter."""
         k = min(k, self.n_live)  # see search(): unclamped limit(k) OOMs
-        parts = self._boolean_parts(query)
-        empty = _empty_df(self.spark, "doc_id long, score double")
-        if parts is None:
-            return empty
-        pos_groups, neg_groups, stats, const_terms = parts
-        meta = self.meta
-        n_docs, avgdl, k1, b = self.n_live, self.avgdl_live, meta["k1"], meta["b"]
-        # const_terms (range expansions) filter membership but never score
-        idfs = {
-            t: (0.0 if t in const_terms else wand.idf(n_docs, stats[t][0]))
-            for g in pos_groups for t in g
-        }
-        needed = sorted({t for g in pos_groups for t in g} | {t for ng in neg_groups for t in ng})
-
-        def score_range(pdf, lo, hi, doclens, deleted):
-            by_term = {
-                row["term"]: _mk_termlist(row, idfs.get(row["term"], 0.0), stats[row["term"]][0])
-                for row in pdf.to_dict("records")
-            }
-            groups_tl = []
-            for g in pos_groups:
-                lists = [(by_term[t], []) for t in g if t in by_term]
-                if not lists:
-                    return None  # AND-required group absent in this range
-                groups_tl.append(lists)
-            negs_tl = [
-                [(by_term[t], []) for t in ng if t in by_term] for ng in neg_groups
-            ]
-            negs_tl = [ng for ng in negs_tl if ng]
-            docs, scores = wand.score_boolean(
-                groups_tl, negs_tl, doclens[0], avgdl, k1, b, k, lo, hi,
-                deleted=deleted,
-            )
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-
-        local_topk = self._run_ranges(needed, "doc_id long, score double", score_range)
-        return (
-            local_topk.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .select("doc_id", F.round("score", 6).alias("score"))
-        )
+        return self._plan_frame(self._plan(query, "boolean"), k)
 
     def match_ids_boolean(self, query: str | tuple) -> DataFrame:
         """ALL doc_ids matching a boolean query (no scoring) — the
         NOT-capable delete-by-query scan."""
-        parts = self._boolean_parts(query)
-        empty = _empty_df(self.spark, "doc_id long")
-        if parts is None:
-            return empty
-        pos_groups, neg_groups, stats, _const = parts
-        dfs = {t: stats[t][0] for g in pos_groups + neg_groups for t in g}
-
-        def match_range(pdf, lo, hi, _doclens, deleted):
-            by_term = {row["term"]: _mk_termlist(row, 0.0, dfs[row["term"]]) for row in pdf.to_dict("records")}
-            groups_tl = []
-            for g in pos_groups:
-                lists = [(by_term[t], []) for t in g if t in by_term]
-                if not lists:
-                    return None
-                groups_tl.append(lists)
-            negs_tl = [[(by_term[t], []) for t in ng if t in by_term] for ng in neg_groups]
-            negs_tl = [ng for ng in negs_tl if ng]
-            return pd.DataFrame({"doc_id": wand.match_docs_boolean(groups_tl, negs_tl, lo, hi, deleted=deleted)})
-
-        return self._run_ranges(sorted(dfs), "doc_id long", match_range, doclens=False)
+        return self._plan_frame(self._plan(query, "boolean"), match=True)
 
     def facet_query(
         self,
@@ -2391,14 +2461,7 @@ class InvertedIndex(_SnapshotReader):
         out-of-order matches never qualify (wand._sloppy_keep documents
         the deviation from Lucene's transposition-tolerant scorer)."""
         k = min(k, self.n_live)  # see search(): unclamped limit(k) OOMs
-        local_topk = self._phrase_scored(query, k, slop)
-        if local_topk is None:
-            return _empty_df(self.spark, "doc_id long, score double")
-        return (
-            local_topk.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .select("doc_id", F.round("score", 6).alias("score"))
-        )
+        return self._plan_frame(self._plan(query, "phrase", slop=slop), k)
 
     def match_ids_phrase(self, query: str | list[str], slop: int = 0) -> DataFrame:
         """ALL doc_ids whose text contains the (sloppy) phrase — the
@@ -2406,47 +2469,9 @@ class InvertedIndex(_SnapshotReader):
         EVERY match (per-range k = range size, the ``return_all``
         pattern), and there is NO global top-k reduce — unlike
         :meth:`search_phrase` whose TakeOrderedAndProject would allocate a
-        match-count-capacity heap if asked for everything."""
-        rows = self._phrase_scored(query, None, slop)
-        if rows is None:
-            return _empty_df(self.spark, "doc_id long")
-        return rows.select("doc_id")
-
-    def _phrase_scored(self, query, k: int | None, slop: int) -> DataFrame | None:
-        """Shared phrase plumbing: per-range (doc_id, score) rows from the
-        positional kernel.  ``k=None`` = emit every match in each range
-        (membership mode); otherwise per-range local top-k.  None = a
-        query term is unindexed (the phrase provably matches nothing)."""
-        ordered = list(query) if isinstance(query, list) else tokenize_py(query)
-        meta = self.meta
-        n_docs, avgdl, k1, b = self.n_live, self.avgdl_live, meta["k1"], meta["b"]
-        if not ordered:
-            return None
-        distinct = list(dict.fromkeys(ordered))
-        stats = self.term_stats_for(distinct)
-        if any(t not in stats for t in distinct):
-            return None  # a missing term can never form the phrase
-        idfs = {t: wand.idf(n_docs, stats[t][0]) for t in distinct}
-        offsets = {t: [i for i, x in enumerate(ordered) if x == t] for t in distinct}
-        n_distinct = len(distinct)
-        return_all = k is None
-
-        def score_range(pdf, lo, hi, doclens, deleted):
-            by_term = {
-                row["term"]: _mk_termlist(row, idfs[row["term"]], stats[row["term"]][0])
-                for row in pdf.to_dict("records")
-            }
-            if len(by_term) < n_distinct:
-                return None  # phrase needs every term in this range
-            term_offsets = [(by_term[t], offsets[t]) for t in distinct]
-            kk = (hi - lo + 1) if return_all else k
-            docs, scores = wand.score_phrase(
-                term_offsets, doclens[0], avgdl, k1, b, kk, lo, hi,
-                deleted=deleted, slop=slop,
-            )
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-
-        return self._run_ranges(distinct, "doc_id long, score double", score_range, with_positions=True)
+        match-count-capacity heap if asked for everything (the rows are the
+        total-recall phrase scorer's, projected)."""
+        return self._plan_frame(self._plan(query, "phrase", slop=slop)).select("doc_id")
 
     def search_many(self, queries: dict[str, tuple[list[str] | str, str, int]]) -> dict[str, list[tuple[int, float]]]:
         """Batch execution: one distributed job answers every query.
@@ -2461,156 +2486,21 @@ class InvertedIndex(_SnapshotReader):
         allowed); the positional column is projected for the whole batch
         scan only when at least one phrase query is live.  Results are
         identical to per-query :meth:`search` / :meth:`search_boolean` /
-        :meth:`search_phrase` (tested)."""
-        meta = self.meta
-        n_docs, avgdl, k1, b = self.n_live, self.avgdl_live, meta["k1"], meta["b"]
-        ub_scale = self.ub_scale
-
-        parsed: dict[str, tuple[list[str], str, int]] = {}
-        # qid → (groups, negs, const-score terms, k)
-        parsed_bool: dict[str, tuple[list, list, set, int]] = {}
-        # qid → (distinct ordered terms, per-term offsets, k)
-        parsed_phrase: dict[str, tuple[list[str], dict[str, list[int]], int]] = {}
+        :meth:`search_phrase` (tested).  ``(q, mode, k, fq)`` entries (or /
+        and modes) run as their own :meth:`search`: the filter semi-join
+        composes BEFORE the top-k reduce; the rest of the batch still
+        amortizes in one job."""
         results: dict[str, list] = {}
+        plans = {}
         for qid, spec in queries.items():
+            q, mode, k = spec[:3]
             if len(spec) == 4:
-                # (q, mode, k, fq): the filter semi-join composes BEFORE
-                # the top-k reduce, so fq entries fall back to per-query
-                # search() (same pattern as the fielded dv fallback); the
-                # rest of the batch still amortizes in one job
-                q, mode, k, qfq = spec
                 if mode not in ("or", "and"):
                     raise ValueError("search_many fq entries support or/and modes only")
-                results[qid] = [
-                    (r["doc_id"], r["score"])
-                    for r in self.search(q, k=k, mode=mode, fq=qfq).collect()
-                ]
-                continue
-            q, mode, k = spec
-            if mode == "boolean":
-                parts = self._boolean_parts(q)
-                if parts is None:
-                    results[qid] = []
-                else:
-                    parsed_bool[qid] = (parts[0], parts[1], parts[3], k)
-                continue
-            if mode == "phrase":
-                ordered = list(q) if isinstance(q, list) else tokenize_py(q)
-                if not ordered:
-                    results[qid] = []
-                    continue
-                distinct = list(dict.fromkeys(ordered))
-                offs = {t: [i for i, x in enumerate(ordered) if x == t] for t in distinct}
-                parsed_phrase[qid] = (distinct, offs, k)
-                continue
-            terms = sorted(set(q if isinstance(q, list) else tokenize_py(q)))
-            parsed[qid] = (terms, mode, k)
-        all_terms = sorted(
-            {t for terms, _, _ in parsed.values() for t in terms}
-            | {t for g, n, _c, _ in parsed_bool.values() for grp in g + n for t in grp}
-            | {t for d, _, _ in parsed_phrase.values() for t in d}
-        )
-        if not all_terms:
-            results.update({qid: [] for qid in parsed})
-            results.update({qid: [] for qid in parsed_phrase})
-            return results
-        stats = self.term_stats_for(all_terms)
-        idfs = {t: wand.idf(n_docs, stats[t][0]) for t in stats}
-
-        # queries that can't match at all (AND with a missing term)
-        live: dict[str, tuple[list[str], str, int]] = {}
-        for qid, (terms, mode, k) in parsed.items():
-            present = [t for t in terms if t in stats]
-            if not present or (mode == "and" and len(present) < len(terms)):
-                results[qid] = []
+                results[qid] = [(r["doc_id"], r["score"]) for r in self.search(q, k=k, mode=mode, fq=spec[3]).collect()]
             else:
-                live[qid] = (present, mode, k)
-        live_phrase: dict[str, tuple[list[str], dict[str, list[int]], int]] = {}
-        for qid, (distinct, offs, k) in parsed_phrase.items():
-            if all(t in stats for t in distinct):
-                live_phrase[qid] = (distinct, offs, k)
-            else:
-                results[qid] = []  # a phrase with an unindexed term never matches
-        # _boolean_parts already presence-filtered against term_stats
-        live_bool = parsed_bool
-        if not live and not live_bool and not live_phrase:
-            return results
-
-        needed = sorted(
-            {t for terms, _, _ in live.values() for t in terms}
-            | {t for g, n, _c, _ in live_bool.values() for grp in g + n for t in grp}
-            | {t for d, _, _ in live_phrase.values() for t in d}
-        )
-
-        def score_range(pdf, lo, hi, doclens, deleted):
-            by_term = {}
-            for row in pdf.to_dict("records"):
-                by_term[row["term"]] = _mk_termlist(row, idfs[row["term"]], stats[row["term"]][0])
-            dlk = doclens[0]
-            out_q, out_d, out_s = [], [], []
-            for qid, (terms, mode, k) in live.items():
-                lists = [by_term[t] for t in terms if t in by_term]
-                if not lists or (mode == "and" and len(lists) < len(terms)):
-                    continue
-                docs, scores = wand.score_topk(
-                    lists, dlk, avgdl, k1, b, k, mode, lo, hi,
-                    deleted=deleted, ub_scale=ub_scale,
-                )
-                out_q.extend([qid] * docs.size)
-                out_d.extend(docs.tolist())
-                out_s.extend(scores.tolist())
-            for qid, (distinct, offs, k) in live_phrase.items():
-                if any(t not in by_term for t in distinct):
-                    continue  # a phrase term absent in this range → no match here
-                term_offsets = [(by_term[t], offs[t]) for t in distinct]
-                docs, scores = wand.score_phrase(
-                    term_offsets, dlk, avgdl, k1, b, k, lo, hi, deleted=deleted
-                )
-                out_q.extend([qid] * docs.size)
-                out_d.extend(docs.tolist())
-                out_s.extend(scores.tolist())
-            for qid, (groups, negs, const, k) in live_bool.items():
-                # per-query constant-score view: a range-expanded term gets
-                # idf 0 for THIS query only (it may score in another batch
-                # query — the shared by_term object keeps its real idf)
-                if const:
-                    from dataclasses import replace as _replace
-
-                    view = {
-                        t: (_replace(by_term[t], idf=0.0, _cache=by_term[t]._cache)
-                            if t in const else by_term[t])
-                        for g in groups for t in g if t in by_term
-                    }
-                else:
-                    view = by_term
-                groups_tl, dead = [], False
-                for g in groups:
-                    ent = [(view[t], []) for t in g if t in view]
-                    if not ent:
-                        dead = True
-                        break
-                    groups_tl.append(ent)
-                if dead:
-                    continue
-                negs_tl = [
-                    ent for g in negs if (ent := [(by_term[t], []) for t in g if t in by_term])
-                ]
-                docs, scores = wand.score_boolean(
-                    groups_tl, negs_tl, dlk, avgdl, k1, b, k, lo, hi, deleted=deleted
-                )
-                out_q.extend([qid] * docs.size)
-                out_d.extend(docs.tolist())
-                out_s.extend(scores.tolist())
-            return pd.DataFrame({"qid": out_q, "doc_id": out_d, "score": out_s}).astype(
-                {"qid": str, "doc_id": np.int64, "score": np.float64}
-            )
-
-        local_topk = self._run_ranges(needed, "qid string, doc_id long, score double", score_range,
-                                      with_positions=bool(live_phrase))
-        ks = {qid: k for qid, (_, _, k) in live.items()}
-        ks.update({qid: k for qid, (_, _, _, k) in live_bool.items()})
-        ks.update({qid: k for qid, (_, _, k) in live_phrase.items()})
-        return _qid_topk(local_topk, ks, results)
+                plans[qid] = (self._plan(q, mode), k)
+        return self._many(plans, results)
 
     def open_local(self) -> "LocalSearcher":
         return LocalSearcher(self)
@@ -2618,14 +2508,9 @@ class InvertedIndex(_SnapshotReader):
     def explain(self, query: str | list[str], doc_id: int, mode: str = "or") -> dict:
         """Solr ``debugQuery`` analog — per-term BM25 breakdown of one
         doc's score (see :meth:`LocalSearcher.explain` for the schema and
-        the bit-identity contract with :meth:`search` scores).  A one-doc
-        breakdown is a driver-side point lookup by design (Solr's explain
-        also runs against the single shard holding the doc); the memoized
-        LocalSearcher refreshes itself when maintenance commits."""
-        local = getattr(self, "_explain_local", None)
-        if local is None:
-            local = self._explain_local = LocalSearcher(self)
-        return local.explain(query, doc_id, mode)
+        the bit-identity contract with :meth:`search` scores), through the
+        memoized local searcher (:meth:`_explainer`)."""
+        return self._explainer().explain(query, doc_id, mode)
 
 
 class _LocalReader:
@@ -2664,12 +2549,14 @@ class _LocalReader:
                 a = np.frombuffer(lens[i], dtype=np.int32)
                 arr[base: base + a.size] = a
             self._dls[c] = wand.DenseDoclens(0, arr)
+        self._dl_by_field = {f: self._dls[c] for f, c in zip(index._fields, index._dl_cols)}
+        self._n = max(d.lens.size for d in self._dls.values())
         self.deleted = np.zeros(0, np.int64)
         if tomb_parts:
             self.deleted = np.sort(np.concatenate([np.frombuffer(b, dtype=np.int64) for b in tomb_parts]))
         self._cache: dict[str, list] = {}
-        # term → stitched TermList memo: score_boolean dedups scoring lists
-        # by id(), so a term in two groups must resolve to the SAME object
+        # key → stitched TermList memo: the kernels dedup scoring lists by
+        # id(), so a key in two groups must resolve to the SAME object
         self._merged_memo: dict[str, wand.TermList | None] = {}
 
     def _rows_for(self, terms: list[str]) -> None:
@@ -2680,7 +2567,7 @@ class _LocalReader:
         rows = self.index.postings_for(missing, with_positions=True).collect()
         for t in missing:
             self._cache[t] = []
-        n_docs = getattr(self.index, self.index._n_live_attr)
+        n_docs = self.index._n_live
         for r in rows:
             t = r["term"]
             if t not in stats:
@@ -2693,43 +2580,77 @@ class _LocalReader:
             self._cache[t].sort(key=lambda x: x[1])
 
     def _merged_list(self, t: str) -> wand.TermList | None:
-        """One virtual TermList per term: multi-row (heavy) terms are
-        stitched via the same byte-splice merge used at build time.
-        Memoized — repeated lookups return the identical object."""
+        """One virtual TermList per key, carrying its field's BM25 context
+        (:func:`_bm25f_attach`): multi-row (heavy) terms are stitched via
+        the same byte-splice merge used at build time.  Memoized — repeated
+        lookups return the identical object."""
         if t in self._merged_memo:
             return self._merged_memo[t]
         rows = self._cache.get(t, [])
-        if not rows:
-            self._merged_memo[t] = None
-            return None
-        if len(rows) == 1:
-            self._merged_memo[t] = rows[0][0]
-            return rows[0][0]
-        pdf = pd.DataFrame(
-            [
-                {
-                    "term": t,
-                    "seg": 0,
-                    "df": L.df,
-                    "cf": 0,
-                    "min_doc": md,
-                    "max_doc": int(L.block_last_doc[-1]),
-                    "doc_bytes": L.doc_bytes,
-                    "tf_bytes": L.tf_bytes,
-                    "pos_bytes": L.pos_bytes,
-                    "block_last_doc": L.block_last_doc,
-                    "block_doc_off": L.block_doc_off,
-                    "block_tf_off": L.block_tf_off,
-                    "block_pos_off": L.block_pos_off,
-                    "block_max_w": L.block_max_w,
-                }
-                for (L, md) in rows
-            ]
-        )
-        merged = merge_group_pdf(pdf).iloc[0]
-        L = _mk_termlist(merged, rows[0][0].idf, int(pdf["df"].sum()))
+        L = rows[0][0] if len(rows) == 1 else None
+        if len(rows) > 1:
+            pdf = pd.DataFrame(
+                [
+                    {
+                        "term": t,
+                        "seg": 0,
+                        "df": L.df,
+                        "cf": 0,
+                        "min_doc": md,
+                        "max_doc": int(L.block_last_doc[-1]),
+                        "doc_bytes": L.doc_bytes,
+                        "tf_bytes": L.tf_bytes,
+                        "pos_bytes": L.pos_bytes,
+                        "block_last_doc": L.block_last_doc,
+                        "block_doc_off": L.block_doc_off,
+                        "block_tf_off": L.block_tf_off,
+                        "block_pos_off": L.block_pos_off,
+                        "block_max_w": L.block_max_w,
+                    }
+                    for (L, md) in rows
+                ]
+            )
+            L = _mk_termlist(merge_group_pdf(pdf).iloc[0], rows[0][0].idf, int(pdf["df"].sum()))
+        if L is not None:
+            _bm25f_attach(L, self._dl_by_field, self.index._avgdls, self.index._ub_scales)
         self._merged_memo[t] = L
         return L
+
+    def _run(self, plan: _Plan | None, k: int | None = None, after=None, keep: np.ndarray | None = None):
+        """One plan over the whole loaded doc space through
+        :func:`_execute`: the top-``k`` ``(doc_id, round6 score)`` pairs,
+        or with ``k`` None the sorted member ids.  ``keep``: mask of the
+        docs the filters admit; its complement joins the tombstones in the
+        kernels' deleted filter, so pruning stays exact (θ only tracks
+        admitted docs) and the answer equals the distributed semi-join."""
+        r = None
+        if plan is not None:
+            self._rows_for(_keys_of(plan))
+            r = _resolve(plan, _views(plan, self._merged_list))
+        if r is None:
+            return np.zeros(0, np.int64) if k is None else []
+        deleted = self.deleted
+        if keep is not None:
+            excl = np.flatnonzero(~keep).astype(np.int64)
+            deleted = np.union1d(deleted, excl) if deleted.size else excl
+        out = _execute(r, self.meta["k1"], self.meta["b"], k, 0, self._n - 1,
+                       deleted if deleted.size else None, after, match=k is None)
+        return out if k is None else [(int(d), wand.round6f(s)) for d, s in zip(*out)]
+
+    def _fq_keep(self, fq) -> np.ndarray:
+        """Mask of the docs Solr filter queries admit (Solr ANDs its fq
+        params): each filter's matches (:meth:`_filter_keep`), intersected —
+        the driver-side twin of the engine's ``fq_ids``."""
+        keep = np.ones(self._n, dtype=bool)
+        for f in self.index._fq_list(fq):
+            keep &= self._filter_keep(f)
+        return keep
+
+    def _members(self, plan: _Plan | None) -> np.ndarray:
+        """Mask of the live docs ``plan`` matches."""
+        m = np.zeros(self._n, dtype=bool)
+        m[self._run(plan)] = True
+        return m
 
 
 class LocalSearcher(_LocalReader):
@@ -2738,122 +2659,33 @@ class LocalSearcher(_LocalReader):
 
     def _load(self, index: InvertedIndex) -> None:
         super()._load(index)
-        self._dl = self._dls[doclens_col("")]
-        self.doclens = self._dl.lens
+        self.doclens = self._dl_by_field[""].lens
 
-    def _fq_members(self, fq) -> np.ndarray:
-        """Sorted member ids of the combined filter set — driver-side twin
-        of :meth:`InvertedIndex.fq_ids` (same normalization: a boolean
-        filter string or a list of them intersected; a plain term list =
-        one AND filter).  Matching runs the local boolean kernel."""
-        if isinstance(fq, str):
-            filters: list = [fq]
-        elif isinstance(fq, list) and fq and all(isinstance(f, str) for f in fq) \
-                and not any(any(ch in f for ch in ' -*:["(') for f in fq):
-            filters = [fq]  # plain term list = one AND filter
-        else:
-            filters = list(fq)
-        if not filters:
-            raise ValueError("empty fq")
-        out: np.ndarray | None = None
-        hi = self.doclens.size - 1
-        for f in filters:
-            parsed = parse_boolean_query(f) if isinstance(f, str) else ([[t] for t in sorted(set(f))], [])
-            expanded = expand_boolean_wildcards(parsed[0], parsed[1], self.index.expand_prefix,
-                                                self.index.expand_range)
-            if expanded is None:
-                ids = np.zeros(0, np.int64)
-            else:
-                groups, negs, _const = expanded
-                self._rows_for(sorted({t for g in groups + negs for t in g}))
-                groups_tl, negs_tl, dead = [], [], False
-                for g in groups:
-                    lists = [(L, []) for t in g if (L := self._merged_list(t)) is not None]
-                    if not lists:
-                        dead = True
-                        break
-                    groups_tl.append(lists)
-                if dead:
-                    ids = np.zeros(0, np.int64)
-                else:
-                    for ng in negs:
-                        lists = [(L, []) for t in ng if (L := self._merged_list(t)) is not None]
-                        if lists:
-                            negs_tl.append(lists)
-                    ids = wand.match_docs_boolean(
-                        groups_tl, negs_tl, 0, hi,
-                        deleted=self.deleted if self.deleted.size else None,
-                    )
-            out = ids if out is None else np.intersect1d(out, ids, assume_unique=True)
-            if out.size == 0:
-                break
-        return out
+    def _filter_keep(self, f) -> np.ndarray:
+        """Matches of one filter: a boolean-syntax string, or a plain term
+        list (an AND filter)."""
+        return self._members(self.index._plan(f, "boolean" if isinstance(f, str) else "and"))
 
     def search(self, query: str | list[str], k: int = 10, mode: str = "or",
                after: tuple[float, int] | None = None,
                min_match: int | str = 1, fq: str | list | None = None) -> list[tuple[int, float]]:
         self._ensure_fresh()
-        min_match = _mm_int(query, min_match)
         if fq is not None and mode == "phrase":
             raise ValueError("fq= with mode='phrase' is not supported on the flat engine — use FieldedIndex")
         if mode == "phrase":
             if after is not None:
                 raise ValueError("after= (cursor paging) applies to plain and/or score queries only")
             return self.search_phrase(query, k=k)
-        deleted = self.deleted
-        if fq is not None:
-            # fq filters MEMBERSHIP, never scores: merge the member set's
-            # COMPLEMENT into the kernels' deleted filter — pruning stays
-            # exact (θ only tracks qualifying docs, the dv-mask argument),
-            # rank-identical to the distributed semi-join
-            members = self._fq_members(fq)
-            mask = np.zeros(self.doclens.size, dtype=bool)
-            mask[members[members < self.doclens.size]] = True
-            excl = np.flatnonzero(~mask).astype(np.int64)
-            deleted = np.union1d(deleted, excl) if deleted.size else excl
-        terms = sorted(set(query if isinstance(query, list) else tokenize_py(query)))
-        self._rows_for(terms)
-        lists = []
-        for t in terms:
-            L = self._merged_list(t)
-            if L is None:
-                if mode == "and":
-                    return []
-                continue
-            lists.append(L)
-        if not lists or (mode != "and" and len(lists) < min_match):
-            return []
-        docs, scores = wand.score_topk(
-            lists, self._dl, self.index.avgdl_live, self.meta["k1"], self.meta["b"], k, mode,
-            0, self.doclens.size - 1,
-            deleted=deleted if deleted.size else None,
-            ub_scale=self.index.ub_scale, after=after, min_match=min_match,
-        )
-        return [(int(d), wand.round6f(s)) for d, s in zip(docs, scores)]
+        # fq filters MEMBERSHIP, never scores (see _run)
+        keep = None if fq is None else self._fq_keep(fq)
+        return self._run(self.index._plan(query, mode, min_match), k, after=after, keep=keep)
 
     def search_phrase(self, query: str | list[str], k: int = 10, slop: int = 0) -> list[tuple[int, float]]:
         """Exact-phrase (or, with ``slop``, ordered-window proximity)
         top-k, rank-identical to the distributed
         :meth:`InvertedIndex.search_phrase`."""
         self._ensure_fresh()
-        ordered = list(query) if isinstance(query, list) else tokenize_py(query)
-        if not ordered:
-            return []
-        distinct = list(dict.fromkeys(ordered))
-        self._rows_for(distinct)
-        term_offsets = []
-        for t in distinct:
-            L = self._merged_list(t)
-            if L is None:
-                return []
-            term_offsets.append((L, [i for i, x in enumerate(ordered) if x == t]))
-        docs, scores = wand.score_phrase(
-            term_offsets, self._dl,
-            self.index.avgdl_live, self.meta["k1"], self.meta["b"], k,
-            0, self.doclens.size - 1,
-            deleted=self.deleted if self.deleted.size else None, slop=slop,
-        )
-        return [(int(d), wand.round6f(s)) for d, s in zip(docs, scores)]
+        return self._run(self.index._plan(query, "phrase", slop=slop), k)
 
     def explain(self, query: str | list[str], doc_id: int, mode: str = "or") -> dict:
         """Solr ``debugQuery=true`` analog: the per-term BM25 breakdown of
@@ -2880,7 +2712,7 @@ class LocalSearcher(_LocalReader):
         terms = sorted(set(query if isinstance(query, list) else tokenize_py(query)))
         self._rows_for(terms)
         k1, b = self.meta["k1"], self.meta["b"]
-        avgdl = self.index.avgdl_live
+        avgdl = self.index._avgdls[""]
         in_range = 0 <= doc_id < self.doclens.size
         dl = int(self.doclens[doc_id]) if in_range else 0
         alive = in_range and not (
@@ -2918,42 +2750,8 @@ class LocalSearcher(_LocalReader):
 
     def search_boolean(self, query: str | tuple, k: int = 10) -> list[tuple[int, float]]:
         """Driver-side twin of :meth:`InvertedIndex.search_boolean`."""
-        from dataclasses import replace as _replace
-
         self._ensure_fresh()
-        groups, negs = parse_boolean_query(query) if isinstance(query, str) else query
-        expanded = expand_boolean_wildcards(groups, negs, self.index.expand_prefix,
-                                            self.index.expand_range)
-        if expanded is None:
-            return []
-        groups, negs, const_terms = expanded
-        all_terms = sorted({t for g in groups for t in g} | {t for ng in negs for t in ng})
-        self._rows_for(all_terms)
-
-        def _pl(t):
-            L = self._merged_list(t)
-            if L is None or t not in const_terms:
-                return L
-            # range-expanded term: filters membership, never scores
-            return _replace(L, idf=0.0, _cache=L._cache)
-
-        groups_tl = []
-        for g in groups:
-            lists = [(L, []) for t in g if (L := _pl(t)) is not None]
-            if not lists:
-                return []
-            groups_tl.append(lists)
-        negs_tl = [
-            [(L, []) for t in ng if (L := self._merged_list(t)) is not None] for ng in negs
-        ]
-        negs_tl = [ng for ng in negs_tl if ng]
-        docs, scores = wand.score_boolean(
-            groups_tl, negs_tl, self._dl,
-            self.index.avgdl_live, self.meta["k1"], self.meta["b"], k,
-            0, self.doclens.size - 1,
-            deleted=self.deleted if self.deleted.size else None,
-        )
-        return [(int(d), wand.round6f(s)) for d, s in zip(docs, scores)]
+        return self._run(self.index._plan(query, "boolean"), k)
 
 
 class FieldedClause(NamedTuple):
@@ -3073,20 +2871,20 @@ def _fielded_query_parts(
     expand=None,
     expand_fuzzy=None,
     expand_range=None,
-) -> tuple[dict[str, float], str, list[list[tuple[str, list[int]]]] | None, list[list[tuple[str, list[int]]]]]:
-    """Shared parse for the distributed and local fielded engines:
-    (tagged term → weight, mode, positive groups or None, negative groups).
+) -> _Plan:
+    """The fielded front end, shared by the distributed and local engines:
+    a fielded query → :class:`_Plan` over tagged keys.
 
     ``query`` may be a Solr-style string, a list of (field, term) pairs,
     or a PRE-PARSED list of :class:`FieldedClause` (round 5 — the
     doc-values range router splits a query and passes the residual
     clauses back through, already range-expanded, without re-parsing).
 
-    mode 'and'/'or' with groups None → the plain fast paths.  mode 'phrase'
-    → AND of clause groups incl. positional verify (score_mixed).  mode
-    'boolean'/'boolean_or' → group/NOT execution (score_boolean): each
-    positive group is OR-within (a phrase group carries offsets), negative
-    groups exclude.  Only positive terms get weights (negs never score)."""
+    Plan modes: 'and'/'or' for plain term queries; 'phrase' → AND of clause
+    groups incl. positional verify; 'boolean'/'boolean_or' → group/NOT
+    execution: each positive group is OR-within (a phrase group carries
+    offsets), negative groups exclude.  Only positive terms get weights
+    (negs never score)."""
     boosts = boosts or {}
     is_clauses = (
         not isinstance(query, str)
@@ -3172,8 +2970,8 @@ def _fielded_query_parts(
                     # joined by the top-level connective (legacy semantics)
                     pos_groups.extend([e] for e in ent)
             if has_bool:
-                return tagged_weights, ("boolean" if mode == "and" else "boolean_or"), pos_groups, neg_groups
-            return tagged_weights, "phrase", pos_groups, []
+                return _Plan(tagged_weights, "boolean" if mode == "and" else "boolean_or", pos_groups, neg_groups)
+            return _Plan(tagged_weights, "phrase", pos_groups)
         pairs = [(c.field, t) for c in clauses for t in c.toks]
         pair_boosts = {}
         i = 0
@@ -3182,6 +2980,8 @@ def _fielded_query_parts(
                 pair_boosts[i] = c.boost
                 i += 1
     else:
+        if mode not in ("and", "or"):
+            raise ValueError(f"mode={mode!r} needs a query string: (field, term) pairs combine by and/or")
         pairs = list(query)
         pair_boosts = {}
     tagged_weights = {}
@@ -3189,7 +2989,7 @@ def _fielded_query_parts(
         if fname not in fields:
             raise ValueError(f"unknown field {fname!r} (have {fields})")
         tagged_weights[tag_term(fname, term)] = pair_boosts.get(i, 1.0) * boosts.get(fname, 1.0)
-    return tagged_weights, mode, None, []
+    return _Plan(tagged_weights, mode, [[(t, [])] for t in tagged_weights])
 
 
 class FieldedIndex(_SnapshotReader):
@@ -3203,21 +3003,11 @@ class FieldedIndex(_SnapshotReader):
 
     _fielded = True
     _spell_key = "f:"
-    _n_live_attr = "n_docs"
 
     def __init__(self, spark: SparkSession, index_dir: str):
         super().__init__(spark, index_dir)
-        self.fields: list[str] = self.meta["fields"]
-        # live-corpus params after incremental deletes/appends; per-field
-        # ub_scale keeps stored block maxima valid upper bounds when a
-        # field's live avgdl grew (same argument as the flat index)
-        self.n_docs = self.meta.get("n_docs_live", self.meta["n_docs"])
-        build_avgdls: dict[str, float] = self.meta["avgdl_by_field"]
-        self.avgdls = self.meta.get("avgdl_live_by_field", build_avgdls)
-        self.ub_scales = {
-            f: (max(1.0, self.avgdls[f] / build_avgdls[f]) if build_avgdls[f] else 1.0)
-            for f in self.fields
-        }
+        self.fields: list[str] = self._fields
+        self.n_docs = self._n_live  # live doc count (diverges from the build's after deletes)
         # doc-values range routing (round 5, VERDICT r4 #1): fields listed
         # here execute `f:[lo TO hi]` as a pushed filter on the STORED side
         # table joined with the residual match set — never a dictionary
@@ -3228,6 +3018,17 @@ class FieldedIndex(_SnapshotReader):
         # overflows ``range_expansion_cap`` and the field is stored.
         self.docvalues_fields: set[str] = set(self.meta.get("docvalues_fields", []))
         self.range_expansion_cap: int = 1024
+
+    def _plan(self, query, mode: str = "and", boosts: dict[str, float] | None = None,
+              min_match: int | str = 1) -> _Plan | None:
+        """:func:`_fielded_query_parts` over this index's fields and term
+        dictionary, with the OR modes' ``min_match``; None when the query
+        has no positive term."""
+        plan = _fielded_query_parts(
+            self.fields, query, mode, boosts, expand=self.expand_prefix,
+            expand_fuzzy=self.expand_fuzzy, expand_range=self.expand_range,
+        )
+        return _with_mm(plan, min_match) if plan.weights else None
 
     # -- doc-values range routing (round 5) --------------------------------
     def _split_dv(self, query, mode):
@@ -3504,14 +3305,18 @@ class FieldedIndex(_SnapshotReader):
         query strings — every :meth:`match_ids` shape, doc-values-routed
         ranges included — intersected when a list (Solr ANDs its fq
         params).  Membership only — never scored."""
-        filters = [fq] if isinstance(fq, str) else list(fq)
-        if not filters:
-            raise ValueError("empty fq")
         out = None
-        for f in filters:
+        for f in self._fq_list(fq):
             ids = self.match_ids(f)
             out = ids if out is None else out.join(ids, "doc_id", "left_semi")
         return out.select("doc_id")
+
+    def _fq_list(self, fq: str | list[str]) -> list:
+        """Solr ``fq`` params → the filters they AND (fielded query strings)."""
+        filters = [fq] if isinstance(fq, str) else list(fq)
+        if not filters:
+            raise ValueError("empty fq")
+        return filters
 
     def match_ids(self, query: str | list[tuple[str, str]], mode: str = "and") -> DataFrame:
         """ALL doc_ids matching a fielded query (no scoring, no k) — the
@@ -3522,69 +3327,7 @@ class FieldedIndex(_SnapshotReader):
         query, mode, dv_pos, dv_neg = self._split_dv(query, mode)
         if dv_pos or dv_neg:
             return self._dv_compose(query, mode, dv_pos, dv_neg, scored=False)
-        tagged_weights, pmode, groups, negs = _fielded_query_parts(
-            self.fields, query, mode, None, expand=self.expand_prefix,
-            expand_fuzzy=self.expand_fuzzy, expand_range=self.expand_range,
-        )
-        empty = _empty_df(self.spark, "doc_id long")
-        if groups is None:
-            # plain and/or → boolean-group form: AND = one group per term,
-            # OR = a single OR-group (match kernels are group-based)
-            terms = sorted(tagged_weights)
-            if not terms:
-                return empty
-            groups = [[(t, [])] for t in terms] if pmode == "and" else [[(t, []) for t in terms]]
-            negs = []
-        bool_or = pmode == "boolean_or"
-        stats = self.term_stats_for(sorted({t for g in groups + negs for t, _ in g}))
-        kept_groups = []
-        for g in groups:
-            is_phrase = any(offs for _, offs in g)
-            ent = wand.regroup(g, [(t, offs) for t, offs in g if t in stats])
-            if (is_phrase and len(ent) < len(g)) or not ent:
-                if bool_or:
-                    continue
-                return empty
-            kept_groups.append(ent)
-        if not kept_groups:
-            return empty
-        kept_negs = []
-        for g in negs:
-            ent = wand.regroup(g, [(t, offs) for t, offs in g if t in stats])
-            if ent and not (any(offs for _, offs in g) and len(ent) < len(g)):
-                kept_negs.append(ent)
-        groups, negs = kept_groups, kept_negs
-        with_pos = any(offs for g in groups + negs for _, offs in g)
-        needed = sorted({t for g in groups + negs for t, _ in g})
-        dfs_by_term = {t: stats[t][0] for t in needed}
-
-        def match_range(pdf, lo, hi, _doclens, deleted):
-            by_term = {
-                row["term"]: _mk_termlist(row, 0.0, dfs_by_term[row["term"]])
-                for row in pdf.to_dict("records")
-            }
-            groups_tl = []
-            for g in groups:
-                is_phrase = any(offs for _, offs in g)
-                ent = wand.regroup(g, [(by_term[t], offs) for t, offs in g if t in by_term])
-                if (is_phrase and len(ent) < len(g)) or not ent:
-                    if bool_or:
-                        continue
-                    return None
-                groups_tl.append(ent)
-            if not groups_tl:
-                return None
-            negs_tl = []
-            for og in negs:
-                ent = wand.regroup(og, [(by_term[t], offs) for t, offs in og if t in by_term])
-                if ent and not (any(offs for _, offs in og) and len(ent) < len(og)):
-                    negs_tl.append(ent)
-            docs = wand.match_docs_boolean(
-                groups_tl, negs_tl, lo, hi, deleted=deleted, mode="or" if bool_or else "and"
-            )
-            return pd.DataFrame({"doc_id": docs})
-
-        return self._run_ranges(needed, "doc_id long", match_range, with_positions=with_pos, doclens=False)
+        return self._plan_frame(self._plan(query, mode), match=True)
 
     def facet_query(
         self,
@@ -3667,122 +3410,6 @@ class FieldedIndex(_SnapshotReader):
             .filter(F.col("doc_id") != int(doc_id))
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
-        )
-
-    def _score_plan(self, tagged_weights: dict[str, float], k: int, mode: str,
-                    n_required: int, with_positions: bool = False,
-                    phrase_groups: list[list[tuple[str, list[int]]]] | None = None,
-                    neg_groups: list[list[tuple[str, list[int]]]] | None = None,
-                    return_all: bool = False, min_match: int = 1) -> DataFrame:
-        """Shared range-parallel scoring plan for fielded and/or/phrase/
-        boolean.  ``mode`` 'boolean'/'boolean_or': ``phrase_groups`` holds
-        the POSITIVE clause groups (OR-within; offsets mark phrase groups)
-        and ``neg_groups`` the prohibited clauses — executed by
-        wand.score_boolean (negs filter, never score).  ``return_all``:
-        every matching doc with its score, no global top-k reduce — the
-        total-recall scorer behind grouping / compound score+field sort."""
-        meta = self.meta
-        k1, b = meta["k1"], meta["b"]
-        avgdls, fields, ub_scales = self.avgdls, self.fields, self.ub_scales
-        neg_groups = neg_groups or []
-        neg_terms = sorted({t for g in neg_groups for t, _ in g})
-        stats = self.term_stats_for(sorted(tagged_weights) + neg_terms)
-        empty = _empty_df(self.spark, "doc_id long, score double")
-        present = {t: w for t, w in tagged_weights.items() if t in stats}
-        if not present or (mode in ("and", "phrase") and len(present) < n_required):
-            return empty
-        bool_or = mode == "boolean_or"
-        if mode in ("boolean", "boolean_or"):
-            kept_groups = []
-            for g in phrase_groups:
-                is_phrase = any(offs for _, offs in g)
-                ent = wand.regroup(g, [(t, offs) for t, offs in g if t in stats])
-                if is_phrase and len(ent) < len(g):
-                    if not bool_or:
-                        return empty  # required phrase has an unindexed term
-                    continue
-                if not ent:
-                    if not bool_or:
-                        return empty  # required OR-group fully unindexed
-                    continue
-                kept_groups.append(ent)
-            if not kept_groups:
-                return empty
-            phrase_groups = kept_groups
-            kept_negs = []
-            for g in neg_groups:
-                ent = wand.regroup(g, [(t, offs) for t, offs in g if t in stats])
-                # a NEG PHRASE with an unindexed term can never match → drop
-                # whole group; a neg OR-group keeps its present terms
-                if ent and not (any(offs for _, offs in g) and len(ent) < len(g)):
-                    kept_negs.append(ent)
-            neg_groups = kept_negs
-        n_docs = self.n_docs
-        idfs = {t: w * wand.idf(n_docs, stats[t][0]) for t, w in present.items()}
-        n_terms = len(present)
-        all_needed = sorted(set(present) | {t for g in (phrase_groups or []) for t, _ in g if t in stats}
-                            | {t for g in neg_groups for t, _ in g})
-        pos_groups = phrase_groups
-
-        def score_range(pdf, lo, hi, doclens, deleted):
-            ctx = dict(zip(fields, doclens)), avgdls, ub_scales
-            by_term = {}
-            for row in pdf.to_dict("records"):
-                t = row["term"]
-                by_term[t] = _bm25f_attach(_mk_termlist(row, idfs.get(t, 0.0), stats[t][0]), *ctx)
-            if mode in ("boolean", "boolean_or"):
-                groups_tl = []
-                for g in pos_groups:
-                    is_phrase = any(offs for _, offs in g)
-                    ent = wand.regroup(g, [(by_term[t], offs) for t, offs in g if t in by_term])
-                    if (is_phrase and len(ent) < len(g)) or not ent:
-                        if bool_or:
-                            continue
-                        return None  # required group absent in range
-                    groups_tl.append(ent)
-                if not groups_tl:
-                    return None
-                negs_tl = []
-                for og in neg_groups:
-                    ent = wand.regroup(og, [(by_term[t], offs) for t, offs in og if t in by_term])
-                    # a neg phrase missing a term in this range cannot match here
-                    if ent and not (any(offs for _, offs in og) and len(ent) < len(og)):
-                        negs_tl.append(ent)
-                kk = (hi - lo + 1) if return_all else k
-                docs, scores = wand.score_boolean(
-                    groups_tl, negs_tl, None, 0.0, k1, b, kk, lo, hi,
-                    deleted=deleted, mode="or" if bool_or else "and",
-                    min_match=min_match,
-                )
-            elif mode == "phrase":
-                if len(by_term) < n_terms:
-                    return None
-                groups = [wand.regroup(g, [(by_term[t], offs) for t, offs in g]) for g in pos_groups]
-                kk = (hi - lo + 1) if return_all else k
-                docs, scores = wand.score_mixed(
-                    groups, None, 0.0, k1, b, kk, lo, hi, deleted=deleted
-                )
-            else:
-                if mode == "and" and len(by_term) < n_terms:
-                    return None
-                kk = (hi - lo + 1) if return_all else k
-                docs, scores = wand.score_topk(
-                    [by_term[t] for t in by_term if t in present], None, 0.0, k1, b, kk, mode, lo, hi,
-                    deleted=deleted, min_match=min_match,
-                )
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-
-        local_topk = self._run_ranges(all_needed, "doc_id long, score double", score_range,
-                                      with_positions=with_positions)
-        if return_all:
-            # per-range recall is already total (kk = range width) and the
-            # kernels emit round6-ed scores: no global reduce here — the
-            # caller composes its own orderBy+limit / grouping
-            return local_topk
-        return (
-            local_topk.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .select("doc_id", F.round("score", 6).alias("score"))
         )
 
     def search(
@@ -4000,30 +3627,7 @@ class FieldedIndex(_SnapshotReader):
                 .limit(k)
                 .select("doc_id", F.round("score", 6).alias("score"))
             )
-        tagged_weights, mode, groups, negs = _fielded_query_parts(
-            self.fields, query, mode, boosts, expand=self.expand_prefix,
-            expand_fuzzy=self.expand_fuzzy, expand_range=self.expand_range,
-        )
-        if not tagged_weights:
-            return _empty_df(self.spark, "doc_id long, score double")
-        if groups is not None:
-            # mm counts distinct matched GROUPS (the query's top-level
-            # optional clauses); AND combine ignores it, like Solr
-            mm = 1
-            if mode == "boolean_or":
-                mm = parse_mm(min_match, len(groups)) if isinstance(min_match, str) else min_match
-            with_pos = any(offs for g in groups + negs for _, offs in g)
-            return self._score_plan(
-                tagged_weights, k, mode if mode.startswith("boolean") else "phrase",
-                n_required=len(tagged_weights),
-                with_positions=with_pos, phrase_groups=groups, neg_groups=negs,
-                min_match=mm,
-            )
-        mm = 1
-        if mode == "or":
-            mm = parse_mm(min_match, len(tagged_weights)) if isinstance(min_match, str) else min_match
-        return self._score_plan(tagged_weights, k, mode, n_required=len(tagged_weights),
-                                min_match=mm)
+        return self._plan_frame(self._plan(query, mode, boosts, min_match), k)
 
     def search_dismax(
         self,
@@ -4153,7 +3757,7 @@ class FieldedIndex(_SnapshotReader):
             return None
         meta = self.meta
         k1, b, span = meta["k1"], meta["b"], self.span
-        n_docs, avgdls, fields = self.n_docs, self.avgdls, self.fields
+        n_docs, avgdls, fields = self.n_docs, self._avgdls, self.fields
         idfs = {tt: qf[tt.split(FIELD_SEP, 1)[0]] * wand.idf(n_docs, stats[tt][0])
                 for tt in present}
 
@@ -4241,7 +3845,7 @@ class FieldedIndex(_SnapshotReader):
         :meth:`search_many` per-qid bounded window."""
         meta = self.meta
         k1, b, span = meta["k1"], meta["b"], self.span
-        n_docs, avgdls, fields = self.n_docs, self.avgdls, self.fields
+        n_docs, avgdls, fields = self.n_docs, self._avgdls, self.fields
 
         parsed: dict[str, tuple[list[str], dict[str, float], int, float, int]] = {}
         for qid, spec in queries.items():
@@ -4357,21 +3961,7 @@ class FieldedIndex(_SnapshotReader):
         query, mode, dv_pos, dv_neg = self._split_dv(query, mode)
         if dv_pos or dv_neg:
             return self._dv_compose(query, mode, dv_pos, dv_neg, scored=True, boosts=boosts)
-        tagged_weights, mode, groups, negs = _fielded_query_parts(
-            self.fields, query, mode, boosts, expand=self.expand_prefix,
-            expand_fuzzy=self.expand_fuzzy, expand_range=self.expand_range,
-        )
-        if not tagged_weights:
-            return _empty_df(self.spark, "doc_id long, score double")
-        if groups is not None:
-            with_pos = any(offs for g in groups + negs for _, offs in g)
-            return self._score_plan(
-                tagged_weights, 0, mode if mode.startswith("boolean") else "phrase",
-                n_required=len(tagged_weights),
-                with_positions=with_pos, phrase_groups=groups, neg_groups=negs,
-                return_all=True,
-            )
-        return self._score_plan(tagged_weights, 0, mode, n_required=len(tagged_weights), return_all=True)
+        return self._plan_frame(self._plan(query, mode, boosts))
 
     def search_many(
         self, queries: dict[str, tuple[list[tuple[str, str]] | str, str, int]]
@@ -4382,195 +3972,24 @@ class FieldedIndex(_SnapshotReader):
         query-string, mode, k).  Boolean string shapes — ``-f:x``
         prohibited clauses, ``f:(a b)`` OR-groups, ``f:pre*`` wildcards,
         ``f:[lo TO hi]`` ranges — batch fine (round 3), and PHRASE clauses
-        batch too (round 4, closing the ADVICE r2 gap): positional groups
-        execute through the boolean kernel, whose group machinery verifies
-        phrases; the positional column is projected for the batch scan
-        only when some query carries a phrase.  A plain AND-of-clauses
-        phrase query is the boolean AND of its clause groups — the same
-        candidates (every group must match) and the same bag-BM25 score
-        (AND candidates contain every scored term), so results stay
-        identical to per-query :meth:`search`."""
-        from dataclasses import replace
-
-        meta = self.meta
-        k1, b = meta["k1"], meta["b"]
-        avgdls, fields, ub_scales = self.avgdls, self.fields, self.ub_scales
-        n_docs = self.n_docs
-
-        parsed: dict[str, tuple[list[str], dict[str, float], str, int]] = {}
-        # boolean-shaped queries: qid → (groups, negs, weights, bool_or, k);
-        # groups/negs are lists of [(tagged_term, offsets)] — offsets mark
-        # phrase groups
-        parsed_bool: dict[str, tuple[list, list, dict[str, float], bool, int]] = {}
-        # doc-values-routed range queries can't ride the shared postings
-        # kernel (the stored-filter semi-join composes BEFORE the top-k
-        # reduce) — they fall back to per-query search(); the rest of the
-        # batch still amortizes in one job
-        dv_results: dict[str, list] = {}
+        batch too (round 4, closing the ADVICE r2 gap); the positional
+        column is projected for the batch scan only when some query
+        carries a phrase.  Every entry runs the plan per-query
+        :meth:`search` runs, so results are identical to it.  ``(q, mode, k, fq)`` entries
+        and doc-values-routed range queries run as their own :meth:`search`
+        (their stored-filter semi-join composes BEFORE the top-k reduce);
+        the rest of the batch still amortizes in one job."""
+        results: dict[str, list] = {}
+        plans = {}
         for qid, spec in queries.items():
-            if len(spec) == 4:
-                # (q, mode, k, fq): filtered entries fall back per-query —
-                # the fq semi-join composes before the top-k reduce
-                q, mode, k, qfq = spec
-                dv_results[qid] = [
-                    (r["doc_id"], r["score"])
-                    for r in self.search(q, k=k, mode=mode, fq=qfq).collect()
-                ]
-                continue
-            q, mode, k = spec
-            if isinstance(q, str):
-                residual, pmode, dv_pos, dv_neg = self._split_dv(q, mode)
-                if dv_pos or dv_neg:
-                    dv_results[qid] = [
-                        (r["doc_id"], r["score"])
-                        for r in self.search(q, k=k, mode=mode).collect()
-                    ]
-                    continue
-                tw, mode2, groups, negs = _fielded_query_parts(
-                    self.fields, residual, pmode, None, expand=self.expand_prefix,
-                    expand_fuzzy=self.expand_fuzzy, expand_range=self.expand_range,
-                )
-                if groups is not None:
-                    # mode2 == "phrase" (AND of clause groups incl. positional
-                    # verify) rides the boolean AND path — same candidates,
-                    # same bag score
-                    parsed_bool[qid] = (groups, negs, tw, mode2 == "boolean_or", k)
-                    continue
-                weights = tw
+            q, mode, k = spec[:3]
+            fq = spec[3] if len(spec) == 4 else None
+            residual, pmode, dv_pos, dv_neg = self._split_dv(q, mode) if fq is None else (q, mode, [], [])
+            if fq is not None or dv_pos or dv_neg:
+                results[qid] = [(r["doc_id"], r["score"]) for r in self.search(q, k=k, mode=mode, fq=fq).collect()]
             else:
-                weights = {}
-                for i, (fname, term) in enumerate(list(q)):
-                    if fname not in self.fields:
-                        raise ValueError(f"unknown field {fname!r}")
-                    weights[tag_term(fname, term)] = 1.0
-            parsed[qid] = (sorted(weights), weights, mode, k)
-
-        all_tagged = sorted(
-            {t for terms, _, _, _ in parsed.values() for t in terms}
-            | {t for g, n, _, _, _ in parsed_bool.values() for grp in g + n for t, _ in grp}
-        )
-        results: dict[str, list] = dict(dv_results)
-        if not all_tagged:
-            results.update({qid: [] for qid in list(parsed) + list(parsed_bool)})
-            return results
-        stats = self.term_stats_for(all_tagged)
-        idf_raw = {t: wand.idf(n_docs, stats[t][0]) for t in stats}
-
-        live: dict[str, tuple[list[str], dict[str, float], str, int]] = {}
-        for qid, (terms, weights, mode, k) in parsed.items():
-            present = [t for t in terms if t in stats]
-            if not present or (mode == "and" and len(present) < len(terms)):
-                results[qid] = []
-            else:
-                live[qid] = (present, weights, mode, k)
-        # presence-filter boolean queries exactly like _score_plan: a
-        # REQUIRED phrase group with an unindexed term can never match; a
-        # NEG phrase with an unindexed term can never exclude (drop whole
-        # group — keeping the present subset would over-exclude)
-        live_bool: dict[str, tuple[list, list, dict[str, float], bool, int]] = {}
-        for qid, (groups, negs, weights, bool_or, k) in parsed_bool.items():
-            kept_groups = []
-            dead = False
-            for g in groups:
-                is_phrase = any(offs for _, offs in g)
-                ent = wand.regroup(g, [(t, offs) for t, offs in g if t in stats])
-                if (is_phrase and len(ent) < len(g)) or not ent:
-                    if bool_or:
-                        continue
-                    dead = True
-                    break
-                kept_groups.append(ent)
-            if dead or not kept_groups:
-                results[qid] = []
-                continue
-            kept_negs = []
-            for g in negs:
-                ent = wand.regroup(g, [(t, offs) for t, offs in g if t in stats])
-                if ent and not (any(offs for _, offs in g) and len(ent) < len(g)):
-                    kept_negs.append(ent)
-            live_bool[qid] = (kept_groups, kept_negs, weights, bool_or, k)
-        if not live and not live_bool:
-            return results
-
-        needed = sorted(
-            {t for terms, _, _, _ in live.values() for t in terms}
-            | {t for g, n, _, _, _ in live_bool.values() for grp in g + n for t, _ in grp}
-        )
-        batch_with_pos = any(
-            offs for g, n, _, _, _ in live_bool.values() for grp in g + n for _, offs in grp
-        )
-
-        def score_range(pdf, lo, hi, doclens, deleted):
-            ctx = dict(zip(fields, doclens)), avgdls, ub_scales
-            by_term = {}
-            for row in pdf.to_dict("records"):
-                t = row["term"]
-                by_term[t] = _bm25f_attach(_mk_termlist(row, idf_raw[t], stats[t][0]), *ctx)
-            out_q, out_d, out_s = [], [], []
-            for qid, (terms, weights, mode, k) in live.items():
-                lists = [
-                    replace(by_term[t], idf=idf_raw[t] * weights[t], _cache=by_term[t]._cache)
-                    for t in terms
-                    if t in by_term
-                ]
-                if not lists or (mode == "and" and len(lists) < len(terms)):
-                    continue
-                docs, scores = wand.score_topk(
-                    lists, None, 0.0, k1, b, k, mode, lo, hi, deleted=deleted
-                )
-                out_q.extend([qid] * docs.size)
-                out_d.extend(docs.tolist())
-                out_s.extend(scores.tolist())
-            for qid, (groups, negs, weights, bool_or, k) in live_bool.items():
-                # ONE replaced TermList per distinct term, shared across
-                # groups: score_boolean dedups scoring lists by id(), so a
-                # term appearing in two positive groups must be the SAME
-                # object to score once (ADVICE r3 — keeps search_many
-                # rank-identical to per-query search)
-                rep = {
-                    t: replace(by_term[t], idf=idf_raw[t] * weights.get(t, 1.0),
-                               _cache=by_term[t]._cache)
-                    for g in groups for t, _ in g if t in by_term
-                }
-                groups_tl, dead = [], False
-                for g in groups:
-                    is_phrase = any(offs for _, offs in g)
-                    ent = wand.regroup(g, [(rep[t], offs) for t, offs in g if t in by_term])
-                    # a required phrase missing a term in this range can't
-                    # match here (same rule as _score_plan)
-                    if (is_phrase and len(ent) < len(g)) or not ent:
-                        if bool_or:
-                            continue
-                        dead = True
-                        break
-                    groups_tl.append(ent)
-                if dead or not groups_tl:
-                    continue
-                negs_tl = []
-                for g in negs:
-                    ent = wand.regroup(g, [(by_term[t], offs) for t, offs in g if t in by_term])
-                    # a neg phrase missing a term in this range cannot match
-                    # here → drop the group (subset would over-exclude)
-                    if ent and not (any(offs for _, offs in g) and len(ent) < len(g)):
-                        negs_tl.append(ent)
-                docs, scores = wand.score_boolean(
-                    groups_tl, negs_tl, None, 0.0, k1, b, k, lo, hi,
-                    deleted=deleted, mode="or" if bool_or else "and",
-                )
-                out_q.extend([qid] * docs.size)
-                out_d.extend(docs.tolist())
-                out_s.extend(scores.tolist())
-            if not out_q:
-                return None
-            return pd.DataFrame({"qid": out_q, "doc_id": out_d, "score": out_s}).astype(
-                {"qid": str, "doc_id": np.int64, "score": np.float64}
-            )
-
-        local_topk = self._run_ranges(needed, "qid string, doc_id long, score double", score_range,
-                                      with_positions=batch_with_pos)
-        ks = {qid: k for qid, (_, _, _, k) in live.items()}
-        ks.update({qid: k for qid, (_, _, _, _, k) in live_bool.items()})
-        return _qid_topk(local_topk, ks, results)
+                plans[qid] = (self._plan(residual, pmode), k)
+        return self._many(plans, results)
 
     def search_grouped(
         self,
@@ -4608,40 +4027,23 @@ class FieldedIndex(_SnapshotReader):
                 boosts: dict[str, float] | None = None) -> dict:
         """Solr ``debugQuery`` analog for BM25F: per-(field, term) score
         breakdown of one doc (see :meth:`LocalFieldedSearcher.explain`).
-        Driver-side point lookup by design; the memoized local searcher
-        refreshes itself when maintenance commits."""
-        local = getattr(self, "_explain_local", None)
-        if local is None:
-            local = self._explain_local = LocalFieldedSearcher(self)
-        return local.explain(query, doc_id, mode, boosts)
+        Through the memoized local searcher (:meth:`_explainer`)."""
+        return self._explainer().explain(query, doc_id, mode, boosts)
 
     def explain_dismax(self, query, qf: dict[str, float], doc_id: int,
                        tie: float = 0.0, min_match: int | str = 1) -> dict:
         """``debugQuery`` for :meth:`search_dismax` (see
-        :meth:`LocalFieldedSearcher.explain_dismax`) — driver-side point
-        lookup through the same memoized self-refreshing local searcher
-        as :meth:`explain`."""
-        local = getattr(self, "_explain_local", None)
-        if local is None:
-            local = self._explain_local = LocalFieldedSearcher(self)
-        return local.explain_dismax(query, qf, doc_id, tie, min_match)
+        :meth:`LocalFieldedSearcher.explain_dismax`), through the memoized
+        local searcher (:meth:`_explainer`)."""
+        return self._explainer().explain_dismax(query, qf, doc_id, tie, min_match)
 
     def search_phrase(self, field: str, phrase: str | list[str], k: int = 10) -> DataFrame:
         """Field-scoped exact phrase (positions are field-internal)."""
         k = min(k, self.n_docs)  # see InvertedIndex.search: unclamped limit(k) OOMs
-
         ordered = list(phrase) if isinstance(phrase, list) else tokenize_py(phrase)
         if not ordered or field not in self.fields:
             return _empty_df(self.spark, "doc_id long, score double")
-        distinct = list(dict.fromkeys(ordered))
-        tagged_weights = {tag_term(field, t): 1.0 for t in distinct}
-        group = [
-            (tag_term(field, t), [i for i, x in enumerate(ordered) if x == t]) for t in distinct
-        ]
-        return self._score_plan(
-            tagged_weights, k, "phrase", n_required=len(distinct),
-            with_positions=True, phrase_groups=[group],
-        )
+        return self._plan_frame(self._plan([FieldedClause(field, ordered, 1.0, True, False, False)]), k)
 
 
 class LocalFieldedSearcher(_LocalReader):
@@ -4652,7 +4054,6 @@ class LocalFieldedSearcher(_LocalReader):
 
     def _load(self, index: "FieldedIndex") -> None:
         super()._load(index)
-        self._dl_by_field = {f: self._dls[doclens_col(f)] for f in index.fields}
         self.doclens: dict[str, np.ndarray] = {f: d.lens for f, d in self._dl_by_field.items()}
         # field → dense doc-values arrays (stored-table columns collected
         # once on first touch — the latency-path twin of the distributed
@@ -4670,7 +4071,7 @@ class LocalFieldedSearcher(_LocalReader):
             st = self.index.stored()
             if st is None or field not in st.columns:
                 raise ValueError(f"doc-values field {field!r} is not a stored column")
-            n = max(a.size for a in self.doclens.values())
+            n = self._n
             num = np.full(n, np.nan, dtype=np.float64)
             strs = np.full(n, "", dtype=object)
             valid = np.zeros(n, dtype=bool)
@@ -4722,243 +4123,63 @@ class LocalFieldedSearcher(_LocalReader):
             m &= strs <= hi
         return m
 
-    def _merged_list(self, t: str) -> wand.TermList | None:
-        # the BM25F kernels read each list's field doclens / live avgdl /
-        # ub scale off the list itself: attach them once, on first stitch
-        fresh = t not in self._merged_memo
-        L = super()._merged_list(t)
-        if fresh and L is not None:
-            _bm25f_attach(L, self._dl_by_field, self.index.avgdls, self.index.ub_scales)
-        return L
+    def _dv_keep(self, query, mode: str):
+        """Route ``query``'s ranges as :meth:`FieldedIndex._split_dv` does,
+        against the cached stored columns: ``(residual, mode, keep)`` with
+        ``keep`` the mask of the docs the routed ranges admit (AND:
+        intersected, OR: united, negated: removed) or None when nothing
+        routes; ``residual`` is None for a pure doc-values query.  Shapes
+        whose ranges would ADD members beyond the term clauses' (an OR-mode
+        range beside term clauses; a pure range query with residual
+        negative term clauses) stay the distributed engine's."""
+        query, mode, dv_pos, dv_neg = self.index._split_dv(query, mode)
+        if not (dv_pos or dv_neg):
+            return query, mode, None
+        positive = any(not c.neg for c in query)
+        if mode == "or" and dv_pos and positive:
+            raise ValueError(
+                "OR-mode doc-values range disjuncts combined with term clauses — use FieldedIndex.search")
+        if mode == "or" and dv_pos:
+            keep = np.zeros(self._n, dtype=bool)
+            for c in dv_pos:
+                keep |= self._dv_mask(c)
+        else:
+            keep = np.ones(self._n, dtype=bool)
+            for c in dv_pos:
+                keep &= self._dv_mask(c)
+        for c in dv_neg:
+            keep &= ~self._dv_mask(c)
+        if not positive:
+            if query:
+                raise ValueError(
+                    "pure doc-values query with residual negative clauses — use FieldedIndex.search")
+            query = None
+        return query, mode, keep
 
-    def _fq_members(self, fq) -> np.ndarray:
-        """Sorted member ids of the combined fielded filter set — the
-        driver-side twin of :meth:`FieldedIndex.fq_ids` (fielded query
-        strings intersected when a list; dv-routed ranges supported via
-        the cached stored columns).  OR-mode dv disjuncts mixed with term
-        clauses raise, like :meth:`search`."""
-        filters = [fq] if isinstance(fq, str) else list(fq)
-        if not filters:
-            raise ValueError("empty fq")
-        out: np.ndarray | None = None
-        n = max(a.size for a in self.doclens.values())
-        for f in filters:
-            query, fmode, dv_pos, dv_neg = self.index._split_dv(f, "and")
-            keep: np.ndarray | None = None
-            if dv_pos or dv_neg:
-                if fmode == "or" and dv_pos and any(not c.neg for c in query):
-                    raise ValueError(
-                        "OR-mode doc-values range disjuncts in fq — use FieldedIndex")
-                if fmode == "or" and dv_pos:
-                    keep = np.zeros(n, dtype=bool)
-                    for c in dv_pos:
-                        keep |= self._dv_mask(c)
-                else:
-                    keep = np.ones(n, dtype=bool)
-                    for c in dv_pos:
-                        keep &= self._dv_mask(c)
-                for c in dv_neg:
-                    keep &= ~self._dv_mask(c)
-            if keep is not None and not any(not c.neg for c in query):
-                # pure-dv filter (residual clauses, if any, are negative)
-                if query:
-                    raise ValueError(
-                        "pure doc-values fq with residual negative clauses — use FieldedIndex")
-                ids = np.flatnonzero(keep).astype(np.int64)
-                if self.deleted.size:
-                    ids = ids[~np.isin(ids, self.deleted, assume_unique=True)]
-            else:
-                tagged_weights, pmode, groups, negs = _fielded_query_parts(
-                    self.index.fields, query, fmode, None, expand=self.index.expand_prefix,
-                    expand_fuzzy=self.index.expand_fuzzy, expand_range=self.index.expand_range,
-                )
-                if not tagged_weights:
-                    ids = np.zeros(0, np.int64)
-                else:
-                    if groups is None:
-                        # plain and/or → boolean-group form (match_ids's
-                        # construction): AND = one group per term, OR = a
-                        # single OR-group
-                        if pmode == "and":
-                            groups = [[(t, [])] for t in sorted(tagged_weights)]
-                        else:
-                            groups = [[(t, []) for t in sorted(tagged_weights)]]
-                        negs = []
-                        bmode = "and"
-                    else:
-                        bmode = "or" if pmode == "boolean_or" else "and"
-                    self._rows_for(sorted({t for g in groups + negs for t, _ in g}))
-                    groups_tl, negs_tl, dead = [], [], False
-                    for g in groups:
-                        is_phrase = any(offs for _, offs in g)
-                        ent = wand.regroup(g, [(L, offs) for t, offs in g
-                                               if (L := self._merged_list(t)) is not None])
-                        if (is_phrase and len(ent) < len(g)) or not ent:
-                            if bmode == "or":
-                                continue
-                            dead = True
-                            break
-                        groups_tl.append(ent)
-                    if dead or not groups_tl:
-                        ids = np.zeros(0, np.int64)
-                    else:
-                        for g in negs:
-                            ent = wand.regroup(g, [(L, offs) for t, offs in g
-                                                   if (L := self._merged_list(t)) is not None])
-                            if ent and not (any(offs for _, offs in g) and len(ent) < len(g)):
-                                negs_tl.append(ent)
-                        ids = wand.match_docs_boolean(
-                            groups_tl, negs_tl, 0, n - 1,
-                            deleted=self.deleted if self.deleted.size else None, mode=bmode,
-                        )
-                if keep is not None:
-                    ids = ids[keep[ids]]
-            out = ids if out is None else np.intersect1d(out, ids, assume_unique=True)
-            if out.size == 0:
-                break
-        return out
+    def _filter_keep(self, f) -> np.ndarray:
+        """Matches of one fielded filter string, doc-values ranges included."""
+        query, mode, dv = self._dv_keep(f, "and")
+        if query is None:
+            return dv
+        m = self._members(self.index._plan(query, mode))
+        return m if dv is None else m & dv
 
     def search(self, query, k: int = 10, mode: str = "or", boosts: dict[str, float] | None = None,
                fq: str | list[str] | None = None,
                min_match: int | str = 1) -> list[tuple[int, float]]:
-        from dataclasses import replace
-
         self._ensure_fresh()
-        fq_mask = None
-        if fq is not None:
-            # fq filters MEMBERSHIP, never scores: the member set's
-            # complement merges into the kernels' deleted filter below
-            # (pruning stays exact — the dv-mask argument), rank-identical
-            # to the distributed semi-join
-            n_all = max(a.size for a in self.doclens.values())
-            members = self._fq_members(fq)
-            fq_mask = np.zeros(n_all, dtype=bool)
-            fq_mask[members[members < n_all]] = True
-        # doc-values range routing (round 5): same _split_dv policy as the
-        # distributed engine — registered docvalues_fields or an
-        # expansion-overflow fallback route to the cached stored columns;
-        # the routed clauses become an EXCLUSION array merged into the
-        # kernels' deleted filter, so scoring/pruning stays exact
-        query, mode, dv_pos, dv_neg = self.index._split_dv(query, mode)
-        extra_del = None
-        if fq_mask is not None:
-            extra_del = np.flatnonzero(~fq_mask).astype(np.int64)
-        if dv_pos or dv_neg:
-            if mode == "or" and dv_pos and any(not c.neg for c in query):
-                # an OR-mode range disjunct ADDS zero-score members beyond
-                # the kernels' match set — a union, not the exclusion mask
-                # this cache models; that shape stays distributed
-                raise ValueError(
-                    "OR-mode doc-values range disjuncts combined with scored clauses "
-                    "— use FieldedIndex.search"
-                )
-            n = max(a.size for a in self.doclens.values())
-            if mode == "or" and dv_pos:
-                # pure-dv OR: membership is the UNION of the range masks
-                keep = np.zeros(n, dtype=bool)
-                for c in dv_pos:
-                    keep |= self._dv_mask(c)
-            else:
-                keep = np.ones(n, dtype=bool)
-                for c in dv_pos:
-                    keep &= self._dv_mask(c)
-            for c in dv_neg:
-                keep &= ~self._dv_mask(c)
-            if not any(not c.neg for c in query):
-                # pure-dv membership: constant score 0.0 (ranges never
-                # score), first k live ids — the distributed path's
-                # (score desc, doc_id asc) order with all-equal scores.
-                # Residual NEGATIVE term clauses need a match scan —
-                # that stays the distributed engine's job.
-                if query:
-                    raise ValueError(
-                        "pure doc-values query with residual negative clauses — use FieldedIndex.search"
-                    )
-                if self.deleted.size:
-                    keep[self.deleted[self.deleted < n]] = False
-                if fq_mask is not None:
-                    keep &= fq_mask[:n]
-                return [(int(d), 0.0) for d in np.flatnonzero(keep)[:k]]
-            if fq_mask is not None:
-                keep &= fq_mask[:n]  # compose fq with the dv exclusions
-            extra_del = np.flatnonzero(~keep).astype(np.int64)
-        tagged_weights, mode, groups, negs = _fielded_query_parts(
-            self.index.fields, query, mode, boosts, expand=self.index.expand_prefix,
-            expand_fuzzy=self.index.expand_fuzzy, expand_range=self.index.expand_range,
-        )
-        if not tagged_weights:
-            return []
-        base_del = self.deleted
-        if extra_del is not None:
-            base_del = np.union1d(base_del, extra_del) if base_del.size else extra_del
-        neg_terms = sorted({t for g in negs for t, _ in g})
-        self._rows_for(sorted(tagged_weights) + neg_terms)
-        if mode.startswith("boolean"):
-            bool_or = mode == "boolean_or"
-            mm = 1
-            if bool_or:
-                mm = parse_mm(min_match, len(groups)) if isinstance(min_match, str) else min_match
-            deleted = base_del if base_del.size else None
-            hi = max(a.size for a in self.doclens.values()) - 1
-            k1, b = self.meta["k1"], self.meta["b"]
-            # ONE replaced TermList per distinct term (memoized): a tagged
-            # term in two positive groups must be the same object so
-            # score_boolean's id()-dedup scores it once (ADVICE r3)
-            rep: dict[str, wand.TermList] = {}
-
-            def _rl(t):
-                if t not in rep:
-                    L = self._merged_list(t)
-                    rep[t] = None if L is None else replace(
-                        L, idf=L.idf * tagged_weights[t], _cache=L._cache)
-                return rep[t]
-
-            groups_tl = []
-            for g in groups:
-                is_phrase = any(offs for _, offs in g)
-                ent = wand.regroup(g, [(L, offs) for t, offs in g if (L := _rl(t)) is not None])
-                if (is_phrase and len(ent) < len(g)) or not ent:
-                    if bool_or:
-                        continue
-                    return []
-                groups_tl.append(ent)
-            if not groups_tl:
-                return []
-            negs_tl = []
-            for g in negs:
-                ent = wand.regroup(g, [(L, offs) for t, offs in g if (L := self._merged_list(t)) is not None])
-                if ent and not (any(offs for _, offs in g) and len(ent) < len(g)):
-                    negs_tl.append(ent)
-            docs, scores = wand.score_boolean(
-                groups_tl, negs_tl, None, 0.0, k1, b, k, 0, hi,
-                deleted=deleted, mode="or" if bool_or else "and", min_match=mm,
-            )
-            return [(int(d), wand.round6f(s)) for d, s in zip(docs, scores)]
-        lists: dict[str, wand.TermList] = {}
-        for t, w in tagged_weights.items():
-            L = self._merged_list(t)
-            if L is None:
-                if mode in ("and", "phrase"):
-                    return []
-                continue
-            lists[t] = replace(L, idf=L.idf * w, _cache=L._cache)
-        if not lists:
-            return []
-        deleted = base_del if base_del.size else None
-        hi = max(a.size for a in self.doclens.values()) - 1
-        k1, b = self.meta["k1"], self.meta["b"]
-        if groups is not None:
-            gs = [wand.regroup(g, [(lists[t], offs) for t, offs in g]) for g in groups]
-            docs, scores = wand.score_mixed(gs, None, 0.0, k1, b, k, 0, hi, deleted=deleted)
-        else:
-            mm = 1
-            if mode == "or":
-                mm = parse_mm(min_match, len(tagged_weights)) if isinstance(min_match, str) else min_match
-            docs, scores = wand.score_topk(
-                list(lists.values()), None, 0.0, k1, b, k, mode, 0, hi, deleted=deleted,
-                min_match=mm,
-            )
-        return [(int(d), wand.round6f(s)) for d, s in zip(docs, scores)]
+        # fq and doc-values ranges filter MEMBERSHIP, never score (see _run)
+        keep = None if fq is None else self._fq_keep(fq)
+        query, mode, dv = self._dv_keep(query, mode)
+        if dv is not None:
+            keep = dv if keep is None else keep & dv
+        if query is None:
+            # pure doc-values membership: constant score 0.0 (ranges never
+            # score), first k live ids — the distributed path's (score
+            # desc, doc_id asc) order with all-equal scores
+            keep[self.deleted[self.deleted < self._n]] = False
+            return [(int(d), 0.0) for d in np.flatnonzero(keep)[:k]]
+        return self._run(self.index._plan(query, mode, boosts, min_match), k, keep=keep)
 
     def search_dismax(
         self,
@@ -4990,12 +4211,8 @@ class LocalFieldedSearcher(_LocalReader):
             return []
         mm = parse_mm(min_match, len(terms)) if isinstance(min_match, str) else min_match
         k = min(k, self.index.n_docs)
-        n = max(a.size for a in self.doclens.values())
-        fq_mask = None
-        if fq is not None:
-            members = self._fq_members(fq)
-            fq_mask = np.zeros(n, dtype=bool)
-            fq_mask[members[members < n]] = True
+        n = self._n
+        fq_mask = None if fq is None else self._fq_keep(fq)
         self._rows_for([tag_term(f, t) for t in terms for f in qf])
         k1, b = self.meta["k1"], self.meta["b"]
         deleted = self.deleted if self.deleted.size else None
@@ -5020,7 +4237,7 @@ class LocalFieldedSearcher(_LocalReader):
                 if d.size == 0:
                     continue
                 s = wand._bm25(tfs, self.doclens[f][d], w * L.idf,
-                               self.index.avgdls[f], k1, b)
+                               self.index._avgdls[f], k1, b)
                 np.maximum.at(mx, d, s)
                 np.add.at(sm, d, s)
                 seen[d] = True
@@ -5059,19 +4276,18 @@ class LocalFieldedSearcher(_LocalReader):
         self._ensure_fresh()
         if mode not in ("and", "or"):
             raise ValueError("explain supports mode='and'|'or'")
-        tagged_weights, pmode, groups, negs = _fielded_query_parts(
+        plan = _fielded_query_parts(
             self.index.fields, query, mode, boosts, expand=self.index.expand_prefix,
             expand_fuzzy=self.index.expand_fuzzy, expand_range=self.index.expand_range,
         )
-        if negs:
+        if plan.negs:
             raise ValueError("explain supports positive clauses only (prohibited clauses filter, they don't score)")
-        if pmode == "phrase" or (groups and any(offs for g in groups for _, offs in g)):
+        if any(offs for g in plan.groups for _, offs in g):
             raise ValueError("explain supports term queries, not phrases")
         from goobi_viewer_indexer_spark.functions import codec as _codec
-        self._rows_for(sorted(tagged_weights))
+        self._rows_for(sorted(plan.weights))
         k1, b = self.meta["k1"], self.meta["b"]
-        n = max(a.size for a in self.doclens.values())
-        in_range = 0 <= doc_id < n
+        in_range = 0 <= doc_id < self._n
         alive = in_range and not (
             self.deleted.size and np.searchsorted(self.deleted, doc_id) < self.deleted.size
             and self.deleted[np.searchsorted(self.deleted, doc_id)] == doc_id
@@ -5079,7 +4295,7 @@ class LocalFieldedSearcher(_LocalReader):
         rows = []
         total = 0.0
         present: set[str] = set()
-        for t, wq in tagged_weights.items():
+        for t, wq in plan.weights.items():
             L = self._merged_list(t)
             field, term = t.split(FIELD_SEP, 1)
             fdl = self.doclens[field]
@@ -5100,16 +4316,10 @@ class LocalFieldedSearcher(_LocalReader):
                 "df": int(L.df) if L is not None else 0, "tf": tf, "doclen": dl,
                 "idf": idf, "weight": w, "contribution": contribution,
             })
-        if groups:
-            ok = [any(t in present for t, _ in g) for g in groups]
-            matched = all(ok) if pmode == "boolean" else any(ok)
-        elif pmode == "and":
-            matched = len(present) == len(tagged_weights)
-        else:
-            matched = bool(present)
-        matched = alive and matched
+        ok = [any(t in present for t, _ in g) for g in plan.groups]
+        matched = alive and (all(ok) if plan.mode in ("and", "boolean") else any(ok))
         return {
-            "doc_id": int(doc_id), "mode": pmode, "matched": matched,
+            "doc_id": int(doc_id), "mode": plan.mode, "matched": matched,
             "score": wand.round6f(total) if matched else 0.0,
             "terms": rows,
         }
@@ -5146,7 +4356,7 @@ class LocalFieldedSearcher(_LocalReader):
         mm = parse_mm(min_match, len(terms)) if isinstance(min_match, str) else min_match
         self._rows_for([tag_term(f, t) for t in terms for f in qf])
         k1, b = self.meta["k1"], self.meta["b"]
-        n = max(a.size for a in self.doclens.values())
+        n = self._n
         in_range = 0 <= doc_id < n
         alive = in_range and not (
             self.deleted.size and np.searchsorted(self.deleted, doc_id) < self.deleted.size
@@ -5167,7 +4377,7 @@ class LocalFieldedSearcher(_LocalReader):
                 if tf:
                     w = float(_codec.bm25_weight(
                         np.array([tf], np.int64), np.array([dl], np.int64),
-                        float(self.index.avgdls[f]), k1, b)[0])
+                        float(self.index._avgdls[f]), k1, b)[0])
                     s = (float(wq) * idf) * w
                     mx = max(mx, s)
                     sm = sm + s

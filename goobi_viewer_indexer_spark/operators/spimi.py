@@ -117,7 +117,11 @@ class Layout:
 
     @classmethod
     def of_meta(cls, meta: dict) -> "Layout":
-        return cls(meta["field_cols"]) if "fields" in meta else cls.flat_text()
+        """The layout an index was built with, fields in declared order
+        (meta's ``field_cols`` comes back from JSON key-sorted)."""
+        if "fields" not in meta:
+            return cls.flat_text()
+        return cls({f: meta["field_cols"][f] for f in meta["fields"]})
 
     @property
     def columns(self) -> list[str]:
@@ -140,17 +144,16 @@ class Layout:
         key = "avgdl_live" if live else "avgdl"
         return key if self.flat else key + "_by_field"
 
-    def avgdls(self, meta: dict) -> dict[str, float]:
-        """The build avgdl basis per field."""
-        v = meta[self.avgdl_key()]
+    def avgdls(self, meta: dict, live: bool = False) -> dict[str, float]:
+        """The build avgdl basis per field, or with ``live`` the live values
+        (the build basis until maintenance writes live ones)."""
+        v = meta.get(self.avgdl_key(live), meta[self.avgdl_key()])
         return {"": v} if self.flat else v
 
     def put_avgdls(self, meta: dict, avgdls: dict[str, float], live: bool = False) -> None:
         meta[self.avgdl_key(live)] = avgdls[""] if self.flat else avgdls
         if not (live or self.flat):
-            # single-avgdl readers: the first field as declared (meta's
-            # field_cols comes back from JSON in sorted key order)
-            meta["avgdl"] = avgdls[meta["fields"][0]]
+            meta["avgdl"] = avgdls[self.names[0]]  # single-avgdl readers: the first declared field
 
 
 def _rng_col(span: int):

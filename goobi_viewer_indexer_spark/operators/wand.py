@@ -62,11 +62,11 @@ class TermList:
     df: int = 0
     pos_bytes: bytes = b""       # optional positional stream (phrase queries)
     block_pos_off: np.ndarray | None = None
-    # multi-field (BM25F-lite): a field-scoped list scores with ITS field's
-    # doclen lookup + avgdl; None → the kernel's global dl/avgdl.
-    # ub_scale_f inflates THIS list's stored block maxima when its field's
-    # live avgdl grew past the build avgdl (per-field version of the
-    # kernel-global ub_scale)
+    # BM25 context: every list scores with ITS field's doclen lookup and
+    # live avgdl (a flat list's field is the unnamed ""), and ub_scale_f
+    # inflates its stored block maxima when that field's live avgdl grew
+    # past the build avgdl.  The kernels read all three off the list, so
+    # lists of different fields mix in one query (BM25F-lite).
     dl_fn: object = None
     avgdl_f: float | None = None
     ub_scale_f: float = 1.0
@@ -142,7 +142,7 @@ class TermList:
         decoded postings; the idf multiply happens here, per call.  Views
         that share ``_cache`` under another idf (boosts, idf=0 filter
         terms) therefore share the weights but never each other's scores.
-        ``id(dl)`` keys the doclen lookup: a local searcher passes one
+        ``id(dl)`` keys the doclen lookup: a local searcher attaches one
         doclens object per loaded generation, and a refresh builds new
         TermList objects (_LocalReader._load), so a cache entry can never
         pair stale weights with a live searcher.  Every returned array is
@@ -310,7 +310,7 @@ def _drop_deleted(docs: np.ndarray, deleted: np.ndarray | None) -> np.ndarray:
     return deleted[pos] != docs
 
 
-def _score_and(lists, dl, avgdl: float, k1: float, b: float, k: int, lo: int, hi: int,
+def _score_and(lists, k1: float, b: float, k: int, lo: int, hi: int,
                deleted: np.ndarray | None = None, return_all: bool = False,
                after: tuple[float, int] | None = None):
     """Galloping block-skip intersection, rarest list drives.
@@ -325,16 +325,14 @@ def _score_and(lists, dl, avgdl: float, k1: float, b: float, k: int, lo: int, hi
     docs, tfs = docs[keep], tfs[keep]
     if docs.size == 0:
         return docs, np.zeros(0, np.float64)
-    scores = _bm25(tfs, (lead.dl_fn or dl)(docs), lead.idf,
-                   lead.avgdl_f if lead.avgdl_f is not None else avgdl, k1, b)
+    scores = _bm25(tfs, lead.dl_fn(docs), lead.idf, lead.avgdl_f, k1, b)
     for L in lists[1:]:
         if docs.size == 0:
             break
         found, tfs = _probe(L, docs)
         docs, scores, tfs = docs[found], scores[found], tfs[found]
         if docs.size:
-            scores = scores + _bm25(tfs, (L.dl_fn or dl)(docs), L.idf,
-                                    L.avgdl_f if L.avgdl_f is not None else avgdl, k1, b)
+            scores = scores + _bm25(tfs, L.dl_fn(docs), L.idf, L.avgdl_f, k1, b)
     if after is not None and docs.size:
         docs, scores = _after_mask(docs, scores, after)
     if return_all:
@@ -363,8 +361,6 @@ def match_docs(lists, mode: str, lo: int, hi: int, deleted: np.ndarray | None = 
 
 def score_mixed(
     groups: list[list[tuple["TermList", list[int]]]],
-    dl,
-    avgdl: float,
     k1: float,
     b: float,
     k: int,
@@ -398,7 +394,7 @@ def score_mixed(
             if id(L) not in seen:
                 seen.add(id(L))
                 lists.append(L)
-    docs, scores = _score_and(lists, dl, avgdl, k1, b, k, lo, hi, deleted, return_all=True)
+    docs, scores = _score_and(lists, k1, b, k, lo, hi, deleted, return_all=True)
     if docs.size == 0:
         return docs, scores
     keep = np.ones(docs.size, dtype=bool)
@@ -636,8 +632,6 @@ def match_docs_boolean(
 def score_boolean(
     groups,
     negs,
-    dl,
-    avgdl: float,
     k1: float,
     b: float,
     k: int,
@@ -665,17 +659,12 @@ def score_boolean(
             m, t = _probe(L, cand)
             if not m.any():
                 continue
-            scores[m] += _bm25(
-                t[m], (L.dl_fn or dl)(cand[m]), L.idf,
-                L.avgdl_f if L.avgdl_f is not None else avgdl, k1, b,
-            )
+            scores[m] += _bm25(t[m], L.dl_fn(cand[m]), L.idf, L.avgdl_f, k1, b)
     return _topk_select(cand, scores, k)
 
 
 def score_phrase(
     term_offsets: list[tuple["TermList", list[int]]],
-    dl,
-    avgdl: float,
     k1: float,
     b: float,
     k: int,
@@ -688,11 +677,11 @@ def score_phrase(
     ``slop``: ordered-window proximity bound (:func:`_sloppy_keep`)."""
     g = PhraseGroup(term_offsets)
     g.slop = slop
-    return score_mixed([g], dl, avgdl, k1, b, k, lo, hi, deleted)
+    return score_mixed([g], k1, b, k, lo, hi, deleted)
 
 
-def _score_or(lists, dl, avgdl: float, k1: float, b: float, k: int, lo: int, hi: int,
-              deleted: np.ndarray | None = None, ub_scale: float = 1.0,
+def _score_or(lists, k1: float, b: float, k: int, lo: int, hi: int,
+              deleted: np.ndarray | None = None,
               after: tuple[float, int] | None = None, min_match: int = 1):
     """Block-max interval pruning (WAND family), exact top-k, scored in
     BATCHES of elementary intervals.
@@ -738,9 +727,13 @@ def _score_or(lists, dl, avgdl: float, k1: float, b: float, k: int, lo: int, hi:
     # per list: the block covering each interval (searchsorted puts
     # hi_edge past block blk-1's last doc, so block blk starts at or
     # before the interval; blk == n_blocks: past the list's end).  UB per
-    # interval = sum over lists of the covering block's idf*block_max_w;
-    # est = the interval's share of the covering block's postings (tf
-    # bytes: ≥ 1 per posting), the batch-size estimate
+    # interval = sum over lists of the covering block's idf*block_max_w,
+    # each scaled by its list's ub_scale_f (> 1 when the field's live
+    # avgdl grew past the build avgdl, deletes of short docs: w is
+    # monotone in avgdl with sup ratio avgdl'/avgdl, so inflating keeps
+    # stored block maxima a valid upper bound); est = the interval's share
+    # of the covering block's postings (tf bytes: ≥ 1 per posting), the
+    # batch-size estimate
     ub = np.zeros(n_int, dtype=np.float64)
     est = np.zeros(n_int, dtype=np.float64)
     width = (hi_edges - lo_edges + 1).astype(np.float64)
@@ -753,11 +746,6 @@ def _score_or(lists, dl, avgdl: float, k1: float, b: float, k: int, lo: int, hi:
         n_post = np.concatenate((L.block_tf_off[1:], [len(L.tf_bytes)]))[bv] - L.block_tf_off[bv]
         first = np.maximum(np.where(bv > 0, bl[bv - 1] + 1, 0), lo)
         est[valid] += n_post * width[valid] / (bl[bv] - first + 1)
-    # ub_scale > 1 when live avgdl grew past build-time avgdl (deletes of
-    # short docs): w is monotone in avgdl with sup ratio avgdl'/avgdl, so
-    # inflating keeps stored block maxima a valid upper bound
-    if ub_scale != 1.0:
-        ub *= ub_scale
 
     order = np.argsort(-ub, kind="stable")
     neg_ub = -ub[order]  # ascending
@@ -807,10 +795,7 @@ def _score_or(lists, dl, avgdl: float, k1: float, b: float, k: int, lo: int, hi:
         b_lo, b_hi = lo_edges[batch], hi_edges[batch]
         parts_d, parts_s = [], []
         for L in lists:
-            d, _t, _p, w = L.gather(
-                _blocks_of(L, b_hi),
-                bm25=(L.dl_fn or dl, L.avgdl_f if L.avgdl_f is not None else avgdl, k1, b), hi=hi,
-            )
+            d, _t, _p, w = L.gather(_blocks_of(L, b_hi), bm25=(L.dl_fn, L.avgdl_f, k1, b), hi=hi)
             idx = _ragged(np.searchsorted(d, b_lo, side="left"), np.searchsorted(d, b_hi, side="right"))
             if idx.size:
                 parts_d.append(d[idx])
@@ -849,8 +834,6 @@ def _score_or(lists, dl, avgdl: float, k1: float, b: float, k: int, lo: int, hi:
 
 def score_topk(
     lists: list[TermList],
-    dl,
-    avgdl: float,
     k1: float,
     b: float,
     k: int,
@@ -858,7 +841,6 @@ def score_topk(
     lo: int = 0,
     hi: int | None = None,
     deleted: np.ndarray | None = None,
-    ub_scale: float = 1.0,
     after: tuple[float, int] | None = None,
     min_match: int = 1,
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -873,8 +855,9 @@ def score_topk(
     rounding the engine returns, so a client can feed back the last row
     of the previous page verbatim.
 
-    ``lists`` must contain at most one TermList per term per range; ``dl``
-    is a callable mapping a doc_id array to doclens (see DenseDoclens).
+    ``lists`` must contain at most one TermList per term per range, each
+    carrying its BM25 context (``dl_fn``: a callable mapping a doc_id array
+    to doclens, see DenseDoclens; ``avgdl_f``; ``ub_scale_f``).
     ``deleted`` is a sorted tombstone array (docs excluded from results —
     the incremental-delete path, reference Indexer.java:365-436).
     In AND mode every query term must have a list present — the caller
@@ -886,6 +869,5 @@ def score_topk(
     if hi is None:
         hi = int(max(int(L.block_last_doc[-1]) for L in lists))
     if mode == "and":
-        return _score_and(lists, dl, avgdl, k1, b, k, lo, hi, deleted, after=after)
-    return _score_or(lists, dl, avgdl, k1, b, k, lo, hi, deleted, ub_scale, after=after,
-                     min_match=min_match)
+        return _score_and(lists, k1, b, k, lo, hi, deleted, after=after)
+    return _score_or(lists, k1, b, k, lo, hi, deleted, after=after, min_match=min_match)

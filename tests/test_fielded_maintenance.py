@@ -100,7 +100,7 @@ def test_fielded_add_then_search(spark, fidx_dir):
     import pyspark.sql.functions as F
 
     maint.delete_docs(spark, fidx_dir, [3, 10], tag="fd2")
-    meta_fields = list(load_meta(fidx_dir)["field_cols"])
+    meta_fields = load_meta(fidx_dir)["fields"]
     live = [r for r in CORPUS if r[0] not in (3, 10)]
     n_rows = len(CORPUS)
     # a record-sized add, then a bulk add over several salt groups
@@ -109,7 +109,7 @@ def test_fielded_add_then_search(spark, fidx_dir):
         maint.add_docs(spark, fidx_dir, new, tag=tag)
 
         # each new doc's text recovered from its sha256 (the field texts
-        # joined by \x1e, in the index meta's field order)
+        # joined by \x1e, in the fields' declared order, as the build hashes)
         by_sha = {
             hashlib.sha256("\x1e".join({"title": t, "body": b}[f] for f in meta_fields).encode()).hexdigest(): (t, b)
             for t, b in rows

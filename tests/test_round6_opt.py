@@ -238,7 +238,7 @@ def test_cached_block_arrays_are_read_only(spark, flat_idx_dir):
     local._rows_for(["table"])
     L = local._merged_list("table")
     meta = local.meta
-    _d, s = L.score_range(0, int(L.block_last_doc[0]), local._dl, meta["avgdl"], meta["k1"], meta["b"])
+    _d, s = L.score_range(0, int(L.block_last_doc[0]), L.dl_fn, meta["avgdl"], meta["k1"], meta["b"])
     assert s.size > 0
     with pytest.raises(ValueError):
         s *= 2.0
@@ -258,9 +258,9 @@ def test_local_searcher_passes_one_doclens_per_generation(spark, flat_idx_dir, m
     seen = []
     orig = wand.score_topk
 
-    def spy(lists, dl, *a, **kw):
-        seen.append(dl)  # the reference keeps every received object alive
-        return orig(lists, dl, *a, **kw)
+    def spy(lists, *a, **kw):
+        seen.append(lists[0].dl_fn)  # the reference keeps every received object alive
+        return orig(lists, *a, **kw)
 
     monkeypatch.setattr(wand, "score_topk", spy)
     local = InvertedIndex(spark, flat_idx_dir).open_local()

@@ -60,8 +60,10 @@ class Corpus:
         w = codec.bm25_weight(tfs, self.lens[p_doc], self.avgdl, K1, B)
         return codec.encode_many(p_doc, tfs, w, starts, block_size=BLOCK, positions=pos)
 
-    def term_list(self, t: int) -> wand.TermList:
-        """A fresh TermList of term t (empty caches)."""
+    def term_list(self, t: int, dl=None, avgdl: float | None = None, ub_scale: float = 1.0) -> wand.TermList:
+        """A fresh TermList of term t (empty caches) carrying the BM25
+        context the kernels read off it: the doclens and avgdl (the
+        corpus's unless given) and its stored block maxima's scale."""
         e = self._enc
         return wand.TermList(
             term=str(t), idf=wand.idf(N_DOCS, int(self.df[t])), df=int(self.df[t]),
@@ -69,6 +71,8 @@ class Corpus:
             block_last_doc=e["block_last_doc"][t], block_doc_off=e["block_doc_off"][t],
             block_tf_off=e["block_tf_off"][t], block_max_w=e["block_max_w"][t],
             pos_bytes=e["pos_bytes"][t], block_pos_off=e["block_pos_off"][t],
+            dl_fn=self.dl if dl is None else dl, avgdl_f=self.avgdl if avgdl is None else avgdl,
+            ub_scale_f=ub_scale,
         )
 
     def contrib(self, L: wand.TermList, avgdl: float | None = None) -> np.ndarray:
@@ -148,7 +152,7 @@ def test_or_topk_matches_brute_force_and_prunes(corpus, terms):
     lists = [corpus.term_list(t) for t in terms]
     member = np.any([corpus.has(L) for L in lists], axis=0)
     assert member.sum() > 4096  # more candidates than the buffer holds
-    got = wand.score_topk(lists, corpus.dl, corpus.avgdl, K1, B, 10, "or", 0, N_DOCS - 1)
+    got = wand.score_topk(lists, K1, B, 10, "or", 0, N_DOCS - 1)
     _assert_same(got, _expected(_sum(corpus, lists), member, 10))
     done, total = _decoded(lists)
     assert done < total  # θ pruned whole blocks
@@ -157,7 +161,7 @@ def test_or_topk_matches_brute_force_and_prunes(corpus, terms):
 def test_or_topk_k_larger_than_matches(corpus):
     lists = [corpus.term_list(t) for t in (8, 9)]
     member = np.any([corpus.has(L) for L in lists], axis=0)
-    got = wand.score_topk(lists, corpus.dl, corpus.avgdl, K1, B, N_DOCS, "or", 0, N_DOCS - 1)
+    got = wand.score_topk(lists, K1, B, N_DOCS, "or", 0, N_DOCS - 1)
     assert got[0].size == member.sum()
     _assert_same(got, _expected(_sum(corpus, lists), member, N_DOCS))
 
@@ -167,7 +171,7 @@ def test_or_topk_sub_range(corpus, lo, hi):
     lists = [corpus.term_list(t) for t in (0, 3, 6)]
     member = np.any([corpus.has(L) for L in lists], axis=0)
     member[:lo] = member[hi + 1:] = False
-    got = wand.score_topk(lists, corpus.dl, corpus.avgdl, K1, B, 25, "or", lo, hi)
+    got = wand.score_topk(lists, K1, B, 25, "or", lo, hi)
     _assert_same(got, _expected(_sum(corpus, lists), member, 25))
 
 
@@ -178,16 +182,17 @@ def test_or_topk_deleted_after_and_ub_scale(corpus):
     lists = [corpus.term_list(t) for t in terms]
     member = np.any([corpus.has(L) for L in lists], axis=0)
     score = _sum(corpus, lists)
-    p1 = wand.score_topk(lists, corpus.dl, corpus.avgdl, K1, B, 15, "or", 0, N_DOCS - 1, deleted=deleted)
+    p1 = wand.score_topk(lists, K1, B, 15, "or", 0, N_DOCS - 1, deleted=deleted)
     _assert_same(p1, _expected(score, member, 15, deleted=deleted))
     after = (float(p1[1][-1]), int(p1[0][-1]))
-    p2 = wand.score_topk(lists, corpus.dl, corpus.avgdl, K1, B, 15, "or", 0, N_DOCS - 1,
+    p2 = wand.score_topk(lists, K1, B, 15, "or", 0, N_DOCS - 1,
                          deleted=deleted, after=after)
     _assert_same(p2, _expected(score, member, 15, deleted=deleted, after=after))
-    # live avgdl grew 30 % past the build's: stored block maxima scaled up
+    # live avgdl grew 30 % past the build's: each list's stored block
+    # maxima scaled up
     big = corpus.avgdl * 1.3
-    lists = [corpus.term_list(t) for t in terms]
-    got = wand.score_topk(lists, corpus.dl, big, K1, B, 15, "or", 0, N_DOCS - 1, ub_scale=1.3)
+    lists = [corpus.term_list(t, avgdl=big, ub_scale=1.3) for t in terms]
+    got = wand.score_topk(lists, K1, B, 15, "or", 0, N_DOCS - 1)
     _assert_same(got, _expected(_sum(corpus, lists, big), member, 15))
 
 
@@ -195,7 +200,7 @@ def test_or_topk_deleted_after_and_ub_scale(corpus):
 def test_or_topk_min_match(corpus, mm):
     lists = [corpus.term_list(t) for t in (0, 1, 5, 8)]
     member = np.sum([corpus.has(L) for L in lists], axis=0) >= mm
-    got = wand.score_topk(lists, corpus.dl, corpus.avgdl, K1, B, 10, "or", 0, N_DOCS - 1, min_match=mm)
+    got = wand.score_topk(lists, K1, B, 10, "or", 0, N_DOCS - 1, min_match=mm)
     _assert_same(got, _expected(_sum(corpus, lists), member, 10))
     assert _decoded(lists)[0] < _decoded(lists)[1]
 
@@ -205,10 +210,10 @@ def test_and_topk_matches_brute_force(corpus, terms):
     lists = [corpus.term_list(t) for t in terms]
     member = np.all([corpus.has(L) for L in lists], axis=0)
     deleted = np.arange(0, N_DOCS, 11, dtype=np.int64)
-    got = wand.score_topk(lists, corpus.dl, corpus.avgdl, K1, B, 20, "and", 0, N_DOCS - 1, deleted=deleted)
+    got = wand.score_topk(lists, K1, B, 20, "and", 0, N_DOCS - 1, deleted=deleted)
     _assert_same(got, _expected(_sum(corpus, _by_df(lists)), member, 20, deleted=deleted))
     after = (float(got[1][-1]), int(got[0][-1]))
-    got2 = wand.score_topk(lists, corpus.dl, corpus.avgdl, K1, B, 20, "and", 0, N_DOCS - 1,
+    got2 = wand.score_topk(lists, K1, B, 20, "and", 0, N_DOCS - 1,
                            deleted=deleted, after=after)
     _assert_same(got2, _expected(_sum(corpus, _by_df(lists)), member, 20, deleted=deleted, after=after))
 
@@ -219,7 +224,7 @@ def test_phrase_matches_brute_force(corpus, terms, slop):
     offs: dict[int, list[int]] = {}
     for i, t in enumerate(terms):
         offs.setdefault(t, []).append(i)
-    got = wand.score_phrase([(tl[t], o) for t, o in offs.items()], corpus.dl, corpus.avgdl, K1, B,
+    got = wand.score_phrase([(tl[t], o) for t, o in offs.items()], K1, B,
                             30, 0, N_DOCS - 1, slop=slop)
     member = corpus.phrase(terms, slop)
     assert member.any()
@@ -232,7 +237,7 @@ def test_boolean_not_and_or_min_match(corpus):
     # (0 OR 5) AND 2 AND NOT 7
     groups = [[(L[0], []), (L[5], [])], [(L[2], [])]]
     negs = [[(L[7], [])]]
-    got = wand.score_boolean(groups, negs, corpus.dl, corpus.avgdl, K1, B, 20, 0, N_DOCS - 1)
+    got = wand.score_boolean(groups, negs, K1, B, 20, 0, N_DOCS - 1)
     member = (has[0] | has[5]) & has[2] & ~has[7]
     _assert_same(got, _expected(_sum(corpus, [L[0], L[5], L[2]]), member, 20))
     # at least 2 of the groups {1 OR 9}, {3}, {"0 4" phrase}, NOT 6
@@ -240,7 +245,7 @@ def test_boolean_not_and_or_min_match(corpus):
     groups = [[(L[1], []), (L[9], [])], [(L[3], [])], ph]
     negs = [[(L[6], [])]]
     deleted = np.arange(5, N_DOCS, 13, dtype=np.int64)
-    got = wand.score_boolean(groups, negs, corpus.dl, corpus.avgdl, K1, B, 20, 0, N_DOCS - 1,
+    got = wand.score_boolean(groups, negs, K1, B, 20, 0, N_DOCS - 1,
                              deleted=deleted, mode="or", min_match=2)
     n_groups = (has[1] | has[9]).astype(int) + has[3] + corpus.phrase([0, 4], 0)
     member = (n_groups >= 2) & ~has[6]
@@ -273,7 +278,7 @@ def test_doclens_ending_at_hi(corpus):
     dl = wand.DenseDoclens(0, corpus.lens[: hi + 1].astype(np.int32))
     member = corpus.has(L)
     member[hi + 1:] = False
-    got = wand.score_topk([corpus.term_list(9)], dl, corpus.avgdl, K1, B, 50, "or", 0, hi)
+    got = wand.score_topk([corpus.term_list(9, dl=dl)], K1, B, 50, "or", 0, hi)
     _assert_same(got, _expected(corpus.contrib(L), member, 50))
     d, s = corpus.term_list(9).score_range(hi - 200, hi, dl, corpus.avgdl, K1, B)
     assert d[-1] <= hi and np.array_equal(s, corpus.contrib(L)[d])
