@@ -184,18 +184,9 @@ def parse_mm(spec: int | str, n_optional: int) -> int:
 
 def _tf_in_list(L, doc_id: int) -> int:
     """Term frequency of ``doc_id`` in one (merged) posting list — a
-    block-index binary search + one lazily-decoded block (the same
-    point-lookup :meth:`wand.TermList.positions_for_doc` does for
-    positions).  0 when absent."""
-    bl = L.block_last_doc
-    i = int(np.searchsorted(bl, doc_id, side="left"))
-    if i >= len(bl):
-        return 0
-    docs, tfs = L.decode_block(i)
-    j = int(np.searchsorted(docs, doc_id))
-    if j < docs.size and docs[j] == doc_id:
-        return int(tfs[j])
-    return 0
+    point lookup in its decoded columns.  0 when absent."""
+    docs, tfs = L.decode_range(doc_id, doc_id)
+    return int(tfs[0]) if docs.size else 0
 
 
 def _mm_int(query, min_match) -> int:
@@ -2540,7 +2531,7 @@ class _LocalReader:
         self.meta = index.meta
         dl_rows, tomb_parts = index._side_tables()
         # one doclens object per packed column and loaded generation: the
-        # kernels' per-block weight caches key on it (wand.TermList.gather),
+        # kernels' weight columns key on it (wand.TermList._weights),
         # so every query of this generation must hand them the same one
         self._dls: dict[str, wand.DenseDoclens] = {}
         for i, c in enumerate(index._dl_cols):

@@ -4,25 +4,34 @@ Replaces the query execution the reference outsources to Solr/Lucene
 (helper/SolrSearchIndex.java:189-215; Solr 9's BM25 + WAND via
 minExactCount).  Two modes:
 
-* disjunctive (OR): block-max pruning in the WAND family — the doc space
-  is partitioned into elementary intervals by the union of all lists'
-  block boundaries; each interval's score upper bound is the sum of the
-  covering blocks' ``idf * block_max_w``.  Intervals are scored in
-  descending UB order, in BATCHES: a batch ends where UB falls below the
-  running top-k threshold θ or where it fills the candidate buffer, and
-  θ is checked per batch (it only moves when that buffer consolidates).
-  Once UB < θ every remaining interval (and its undecoded blocks) is
-  pruned.  Exact: a doc outside processed intervals cannot beat θ.
+* disjunctive (OR), two strategies with one answer:
+  - dense ranges (the lists' postings cover [lo, hi] densely, the
+    ``_DENSE_OR`` rule): one exhaustive pass — every posting in the range,
+    summed per doc by one ``np.bincount`` over the range's width.  Where
+    nearly every posting would be scored anyway, pruning saves less than
+    its per-batch Python costs;
+  - sparse ranges: block-max pruning in the WAND family — the doc space
+    is partitioned into elementary intervals by the union of all lists'
+    block boundaries; each interval's score upper bound is the sum of the
+    covering blocks' ``idf * block_max_w``.  Intervals are scored in
+    descending UB order, in BATCHES: a batch ends where UB falls below the
+    running top-k threshold θ or where it fills the candidate buffer, and
+    θ is checked per batch (it only moves when that buffer consolidates).
+    Once UB < θ every remaining interval (and its blocks) is pruned.
+    Exact: a doc outside processed intervals cannot beat θ.
 * conjunctive (AND): galloping block-skip intersection — iterate the
   rarest list's postings, skip other lists block-wise via searchsorted on
-  ``block_last_doc``, decode only touched blocks.
+  ``block_last_doc``, touch only the blocks a candidate can live in.
 
-Every kernel reaches postings through ONE touched-block gather
-(:meth:`TermList.gather`): a sorted array of block ids in, the blocks'
-concatenated docs / tfs / positions / cached weights out, then one
-``searchsorted`` per list — a handful of numpy calls per list and batch
-instead of one Python call per block or interval (the interpreter, not
-the arithmetic, set the kernels' latency).
+Every kernel reads postings through whole-list COLUMNS: a TermList decodes
+its docs and tfs once (one varint pass, one ``cumsum``: doc gaps are
+list-global), its positions on the first phrase touch, and one idf-free
+BM25 weight column per BM25 context, filled block by block as blocks are
+first scored.  :meth:`TermList.gather` cuts touched blocks out of them — a
+slice for consecutive blocks, one ragged index for scattered ones — so a
+kernel makes a handful of numpy calls per list and batch, never one Python
+call per block or interval (the interpreter, not the arithmetic, set the
+kernels' latency).
 
 These kernels run either on the driver (LocalSearcher, for p95 latency)
 or inside ``applyInPandas`` per doc-range (distributed scorer) — same
@@ -70,109 +79,135 @@ class TermList:
     dl_fn: object = None
     avgdl_f: float | None = None
     ub_scale_f: float = 1.0
+    # the decoded columns ("cols", "pos") and the weight columns (keyed by
+    # BM25 context); boosted views share it (dataclasses.replace(...,
+    # _cache=L._cache)), so a list is decoded once whatever its weight
     _cache: dict = field(default_factory=dict)
 
     def n_blocks(self) -> int:
         return len(self.block_last_doc)
 
+    def _columns(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """``(docs, tfs, starts)``: the whole list decoded once — one
+        varint pass and one ``cumsum`` (doc gaps are list-global, so block
+        offsets matter only for ``starts``) — plus each block's first
+        posting index, read off the varint terminators before
+        ``block_doc_off`` (``starts[nb]`` = the list's posting count)."""
+        c = self._cache.get("cols")
+        if c is None:
+            ends = np.flatnonzero(np.frombuffer(self.doc_bytes, np.uint8) < 0x80)
+            docs, tfs = codec.decode_postings(self.doc_bytes, self.tf_bytes, ends.size)
+            starts = np.append(np.searchsorted(ends, self.block_doc_off), ends.size)
+            for a in (docs, tfs, starts):
+                a.flags.writeable = False
+            c = self._cache["cols"] = (docs, tfs, starts)
+        return c
+
+    def _positions(self) -> tuple[np.ndarray, np.ndarray]:
+        """``(pcum, pos)``: the flat position column, decoded on the first
+        positional touch; posting j owns ``pos[pcum[j]:pcum[j + 1]]``."""
+        c = self._cache.get("pos")
+        if c is None:
+            _d, tfs, _s = self._columns()
+            pcum = np.concatenate(([0], np.cumsum(tfs)))
+            pos = codec.decode_positions_flat(self.pos_bytes, tfs)
+            pcum.flags.writeable = pos.flags.writeable = False
+            c = self._cache["pos"] = (pcum, pos)
+        return c
+
+    def _weights(self, blks: np.ndarray, bm25) -> np.ndarray:
+        """The idf-free BM25 weight column of one context ``bm25=(dl,
+        avgdl, k1, b)``, filled for every block of ``blks`` — one pass over
+        the blocks that miss.  Only asked-for blocks are filled: a range
+        kernel's doclens cover its range alone, and a range list can hold
+        postings past it."""
+        dl, avgdl, k1, b = bm25
+        key = ("w", id(dl), avgdl, k1, b)
+        ent = self._cache.get(key)
+        docs, tfs, starts = self._columns()
+        if ent is None:
+            ent = self._cache[key] = (np.zeros(docs.size), np.zeros(self.n_blocks(), dtype=bool))
+        col, filled = ent
+        miss = blks[~filled[blks]]
+        if miss.size:
+            idx = _ragged(starts[miss], starts[miss + 1])
+            col[idx] = codec.bm25_weight(tfs[idx], dl(docs[idx]), avgdl, k1, b)
+            filled[miss] = True
+        return col
+
     def decode_block(self, i: int) -> tuple[np.ndarray, np.ndarray]:
-        """(doc_ids, tfs) of block i; decodes lazily, caches (read-only:
-        every later caller shares the cached arrays)."""
-        hit = self._cache.get(i)
-        if hit is not None:
-            return hit
-        d_lo = int(self.block_doc_off[i])
-        d_hi = int(self.block_doc_off[i + 1]) if i + 1 < len(self.block_doc_off) else len(self.doc_bytes)
-        t_lo = int(self.block_tf_off[i])
-        t_hi = int(self.block_tf_off[i + 1]) if i + 1 < len(self.block_tf_off) else len(self.tf_bytes)
-        base = int(self.block_last_doc[i - 1]) if i > 0 else -1
-        gaps = codec.varint_decode(self.doc_bytes[d_lo:d_hi]).astype(np.int64)
-        docs = np.cumsum(gaps + 1) - 1 + (base + 1)
-        tfs = codec.varint_decode(self.tf_bytes[t_lo:t_hi]).astype(np.int64) + 1
-        docs.flags.writeable = tfs.flags.writeable = False
-        self._cache[i] = (docs, tfs)
-        return docs, tfs
+        """(doc_ids, tfs) of block i: read-only slices of the columns."""
+        docs, tfs, starts = self._columns()
+        j0, j1 = int(starts[i]), int(starts[i + 1])
+        return docs[j0:j1], tfs[j0:j1]
 
     def decode_block_positions(self, i: int) -> np.ndarray:
         """Flat absolute positions for block i's postings (posting j in the
         block owns slice ``[tfcum[j], tfcum[j+1])`` of the result)."""
-        hit = self._cache.get(("p", i))
-        if hit is not None:
-            return hit
-        _, tfs = self.decode_block(i)
-        p_lo = int(self.block_pos_off[i])
-        p_hi = int(self.block_pos_off[i + 1]) if i + 1 < len(self.block_pos_off) else len(self.pos_bytes)
-        pos = codec.decode_positions_flat(self.pos_bytes[p_lo:p_hi], tfs)
-        pos.flags.writeable = False
-        self._cache[("p", i)] = pos
-        return pos
+        starts = self._columns()[2]
+        pcum, pos = self._positions()
+        return pos[pcum[starts[i]]: pcum[starts[i + 1]]]
 
     def positions_for_doc(self, doc: int) -> np.ndarray | None:
         """Token positions of this term in ``doc`` (None if absent)."""
-        bl = self.block_last_doc
-        i = int(np.searchsorted(bl, doc, side="left"))
-        if i >= len(bl):
-            return None
-        docs, tfs = self.decode_block(i)
+        docs = self._columns()[0]
         j = int(np.searchsorted(docs, doc))
         if j >= docs.size or docs[j] != doc:
             return None
-        pos = self.decode_block_positions(i)
-        start = int(tfs[:j].sum())
-        return pos[start: start + int(tfs[j])]
+        pcum, pos = self._positions()
+        return pos[pcum[j]: pcum[j + 1]]
 
     def gather(self, blks, positions: bool = False, bm25=None, hi: int | None = None):
         """Touched-block gather: the postings of the sorted block ids
-        ``blks``, concatenated — ``(docs, tfs, pos, w)``.  Blocks tile the
-        doc space in order, so ``docs`` is sorted and one ``searchsorted``
-        pair slices any doc range out of it.  Every block goes through
-        :meth:`decode_block` (decoded once, cached).  ``positions=True``
-        adds the flat position stream (posting j owns the next ``tfs[j]``
-        entries), else ``pos`` is None.  ``bm25=(dl, avgdl, k1, b)`` adds
-        the raw BM25 contributions ``idf * w``, else ``w`` is None.
-        ``hi``: a last block whose postings all lie past ``hi`` is left
-        out — a block found by searching ``block_last_doc`` can start past
-        the doc range asked for, and a range kernel's doclens end there
-        (blocks never straddle a range boundary: they split at segment
-        boundaries, and ranges are whole segments).
+        ``blks``, concatenated — ``(docs, tfs, pos, w)`` — cut out of the
+        whole-list columns (:meth:`_columns`): a slice when the blocks are
+        consecutive, else one ragged index.  Blocks tile the doc space in
+        order, so ``docs`` is sorted and one ``searchsorted`` pair slices
+        any doc range out of it.  ``positions=True`` adds the flat position
+        stream (posting j owns the next ``tfs[j]`` entries), else ``pos``
+        is None.  ``bm25=(dl, avgdl, k1, b)`` adds the raw BM25
+        contributions ``idf * w``, else ``w`` is None.  ``hi``: a last
+        block whose postings all lie past ``hi`` is left out — a block
+        found by searching ``block_last_doc`` can start past the doc range
+        asked for, and a range kernel's doclens end there (blocks never
+        straddle a range boundary: they split at segment boundaries, and
+        ranges are whole segments).
 
         The weight w is idf-free and query-independent for a snapshot (tf,
-        doclen, avgdl, k1, b are fixed), so it is computed once per block,
-        in one pass over the blocks that miss, and cached beside the
-        decoded postings; the idf multiply happens here, per call.  Views
-        that share ``_cache`` under another idf (boosts, idf=0 filter
-        terms) therefore share the weights but never each other's scores.
-        ``id(dl)`` keys the doclen lookup: a local searcher attaches one
-        doclens object per loaded generation, and a refresh builds new
-        TermList objects (_LocalReader._load), so a cache entry can never
-        pair stale weights with a live searcher.  Every returned array is
-        READ-ONLY (a single block's are the cached arrays themselves)."""
-        ids = blks.tolist() if isinstance(blks, np.ndarray) else list(blks)
-        parts = [self.decode_block(i) for i in ids]
-        if parts and hi is not None and parts[-1][0][0] > hi:
-            ids, parts = ids[:-1], parts[:-1]
-        if not ids:
+        doclen, avgdl, k1, b are fixed), so it lives in one column per BM25
+        context (:meth:`_weights`); the idf multiply happens here, per
+        call.  Views that share ``_cache`` under another idf (boosts, idf=0
+        filter terms) therefore share the columns but never each other's
+        scores.  ``id(dl)`` keys the doclen lookup: a local searcher
+        attaches one doclens object per loaded generation, and a refresh
+        builds new TermList objects (_LocalReader._load), so a column can
+        never pair stale weights with a live searcher.  Every returned
+        array is READ-ONLY."""
+        docs, tfs, starts = self._columns()
+        blks = np.asarray(blks, dtype=np.int64)
+        if blks.size and hi is not None and docs[starts[blks[-1]]] > hi:
+            blks = blks[:-1]
+        if blks.size == 0:
             e = np.zeros(0, np.int64)
             return e, e, (e if positions else None), (np.zeros(0) if bm25 is not None else None)
-        docs = _cat([d for d, _ in parts])
-        tfs = _cat([t for _, t in parts])
-        pos = _cat([self.decode_block_positions(i) for i in ids]) if positions else None
-        w = None
+        b0, b1 = int(blks[0]), int(blks[-1])
+        if b1 - b0 + 1 == blks.size:
+            idx = slice(int(starts[b0]), int(starts[b1 + 1]))
+        else:
+            idx = _ragged(starts[blks], starts[blks + 1])
+        out = [docs[idx], tfs[idx], None, None]
+        if positions:
+            pcum, pos = self._positions()
+            if isinstance(idx, slice):
+                out[2] = pos[pcum[idx.start]: pcum[idx.stop]]
+            else:
+                out[2] = pos[_ragged(pcum[idx], pcum[idx + 1])]
         if bm25 is not None:
-            dl, avgdl, k1, b = bm25
-            keys = [("w", i, id(dl), avgdl, k1, b) for i in ids]
-            ws = [self._cache.get(key) for key in keys]
-            miss = [j for j, x in enumerate(ws) if x is None]
-            if miss:
-                md = np.concatenate([parts[j][0] for j in miss])
-                mw = codec.bm25_weight(np.concatenate([parts[j][1] for j in miss]), dl(md), avgdl, k1, b)
-                mw.flags.writeable = False
-                cuts = np.cumsum([parts[j][0].size for j in miss[:-1]], dtype=np.int64)
-                for j, piece in zip(miss, np.split(mw, cuts)):
-                    self._cache[keys[j]] = ws[j] = piece
-            w = self.idf * _cat(ws)
-            w.flags.writeable = False
-        return docs, tfs, pos, w
+            out[3] = self.idf * self._weights(blks, bm25)[idx]
+        for a in out:
+            if a is not None:
+                a.flags.writeable = False
+        return tuple(out)
 
     def _blocks_over(self, lo: int, hi: int) -> np.ndarray:
         """Ids of the blocks that can hold a doc in [lo, hi]."""
@@ -190,28 +225,18 @@ class TermList:
         return d[j0:j1], w[j0:j1]
 
     def decode_range(self, lo: int, hi: int) -> tuple[np.ndarray, np.ndarray]:
-        """Postings with lo <= doc_id <= hi, decoding only touched blocks
-        (read-only arrays)."""
-        d, t, _p, _w = self.gather(self._blocks_over(lo, hi))
-        j0, j1 = _span(d, lo, hi)
-        return d[j0:j1], t[j0:j1]
+        """Postings with lo <= doc_id <= hi (read-only slices)."""
+        docs, tfs, _s = self._columns()
+        j0, j1 = _span(docs, lo, hi)
+        return docs[j0:j1], tfs[j0:j1]
 
     def decode_range_with_positions(self, lo: int, hi: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """Like :meth:`decode_range` but also returns the flat positions of
         the surviving postings (compaction re-encode path)."""
-        d, t, pos, _w = self.gather(self._blocks_over(lo, hi), positions=True)
-        j0, j1 = _span(d, lo, hi)
-        p0 = int(t[:j0].sum())
-        return d[j0:j1], t[j0:j1], pos[p0: p0 + int(t[j0:j1].sum())]
-
-
-def _cat(parts: list[np.ndarray]) -> np.ndarray:
-    """One array from gathered block parts, read-only like the parts."""
-    if len(parts) == 1:
-        return parts[0]
-    out = np.concatenate(parts)
-    out.flags.writeable = False
-    return out
+        docs, tfs, _s = self._columns()
+        j0, j1 = _span(docs, lo, hi)
+        pcum, pos = self._positions()
+        return docs[j0:j1], tfs[j0:j1], pos[pcum[j0]: pcum[j1]]
 
 
 def _span(docs: np.ndarray, lo: int, hi: int) -> tuple[int, int]:
@@ -680,11 +705,87 @@ def score_phrase(
     return score_mixed([g], k1, b, k, lo, hi, deleted)
 
 
+# OR density rule: score [lo, hi] in one exhaustive pass when
+# _DENSE_OR * (the lists' postings inside it) >= its width.  Measured by
+# timing both strategies on every OR kernel call of a seeded query stream
+# (4 cores; perfbench's query_local mix and corpus generator):
+# * 4,000-doc local searcher: the dense pass won all 1,196 calls at every
+#   density (the interval loop cannot prune before its 4,096-doc buffer
+#   first fills);
+# * 16,384-doc ranges of a 200,000-doc index (a range kernel's width at
+#   4,096 docs per segment and merge fan-in 4): the dense pass won all
+#   5,150 calls;
+# * the 200,000-doc local searcher (one wide range): the dense pass won
+#   375 of the 472 calls with more postings than docs (3.8x less time in
+#   total); from there on θ prunes well and the loop won most calls,
+#   though with width/postings in [1, 4) it took about the same total
+#   time (399 vs 443 ms over 99 calls).
+# With 4, the rule's total was within 3 % of always taking the faster
+# strategy on the first two sets; no constant between 1 and 8 did better
+# on the third (all within 1 % of each other there).
+_DENSE_OR = 4
+
+
 def _score_or(lists, k1: float, b: float, k: int, lo: int, hi: int,
               deleted: np.ndarray | None = None,
               after: tuple[float, int] | None = None, min_match: int = 1):
+    """Exact OR top-k over [lo, hi] by one of two strategies with one
+    answer (same docs, bit-identical scores): the dense pass
+    (:func:`_or_dense`) when the lists' postings cover the range densely
+    (the :data:`_DENSE_OR` rule), else the block-max interval loop
+    (:func:`_or_intervals`).  Where nearly every posting would be scored
+    anyway, pruning saves less than its per-batch Python costs."""
+    if lo > hi:
+        e = np.zeros(0, np.int64)
+        return e, np.zeros(0, np.float64)
+    run = _or_dense if _dense(lists, lo, hi) else _or_intervals
+    return run(lists, k1, b, k, lo, hi, deleted, after, min_match)
+
+
+def _dense(lists, lo: int, hi: int) -> bool:
+    """The :data:`_DENSE_OR` rule over the lists' postings in [lo, hi]."""
+    n_in = 0
+    for L in lists:
+        j0, j1 = _span(L._columns()[0], lo, hi)
+        n_in += j1 - j0
+    return _DENSE_OR * n_in >= hi - lo + 1
+
+
+def _or_dense(lists, k1: float, b: float, k: int, lo: int, hi: int,
+              deleted: np.ndarray | None = None,
+              after: tuple[float, int] | None = None, min_match: int = 1):
+    """One exhaustive pass: every list's postings inside [lo, hi]
+    (:meth:`TermList.score_range`, a slice of its columns), concatenated
+    in list order, summed per doc by ONE ``np.bincount``
+    over the range's width — per doc the float sum runs in list order,
+    as in :func:`_or_intervals`, so scores are bit-identical.  Presence
+    and ``min_match`` come from the posting counts, not from a non-zero
+    sum, so a doc holding only weight-0 keys is a match at 0.0.  Then the
+    tombstone and cursor filters and one :func:`_topk_select`."""
+    parts = [L.score_range(lo, hi, L.dl_fn, L.avgdl_f, k1, b) for L in lists]
+    rel = np.concatenate([d for d, _w in parts]) - lo
+    width = hi - lo + 1
+    sums = np.bincount(rel, weights=np.concatenate([w for _d, w in parts]), minlength=width)
+    if min_match > 1:
+        docs = np.flatnonzero(np.bincount(rel, minlength=width) >= min_match)
+    else:
+        present = np.zeros(width, dtype=bool)
+        present[rel] = True
+        docs = np.flatnonzero(present)
+    scores = sums[docs]
+    docs += lo
+    keep = _drop_deleted(docs, deleted)
+    docs, scores = docs[keep], scores[keep]
+    if after is not None and docs.size:
+        docs, scores = _after_mask(docs, scores, after)
+    return _topk_select(docs, scores, k)
+
+
+def _or_intervals(lists, k1: float, b: float, k: int, lo: int, hi: int,
+                  deleted: np.ndarray | None = None,
+                  after: tuple[float, int] | None = None, min_match: int = 1):
     """Block-max interval pruning (WAND family), exact top-k, scored in
-    BATCHES of elementary intervals.
+    BATCHES of elementary intervals — the OR strategy for sparse ranges.
 
     Intervals are taken in descending UB order.  A batch ends at the first
     interval whose UB can no longer reach θ, or once it holds about as

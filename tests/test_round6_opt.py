@@ -232,8 +232,9 @@ def test_score_range_matches_decode_plus_bm25(spark, flat_idx_dir):
 
 
 def test_cached_block_arrays_are_read_only(spark, flat_idx_dir):
-    # score_range hands out views of the per-block weight cache: an
-    # in-place write must raise instead of corrupting later queries
+    # score_range and decode_block hand out arrays cut from the cached
+    # columns: an in-place write must raise instead of corrupting later
+    # queries
     local = InvertedIndex(spark, flat_idx_dir).open_local()
     local._rows_for(["table"])
     L = local._merged_list("table")
@@ -250,7 +251,7 @@ def test_cached_block_arrays_are_read_only(spark, flat_idx_dir):
 
 
 def test_local_searcher_passes_one_doclens_per_generation(spark, flat_idx_dir, monkeypatch):
-    # the kernels' per-block weight caches key on the doclens object, so a
+    # the kernels' weight columns key on the doclens object, so a
     # loaded generation must hand every query the same one (not a fresh
     # wrapper whose id only matches when CPython happens to reuse it)
     from goobi_viewer_indexer_spark.operators import wand

@@ -26,39 +26,57 @@ K1, B = 1.2, 0.75
 class Corpus:
     """Token arrays of N_DOCS docs.  Every seventh stretch of 1,000 docs is
     "hot": short docs rich in terms 0-3, so block maxima differ across the
-    doc space and block-max pruning has something to skip."""
+    doc space and block-max pruning has something to skip.  ``vocab`` and
+    ``zipf`` set the term distribution: the default gives lists that cover
+    the doc space densely, a long steep tail gives sparse ones."""
 
-    def __init__(self, seed: int):
+    def __init__(self, seed: int, vocab: int = VOCAB, zipf: float = 0.7):
         rng = np.random.default_rng(seed)
         hot = (np.arange(N_DOCS) // 1000) % 7 == 3
         self.lens = np.where(hot, rng.integers(4, 12, N_DOCS), rng.integers(20, 80, N_DOCS))
         doc_of = np.repeat(np.arange(N_DOCS), self.lens)
         self.pos_of = np.arange(doc_of.size) - np.repeat(np.cumsum(self.lens) - self.lens, self.lens)
-        cold_p = 1.0 / np.arange(1, VOCAB + 1) ** 0.7
+        cold_p = 1.0 / np.arange(1, vocab + 1) ** zipf
         hot_p = cold_p.copy()
         hot_p[:4] *= 3.0
         u = rng.random(doc_of.size)
         tok = np.searchsorted(np.cumsum(cold_p / cold_p.sum()), u)
         is_hot = hot[doc_of]
         tok[is_hot] = np.searchsorted(np.cumsum(hot_p / hot_p.sum()), u[is_hot])
-        self.tok = np.minimum(tok, VOCAB - 1)
+        self.tok = np.minimum(tok, vocab - 1)
         self.doc_of = doc_of
-        self.tf = np.zeros((VOCAB, N_DOCS), np.int64)
+        self.tf = np.zeros((vocab, N_DOCS), np.int64)
         np.add.at(self.tf, (self.tok, doc_of), 1)
         self.df = (self.tf > 0).sum(axis=1)
         self.avgdl = float(self.lens.mean())
         self.dl = wand.DenseDoclens(0, self.lens.astype(np.int32))
         self._enc = self._encode()
 
-    def _encode(self) -> dict:
-        order = np.lexsort((self.pos_of, self.doc_of, self.tok))
-        term, doc, pos = self.tok[order], self.doc_of[order], self.pos_of[order]
+    def _encode(self, lo: int = 0, hi: int = N_DOCS - 1) -> dict:
+        """Every term's list over docs [lo, hi], each starting with an
+        absolute first gap (one segment's encoding); ``terms`` maps a term
+        to its index in the per-term outputs."""
+        sel = (self.doc_of >= lo) & (self.doc_of <= hi)
+        order = np.lexsort((self.pos_of[sel], self.doc_of[sel], self.tok[sel]))
+        term, doc, pos = self.tok[sel][order], self.doc_of[sel][order], self.pos_of[sel][order]
         first = np.concatenate(([True], (term[1:] != term[:-1]) | (doc[1:] != doc[:-1])))
         p_term, p_doc = term[first], doc[first]
         tfs = self.tf[p_term, p_doc]
         starts = np.flatnonzero(np.concatenate(([True], p_term[1:] != p_term[:-1])))
         w = codec.bm25_weight(tfs, self.lens[p_doc], self.avgdl, K1, B)
-        return codec.encode_many(p_doc, tfs, w, starts, block_size=BLOCK, positions=pos)
+        enc = codec.encode_many(p_doc, tfs, w, starts, block_size=BLOCK, positions=pos)
+        enc["terms"] = {int(t): i for i, t in enumerate(p_term[starts])}
+        return enc
+
+    def segment_row(self, t: int, lo: int, hi: int) -> dict:
+        """Term t's postings row of the segment holding docs [lo, hi], in
+        the postings table's layout."""
+        e = self._encode(lo, hi)
+        i = e["terms"][t]
+        return {"term": str(t), "seg": 0, "df": int(e["counts"][i]), "cf": 0,
+                "min_doc": int(e["min_doc"][i]), "max_doc": int(e["max_doc"][i]),
+                **{c: e[c][i] for c in ("doc_bytes", "tf_bytes", "pos_bytes", "block_last_doc",
+                                        "block_doc_off", "block_tf_off", "block_pos_off", "block_max_w")}}
 
     def term_list(self, t: int, dl=None, avgdl: float | None = None, ub_scale: float = 1.0) -> wand.TermList:
         """A fresh TermList of term t (empty caches) carrying the BM25
@@ -142,8 +160,9 @@ def _assert_same(got, exp):
 
 
 def _decoded(lists) -> tuple[int, int]:
-    """(blocks decoded so far, blocks in total) over ``lists``."""
-    done = sum(sum(isinstance(key, int) for key in L._cache) for L in lists)
+    """(blocks scored so far, blocks in total) over ``lists``: the blocks
+    whose BM25 weights were filled in."""
+    done = sum(int(v[1].sum()) for L in lists for key, v in L._cache.items() if isinstance(key, tuple))
     return done, sum(L.n_blocks() for L in lists)
 
 
@@ -152,8 +171,12 @@ def test_or_topk_matches_brute_force_and_prunes(corpus, terms):
     lists = [corpus.term_list(t) for t in terms]
     member = np.any([corpus.has(L) for L in lists], axis=0)
     assert member.sum() > 4096  # more candidates than the buffer holds
-    got = wand.score_topk(lists, K1, B, 10, "or", 0, N_DOCS - 1)
-    _assert_same(got, _expected(_sum(corpus, lists), member, 10))
+    exp = _expected(_sum(corpus, lists), member, 10)
+    _assert_same(wand.score_topk(lists, K1, B, 10, "or", 0, N_DOCS - 1), exp)
+    # these lists are dense, so score_topk took the exhaustive pass; the
+    # interval loop on fresh lists gives the same answer and prunes
+    lists = [corpus.term_list(t) for t in terms]
+    _assert_same(wand._or_intervals(lists, K1, B, 10, 0, N_DOCS - 1), exp)
     done, total = _decoded(lists)
     assert done < total  # θ pruned whole blocks
 
@@ -200,8 +223,10 @@ def test_or_topk_deleted_after_and_ub_scale(corpus):
 def test_or_topk_min_match(corpus, mm):
     lists = [corpus.term_list(t) for t in (0, 1, 5, 8)]
     member = np.sum([corpus.has(L) for L in lists], axis=0) >= mm
-    got = wand.score_topk(lists, K1, B, 10, "or", 0, N_DOCS - 1, min_match=mm)
-    _assert_same(got, _expected(_sum(corpus, lists), member, 10))
+    exp = _expected(_sum(corpus, lists), member, 10)
+    _assert_same(wand.score_topk(lists, K1, B, 10, "or", 0, N_DOCS - 1, min_match=mm), exp)
+    lists = [corpus.term_list(t) for t in (0, 1, 5, 8)]
+    _assert_same(wand._or_intervals(lists, K1, B, 10, 0, N_DOCS - 1, min_match=mm), exp)
     assert _decoded(lists)[0] < _decoded(lists)[1]
 
 
@@ -320,3 +345,156 @@ def test_views_with_other_idf_share_weights_not_scores(corpus):
     assert np.array_equal(s_boost, (L.idf * 2.0) * codec.bm25_weight(L.decode_range(0, N_DOCS)[1],
                                                                       corpus.lens[d], corpus.avgdl, K1, B))
     assert not s_zero.any()
+
+
+@pytest.fixture(scope="module")
+def sparse_corpus():
+    """Same doc space, a steep 60-term tail: lists far sparser than it."""
+    return Corpus(seed=20261, vocab=60, zipf=1.5)
+
+
+# per density: the corpus, three scored terms and one weight-0 key.  Both
+# sets sit on their side of the density rule over the whole doc space
+OR_SETS = {"dense": ("corpus", [0, 4, 7], 9), "sparse": ("sparse_corpus", [40, 50, 59], 55)}
+
+
+def _or_lists(c, terms, zero, avgdl=None, ub_scale=1.0):
+    lists = [c.term_list(t, avgdl=avgdl, ub_scale=ub_scale) for t in terms]
+    Z = c.term_list(zero, avgdl=avgdl, ub_scale=ub_scale)
+    Z.idf = 0.0
+    return lists + [Z]
+
+
+def _or_all_agree(make, exp, k, lo=0, hi=N_DOCS - 1, **kw):
+    """score_topk, the dense pass and the interval loop, each on fresh
+    lists, all equal the brute force ``exp``."""
+    for run in (lambda L: wand.score_topk(L, K1, B, k, "or", lo, hi, **kw),
+                lambda L: wand._or_dense(L, K1, B, k, lo, hi, **kw),
+                lambda L: wand._or_intervals(L, K1, B, k, lo, hi, **kw)):
+        _assert_same(run(make()), exp)
+
+
+@pytest.mark.parametrize("k", [1, 10, 100])
+@pytest.mark.parametrize("mm", [1, 2, 3])
+@pytest.mark.parametrize("density", ["dense", "sparse"])
+def test_or_strategies_match_brute_force(request, density, mm, k):
+    name, terms, zero = OR_SETS[density]
+    c = request.getfixturevalue(name)
+    lists = _or_lists(c, terms, zero)
+    assert wand._dense(lists, 0, N_DOCS - 1) == (density == "dense")
+    member = np.sum([c.has(L) for L in lists], axis=0) >= mm
+    score = _sum(c, lists)
+    exp = _expected(score, member, k)
+    _or_all_agree(lambda: _or_lists(c, terms, zero), exp, k, min_match=mm)
+    # tombstones, then the next page after a cursor
+    deleted = np.sort(np.random.default_rng(mm * k).choice(N_DOCS, 2_500, replace=False)).astype(np.int64)
+    p1 = _expected(score, member, k, deleted=deleted)
+    _or_all_agree(lambda: _or_lists(c, terms, zero), p1, k, min_match=mm, deleted=deleted)
+    after = (float(p1[1][-1]), int(p1[0][-1]))
+    p2 = _expected(score, member, k, deleted=deleted, after=after)
+    _or_all_agree(lambda: _or_lists(c, terms, zero), p2, k, min_match=mm, deleted=deleted, after=after)
+    # live avgdl grew 30 % past the build's: stored block maxima scaled up
+    big = c.avgdl * 1.3
+    exp = _expected(_sum(c, lists, big), member, k)
+    _or_all_agree(lambda: _or_lists(c, terms, zero, avgdl=big, ub_scale=1.3), exp, k, min_match=mm)
+
+
+@pytest.mark.parametrize("density", ["dense", "sparse"])
+def test_or_weight_zero_key_alone_matches_at_zero(request, density):
+    # presence comes from posting counts, not from a non-zero sum: a doc
+    # holding only the weight-0 key is a match, scored 0.0
+    name, terms, zero = OR_SETS[density]
+    c = request.getfixturevalue(name)
+    lists = _or_lists(c, terms, zero)
+    only_zero = c.has(lists[-1]) & ~np.any([c.has(L) for L in lists[:-1]], axis=0)
+    lo = int(np.flatnonzero(only_zero)[0])
+    hi = lo + 40
+    member = np.any([c.has(L) for L in lists], axis=0)
+    member[:lo] = member[hi + 1:] = False
+    exp = _expected(_sum(c, lists), member, 100)
+    assert exp[0].size < 100 and lo in exp[0] and exp[1][-1] == 0.0
+    _or_all_agree(lambda: _or_lists(c, terms, zero), exp, 100, lo=lo, hi=hi)
+
+
+def _ref_block(L: wand.TermList, i: int):
+    """Block i of L decoded on its own, from its byte offsets and the
+    previous block's last doc: (docs, tfs, positions)."""
+    nb = L.n_blocks()
+
+    def cut(buf, off):
+        return buf[int(off[i]): int(off[i + 1]) if i + 1 < nb else len(buf)]
+
+    base = int(L.block_last_doc[i - 1]) if i else -1
+    docs = np.cumsum(codec.varint_decode(cut(L.doc_bytes, L.block_doc_off)).astype(np.int64) + 1) + base
+    tfs = codec.varint_decode(cut(L.tf_bytes, L.block_tf_off)).astype(np.int64) + 1
+    return docs, tfs, codec.decode_positions_flat(cut(L.pos_bytes, L.block_pos_off), tfs)
+
+
+def _assert_columns_match_blocks(L: wand.TermList):
+    from goobi_viewer_indexer_spark.operators.search import _tf_in_list
+
+    ref = [_ref_block(L, i) for i in range(L.n_blocks())]
+    for i, (d, t, p) in enumerate(ref):
+        assert np.array_equal(L.decode_block(i)[0], d) and np.array_equal(L.decode_block(i)[1], t)
+        assert np.array_equal(L.decode_block_positions(i), p)
+    docs = np.concatenate([d for d, _t, _p in ref])
+    tfs = np.concatenate([t for _d, t, _p in ref])
+    pos = np.concatenate([p for _d, _t, p in ref])
+    pcum = np.concatenate(([0], np.cumsum(tfs)))
+    for j in np.random.default_rng(5).choice(docs.size, 50):
+        d = int(docs[j])
+        assert np.array_equal(L.positions_for_doc(d), pos[pcum[j]: pcum[j + 1]])
+        assert _tf_in_list(L, d) == tfs[j]
+        if d + 1 not in docs:
+            assert L.positions_for_doc(d + 1) is None and _tf_in_list(L, d + 1) == 0
+    lo, hi = int(docs[docs.size // 3]) - 1, int(docs[2 * docs.size // 3]) + 1
+    m = (docs >= lo) & (docs <= hi)
+    rd, rt, rp = L.decode_range_with_positions(lo, hi)
+    assert np.array_equal(rd, docs[m]) and np.array_equal(rt, tfs[m])
+    assert np.array_equal(rp, pos[np.repeat(m, tfs)])
+    return docs, tfs, pos
+
+
+def test_columns_match_per_block_decode(corpus, sparse_corpus):
+    for c, terms in ((corpus, range(VOCAB)), (sparse_corpus, (40, 59))):
+        for t in terms:
+            _assert_columns_match_blocks(c.term_list(t))
+
+
+def test_columns_of_a_stitched_list(corpus):
+    # a heavy term of a local searcher is stitched from several segment
+    # rows (_LocalReader._merged_list: merge_group_pdf + _mk_termlist)
+    import pandas as pd
+
+    from goobi_viewer_indexer_spark.operators.search import _mk_termlist
+    from goobi_viewer_indexer_spark.operators.spimi import merge_group_pdf
+
+    t = 3
+    cuts = [(0, 6_999), (7_000, 7_777), (7_778, N_DOCS - 1)]
+    rows = [corpus.segment_row(t, lo, hi) for lo, hi in cuts]
+    whole = corpus.term_list(t)
+    L = _mk_termlist(merge_group_pdf(pd.DataFrame(rows)).iloc[0], whole.idf, int(corpus.df[t]))
+    assert not np.array_equal(L.block_last_doc, whole.block_last_doc)  # blocks split at the cuts
+    docs, tfs, pos = _assert_columns_match_blocks(L)
+    wd, wt, wp, _w = whole.gather(np.arange(whole.n_blocks()), positions=True)
+    assert np.array_equal(docs, wd) and np.array_equal(tfs, wt) and np.array_equal(pos, wp)
+
+
+def test_range_list_gather_stops_at_hi(corpus):
+    # a range list's last block found for hi can start past hi, where the
+    # range's doclens end: gather leaves it out and fills no weight there
+    L = corpus.term_list(9)
+    bl = L.block_last_doc
+    i = next(i for i in range(1, L.n_blocks()) if _ref_block(L, i)[0][0] > bl[i - 1] + 1)
+    hi = int(bl[i - 1]) + 1
+    dl = wand.DenseDoclens(0, corpus.lens[: hi + 1].astype(np.int32))
+    blks = L._blocks_over(0, hi)
+    assert blks[-1] == i
+    d, t, p, w = L.gather(blks, positions=True, bm25=(dl, corpus.avgdl, K1, B), hi=hi)
+    ref = [_ref_block(L, j) for j in range(i)]
+    assert np.array_equal(d, np.concatenate([x[0] for x in ref]))
+    assert np.array_equal(t, np.concatenate([x[1] for x in ref]))
+    assert np.array_equal(p, np.concatenate([x[2] for x in ref]))
+    assert np.array_equal(w, corpus.contrib(L)[d])
+    (filled,) = [v[1] for key, v in L._cache.items() if isinstance(key, tuple)]
+    assert filled[:i].all() and not filled[i:].any()
