@@ -1195,8 +1195,10 @@ class _SnapshotReader:
 
         self.spark = spark
         self.dir = index_dir
-        self.meta = load_meta(index_dir)
+        # rev before meta: a commit writes its live meta before its rev
+        # bump, so the meta read here is at least as new as ``rev``
         self.rev = _txn.current_rev(index_dir)
+        self.meta = load_meta(index_dir)
         layout = Layout.of_meta(self.meta)
         if layout.flat == self._fielded:
             raise ValueError(f"{index_dir} is not a {'fielded' if self._fielded else 'flat'} index")

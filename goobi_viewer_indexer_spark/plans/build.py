@@ -43,16 +43,20 @@ partials, so re-running it is idempotent.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import math
 import os
 import shutil
 import time
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goobi_viewer_indexer_spark.config import IndexConfig
+from goobi_viewer_indexer_spark.functions.tokenize import tokenize_series
 from goobi_viewer_indexer_spark.operators import spimi
 from goobi_viewer_indexer_spark.operators.spimi import Layout
 
@@ -76,13 +80,27 @@ def assign_sequential_ids(
     shuffle could re-evaluate differently — ADVICE r2), so callers whose
     upstream is not file-backed/deterministic pass ``barrier_dir``: the
     input is materialized to parquet first (a REAL barrier — both passes
-    then read the same immutable files)."""
+    then read the same immutable files).  The barrier also pins the
+    input's order: ``monotonically_increasing_id`` is ``(partition << 33) +
+    row index``, stamped before the write, so ids follow the input's
+    partition order however the files read back, and need no window."""
     from pyspark import StorageLevel
     from pyspark.sql.window import Window
 
     if barrier_dir is not None:
-        docs.write.mode("overwrite").parquet(barrier_dir)
-        docs = docs.sparkSession.read.parquet(barrier_dir)
+        docs.withColumn("_mid", F.monotonically_increasing_id()).write.mode("overwrite").parquet(barrier_dir)
+        staged = docs.sparkSession.read.parquet(barrier_dir)
+        part = F.shiftright("_mid", 33)
+        counts = {r["p"]: r["count"] for r in staged.groupBy(part.alias("p")).count().collect()}
+        if not counts:
+            return staged.drop("_mid").withColumn(id_col, F.lit(None).cast("long"))
+        offsets, acc = {}, int(base)
+        for pid in sorted(counts):
+            offsets[pid] = acc
+            acc += counts[pid]
+        omap = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
+        local = F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
+        return staged.withColumn(id_col, (omap[part] + local).cast("long")).drop("_mid")
     with_pid = (
         docs.withColumn("_pid", F.spark_partition_id())
         .withColumn("_mid", F.monotonically_increasing_id())
@@ -154,70 +172,77 @@ def load_meta(index_dir: str) -> dict:
         return json.load(f)
 
 
+def _doc_stats_pdf(pdf: pd.DataFrame, layout: Layout, docs_per_segment: int) -> pd.DataFrame:
+    """``(doc_id, *source columns)`` pandas rows → doc_stats rows ``(doc_id,
+    <doclen per field>, sha256, seg)``.  The NFC tokenizer is the same
+    chain as the stage-1 SPIMI encode, so doclen and tf/block-max can never
+    disagree on decomposed-Unicode input (ADVICE r1); sha256 hashes the
+    fields' raw texts joined with ``"\\x1e"`` (null → ``""``; input_hint's
+    per-row content invariant)."""
+    out = {"doc_id": pdf["doc_id"]}
+    for lc, col in zip(layout.doclen_cols, layout.fields.values()):
+        out[lc] = tokenize_series(pdf[col]).map(len).astype("int32")
+    texts = [pdf[col].fillna("") for col in layout.fields.values()]
+    content = texts[0] if len(texts) == 1 else texts[0].str.cat(texts[1:], sep="\x1e")
+    out["sha256"] = content.map(lambda s: hashlib.sha256(s.encode("utf-8")).hexdigest())
+    # a null id leaves seg null: the check after stage 0 reports it
+    seg = pdf["doc_id"] // docs_per_segment
+    out["seg"] = seg if seg.hasnans else seg.astype("int32")
+    return pd.DataFrame(out)
+
+
+def _doc_stats_ddl(layout: Layout) -> str:
+    return "doc_id long, " + "".join(f"{lc} int, " for lc in layout.doclen_cols) + "sha256 string, seg int"
+
+
 def _doc_stats_rows(docs: DataFrame, layout: Layout, docs_per_segment: int) -> DataFrame:
-    """``(doc_id, *source columns)`` → doc_stats rows ``(doc_id, <doclen
-    per field>, sha256, seg)`` in ONE mapInPandas pass: separate pandas
-    UDFs would each ship the text columns through Arrow, multiplying the
-    Python-transfer volume of the build's widest scan.  The NFC tokenizer
-    is the same chain as the stage-1 SPIMI encode, so doclen and
-    tf/block-max can never disagree on decomposed-Unicode input (ADVICE
-    r1); sha256 hashes the fields' raw texts joined with ``"\\x1e"`` (null
-    → ``""``; input_hint's per-row content invariant)."""
-    fields = layout.fields
-    len_cols = layout.doclen_cols
+    """:func:`_doc_stats_pdf` over a DataFrame in ONE mapInPandas pass:
+    separate pandas UDFs would each ship the text columns through Arrow,
+    multiplying the Python-transfer volume of the build's widest scan."""
 
     def gen(batches):
-        import hashlib
-
-        import pandas as pd
-
-        from goobi_viewer_indexer_spark.functions.tokenize import tokenize_series
-
         for pdf in batches:
-            out = {"doc_id": pdf["doc_id"]}
-            for lc, col in zip(len_cols, fields.values()):
-                out[lc] = tokenize_series(pdf[col]).map(len).astype("int32")
-            texts = [pdf[col].fillna("") for col in fields.values()]
-            content = texts[0] if len(texts) == 1 else texts[0].str.cat(texts[1:], sep="\x1e")
-            out["sha256"] = content.map(lambda s: hashlib.sha256(s.encode("utf-8")).hexdigest())
-            # a null id leaves seg null: the check after stage 0 reports it
-            seg = pdf["doc_id"] // docs_per_segment
-            out["seg"] = seg if seg.hasnans else seg.astype("int32")
-            yield pd.DataFrame(out)
+            yield _doc_stats_pdf(pdf, layout, docs_per_segment)
 
-    schema = "doc_id long, " + "".join(f"{lc} int, " for lc in len_cols) + "sha256 string, seg int"
-    return docs.select("doc_id", *layout.columns).mapInPandas(gen, schema)
+    return docs.select("doc_id", *layout.columns).mapInPandas(gen, _doc_stats_ddl(layout))
+
+
+def _pack_doclens_pdf(pdf: pd.DataFrame, layout: Layout, span: int) -> pd.DataFrame:
+    """One doc range's ``(rng, doc_id, <doclen per field>)`` rows → its
+    ``doclens_packed`` row ``(rng, base, <doclens per field>)``, each a flat
+    int32 array indexed by ``doc_id - base``."""
+    out_cols = layout.doclens_cols
+    if len(pdf) == 0:  # Spark 4 grouped-map may deliver empty groups
+        empty = {"rng": pd.Series([], dtype="int32"), "base": pd.Series([], dtype="int64")}
+        return pd.DataFrame({**empty, **{oc: pd.Series([], dtype=object) for oc in out_cols}})
+    pdf = pdf.sort_values("doc_id")
+    rng = int(pdf["rng"].iloc[0])
+    base = rng * span
+    ids = pdf["doc_id"].to_numpy(np.int64)
+    row = {"rng": [rng], "base": [base]}
+    for lc, oc in zip(layout.doclen_cols, out_cols):
+        arr = np.zeros(int(ids[-1]) - base + 1, dtype=np.int32)
+        arr[ids - base] = pdf[lc].to_numpy(np.int32)
+        row[oc] = [arr.tobytes()]
+    return pd.DataFrame(row)
+
+
+def _doclens_packed_ddl(layout: Layout) -> str:
+    return "rng int, base long, " + ", ".join(f"{oc} binary" for oc in layout.doclens_cols)
 
 
 def _pack_doclens(dstats: DataFrame, layout: Layout, span: int) -> DataFrame:
-    """doc_stats rows → ``doclens_packed``: per doc range (``span`` dense
-    ids) one row ``(rng, base, <doclens per field>)``, each a flat int32
-    array indexed by ``doc_id - base``."""
-    len_cols, out_cols = layout.doclen_cols, layout.doclens_cols
+    """doc_stats rows → ``doclens_packed``: :func:`_pack_doclens_pdf` per
+    doc range (``span`` dense ids)."""
 
-    def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
-        import pandas as pd
-
-        if len(pdf) == 0:  # Spark 4 grouped-map may deliver empty groups
-            empty = {"rng": pd.Series([], dtype="int32"), "base": pd.Series([], dtype="int64")}
-            return pd.DataFrame({**empty, **{oc: pd.Series([], dtype=object) for oc in out_cols}})
-        pdf = pdf.sort_values("doc_id")
-        rng = int(pdf["rng"].iloc[0])
-        base = rng * span
-        ids = pdf["doc_id"].to_numpy(np.int64)
-        row = {"rng": [rng], "base": [base]}
-        for lc, oc in zip(len_cols, out_cols):
-            arr = np.zeros(int(ids[-1]) - base + 1, dtype=np.int32)
-            arr[ids - base] = pdf[lc].to_numpy(np.int32)
-            row[oc] = [arr.tobytes()]
-        return pd.DataFrame(row)
+    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _pack_doclens_pdf(pdf, layout, span)
 
     return (
         dstats.withColumn("rng", (F.col("doc_id") / span).cast("int"))
-        .select("rng", "doc_id", *len_cols)
+        .select("rng", "doc_id", *layout.doclen_cols)
         .groupBy("rng")
-        .applyInPandas(pack, "rng int, base long, " + ", ".join(f"{oc} binary" for oc in out_cols))
+        .applyInPandas(pack, _doclens_packed_ddl(layout))
     )
 
 

@@ -73,7 +73,10 @@ def _table_rows(spark, d, name):
 def test_crash_before_term_stats_staging_replays(spark, tmp_path, monkeypatch):
     """Crash after the postings staging, before the term_stats staging:
     nothing is applied, and a replay of the same tag gives the index an
-    uninterrupted add gives."""
+    uninterrupted add gives.  Pinned to the Spark placement, whose writes
+    go through ``DataFrameWriter.parquet`` (the driver placement's crash
+    cases are in ``tests/test_commit_placement.py``)."""
+    monkeypatch.setattr(maint, "_DRIVER_COMMIT_BYTES", 0)
     crashed, clean = str(tmp_path / "crashed"), str(tmp_path / "clean")
     _build(spark, crashed, "flat")
     _build(spark, clean, "flat")
@@ -142,3 +145,17 @@ def test_open_local_reuses_the_open_collect(spark, tmp_path, kind):
     col = "doclen" if kind == "flat" else "doclen_body"
     dl = local._dls["doclens" if kind == "flat" else "doclens_body"]
     assert [int(dl.lens[r["doc_id"]]) for r in lens] == [r[col] for r in lens]
+
+
+@pytest.mark.parametrize("kind", ["flat", "fielded"])
+def test_spark_placed_commit_job_counts(spark, tmp_path, monkeypatch, kind):
+    """The Spark placement reads every commit table with a declared schema
+    (an inferred read costs a footer job): a small add runs 19 jobs and a
+    small delete 12 (22 and 13 with the inferred staged docs, ids and
+    postings reads)."""
+    d = str(tmp_path / kind)
+    _build(spark, d, kind)
+    monkeypatch.setattr(maint, "_DRIVER_COMMIT_BYTES", 0)
+    _, add_jobs = _jobs_of(spark, f"add-{kind}", lambda: maint.add_docs(spark, d, _new_docs(spark, kind), tag="a"))
+    _, del_jobs = _jobs_of(spark, f"del-{kind}", lambda: maint.delete_docs(spark, d, [3, 4, 61], tag="d"))
+    assert (len(add_jobs), len(del_jobs)) == (19, 12)

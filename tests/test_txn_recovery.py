@@ -1,7 +1,9 @@
 """Crash-atomicity of the maintenance commit protocol (plans/txn.py):
 replayed transactions are no-ops, and a crash between the tombstone append
 and the term_stats swap (or mid-add) heals via recover_pending with stats
-and postings mutually consistent (ADVICE r1 scenarios)."""
+and postings mutually consistent (ADVICE r1 scenarios).  Run on the Spark
+placement here and on the driver placement by
+``tests/test_txn_recovery_driver.py``."""
 
 from __future__ import annotations
 
@@ -20,6 +22,15 @@ from goobi_viewer_indexer_spark.plans import maintenance as maint
 from goobi_viewer_indexer_spark.plans import txn
 
 CFG = IndexConfig(docs_per_segment=16, merge_fanin=2, block_size=16, postings_buckets=4, compact_below_bytes=256)
+
+# the commit placement these cases run under: 0 pins them to the Spark
+# plans; tests/test_txn_recovery_driver.py reruns every case on the driver
+COMMIT_BYTES = 0
+
+
+@pytest.fixture(autouse=True)
+def placement(request, monkeypatch):
+    monkeypatch.setattr(maint, "_DRIVER_COMMIT_BYTES", request.module.COMMIT_BYTES)
 
 CORPUS = [
     (i, f"alpha beta gamma doc{i} " + ("shared token run " * (i % 4 + 1)))
