@@ -68,59 +68,39 @@ def assign_sequential_ids(
 ) -> DataFrame:
     """Dense ids ``base..base+n-1`` without a global single-partition window.
 
-    Same two-pass scheme as :func:`assign_doc_ids` but keyed on the input's
-    existing partitioning (no natural key needed): tag rows with their
-    partition id, count per partition (tiny driver-side cumsum), then offset
-    partition-local row_numbers.  Every partition is numbered in parallel —
-    the replacement for ``row_number().over(Window.orderBy(...))`` whose
-    empty partitionBy pulls the whole delta into ONE task.
+    Rows are stamped with ``monotonically_increasing_id``, which is
+    ``(partition << 33) + row index``: the counts per stamped partition give
+    each partition's offset (a tiny driver-side cumsum) and the low bits its
+    rows' local index, so every partition is numbered in parallel — the
+    replacement for ``row_number().over(Window.orderBy(...))`` whose empty
+    partitionBy pulls the whole delta into ONE task.
 
-    The counts pass and the id pass MUST see identical partition membership.
-    ``persist`` is best-effort (an evicted partition of a nondeterministic
-    shuffle could re-evaluate differently — ADVICE r2), so callers whose
-    upstream is not file-backed/deterministic pass ``barrier_dir``: the
-    input is materialized to parquet first (a REAL barrier — both passes
-    then read the same immutable files).  The barrier also pins the
-    input's order: ``monotonically_increasing_id`` is ``(partition << 33) +
-    row index``, stamped before the write, so ids follow the input's
-    partition order however the files read back, and need no window."""
+    The counts pass and the id pass MUST see the same stamps.  ``persist``
+    is best-effort (an evicted partition of a nondeterministic shuffle could
+    re-evaluate differently — ADVICE r2), so callers whose upstream is not
+    file-backed/deterministic pass ``barrier_dir``: the stamped input is
+    materialized to parquet first (a REAL barrier — both passes then read
+    the same immutable files, and ids follow the input's partition order
+    however the files read back)."""
     from pyspark import StorageLevel
-    from pyspark.sql.window import Window
 
+    stamped = docs.withColumn("_mid", F.monotonically_increasing_id())
     if barrier_dir is not None:
-        docs.withColumn("_mid", F.monotonically_increasing_id()).write.mode("overwrite").parquet(barrier_dir)
-        staged = docs.sparkSession.read.parquet(barrier_dir)
-        part = F.shiftright("_mid", 33)
-        counts = {r["p"]: r["count"] for r in staged.groupBy(part.alias("p")).count().collect()}
-        if not counts:
-            return staged.drop("_mid").withColumn(id_col, F.lit(None).cast("long"))
-        offsets, acc = {}, int(base)
-        for pid in sorted(counts):
-            offsets[pid] = acc
-            acc += counts[pid]
-        omap = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
-        local = F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
-        return staged.withColumn(id_col, (omap[part] + local).cast("long")).drop("_mid")
-    with_pid = (
-        docs.withColumn("_pid", F.spark_partition_id())
-        .withColumn("_mid", F.monotonically_increasing_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    counts = {r["_pid"]: r["cnt"] for r in with_pid.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
+        stamped.write.mode("overwrite").parquet(barrier_dir)
+        stamped = docs.sparkSession.read.parquet(barrier_dir)
+    else:
+        stamped = stamped.persist(StorageLevel.MEMORY_AND_DISK)
+    part = F.shiftright("_mid", 33)
+    counts = {r["p"]: r["count"] for r in stamped.groupBy(part.alias("p")).count().collect()}
+    if not counts:
+        return stamped.drop("_mid").withColumn(id_col, F.lit(None).cast("long"))
     offsets, acc = {}, int(base)
     for pid in sorted(counts):
         offsets[pid] = acc
         acc += counts[pid]
-    if not offsets:
-        return docs.withColumn(id_col, F.lit(None).cast("long"))
     omap = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
-    w = Window.partitionBy("_pid").orderBy("_mid")
-    out = (
-        with_pid.withColumn("_local", F.row_number().over(w) - 1)
-        .withColumn(id_col, (omap[F.col("_pid")] + F.col("_local")).cast("long"))
-        .drop("_pid", "_mid", "_local")
-    )
-    return out
+    local = F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
+    return stamped.withColumn(id_col, (omap[part] + local).cast("long")).drop("_mid")
 
 
 def assign_doc_ids(docs: DataFrame, key_cols: list[str]) -> DataFrame:

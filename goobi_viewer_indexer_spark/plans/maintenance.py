@@ -35,12 +35,15 @@ Each writes its staged dir with pyarrow, typed from the same Spark DDL,
 in the same hive ``bucket=N`` layout.  Above the budget the Spark plans
 run.  Both placements call the same module-level pandas bodies
 (``_doc_stats_pdf``, ``_pack_doclens_pdf``, ``spimi._build_segment_pdf`` /
-``_merge_sorted_runs``, ``_delete_deltas``, ``_sum_term_stats``) and the
-same intents, apply steps and commit, so a txn staged under one placement
-replays under the other.  :func:`delete_by_query` stages its matched id
-set with Spark (the matches never reach the driver) and then follows the
-rule, the staged ids counted in; :func:`live_corpus_stats` follows it
-over doc_stats and tombstones; compaction always runs on Spark.
+``_merge_sorted_runs``, ``_delete_deltas``) and the same intents, apply
+steps and commit, so a txn staged under one placement replays under the
+other.  The term_stats sum is Spark's grouped aggregate on the Spark
+placement and its Arrow twin, ``_sum_term_stats``, on the driver.  An
+add's delta is sized by one Spark aggregate before any of its rows is
+collected.  :func:`delete_by_query` stages its matched id set with Spark
+(the matches never reach the driver) and then follows the rule, the
+staged ids counted in; :func:`live_corpus_stats` follows it over
+doc_stats and tombstones; compaction always runs on Spark.
 
 Per-commit file bound: an append's delta merge runs inside the bucketed
 postings-write exchange, keyed ``(bucket, salt)``, so one add writes at
@@ -231,10 +234,11 @@ def _tombstoned_local(index_dir: str) -> np.ndarray:
 
 
 def _sum_term_stats(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Signed ``(term, df, cf, bucket)`` rows → one term_stats row per
-    term, df and cf summed; terms whose df reaches 0 are dropped.  Both
-    placements' term_stats sum (grouped in Arrow, which keys strings by
-    their bytes)."""
+    """The driver placement's :func:`_bucketed_term_stats`: signed
+    ``(term, df, cf, bucket)`` rows → one term_stats row per term, df and
+    cf summed; terms whose df reaches 0 are dropped.  Grouped in Arrow,
+    which keys strings by their bytes (pandas' string hashing truncates
+    the ``\x00`` of fielded term keys)."""
     rows = pdf[["term", "df", "cf", "bucket"]].astype({"df": np.int64, "cf": np.int64, "bucket": np.int32})
     t = pa.Table.from_pandas(rows, preserve_index=False)
     g = t.group_by(["bucket", "term"]).aggregate([("df", "sum"), ("cf", "sum")]).to_pandas()
@@ -248,17 +252,20 @@ def _sum_term_stats(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def _bucketed_term_stats(rows: DataFrame, nb: int) -> DataFrame:
-    """:func:`_sum_term_stats` per bucket, bucket-aligned for the
-    partitioned write: ONE exchange, ``repartition(bucket)``, grouped
-    inside it (the bucket is a function of the term, so bucket
-    partitioning already clusters every term) — each writer task owns
-    whole bucket directories, so a generation holds at most ``nb``
-    files."""
+    """Sum signed ``(term, df, cf, bucket)`` rows per term into a term_stats
+    frame that is bucket-aligned for the partitioned write: ONE exchange,
+    ``repartition(bucket)``, with the per-term sum grouped inside it (the
+    bucket is a function of the term, so bucket partitioning already
+    clusters every term) — each writer task owns whole bucket directories,
+    so a generation holds at most ``nb`` files.  Terms whose df reaches 0
+    are dropped."""
     return (
         rows.select("term", "df", "cf", "bucket")
         .repartition(nb, "bucket")
-        .groupBy("bucket")
-        .applyInPandas(_sum_term_stats, _TS_OUT + ", bucket int")
+        .groupBy("bucket", "term")
+        .agg(F.sum("df").cast("int").alias("df"), F.sum("cf").cast("long").alias("cf"))
+        .filter(F.col("df") > 0)
+        .select("term", "df", "cf", "bucket")
     )
 
 
@@ -299,18 +306,19 @@ def _live_stats(spark: SparkSession, index_dir: str, fields: list[str]) -> tuple
     return int(row["n"]), {f: float(row[c] or 0.0) for f, c in zip(fields, cols)}
 
 
-def _commit_with_live_meta(spark: SparkSession, index_dir: str, tag: str, appended: int = 0) -> dict:
-    """Write the live meta of the applied tables, then commit the txn:
-    everything a commit changes lands before its revision bump, so a
-    handle that sees the new ``rev`` also sees the new live stats."""
+def _commit_with_live_meta(spark: SparkSession, index_dir: str, tag: str, appended: int | None = None) -> dict:
+    """Write the live meta of the applied tables (and ``appended``, an add's
+    count derived from its intent, so a replay sets it rather than adding
+    twice), then commit the txn: everything a commit changes lands before
+    its revision bump, so a handle that sees the new ``rev`` also sees the
+    new live stats."""
     meta = load_meta(index_dir)
     layout = Layout.of_meta(meta)
     meta["n_docs_live"], avgdls_live = live_corpus_stats_fielded(spark, index_dir, layout.names)
     layout.put_avgdls(meta, avgdls_live, live=True)
-    if appended and not txn.step_applied(index_dir, tag, "meta"):
-        meta["appended"] = meta.get("appended", 0) + appended
+    if appended is not None:
+        meta["appended"] = appended
     _write_meta(index_dir, meta)
-    txn.mark_step_applied(index_dir, tag, "meta")
     txn.txn_commit(index_dir, tag)
     return meta
 
@@ -511,16 +519,15 @@ def _publish(index_dir: str, name: str, tmp: str) -> None:
 def _collect_delta(src: DataFrame, room: int, row_bytes: int) -> pd.DataFrame | None:
     """The add's delta rows if they fit in ``room`` bytes, else None.  A
     row is charged its text's UTF-8 bytes plus ``row_bytes`` (the
-    snapshot's bytes per doc_stats row), so one collect of at most
-    ``room // row_bytes + 1`` rows decides, and an over-budget delta
-    never reaches the driver in full."""
-    cap = min(room // row_bytes + 1, 2**31 - 1)  # Spark's limit takes an int
-    rows = src.limit(cap).collect()
-    if len(rows) >= cap:
+    snapshot's bytes per doc_stats row).  Spark sums that charge over at
+    most ``room // row_bytes + 1`` rows first, and the rows are collected
+    only if it fits, so an over-budget delta never reaches the driver."""
+    head = src.limit(min(room // row_bytes + 1, 2**31 - 1))  # Spark's limit takes an int
+    text = sum(F.coalesce(F.octet_length(c), F.lit(0)) for c in src.columns)
+    n, text_bytes = head.agg(F.count("*"), F.sum(text)).first()
+    if (text_bytes or 0) + n * row_bytes > room:
         return None
-    pdf = pd.DataFrame.from_records([tuple(r) for r in rows], columns=src.columns)
-    text = sum(len(v.encode("utf-8")) for c in src.columns for v in pdf[c] if v)
-    return pdf if text + len(rows) * row_bytes <= room else None
+    return pd.DataFrame.from_records([tuple(r) for r in head.collect()], columns=src.columns)
 
 
 def _row_bytes(index_dir: str) -> int:
@@ -562,10 +569,6 @@ def add_docs(
        postings, bucket-aligned.
 
     Then the three appends and the term_stats swap are applied."""
-    meta = load_meta(index_dir)
-    cfg = _cfg_from_meta(meta)
-    span = cfg.docs_per_segment * cfg.merge_fanin
-    nb = cfg.postings_buckets
     ds_path = txn.table_path(index_dir, "doc_stats")
     ts_path = txn.table_path(index_dir, "term_stats")
     if tag is None:
@@ -575,6 +578,10 @@ def add_docs(
     if recover:
         recover_pending(spark, index_dir, skip_tag=tag)
     txn.recover_dir(ts_path)
+    meta = load_meta(index_dir)
+    cfg = _cfg_from_meta(meta)
+    span = cfg.docs_per_segment * cfg.merge_fanin
+    nb = cfg.postings_buckets
 
     layout = Layout.of_meta(meta)
     cols = ["text"] if layout.flat else layout.columns
@@ -592,13 +599,15 @@ def add_docs(
         delta = _collect_delta(src, room, _row_bytes(index_dir)) if room > 0 else None
         driver = delta is not None
 
-    # ---- stage 0: pin base, stamp ids, stage the delta corpus ----
+    # ---- stage 0: pin base and the pre-commit ``appended``, stamp ids,
+    # stage the delta corpus ----
     if not txn.staging_complete(index_dir, tag, "docs"):
         if driver:
             cur_max = int(pc.max(_read_local(ds_path, _IDS_SCHEMA)["doc_id"]).as_py())
         else:
             cur_max = spark.read.schema(_IDS_SCHEMA).parquet(ds_path).agg(F.max("doc_id")).collect()[0][0]
-        intent = txn.txn_intent(index_dir, tag, {"op": "add", "base": (int(cur_max) // span + 1) * span})
+        intent = txn.txn_intent(index_dir, tag, {
+            "op": "add", "base": (int(cur_max) // span + 1) * span, "appended": meta.get("appended", 0)})
         if driver:
             ids = intent["base"] + np.arange(len(delta), dtype=np.int64)
             _write_local(docs_path, delta.assign(doc_id=ids, seg=ids // cfg.docs_per_segment), docs_ddl)
@@ -610,6 +619,8 @@ def add_docs(
                 src, base=intent["base"], barrier_dir=txn.staged_path(index_dir, tag, "docs_raw")
             ).withColumn("seg", (F.col("doc_id") / cfg.docs_per_segment).cast("int"))
             docs.write.mode("overwrite").parquet(docs_path)
+    else:
+        intent = txn.txn_intent(index_dir, tag, {})  # staged docs: reloads the pinned intent
     if driver:
         docs = _read_local(docs_path, docs_ddl).to_pandas()
         n_new = len(docs)
@@ -706,7 +717,9 @@ def add_docs(
     txn.apply_append(index_dir, tag, "doclens_packed", txn.table_path(index_dir, "doclens_packed"))
     txn.apply_append(index_dir, tag, "postings", txn.table_path(index_dir, "postings"))
     txn.apply_swap(index_dir, tag, "term_stats", ts_path)
-    return _commit_with_live_meta(spark, index_dir, tag, appended=n_new)
+    # an intent staged before ``appended`` was pinned counts on the live meta
+    appended = intent.get("appended", meta.get("appended", 0)) + n_new
+    return _commit_with_live_meta(spark, index_dir, tag, appended=appended)
 
 
 def recover_pending(spark: SparkSession, index_dir: str, skip_tag: str | None = None) -> list[str]:

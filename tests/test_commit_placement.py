@@ -211,6 +211,51 @@ def test_driver_crash_at_each_staged_step_replays(spark, built, clean, tmp_path,
 
 
 @pytest.mark.parametrize("budget", [DRIVER, SPARK], ids=["driver", "spark"])
+def test_add_crashed_after_its_meta_write_replays_exactly(spark, built, clean, tmp_path, monkeypatch, budget):
+    """An add that crashes after writing its live meta, before its commit,
+    replays to the index and ``appended`` an uninterrupted add leaves: the
+    count is set from the txn's intent, never added a second time."""
+    d = _copy(built, "flat", tmp_path / "idx")
+    real = maint._write_meta
+
+    def write_then_crash(index_dir, meta):
+        real(index_dir, meta)
+        raise RuntimeError("injected crash after the meta write")
+
+    monkeypatch.setattr(maint, "_DRIVER_COMMIT_BYTES", budget)
+    monkeypatch.setattr(maint, "_write_meta", write_then_crash)
+    with pytest.raises(RuntimeError, match="injected"):
+        _commit(spark, "flat", d, "add", "crash")
+    monkeypatch.setattr(maint, "_write_meta", real)
+    assert not txn.txn_done(d, "crash")
+    _commit(spark, "flat", d, "add", "crash")
+    assert _state(spark, d) == clean["add"]
+
+
+def test_over_budget_delta_of_few_rows_is_not_collected(spark, built, tmp_path, monkeypatch, local_writes):
+    """Three long docs that do not fit the budget take the Spark placement,
+    and no collect brings their text to the driver: the delta's size is
+    summed by Spark before any row is collected."""
+    d = _copy(built, "flat", tmp_path / "idx")
+    monkeypatch.setattr(maint, "_DRIVER_COMMIT_BYTES", maint._table_bytes(d, maint._ADD_READS) + 50_000)
+    long_text = " ".join(VOCAB * 1000)  # ~86 KB each, while the room admits ~800 doc_stats rows
+    collected = []
+    frame = type(spark.range(1))  # the session's DataFrame class
+    real = frame.collect
+
+    def spy(self):
+        rows = real(self)
+        collected.extend(v for r in rows for v in r if isinstance(v, str))
+        return rows
+
+    monkeypatch.setattr(frame, "collect", spy)
+    meta = maint.add_docs(spark, d, spark.createDataFrame(pd.DataFrame({"text": [long_text] * 3})), tag="big")
+    assert local_writes == []
+    assert max(map(len, collected), default=0) < 1000
+    assert meta["appended"] == 3 and meta["n_docs_live"] == len(_corpus()) + 3
+
+
+@pytest.mark.parametrize("budget", [DRIVER, SPARK], ids=["driver", "spark"])
 @pytest.mark.parametrize("op", ["add", "delete"])
 def test_live_meta_lands_before_the_rev_bump(spark, built, tmp_path, monkeypatch, op, budget):
     """A handle opened right after a commit's revision bump carries that
