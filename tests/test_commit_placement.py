@@ -238,7 +238,7 @@ def test_over_budget_delta_of_few_rows_is_not_collected(spark, built, tmp_path, 
     summed by Spark before any row is collected."""
     d = _copy(built, "flat", tmp_path / "idx")
     monkeypatch.setattr(maint, "_DRIVER_COMMIT_BYTES", maint._table_bytes(d, maint._ADD_READS) + 50_000)
-    long_text = " ".join(VOCAB * 1000)  # ~86 KB each, while the room admits ~800 doc_stats rows
+    long_text = " ".join(VOCAB * 1000)  # ~86 KB each; the room's row cap admits all three
     collected = []
     frame = type(spark.range(1))  # the session's DataFrame class
     real = frame.collect
