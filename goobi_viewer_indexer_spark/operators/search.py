@@ -44,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from goobi_viewer_indexer_spark.functions import codec
 from goobi_viewer_indexer_spark.functions.tokenize import tokenize_py
 from goobi_viewer_indexer_spark.operators import wand
 from goobi_viewer_indexer_spark.operators.spimi import (
@@ -1082,13 +1083,18 @@ class _Plan(NamedTuple):
       of ``(key, offsets)``; a group with offsets is a phrase, and a
       :class:`wand.PhraseGroup` carries its slop;
     * ``mm``: the OR modes' minimum-should-match — distinct terms for
-      ``or``, distinct groups for ``boolean_or``."""
+      ``or``, distinct groups for ``boolean_or``;
+    * ``tie``: the ``boolean`` modes' per-group combine — None sums the
+      distinct lists, a float scores each group as Lucene's
+      DisjunctionMax ``max + tie·(sum − max)`` (Solr edismax: one group
+      per query term over its ``qf`` keys, :meth:`FieldedIndex._dismax_plan`)."""
 
     weights: dict
     mode: str
     groups: list
     negs: list = []
     mm: int = 1
+    tie: float | None = None
 
 
 def _with_mm(plan: _Plan | None, min_match: int | str) -> _Plan | None:
@@ -1161,18 +1167,19 @@ def _execute(plan: _Plan, k1: float, b: float, k: int | None, lo: int, hi: int,
     if plan.mode in ("or", "and"):
         lists = [g[0][0] for g in plan.groups]
         if match:
-            return wand.match_docs(lists, plan.mode, lo, hi, deleted=deleted)
+            return wand.match_docs(lists, plan.mode, lo, hi, deleted=deleted, min_match=plan.mm)
         return wand.score_topk(lists, k1, b, k, plan.mode, lo, hi, deleted=deleted, after=after,
                                min_match=plan.mm)
     if match:
-        return wand.match_docs_boolean(plan.groups, plan.negs, lo, hi, deleted=deleted, mode=bool_mode)
+        return wand.match_docs_boolean(plan.groups, plan.negs, lo, hi, deleted=deleted, mode=bool_mode,
+                                       min_match=plan.mm)
     if plan.mode == "phrase":
         if len(plan.groups) == 1:
             g = plan.groups[0]
             return wand.score_phrase(g, k1, b, k, lo, hi, deleted=deleted, slop=g.slop)
         return wand.score_mixed(plan.groups, k1, b, k, lo, hi, deleted=deleted)
     return wand.score_boolean(plan.groups, plan.negs, k1, b, k, lo, hi, deleted=deleted,
-                              mode=bool_mode, min_match=plan.mm)
+                              mode=bool_mode, min_match=plan.mm, tie=plan.tie)
 
 
 class _SnapshotReader:
@@ -2645,6 +2652,30 @@ class _LocalReader:
         m[self._run(plan)] = True
         return m
 
+    def _alive(self, doc_id: int) -> bool:
+        """True when ``doc_id`` is a loaded, untombstoned doc."""
+        i = np.searchsorted(self.deleted, doc_id)
+        return 0 <= doc_id < self._n and not (i < self.deleted.size and self.deleted[i] == doc_id)
+
+    def _explain_row(self, key: str, doc_id: int, boost: float = 1.0) -> dict:
+        """One key's BM25 breakdown in ``doc_id``, the row every explain
+        reports: ``df``, ``tf`` (0 when the doc lacks the key or is not
+        :meth:`_alive`), the doc's ``doclen`` in the key's field, the raw
+        ``idf``, the saturation ``weight`` (``codec.bm25_weight`` with the
+        field's live avgdl) and ``contribution = (boost·idf)·weight`` —
+        the scoring kernels' float operation order."""
+        L = self._merged_list(key)
+        fdl = self._dl_by_field[field_of(key)].lens
+        dl = int(fdl[doc_id]) if 0 <= doc_id < fdl.size else 0
+        tf = _tf_in_list(L, doc_id) if L is not None and self._alive(doc_id) else 0
+        idf = float(L.idf) if L is not None else 0.0
+        w = 0.0
+        if tf:
+            w = float(codec.bm25_weight(np.array([tf], np.int64), np.array([dl], np.int64),
+                                        float(L.avgdl_f), self.meta["k1"], self.meta["b"])[0])
+        return {"df": int(L.df) if L is not None else 0, "tf": tf, "doclen": dl, "idf": idf,
+                "weight": w, "contribution": (boost * idf) * w}
+
 
 class LocalSearcher(_LocalReader):
     """Driver-side searcher over a flat :class:`InvertedIndex` (see
@@ -2704,39 +2735,19 @@ class LocalSearcher(_LocalReader):
             raise ValueError("explain supports mode='and'|'or'")
         terms = sorted(set(query if isinstance(query, list) else tokenize_py(query)))
         self._rows_for(terms)
-        k1, b = self.meta["k1"], self.meta["b"]
-        avgdl = self.index._avgdls[""]
-        in_range = 0 <= doc_id < self.doclens.size
-        dl = int(self.doclens[doc_id]) if in_range else 0
-        alive = in_range and not (
-            self.deleted.size and np.searchsorted(self.deleted, doc_id) < self.deleted.size
-            and self.deleted[np.searchsorted(self.deleted, doc_id)] == doc_id
-        )
         rows = []
         total = 0.0
-        n_present = 0
         for t in terms:
-            L = self._merged_list(t)
-            tf = _tf_in_list(L, doc_id) if (L is not None and alive) else 0
-            idf = float(L.idf) if L is not None else 0.0
-            if tf:
-                from goobi_viewer_indexer_spark.functions import codec as _codec
-
-                w = float(_codec.bm25_weight(
-                    np.array([tf], np.int64), np.array([dl], np.int64), avgdl, k1, b)[0])
-                n_present += 1
-            else:
-                w = 0.0
-            contribution = idf * w
-            total += contribution
-            rows.append({
-                "term": t, "df": int(L.df) if L is not None else 0, "tf": tf,
-                "idf": idf, "weight": w, "contribution": contribution,
-            })
-        matched = alive and (n_present == len(terms) if mode == "and" else n_present > 0)
+            r = self._explain_row(t, doc_id)
+            del r["doclen"]
+            rows.append({"term": t, **r})
+            total += r["contribution"]
+        n_present = sum(1 for r in rows if r["tf"])
+        matched = self._alive(doc_id) and (n_present == len(terms) if mode == "and" else n_present > 0)
         return {
             "doc_id": int(doc_id), "mode": mode, "matched": matched,
-            "doclen": dl, "avgdl": float(avgdl),
+            "doclen": int(self.doclens[doc_id]) if 0 <= doc_id < self.doclens.size else 0,
+            "avgdl": float(self.index._avgdls[""]),
             "score": wand.round6f(total) if matched else 0.0,
             "terms": rows,
         }
@@ -2985,6 +2996,32 @@ def _fielded_query_parts(
     return _Plan(tagged_weights, mode, [[(t, [])] for t in tagged_weights])
 
 
+def _fold_pf(toks: list[str], bq, pf, ps: int, pf2, pf3, ps2: int | None, ps3: int | None):
+    """Fold edismax ``pf``/``ps`` and ``pf2``/``pf3`` into ``bq`` clause
+    strings (see :meth:`FieldedIndex.search`): over the query's positive
+    plain tokens ``toks`` in order, ``field:"tok …"~ps^boost`` per phrase
+    field — the whole query for ``pf``, every consecutive 2- / 3-token
+    window for ``pf2`` / ``pf3`` (Solr's bigram/trigram phrase fields;
+    each window is its own additive clause, so partial phrase matches
+    boost too; ``ps2``/``ps3`` default to ``ps`` like Solr).  A query
+    shorter than the window (or than two tokens) skips it, like Solr.
+    Returns the merged bq (str | list), ``bq`` itself when nothing folds."""
+    for pfx, psx, gram in ((pf, ps, None), (pf2, ps if ps2 is None else ps2, 2),
+                           (pf3, ps if ps3 is None else ps3, 3)):
+        if pfx is None or len(toks) < (gram or 2):
+            continue
+        grams = [toks] if gram is None else [toks[i:i + gram] for i in range(len(toks) - gram + 1)]
+        sl = f"~{int(psx)}" if psx else ""
+        fields = {pfx: 1.0} if isinstance(pfx, str) else dict(pfx)
+        out = [f'{f}:"{" ".join(g)}"{sl}' + (f"^{w}" if w != 1.0 else "")
+               for f, w in fields.items() for g in grams]
+        if bq is None:
+            bq = out if len(out) > 1 else out[0]
+        else:
+            bq = ([bq] if isinstance(bq, str) else list(bq)) + out
+    return bq
+
+
 class FieldedIndex(_SnapshotReader):
     """Query engine over a multi-field index (plans/build.build_index_fielded).
 
@@ -3230,52 +3267,6 @@ class FieldedIndex(_SnapshotReader):
             )
         return scored
 
-    def _fold_pf(self, query, pf, ps: int, bq, gram: int | None = None):
-        """Normalize edismax ``pf``/``ps`` (and ``pf2``/``pf3`` via
-        ``gram``) into bq clause strings (see :meth:`search`): the
-        query's positive plain tokens in order form
-        ``field:"tok …"~ps^boost`` per pf field — the whole query when
-        ``gram`` is None, else every consecutive ``gram``-token window
-        (Solr's bigram/trigram phrase fields; each window is its own
-        additive clause, so partial phrase matches boost too).  Returns
-        the merged bq (str | list) or the original when pf doesn't
-        apply."""
-        if isinstance(query, str):
-            clauses, _m = parse_fielded_clauses(query)
-            toks = [
-                t
-                for c in clauses
-                if not (c.neg or c.quoted or c.group or c.prefix or c.fuzzy or c.is_range)
-                for t in c.toks
-            ]
-        else:
-            first = next(iter(query), None)
-            if isinstance(first, FieldedClause):
-                toks = [
-                    t
-                    for c in query
-                    if not (c.neg or c.quoted or c.group or c.prefix or c.fuzzy or c.is_range)
-                    for t in c.toks
-                ]
-            else:
-                toks = [t for _f, t in query]
-        if len(toks) < max(2, gram or 2):
-            return bq
-        fields = {pf: 1.0} if isinstance(pf, str) else dict(pf)
-        if gram is None:
-            grams = [toks]
-        else:
-            grams = [toks[i:i + gram] for i in range(len(toks) - gram + 1)]
-        sl = f"~{int(ps)}" if ps else ""
-        clauses_out = [
-            f'{f}:"{" ".join(g)}"{sl}' + (f"^{w}" if w != 1.0 else "")
-            for f, w in fields.items()
-            for g in grams
-        ]
-        if bq is None:
-            return clauses_out if len(clauses_out) > 1 else clauses_out[0]
-        return ([bq] if isinstance(bq, str) else list(bq)) + clauses_out
-
     def _mids_fq(self, query, mode, fq) -> DataFrame:
         """match set of ``query`` intersected with the ``fq`` filter set
         (Solr component semantics: facets/stats apply to q ∧ fq).
@@ -3513,16 +3504,16 @@ class FieldedIndex(_SnapshotReader):
         ):
             raise ValueError("fielded min_match= supports the plain top-k path only")
         if pf is not None or pf2 is not None or pf3 is not None:
-            # Solr edismax pf/pf2/pf3: whole-query / bigram / trigram
-            # phrase fields, each folding to implicit bq phrase clauses;
-            # ps2/ps3 default to ps like Solr
-            if pf is not None:
-                bq = self._fold_pf(query, pf, ps, bq)
-            if pf2 is not None:
-                bq = self._fold_pf(query, pf2, ps if ps2 is None else ps2, bq, gram=2)
-            if pf3 is not None:
-                bq = self._fold_pf(query, pf3, ps if ps3 is None else ps3, bq, gram=3)
-            pf = None
+            # Solr edismax pf/pf2/pf3 fold into implicit bq phrase clauses
+            # over the query's positive plain tokens, in query order
+            clauses = parse_fielded_clauses(query)[0] if isinstance(query, str) else list(query)
+            if clauses and not isinstance(clauses[0], FieldedClause):
+                toks = [t for _f, t in clauses]
+            else:
+                toks = [t for c in clauses
+                        if not (c.neg or c.quoted or c.group or c.prefix or c.fuzzy or c.is_range)
+                        for t in c.toks]
+            bq = _fold_pf(toks, bq, pf, ps, pf2, pf3, ps2, ps3)
         if bq is not None and (sort is not None or after is not None):
             raise ValueError("bq=/pf= compose with fl/fq/offset/bf/boost, not sort/after")
         if bf is not None or boost is not None:
@@ -3622,6 +3613,30 @@ class FieldedIndex(_SnapshotReader):
             )
         return self._plan_frame(self._plan(query, mode, boosts, min_match), k)
 
+    def _dismax_plan(self, query, qf: dict[str, float], tie: float = 0.0,
+                     min_match: int | str = 1) -> _Plan | None:
+        """The edismax main query (``defType=edismax&qf=...&tie=``) as THE
+        plan: ``boolean_or`` with one group per distinct query term, in
+        sorted term order, holding that term's ``f\\x00t`` keys in ``qf``
+        order, each weighted by its field's ``qf`` boost; ``tie`` is the
+        per-group DisjunctionMax combine (:class:`_Plan`) and ``mm``
+        counts distinct matched terms (full mm grammar, :func:`_with_mm`).
+        Raises on an empty ``qf``, an unknown field or ``tie`` outside
+        [0, 1]; None when the query has no term."""
+        if not qf:
+            raise ValueError("qf must name at least one field")
+        for f in qf:
+            if f not in self.fields:
+                raise ValueError(f"unknown field {f!r} (have {self.fields})")
+        if not 0.0 <= tie <= 1.0:
+            raise ValueError("tie must be in [0, 1]")
+        terms = sorted(set(query if isinstance(query, list) else tokenize_py(query)))
+        if not terms:
+            return None
+        weights = {tag_term(f, t): w for t in terms for f, w in qf.items()}
+        groups = [[(tag_term(f, t), []) for f in qf] for t in terms]
+        return _with_mm(_Plan(weights, "boolean_or", groups, tie=float(tie)), min_match)
+
     def search_dismax(
         self,
         query: str | list[str],
@@ -3651,23 +3666,18 @@ class FieldedIndex(_SnapshotReader):
         mode='or', boosts=qf)``, tested); Solr's common 0<tie<1 blends.
         ``min_match``: distinct matched TERMS required (full mm grammar).
 
-        Execution: postings for the |terms|·|qf| tagged lists fan out
-        range-parallel through ONE ``applyInPandas``; because dense doc
-        ids put every doc in exactly ONE range, the whole combine — per
-        (doc, term) max/sum over fields (``np.maximum.at``/``np.add.at``
-        on range-local dense arrays), the dismax blend, the per-doc sum
-        and the mm term count — runs INSIDE the kernel, so the stage
-        emits final (doc_id, raw, nt) rows and the plan has ZERO
-        aggregation shuffles: scan → explode ranges → broadcast doclens
-        join → kernel → filter(nt ≥ mm) → orderBy+limit =
-        TakeOrderedAndProject (plan-asserted in pytest).  The nonlinear
-        per-term max is exactly what the additive WAND kernels can't
-        express — and range-locality is what lets Spark never shuffle a
-        matched row for it.
+        Execution: the query is one plan (:meth:`_dismax_plan`) — a
+        ``boolean_or`` group per term over its qf keys, combined per group
+        by ``tie`` inside ``wand.score_boolean`` — run like every other
+        query through :meth:`_plan_frame`: range-parallel through ONE
+        ``applyInPandas``, and since dense doc ids put every doc in
+        exactly one range, each range emits final scores and the plan has
+        ZERO aggregation shuffles: scan → explode ranges → kernel →
+        orderBy+limit = TakeOrderedAndProject (plan-asserted in pytest).
 
         ``fq``: Solr filter queries (full fielded fq surface, see
         :meth:`fq_ids`) — membership only, never scores; one semi-join
-        on the per-doc kernel output (fq drops docs whole, so nt term
+        on the total-recall score frame (fq drops docs whole, so mm term
         counts are unaffected).
 
         ``bq``/``bf``/``boost``/``fl``: the rest of the edismax contract
@@ -3679,44 +3689,19 @@ class FieldedIndex(_SnapshotReader):
         projecting stored fields onto the top-k; ONE
         TakeOrderedAndProject reduce either way.  ``pf``/``ps`` (phrase
         boost fields) fold into implicit ``f:"query tokens"~ps^boost``
-        bq clauses exactly as in :meth:`search`; ``pf2``/``pf3`` fold
-        every consecutive bigram/trigram window the same way (``ps2``/
-        ``ps3`` default to ``ps`` like Solr); too-short queries skip
-        like Solr."""
-        if not qf:
-            raise ValueError("qf must name at least one field")
-        for f in qf:
-            if f not in self.fields:
-                raise ValueError(f"unknown field {f!r} (have {self.fields})")
-        if not 0.0 <= tie <= 1.0:
-            raise ValueError("tie must be in [0, 1]")
-        ordered = list(query) if isinstance(query, list) else tokenize_py(query)
-        for pfx, psx, gram in ((pf, ps, None), (pf2, ps if ps2 is None else ps2, 2),
-                               (pf3, ps if ps3 is None else ps3, 3)):
-            if pfx is None or len(ordered) < max(2, gram or 2):
-                continue
-            pfd = {pfx: 1.0} if isinstance(pfx, str) else dict(pfx)
-            grams = [ordered] if gram is None else [
-                ordered[i:i + gram] for i in range(len(ordered) - gram + 1)]
-            sl = f"~{int(psx)}" if psx else ""
-            extra = [f'{f}:"{" ".join(g)}"{sl}' + (f"^{w}" if w != 1.0 else "")
-                     for f, w in pfd.items() for g in grams]
-            bq = extra if bq is None else ([bq] if isinstance(bq, str) else list(bq)) + extra
-        terms = sorted(set(ordered))
-        mm = parse_mm(min_match, len(terms)) if isinstance(min_match, str) else min_match
+        bq clauses exactly as in :meth:`search` (:func:`_fold_pf`);
+        ``pf2``/``pf3`` fold every consecutive bigram/trigram window the
+        same way (``ps2``/``ps3`` default to ``ps`` like Solr); too-short
+        queries skip like Solr."""
+        plan = self._dismax_plan(query, qf, tie, min_match)
+        toks = list(query) if isinstance(query, list) else tokenize_py(query)
+        bq = _fold_pf(toks, bq, pf, ps, pf2, pf3, ps2, ps3)
         k = min(k, self.n_docs)
-        empty = _empty_df(self.spark, "doc_id long, score double")
-        per_doc = self._dismax_per_doc(terms, qf, tie)
-        if per_doc is None:
-            return empty
+        if fq is None and bq is None and bf is None and boost is None and fl is None:
+            return self._plan_frame(plan, k)
+        scored = self._plan_frame(plan)
         if fq is not None:
-            # fq filters docs whole, so joining the per-doc rows cannot
-            # skew nt term counts
-            per_doc = per_doc.join(self.fq_ids(fq), "doc_id", "left_semi")
-        scored = (
-            per_doc.filter(F.col("nt") >= mm)
-            .select("doc_id", F.round("raw", 6).alias("score"))
-        )
+            scored = scored.join(self.fq_ids(fq), "doc_id", "left_semi")
         if bq is not None:
             scored = self._apply_bq(scored, bq)
         if bf is not None or boost is not None:
@@ -3733,65 +3718,6 @@ class FieldedIndex(_SnapshotReader):
             )
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
-    def _dismax_per_doc(self, terms: list[str], qf: dict[str, float],
-                        tie: float) -> DataFrame | None:
-        """The dismax range kernel shared by :meth:`search_dismax` and
-        :meth:`match_ids_dismax`: per matching doc one (doc_id, raw, nt)
-        row — raw = Σ_terms DisjunctionMax over the qf fields, nt = the
-        distinct matched-term count — ALL of it computed inside the ONE
-        applyInPandas stage (range-locality; zero aggregation shuffles).
-        None = provably empty (no terms / no indexed tagged term)."""
-        if not terms:
-            return None
-        tagged = [tag_term(f, t) for t in terms for f in qf]
-        stats = self.term_stats_for(tagged)
-        present = [tt for tt in tagged if tt in stats]
-        if not present:
-            return None
-        meta = self.meta
-        k1, b, span = meta["k1"], meta["b"], self.span
-        n_docs, avgdls, fields = self.n_docs, self._avgdls, self.fields
-        idfs = {tt: qf[tt.split(FIELD_SEP, 1)[0]] * wand.idf(n_docs, stats[tt][0])
-                for tt in present}
-
-        def emit(pdf, lo, hi, doclens, deleted):
-            dl_by_field = dict(zip(fields, doclens))
-            by_term: dict[str, list] = {}
-            for row in pdf.to_dict("records"):
-                by_term.setdefault(row["term"].split(FIELD_SEP, 1)[1], []).append(row)
-            raw = np.zeros(span, np.float64)
-            cnt = np.zeros(span, np.int64)
-            for bterm in sorted(by_term):
-                mx = np.full(span, -np.inf)
-                sm = np.zeros(span, np.float64)
-                seen = np.zeros(span, bool)
-                for row in by_term[bterm]:
-                    tt = row["term"]
-                    fname = tt.split(FIELD_SEP, 1)[0]
-                    L = _mk_termlist(row, idfs.get(tt, 0.0), stats[tt][0])
-                    d, tfs = L.decode_range(lo, hi)
-                    if d.size == 0:
-                        continue
-                    keep = wand._drop_deleted(d, deleted)
-                    d, tfs = d[keep], tfs[keep]
-                    if d.size == 0:
-                        continue
-                    s = wand._bm25(tfs, dl_by_field[fname](d), L.idf, avgdls[fname], k1, b)
-                    li = d - lo
-                    np.maximum.at(mx, li, s)
-                    np.add.at(sm, li, s)
-                    seen[li] = True
-                li = np.flatnonzero(seen)
-                if li.size:
-                    raw[li] += mx[li] + tie * (sm[li] - mx[li])
-                    cnt[li] += 1
-            li = np.flatnonzero(cnt)
-            if li.size == 0:
-                return None
-            return pd.DataFrame({"doc_id": li + lo, "raw": raw[li], "nt": cnt[li]})
-
-        return self._run_ranges(present, "doc_id long, raw double, nt long", emit)
-
     def match_ids_dismax(
         self,
         query: str | list[str],
@@ -3802,24 +3728,13 @@ class FieldedIndex(_SnapshotReader):
         """ALL doc_ids matching the edismax main query (≥ ``min_match``
         distinct terms in any qf field) — the membership seam behind
         ``mode="dismax"`` faceting/stats (Solr facets beside an edismax
-        handler count over exactly this set).  Per-range emission with NO
-        global top-k reduce (the match_ids_phrase return-all pattern —
-        a TakeOrderedAndProject sized to the match count would allocate
-        its heap up front)."""
-        if not qf:
-            raise ValueError("qf must name at least one field")
-        for f in qf:
-            if f not in self.fields:
-                raise ValueError(f"unknown field {f!r} (have {self.fields})")
-        terms = sorted(set(query if isinstance(query, list) else tokenize_py(query)))
-        mm = parse_mm(min_match, len(terms)) if isinstance(min_match, str) else min_match
-        per_doc = self._dismax_per_doc(terms, qf, 0.0)
-        if per_doc is None:
-            return _empty_df(self.spark, "doc_id long")
-        ids = per_doc.filter(F.col("nt") >= max(mm, 1)).select("doc_id")
-        if fq is not None:
-            ids = ids.join(self.fq_ids(fq), "doc_id", "left_semi")
-        return ids
+        handler count over exactly this set).  The :meth:`_dismax_plan`
+        run for membership: per-range emission with NO global top-k
+        reduce (the match_ids_phrase return-all pattern — a
+        TakeOrderedAndProject sized to the match count would allocate its
+        heap up front)."""
+        ids = self._plan_frame(self._dismax_plan(query, qf, min_match=min_match), match=True)
+        return ids if fq is None else ids.join(self.fq_ids(fq), "doc_id", "left_semi")
 
     def search_dismax_many(
         self, queries: dict[str, tuple]
@@ -3827,117 +3742,19 @@ class FieldedIndex(_SnapshotReader):
         """Batch execution of edismax main queries: ONE distributed job
         answers every dismax query (the :meth:`search_many` amortization
         for the viewer's default handler).  ``queries``: qid →
-        ``(query, qf, k[, tie[, min_match]])``.  Rank-identical to
-        per-query :meth:`search_dismax` (tested): each posting list in a
-        range is decoded ONCE and its unweighted BM25 saturation array is
-        shared across every query that references the term — per query
-        the contribution is ``(qf_boost·idf)·weight``, the single-query
-        kernel's exact float operation order — and the whole per-query
-        combine (field max/sum, tie blend, doc sum, mm count) stays
-        inside the kernel as in :meth:`search_dismax`.  The reduce is the
+        ``(query, qf, k[, tie[, min_match]])``.  Every entry is its
+        :meth:`_dismax_plan`, so results are identical to per-query
+        :meth:`search_dismax` (tested): in a range each posting list is
+        decoded once, and every query that reads the key scores a view of
+        it that shares the decoded columns.  The reduce is the
         :meth:`search_many` per-qid bounded window."""
-        meta = self.meta
-        k1, b, span = meta["k1"], meta["b"], self.span
-        n_docs, avgdls, fields = self.n_docs, self._avgdls, self.fields
-
-        parsed: dict[str, tuple[list[str], dict[str, float], int, float, int]] = {}
-        for qid, spec in queries.items():
-            q, qf, k = spec[0], spec[1], spec[2]
-            tie = float(spec[3]) if len(spec) > 3 else 0.0
-            mmspec = spec[4] if len(spec) > 4 else 1
-            if not qf:
-                raise ValueError(f"{qid}: qf must name at least one field")
-            for f in qf:
-                if f not in self.fields:
-                    raise ValueError(f"{qid}: unknown field {f!r} (have {self.fields})")
-            if not 0.0 <= tie <= 1.0:
-                raise ValueError(f"{qid}: tie must be in [0, 1]")
-            terms = sorted(set(q if isinstance(q, list) else tokenize_py(q)))
-            mm = parse_mm(mmspec, len(terms)) if isinstance(mmspec, str) else mmspec
-            parsed[qid] = (terms, dict(qf), min(k, self.n_docs), tie, mm)
-        results: dict[str, list] = {qid: [] for qid in parsed}
-        all_tagged = sorted({tag_term(f, t) for terms, qf, _, _, _ in parsed.values()
-                             for t in terms for f in qf})
-        if not all_tagged:
-            return results
-        stats = self.term_stats_for(all_tagged)
-        needed = sorted(t for t in all_tagged if t in stats)
-        if not needed:
-            return results
-        idf_raw = {t: wand.idf(n_docs, stats[t][0]) for t in needed}
-        live = {qid: spec for qid, spec in parsed.items()
-                if any(tag_term(f, t) in stats for t in spec[0] for f in spec[1])}
-        if not live:
-            return results
-
-        def emit(pdf, lo, hi, doclens, deleted):
-            dl_by_field = dict(zip(fields, doclens))
-            # decode + saturate each list ONCE (idf=1.0 is an exact float
-            # identity), shared across all queries referencing the term
-            cache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-            for row in pdf.to_dict("records"):
-                tt = row["term"]
-                fname = tt.split(FIELD_SEP, 1)[0]
-                L = _mk_termlist(row, 1.0, stats[tt][0])
-                d, tfs = L.decode_range(lo, hi)
-                if d.size == 0:
-                    continue
-                keep = wand._drop_deleted(d, deleted)
-                d, tfs = d[keep], tfs[keep]
-                if d.size == 0:
-                    continue
-                cache[tt] = (d, wand._bm25(tfs, dl_by_field[fname](d), 1.0,
-                                           avgdls[fname], k1, b))
-            out = []
-            for qid, (terms, qf, _k, tie, _mm) in live.items():
-                raw = np.zeros(span, np.float64)
-                cnt = np.zeros(span, np.int64)
-                for t in terms:
-                    mx = np.full(span, -np.inf)
-                    sm = np.zeros(span, np.float64)
-                    seen = np.zeros(span, bool)
-                    for f, w in qf.items():
-                        tt = tag_term(f, t)
-                        if tt not in cache:
-                            continue
-                        d, basew = cache[tt]
-                        s = (w * idf_raw[tt]) * basew
-                        li = d - lo
-                        np.maximum.at(mx, li, s)
-                        np.add.at(sm, li, s)
-                        seen[li] = True
-                    li = np.flatnonzero(seen)
-                    if li.size:
-                        raw[li] += mx[li] + tie * (sm[li] - mx[li])
-                        cnt[li] += 1
-                li = np.flatnonzero(cnt)
-                if li.size:
-                    out.append(pd.DataFrame({
-                        "qid": qid, "doc_id": li + lo, "raw": raw[li], "nt": cnt[li]}))
-            return pd.concat(out, ignore_index=True).astype(
-                {"qid": str, "doc_id": np.int64, "raw": np.float64, "nt": np.int64}
-            ) if out else None
-
-        per_doc = self._run_ranges(needed, "qid string, doc_id long, raw double, nt long", emit)
-
-        from pyspark.sql.window import Window
-
-        mm_map = F.create_map(*[F.lit(x) for qid, (_, _, _, _, mm) in live.items()
-                                for x in (qid, max(mm, 1))])
-        k_map = F.create_map(*[F.lit(x) for qid, (_, _, k, _, _) in live.items()
-                               for x in (qid, k)])
-        w = Window.partitionBy("qid").orderBy(
-            F.desc(F.round("raw", 6)), F.asc("doc_id"))
-        final = (
-            per_doc.filter(F.col("nt") >= mm_map[F.col("qid")])
-            .withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= k_map[F.col("qid")])
-            .select("qid", "doc_id", F.round("raw", 6).alias("score"), "_rk")
-            .collect()
-        )
-        for r in sorted(final, key=lambda r: (r["qid"], r["_rk"])):
-            results[r["qid"]].append((r["doc_id"], r["score"]))
-        return results
+        plans = {}
+        for qid, (q, qf, k, *tie_mm) in queries.items():
+            try:
+                plans[qid] = (self._dismax_plan(q, qf, *tie_mm), k)
+            except ValueError as e:
+                raise ValueError(f"{qid}: {e}") from None
+        return self._many(plans, {})
 
     def score_matches(
         self,
@@ -4184,67 +4001,13 @@ class LocalFieldedSearcher(_LocalReader):
         fq: str | list | None = None,
     ) -> list[tuple[int, float]]:
         """Driver-side twin of :meth:`FieldedIndex.search_dismax` (Solr
-        edismax qf/tie main-query scoring) — rank-identical (tested).
-        Same per-(field, term) arithmetic as the distributed kernel
-        ((qf-boost·idf)·saturation with FIELD-local doclen/avgdl), the
-        DisjunctionMax combine runs as dense ``np.maximum.at``/
-        ``np.add.at`` passes per term over the cached merged posting
-        lists; ``fq`` membership and the tombstone set filter each list
-        BEFORE the combine so mm term counts stay exact."""
+        edismax qf/tie main-query scoring): the same plan
+        (:meth:`FieldedIndex._dismax_plan`) through :meth:`_run`, so the
+        answers are identical (tested); ``fq`` filters membership, never
+        scores."""
         self._ensure_fresh()
-        if not qf:
-            raise ValueError("qf must name at least one field")
-        for f in qf:
-            if f not in self.index.fields:
-                raise ValueError(f"unknown field {f!r} (have {self.index.fields})")
-        if not 0.0 <= tie <= 1.0:
-            raise ValueError("tie must be in [0, 1]")
-        terms = sorted(set(query if isinstance(query, list) else tokenize_py(query)))
-        if not terms:
-            return []
-        mm = parse_mm(min_match, len(terms)) if isinstance(min_match, str) else min_match
-        k = min(k, self.index.n_docs)
-        n = self._n
-        fq_mask = None if fq is None else self._fq_keep(fq)
-        self._rows_for([tag_term(f, t) for t in terms for f in qf])
-        k1, b = self.meta["k1"], self.meta["b"]
-        deleted = self.deleted if self.deleted.size else None
-        raw = np.zeros(n, np.float64)
-        cnt = np.zeros(n, np.int64)
-        for t in terms:
-            mx = np.full(n, -np.inf)
-            sm = np.zeros(n, np.float64)
-            seen = np.zeros(n, bool)
-            for f, w in qf.items():
-                L = self._merged_list(tag_term(f, t))
-                if L is None:
-                    continue
-                d, tfs = L.decode_range(0, n - 1)
-                if d.size == 0:
-                    continue
-                keep = wand._drop_deleted(d, deleted)
-                d, tfs = d[keep], tfs[keep]
-                if fq_mask is not None and d.size:
-                    m2 = fq_mask[d]
-                    d, tfs = d[m2], tfs[m2]
-                if d.size == 0:
-                    continue
-                s = wand._bm25(tfs, self.doclens[f][d], w * L.idf,
-                               self.index._avgdls[f], k1, b)
-                np.maximum.at(mx, d, s)
-                np.add.at(sm, d, s)
-                seen[d] = True
-            sd = np.flatnonzero(seen)
-            if sd.size == 0:
-                continue
-            raw[sd] += mx[sd] + tie * (sm[sd] - mx[sd])
-            cnt[sd] += 1
-        cand = np.flatnonzero(cnt >= max(mm, 1))
-        if cand.size == 0:
-            return []
-        scores = wand.round6(raw[cand])
-        order = np.lexsort((cand, -scores))[:k]
-        return [(int(cand[i]), float(scores[i])) for i in order]
+        plan = self.index._dismax_plan(query, qf, tie, min_match)
+        return self._run(plan, k, keep=None if fq is None else self._fq_keep(fq))
 
     def explain(self, query, doc_id: int, mode: str = "or",
                 boosts: dict[str, float] | None = None) -> dict:
@@ -4277,40 +4040,19 @@ class LocalFieldedSearcher(_LocalReader):
             raise ValueError("explain supports positive clauses only (prohibited clauses filter, they don't score)")
         if any(offs for g in plan.groups for _, offs in g):
             raise ValueError("explain supports term queries, not phrases")
-        from goobi_viewer_indexer_spark.functions import codec as _codec
         self._rows_for(sorted(plan.weights))
-        k1, b = self.meta["k1"], self.meta["b"]
-        in_range = 0 <= doc_id < self._n
-        alive = in_range and not (
-            self.deleted.size and np.searchsorted(self.deleted, doc_id) < self.deleted.size
-            and self.deleted[np.searchsorted(self.deleted, doc_id)] == doc_id
-        )
         rows = []
         total = 0.0
         present: set[str] = set()
         for t, wq in plan.weights.items():
-            L = self._merged_list(t)
             field, term = t.split(FIELD_SEP, 1)
-            fdl = self.doclens[field]
-            dl = int(fdl[doc_id]) if in_range and doc_id < fdl.size else 0
-            tf = _tf_in_list(L, doc_id) if (L is not None and alive) else 0
-            idf = float(L.idf) if L is not None else 0.0
-            if tf:
-                w = float(_codec.bm25_weight(
-                    np.array([tf], np.int64), np.array([dl], np.int64),
-                    float(L.avgdl_f), k1, b)[0])
+            r = self._explain_row(t, doc_id, wq)
+            rows.append({"field": field, "term": term, "boost": float(wq), **r})
+            total += r["contribution"]
+            if r["tf"]:
                 present.add(t)
-            else:
-                w = 0.0
-            contribution = float(wq) * idf * w
-            total += contribution
-            rows.append({
-                "field": field, "term": term, "boost": float(wq),
-                "df": int(L.df) if L is not None else 0, "tf": tf, "doclen": dl,
-                "idf": idf, "weight": w, "contribution": contribution,
-            })
         ok = [any(t in present for t, _ in g) for g in plan.groups]
-        matched = alive and (all(ok) if plan.mode in ("and", "boolean") else any(ok))
+        matched = self._alive(doc_id) and (all(ok) if plan.mode in ("and", "boolean") else any(ok))
         return {
             "doc_id": int(doc_id), "mode": plan.mode, "matched": matched,
             "score": wand.round6f(total) if matched else 0.0,
@@ -4332,68 +4074,38 @@ class LocalFieldedSearcher(_LocalReader):
         ``contribution = (qf_boost·idf)·weight`` per field (zero when the
         field doesn't contain the term), ``winner`` marks the max field;
         the total accumulates per-term dismax values in the SAME float
-        operation order as the scoring kernels (sorted terms; fields in
-        ``qf`` order for the sum; ``mx + tie·(sm − mx)`` association), so
-        ``round6(total)`` is bit-identical to the score
+        operation order as the scoring kernel (the plan's groups: sorted
+        terms; fields in ``qf`` order for the sum; ``mx + tie·(sm − mx)``
+        association), so ``round6(total)`` is bit-identical to the score
         :meth:`search_dismax` ranks by (pinned in pytest)."""
-        from goobi_viewer_indexer_spark.functions import codec as _codec
         self._ensure_fresh()
-        if not qf:
-            raise ValueError("qf must name at least one field")
-        for f in qf:
-            if f not in self.index.fields:
-                raise ValueError(f"unknown field {f!r} (have {self.index.fields})")
-        if not 0.0 <= tie <= 1.0:
-            raise ValueError("tie must be in [0, 1]")
-        terms = sorted(set(query if isinstance(query, list) else tokenize_py(query)))
-        mm = parse_mm(min_match, len(terms)) if isinstance(min_match, str) else min_match
-        self._rows_for([tag_term(f, t) for t in terms for f in qf])
-        k1, b = self.meta["k1"], self.meta["b"]
-        n = self._n
-        in_range = 0 <= doc_id < n
-        alive = in_range and not (
-            self.deleted.size and np.searchsorted(self.deleted, doc_id) < self.deleted.size
-            and self.deleted[np.searchsorted(self.deleted, doc_id)] == doc_id
-        )
+        plan = self.index._dismax_plan(query, qf, tie, min_match)
+        if plan is None:
+            return {"doc_id": int(doc_id), "matched": False, "score": 0.0, "terms": []}
+        self._rows_for(_keys_of(plan))
         out_terms = []
         total = 0.0
         nt = 0
-        for t in terms:
+        for g in plan.groups:
             frows = []
             mx, sm = -np.inf, 0.0
-            for f, wq in qf.items():
-                L = self._merged_list(tag_term(f, t))
-                fdl = self.doclens[f]
-                dl = int(fdl[doc_id]) if in_range and doc_id < fdl.size else 0
-                tf = _tf_in_list(L, doc_id) if (L is not None and alive) else 0
-                idf = float(L.idf) if L is not None else 0.0
-                if tf:
-                    w = float(_codec.bm25_weight(
-                        np.array([tf], np.int64), np.array([dl], np.int64),
-                        float(self.index._avgdls[f]), k1, b)[0])
-                    s = (float(wq) * idf) * w
-                    mx = max(mx, s)
-                    sm = sm + s
-                else:
-                    w, s = 0.0, 0.0
-                frows.append({
-                    "field": f, "qf_boost": float(wq),
-                    "df": int(L.df) if L is not None else 0, "tf": tf,
-                    "doclen": dl, "idf": idf, "weight": w,
-                    "contribution": s, "winner": False,
-                })
+            for key, _ in g:
+                f, t = key.split(FIELD_SEP, 1)
+                wq = plan.weights[key]
+                r = self._explain_row(key, doc_id, wq)
+                frows.append({"field": f, "qf_boost": float(wq), **r, "winner": False})
+                if r["tf"]:
+                    mx = max(mx, r["contribution"])
+                    sm = sm + r["contribution"]
             if mx == -np.inf:
                 out_terms.append({"term": t, "dismax": 0.0, "fields": frows})
                 continue
             nt += 1
-            for fr in frows:
-                if fr["tf"] and fr["contribution"] == mx:
-                    fr["winner"] = True
-                    break
-            dm = mx + tie * (sm - mx)
+            next(fr for fr in frows if fr["tf"] and fr["contribution"] == mx)["winner"] = True
+            dm = mx + plan.tie * (sm - mx)
             total = total + dm
             out_terms.append({"term": t, "dismax": dm, "fields": frows})
-        matched = alive and nt >= max(mm, 1)
+        matched = self._alive(doc_id) and nt >= max(plan.mm, 1)
         return {
             "doc_id": int(doc_id), "matched": matched,
             "score": wand.round6f(total) if matched else 0.0,

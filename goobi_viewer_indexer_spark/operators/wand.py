@@ -365,9 +365,12 @@ def _score_and(lists, k1: float, b: float, k: int, lo: int, hi: int,
     return _topk_select(docs, scores, k)
 
 
-def match_docs(lists, mode: str, lo: int, hi: int, deleted: np.ndarray | None = None) -> np.ndarray:
+def match_docs(lists, mode: str, lo: int, hi: int, deleted: np.ndarray | None = None,
+               min_match: int = 1) -> np.ndarray:
     """ALL matching doc_ids (no scoring, no k) — the delete-by-query scan
-    (reference helper/SolrSearchIndex.java:498-528 deleteByQuery)."""
+    (reference helper/SolrSearchIndex.java:498-528 deleteByQuery).
+    ``min_match``: OR mode's minimum count of matched lists (one list per
+    distinct term)."""
     if not lists:
         return np.zeros(0, np.int64)
     if mode == "and":
@@ -378,8 +381,8 @@ def match_docs(lists, mode: str, lo: int, hi: int, deleted: np.ndarray | None = 
                 break
             docs = docs[_probe(L, docs)[0]]
     else:
-        parts = [L.decode_range(lo, hi)[0] for L in lists]
-        docs = np.unique(np.concatenate(parts)) if parts else np.zeros(0, np.int64)
+        docs, c = np.unique(np.concatenate([L.decode_range(lo, hi)[0] for L in lists]), return_counts=True)
+        docs = docs[c >= min_match]
     keep = _drop_deleted(docs, deleted)
     return docs[keep]
 
@@ -647,11 +650,12 @@ def _boolean_members(
 
 
 def match_docs_boolean(
-    groups, negs, lo: int, hi: int, deleted: np.ndarray | None = None, mode: str = "and"
+    groups, negs, lo: int, hi: int, deleted: np.ndarray | None = None, mode: str = "and",
+    min_match: int = 1,
 ) -> np.ndarray:
     """ALL doc_ids matching the boolean query (no scoring) — the NOT-capable
-    delete-by-query scan."""
-    return _boolean_members(groups, negs, lo, hi, deleted, mode)
+    delete-by-query scan.  ``min_match``: as in :func:`score_boolean`."""
+    return _boolean_members(groups, negs, lo, hi, deleted, mode, min_match)
 
 
 def score_boolean(
@@ -665,26 +669,46 @@ def score_boolean(
     deleted: np.ndarray | None = None,
     mode: str = "and",
     min_match: int = 1,
+    tie: float | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Top-k BM25 over the boolean match set.  Scoring = bag BM25 over the
     distinct POSITIVE lists, counting only terms actually present in each
     matching doc (negative clauses filter membership, never score — Solr's
     prohibited-clause semantics).  ``min_match``: distinct-GROUP
-    minimum-should-match for OR combine (see :func:`_boolean_members`)."""
+    minimum-should-match for OR combine (see :func:`_boolean_members`).
+
+    ``tie`` (Lucene's DisjunctionMax, Solr edismax ``tie``): each group
+    scores ``max + tie·(sum − max)`` of its lists' contributions in the
+    doc, summed over the groups in group order; ``sum`` adds the lists in
+    group order.  None: the bag sum."""
     cand = _boolean_members(groups, negs, lo, hi, deleted, mode, min_match)
     if cand.size == 0:
         return cand, np.zeros(0, np.float64)
+
+    def scored(L):
+        m, t = _probe(L, cand)
+        return m, (_bm25(t[m], L.dl_fn(cand[m]), L.idf, L.avgdl_f, k1, b) if m.any() else None)
+
     scores = np.zeros(cand.size, dtype=np.float64)
-    seen: set[int] = set()
+    if tie is None:
+        seen: set[int] = set()
+        for g in groups:
+            for L, _offs in g:
+                if id(L) not in seen:
+                    seen.add(id(L))
+                    m, s = scored(L)
+                    if s is not None:
+                        scores[m] += s
+        return _topk_select(cand, scores, k)
     for g in groups:
+        mx, sm = np.full(cand.size, -np.inf), np.zeros(cand.size)
         for L, _offs in g:
-            if id(L) in seen:
-                continue
-            seen.add(id(L))
-            m, t = _probe(L, cand)
-            if not m.any():
-                continue
-            scores[m] += _bm25(t[m], L.dl_fn(cand[m]), L.idf, L.avgdl_f, k1, b)
+            m, s = scored(L)
+            if s is not None:
+                mx[m] = np.maximum(mx[m], s)
+                sm[m] += s
+        hit = mx > -np.inf
+        scores[hit] += mx[hit] + tie * (sm[hit] - mx[hit])
     return _topk_select(cand, scores, k)
 
 

@@ -38,7 +38,7 @@ run.  Both placements call the same module-level pandas bodies
 ``_merge_sorted_runs``, ``_delete_deltas``) and the same intents, apply
 steps and commit, so a txn staged under one placement replays under the
 other.  The term_stats sum is Spark's grouped aggregate on the Spark
-placement and its Arrow twin, ``_sum_term_stats``, on the driver.  An
+placement and its Arrow twin, ``_sum_term_stats_local``, on the driver.  An
 add's delta is sized by one Spark aggregate before any of its rows is
 collected.  :func:`delete_by_query` stages its matched id set with Spark
 (the matches never reach the driver) and then follows the rule, the
@@ -187,19 +187,26 @@ def _read_local(path: str, ddl: str, bucketed: bool = False) -> pa.Table:
     return pads.dataset(path, format="parquet", schema=_arrow_schema(ddl), partitioning=part).to_table()
 
 
-def _write_local(path: str, pdf: pd.DataFrame, ddl: str, bucketed: bool = False) -> None:
-    """Stage ``pdf`` at ``path`` as Spark's writer lays it out: parquet
+def _write_local(path: str, rows: pd.DataFrame | pa.Table, ddl: str, bucketed: bool = False) -> None:
+    """Stage ``rows`` at ``path`` as Spark's writer lays it out: parquet
     typed by ``ddl``, rows of a ``bucketed`` frame in hive ``bucket=N``
     dirs (the partition column is not stored), then ``_SUCCESS``."""
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path)
     schema = _arrow_schema(ddl)
-    parts = pdf.groupby("bucket", sort=True) if bucketed and len(pdf) else [(None, pdf)]
+    if isinstance(rows, pd.DataFrame):
+        full = schema.append(pa.field("bucket", pa.int32())) if bucketed else schema
+        rows = pa.Table.from_pandas(rows[full.names], schema=full, preserve_index=False)
+    parts = [(None, rows)]
+    if bucketed and rows.num_rows:
+        rows = rows.take(pc.sort_indices(rows["bucket"]))  # stable: rows keep their order per bucket
+        b = rows["bucket"].to_numpy()
+        cuts = [0, *(np.flatnonzero(b[1:] != b[:-1]) + 1), b.size]
+        parts = [(int(b[i]), rows.slice(i, j - i)) for i, j in zip(cuts, cuts[1:])]
     for b, part in parts:
         d = path if b is None else os.path.join(path, f"bucket={b}")
         os.makedirs(d, exist_ok=True)
-        table = pa.Table.from_pandas(part[schema.names], schema=schema, preserve_index=False)
-        pq.write_table(table, os.path.join(d, "part-00000.parquet"))
+        pq.write_table(part.select(schema.names).cast(schema), os.path.join(d, "part-00000.parquet"))
     with open(os.path.join(path, "_SUCCESS"), "w"):
         pass
 
@@ -233,24 +240,6 @@ def _tombstoned_local(index_dir: str) -> np.ndarray:
     return _read_local(p, _IDS_SCHEMA).column("doc_id").to_numpy()
 
 
-def _sum_term_stats(pdf: pd.DataFrame) -> pd.DataFrame:
-    """The driver placement's :func:`_bucketed_term_stats`: signed
-    ``(term, df, cf, bucket)`` rows → one term_stats row per term, df and
-    cf summed; terms whose df reaches 0 are dropped.  Grouped in Arrow,
-    which keys strings by their bytes (pandas' string hashing truncates
-    the ``\x00`` of fielded term keys)."""
-    rows = pdf[["term", "df", "cf", "bucket"]].astype({"df": np.int64, "cf": np.int64, "bucket": np.int32})
-    t = pa.Table.from_pandas(rows, preserve_index=False)
-    g = t.group_by(["bucket", "term"]).aggregate([("df", "sum"), ("cf", "sum")]).to_pandas()
-    g = g[g["df_sum"] > 0]
-    return pd.DataFrame({
-        "term": g["term"].to_numpy(object),
-        "df": g["df_sum"].to_numpy(np.int32),
-        "cf": g["cf_sum"].to_numpy(np.int64),
-        "bucket": g["bucket"].to_numpy(np.int32),
-    })
-
-
 def _bucketed_term_stats(rows: DataFrame, nb: int) -> DataFrame:
     """Sum signed ``(term, df, cf, bucket)`` rows per term into a term_stats
     frame that is bucket-aligned for the partitioned write: ONE exchange,
@@ -269,11 +258,18 @@ def _bucketed_term_stats(rows: DataFrame, nb: int) -> DataFrame:
     )
 
 
-def _sum_term_stats_local(index_dir: str, delta: pd.DataFrame) -> pd.DataFrame:
-    """The live term_stats plus signed ``delta`` rows, summed on the
-    driver."""
-    ts = _read_local(txn.table_path(index_dir, "term_stats"), _TS_SCHEMA, bucketed=True).to_pandas()
-    return _sum_term_stats(pd.concat([ts, delta[ts.columns]], ignore_index=True))
+def _sum_term_stats_local(index_dir: str, delta: pa.Table) -> pa.Table:
+    """The driver placement's :func:`_bucketed_term_stats`: the live
+    term_stats plus signed ``(term, df, cf, bucket)`` ``delta`` rows →
+    one row per term, df and cf summed; terms whose df reaches 0 are
+    dropped.  All in Arrow, which keys strings by their bytes (pandas'
+    string hashing truncates the ``\x00`` of fielded term keys) and
+    holds no Python object per term."""
+    ts = _read_local(txn.table_path(index_dir, "term_stats"), _TS_SCHEMA, bucketed=True)
+    rows = pa.concat_tables([ts, delta.select(ts.schema.names).cast(ts.schema)])
+    g = rows.group_by(["bucket", "term"]).aggregate([("df", "sum"), ("cf", "sum")])
+    g = g.filter(pc.greater(g["df_sum"], 0))
+    return pa.table({"term": g["term"], "df": g["df_sum"], "cf": g["cf_sum"], "bucket": g["bucket"]})
 
 
 def live_corpus_stats(spark: SparkSession, index_dir: str) -> tuple[int, float]:
@@ -433,6 +429,7 @@ def _delete_df(spark: SparkSession, index_dir: str, ids: list[int] | DataFrame, 
             rows["del_ids"] = [dels[a:z].tobytes() for a, z in zip(lo[keep], hi[keep])]
             d = _delete_deltas(rows)
             delta = _with_buckets(pd.DataFrame({"term": d["term"], "df": -d["df_delta"], "cf": -d["cf_delta"]}), nb)
+            delta = pa.Table.from_pandas(delta, preserve_index=False)
             _write_local(ts_stage, _sum_term_stats_local(index_dir, delta), _TS_OUT, bucketed=True)
         else:
             # the packed per-range id arrays JOIN the exploded postings
@@ -700,7 +697,7 @@ def add_docs(
         # any apply step, and only apply_append moves staged files away,
         # so an unstaged term_stats means an untouched postings staging dir
         if driver:
-            rows = _read_local(stage["postings"], _TS_SCHEMA, bucketed=True).to_pandas()
+            rows = _read_local(stage["postings"], _TS_SCHEMA, bucketed=True)
             _write_local(stage["term_stats"], _sum_term_stats_local(index_dir, rows), _TS_OUT, bucketed=True)
         else:
             ts = spark.read.schema(_TS_SCHEMA).parquet(ts_path)

@@ -316,3 +316,55 @@ def test_facets_beside_dismax(spark, fidx):
     st = fidx.field_stats(("table spark", QF), docs.select("doc_id", "n_chars"),
                           "n_chars", mode="dismax")
     assert st.collect()[0][0] == len(members1)  # stats run over exactly the dismax set
+
+
+def test_seeded_differential_before_and_after_delete(spark, fidx, tmp_path):
+    # seeded (terms, qf, tie, mm) draws: the distributed, local and
+    # batched paths and the DuckDB oracle over the LIVE documents give the
+    # same round6 rows, and membership is the scored doc set at the same
+    # mm — on the built index and again after a delete_docs
+    import random
+    import shutil
+
+    import duckdb
+
+    from goobi_viewer_indexer_spark.operators.naive_bm25 import bm25f_dismax_topk_sql
+    from goobi_viewer_indexer_spark.operators.search import parse_mm
+    from goobi_viewer_indexer_spark.plans.maintenance import delete_docs
+
+    rnd = random.Random(1313)
+    pool = ["table", "spark", "window", "join", "filter", "stream", "hash", "vector",
+            "src3", "src7", "en", "de", "zh", "zzzz"]
+    draws = []
+    for _ in range(20):
+        terms = rnd.sample(pool, rnd.randint(1, 4))
+        qf = {f: rnd.choice([0.5, 1.0, 2.0, 3.0]) for f in rnd.sample(list(FIELDS), rnd.randint(1, 3))}
+        draws.append((terms, qf, rnd.choice([0.0, 0.3, 1.0]), rnd.choice([1, 2, "50%", "-1"])))
+    d = str(tmp_path / "idx")
+    shutil.copytree(fidx.dir, d)
+    con = duckdb.connect()
+    deleted: list[int] = []
+    for phase in ("built", "deleted"):
+        if phase == "deleted":
+            deleted = [r["doc_id"] for r in FieldedIndex(spark, d).search_dismax(
+                "table spark window", QF, k=5, tie=0.3).collect()] + [3, 17, 40, 96, 101]
+            delete_docs(spark, d, deleted, tag="dismax_diff")
+        con.sql("CREATE OR REPLACE VIEW documents AS SELECT * FROM "
+                f"'{SF001}/documents.parquet' WHERE doc_id NOT IN ({', '.join(map(str, deleted or [-1]))})")
+        idx = FieldedIndex(spark, d)
+        loc = idx.open_local()
+        n = idx.n_docs
+        many = idx.search_dismax_many({f"q{i}": (t, qf, n, tie, mm) for i, (t, qf, tie, mm) in enumerate(draws)})
+        for i, (terms, qf, tie, mm) in enumerate(draws):
+            dist = [(r["doc_id"], r["score"])
+                    for r in idx.search_dismax(terms, qf, k=n, tie=tie, min_match=mm).collect()]
+            uniq = sorted(set(terms))
+            want = [tuple(r) for r in con.sql(bm25f_dismax_topk_sql(
+                uniq, qf, k=n, tie=tie, min_match=parse_mm(mm, len(uniq)), cfg=CFG,
+                field_cols=FIELDS)).fetchall()]
+            ctx = (phase, i, terms, qf, tie, mm)
+            assert dist == want, ctx
+            assert loc.search_dismax(terms, qf, k=n, tie=tie, min_match=mm) == dist, ctx
+            assert many[f"q{i}"] == dist, ctx
+            ids = {r["doc_id"] for r in idx.match_ids_dismax(terms, qf, min_match=mm).collect()}
+            assert ids == {doc for doc, _ in dist} and not ids & set(deleted), ctx

@@ -11,6 +11,8 @@ ids AND round6 scores must match exactly."""
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import numpy as np
 import pytest
 
@@ -278,6 +280,31 @@ def test_boolean_not_and_or_min_match(corpus):
     ids = wand.match_docs_boolean(groups[:2], negs, 0, N_DOCS - 1, deleted=deleted, mode="and")
     exp = np.flatnonzero((has[1] | has[9]) & has[3] & ~has[6])
     assert np.array_equal(ids, exp[~np.isin(exp, deleted)])
+    # membership counts groups too: the same match set as the scorer's
+    ids = wand.match_docs_boolean(groups, negs, 0, N_DOCS - 1, deleted=deleted, mode="or", min_match=2)
+    exp = np.flatnonzero(member)
+    assert np.array_equal(ids, exp[~np.isin(exp, deleted)])
+    ids = wand.match_docs([L[1], L[3], L[6]], "or", 0, N_DOCS - 1, deleted=deleted, min_match=2)
+    exp = np.flatnonzero(has[1].astype(int) + has[3] + has[6] >= 2)
+    assert np.array_equal(ids, exp[~np.isin(exp, deleted)])
+    # DisjunctionMax groups (edismax: one group per term over its weighted
+    # field keys): per group max + tie·(sum − max), summed in group order
+    views = [[(replace(L[t], idf=L[t].idf * w, _cache=L[t]._cache), []) for t, w in g]
+             for g in ([(0, 1.0), (5, 2.0)], [(2, 1.0), (7, 3.0), (9, 0.5)], [(4, 1.5)])]
+    hits = [np.any([has[int(V.term)] for V, _ in g], axis=0) for g in views]
+    for tie in (0.0, 0.3, 1.0):
+        want = np.zeros(N_DOCS)
+        for g, hit in zip(views, hits):
+            mx, sm = np.full(N_DOCS, -np.inf), np.zeros(N_DOCS)
+            for V, _ in g:
+                h, c = has[int(V.term)], corpus.contrib(V)
+                mx, sm = np.where(h, np.maximum(mx, c), mx), np.where(h, sm + c, sm)
+            want[hit] = want[hit] + (mx[hit] + tie * (sm[hit] - mx[hit]))
+        for mm in (1, 2):
+            for dels in (None, deleted):
+                got = wand.score_boolean(views, [], K1, B, 25, 0, N_DOCS - 1, deleted=dels, mode="or",
+                                         min_match=mm, tie=tie)
+                _assert_same(got, _expected(want, np.sum(hits, axis=0) >= mm, 25, deleted=dels))
 
 
 @pytest.mark.parametrize("mode", ["or", "and"])
